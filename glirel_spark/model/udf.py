@@ -3,7 +3,10 @@
 Design (SURVEY.md §4, north_star):
 - UDF input is ONE ROW PER DOCUMENT (tokens + mention spans), not per
   pair — pairs must be scored with document context, so exploding
-  before the UDF would duplicate the token sequence P times.
+  before the UDF would duplicate the token sequence P times. The input
+  is the ``fused.with_mentions`` shape (doc_id, tokens, _ments), read
+  straight off the gazetteer pass; separately arriving mention tables
+  are packed into it by ``pack_mentions``.
 - the model is a process-level singleton (DeterministicGLiREL.get()):
   loaded once per executor python worker, never per batch. With real
   weights this is the `--archives`-shipped checkpoint + ONNX session.
@@ -11,9 +14,15 @@ Design (SURVEY.md §4, north_star):
   scores, model.py:188-214), so they come out of the same per-doc
   transformer forward as the word reps — no cross-doc caching is
   possible, and none is attempted.
-- output is the scored-pair relation (doc_id, positions, label, prob):
-  the SAME shape the lexical scorer produces, so the entire decode /
-  linking / graph pipeline downstream is scorer-agnostic.
+- output has one of two shapes:
+  * at top_k = 1 (``neural_triples_from``) the threshold, the per-pair
+    argmax and the P9 type constraint run inside the UDF
+    (``top1_decode``), and it emits the formatted triples
+    (``decode.TRIPLES_SCHEMA``) — no decode shuffle, no enrichment
+    joins, ~|labels|x fewer rows out of Python;
+  * otherwise (``score_pairs_neural``) it emits the scored-pair
+    relation (doc_id, positions, label, prob), the same shape the
+    lexical scorer produces, for the relational decode / eval plans.
 """
 
 from __future__ import annotations
@@ -26,11 +35,71 @@ from pyspark.sql import DataFrame, functions as F
 
 from glirel_spark import config
 from glirel_spark.model.scorer import DeterministicGLiREL
+from glirel_spark.operators import decode as decode_ops
+from glirel_spark.operators import scoring as scoring_ops
 
-_OUT_SCHEMA = (
+_SCORED_SCHEMA = (
     "doc_id string, h_start int, h_end int, t_start int, t_end int, "
     "label string, prob double"
 )
+
+
+def pack_mentions(docs_tokens: DataFrame, mentions: DataFrame) -> DataFrame:
+    """A mention table that arrives separately (JSONL or DocRED external
+    NER) -> the ``fused.with_mentions`` shape the scorer reads:
+    docs_tokens' columns + ``_ments``, an array of
+    struct(start, end[, type, text]) ordered by (start, end). Docs
+    without mentions drop out (inner join)."""
+    fields = [c for c in ("start", "end", "type", "text") if c in mentions.columns]
+    packed = mentions.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(F.struct(*fields))).alias("_ments")
+    )
+    return docs_tokens.join(packed, "doc_id")
+
+
+def top1_decode(
+    probs: np.ndarray,
+    threshold: float,
+    h_types: np.ndarray,
+    t_types: np.ndarray,
+    constraints: list[tuple[list[str] | None, list[str] | None]],
+) -> tuple[np.ndarray, np.ndarray]:
+    """The k=1 decode of one document's scores -> (kept pair indices,
+    their label indices).
+
+    ``probs`` [P, C] is ``score_doc``'s output over ASCENDING labels;
+    ``h_types``/``t_types`` are the pairs' head/tail mention types and
+    ``constraints[c]`` the (allowed_head, allowed_tail) of label c
+    (None = unconstrained, [] = nothing allowed). Row-identical to the
+    relational threshold -> top_k_per_pair(1) -> constraint_filter chain:
+    - np.argmax returns the FIRST maximum, i.e. (prob desc, label asc);
+    - at k=1, argmax-then-threshold == threshold-then-argmax;
+    - the constraint applies to the best label only (decode applies P9
+      after top-k), so a pair whose best label fails it is dropped, not
+      re-assigned to its runner-up.
+    """
+    best = np.argmax(probs, axis=1)
+    keep = probs[np.arange(len(best)), best] > threshold
+    for c, (ah, at) in enumerate(constraints):
+        if ah is None and at is None:
+            continue
+        ok = np.ones(len(best), dtype=bool)
+        if ah is not None:
+            ok &= _isin(h_types, ah)
+        if at is not None:
+            ok &= _isin(t_types, at)
+        keep &= (best != c) | ok
+    idx = np.flatnonzero(keep)
+    return idx, best[idx]
+
+
+def _isin(values: np.ndarray, allowed: list[str]) -> np.ndarray:
+    """Elementwise membership over an object array (None matches
+    nothing, like array_contains over a NULL type)."""
+    out = np.zeros(len(values), dtype=bool)
+    for a in allowed:
+        out |= values == a
+    return out
 
 
 def score_pairs_neural(
@@ -42,7 +111,7 @@ def score_pairs_neural(
 ) -> DataFrame:
     """(doc_id, tokens) x (doc_id, mentions) -> scored pairs.
 
-    Mentions are re-packed per doc (collect_list) so the UDF receives
+    Mentions are packed per doc (``pack_mentions``) so the UDF receives
     one Arrow row per document.
 
     ``labels_col`` names an ``array<string>`` column on ``docs_tokens``
@@ -56,17 +125,96 @@ def score_pairs_neural(
     """
     if labels is None:
         labels = sorted(config.RELATION_LABELS.keys())
-    label_tuple = tuple(labels)
-
     cols = ["doc_id", "tokens"] + ([labels_col] if labels_col else [])
-    packed = (
-        mentions.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("start", "end"))).alias("spans"))
-        .join(docs_tokens.select(*cols), "doc_id")
-        .select("doc_id", "tokens", "spans", *(
-            [F.col(labels_col).alias("_labels")] if labels_col else []
-        ))
+    packed = pack_mentions(
+        docs_tokens.select(*cols), mentions.select("doc_id", "start", "end")
     )
+    return _scorer_stage(packed, tuple(labels), max_distance, labels_col=labels_col)
+
+
+def neural_triples_from(
+    docs_ments: DataFrame,
+    threshold: float = config.THRESHOLD,
+    top_k: int | None = None,
+    labels: dict[str, dict[str, list[str]]] | None = None,
+) -> DataFrame:
+    """(doc_id, tokens, _ments) -> formatted triples: the one place the
+    neural path picks its plan (``top_k`` None = config.TOP_K).
+
+    top_k = 1: one round-robin repartition, one mapInPandas that scores
+    AND decodes (``top1_decode``), then nothing — mention text and type
+    ride through the packed input, so there is no decode shuffle and no
+    enrichment join. Otherwise: the scored relation through the slim
+    relational decode (threshold and top-k on pair keys + label + prob,
+    mention texts/types and the constraint dimension joined against the
+    survivors only).
+    """
+    if top_k is None:
+        top_k = config.TOP_K
+    label_dict = config.RELATION_LABELS if labels is None else labels
+    table = scoring_ops.label_constraints(label_dict)
+    label_tuple = tuple(lab for lab, _, _ in table)
+    if top_k == 1:
+        top1 = (threshold, [(ah, at) for _, ah, at in table])
+        return _scorer_stage(
+            docs_ments, label_tuple, config.MAX_PAIR_DISTANCE, top1=top1
+        )
+    scored = _scorer_stage(docs_ments, label_tuple, config.MAX_PAIR_DISTANCE)
+    best = decode_ops.top_k_per_pair(
+        decode_ops.threshold_filter(scored, threshold), top_k
+    )
+    m = docs_ments.select("doc_id", F.explode("_ments").alias("m")).select(
+        "doc_id", "m.start", "m.end", "m.type", "m.text"
+    )
+    h = m.toDF("doc_id", "h_start", "h_end", "h_type", "h_text")
+    t = m.toDF("doc_id", "t_start", "t_end", "t_type", "t_text")
+    ldf = scoring_ops.labels_df_from_dict(docs_ments.sparkSession, label_dict)
+    enriched = (
+        best.join(h, ["doc_id", "h_start", "h_end"])
+        .join(t, ["doc_id", "t_start", "t_end"])
+        .join(F.broadcast(ldf), "label", "left")
+        .withColumn("raw", F.lit(None).cast("int"))
+    )
+    return decode_ops.format_output(decode_ops.constraint_filter(enriched))
+
+
+def neural_triples(
+    docs_tokens: DataFrame,
+    mentions: DataFrame,
+    threshold: float = config.THRESHOLD,
+    top_k: int | None = None,
+    labels: dict[str, dict[str, list[str]]] | None = None,
+) -> DataFrame:
+    """``neural_triples_from`` for a mention table (doc_id, start, end,
+    type, text) that arrives separately from the tokens."""
+    return neural_triples_from(
+        pack_mentions(docs_tokens.select("doc_id", "tokens"), mentions),
+        threshold, top_k, labels,
+    )
+
+
+def _scorer_stage(
+    docs_ments: DataFrame,
+    label_tuple: tuple[str, ...],
+    max_distance: int | None,
+    labels_col: str | None = None,
+    top1: tuple[float, list] | None = None,
+) -> DataFrame:
+    """docs with >= 2 mentions -> repartition -> the scorer mapInPandas.
+
+    ``top1`` = (threshold, per-label constraints) decodes in the UDF and
+    emits decode.TRIPLES_SCHEMA; None emits the scored relation.
+    """
+
+    cols = [
+        "doc_id", "tokens",
+        F.col("_ments.start").alias("_ms"), F.col("_ments.end").alias("_me"),
+    ]
+    if top1 is not None:
+        cols += [F.col("_ments.type").alias("_mt"), F.col("_ments.text").alias("_mx")]
+    if labels_col:
+        cols.append(F.col(labels_col).alias("_labels"))
+    packed = docs_ments.filter(F.size("_ments") >= 2).select(*cols)
     # The scorer stage is PYTHON-CPU-bound (~10ms/doc through the
     # transformer) while its input is tiny in BYTES (tokens + span
     # offsets), so AQE's byte-based partition coalescing collapses it
@@ -75,16 +223,25 @@ def score_pairs_neural(
     # for compute-heavy UDF stages. Pin the partition count to the
     # cluster's core count with an explicit ROUND-ROBIN repartition:
     # repartition(N) is REPARTITION_BY_NUM, which AQE never coalesces,
-    # whereas repartition(N, doc_id) collapses into the upstream
-    # doc_id exchange (redundant-exchange elimination) and gets
-    # coalesced with it (measured: stage back to 1 task). The trade:
-    # the decode aggregation downstream re-shuffles on the pair key
-    # instead of reusing doc_id clustering — its map-side combine
-    # already collapses to one slim row per pair, so that exchange is
-    # cheap, while a serialized scorer is catastrophic at any scale.
-    sc = docs_tokens.sparkSession.sparkContext
+    # whereas repartition(N, doc_id) collapses into an upstream doc_id
+    # exchange (redundant-exchange elimination) and gets coalesced with
+    # it (measured: stage back to 1 task).
+    sc = docs_ments.sparkSession.sparkContext
     packed = packed.repartition(sc.defaultParallelism * 2)
+    return packed.mapInPandas(
+        _scorer(label_tuple, max_distance, top1),
+        _SCORED_SCHEMA if top1 is None else decode_ops.TRIPLES_SCHEMA,
+    )
 
+
+def _scorer(
+    label_tuple: tuple[str, ...],
+    max_distance: int | None,
+    top1: tuple[float, list] | None,
+):
+    """The mapInPandas function: per Arrow batch, encode every document,
+    score its pairs, and emit the scored relation or, with ``top1``, the
+    decoded triples — one pandas frame per batch."""
     labels_arr = np.asarray(label_tuple, dtype=object)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -106,84 +263,78 @@ def score_pairs_neural(
             ]
             reps_list = model.encode_batch([word for word, _ in enc])
             lab_list = [model.label_ffn(rel) for _, rel in enc]
-            chunks: list[pd.DataFrame] = []
-            for row_i, (doc_id, tokens, spans) in enumerate(
-                zip(pdf["doc_id"], tok_lists, pdf["spans"])
-            ):
-                sp = np.asarray(
-                    [(s["start"], s["end"]) for s in spans], dtype=np.int64
-                ).reshape(-1, 2)
-                # P4: filter HERE so the pair indices score_doc returns
-                # refer to the same span array we gather positions from.
-                sp = model.valid_spans(sp, len(tokens))
-                row_labels = lab_tuples[row_i]
+            parts: dict[str, list[np.ndarray]] = {}
+            for i, tokens in enumerate(tok_lists):
+                starts = np.asarray(pdf["_ms"].iat[i], dtype=np.int64)
+                # P4: filter HERE, carrying each span's row in the
+                # packed arrays, so the pair indices score_doc returns
+                # refer to the same span array we gather positions,
+                # texts and types from.
+                v = model.valid_spans(np.stack(
+                    [starts, np.asarray(pdf["_me"].iat[i], dtype=np.int64),
+                     np.arange(len(starts))], axis=1,
+                ), len(tokens))
+                sp, src = v[:, :2], v[:, 2]
+                row_labels = lab_tuples[i]
                 pidx, probs = model.score_doc(
                     tokens, sp, row_labels, max_distance,
-                    tok_reps=reps_list[row_i], lab_reps=lab_list[row_i]
+                    tok_reps=reps_list[i], lab_reps=lab_list[i]
                 )
-                n_pairs = len(pidx)
-                if n_pairs == 0:
+                if len(pidx) == 0:
                     continue
-                row_n_lab = len(row_labels)
-                row_labels_arr = (
-                    labels_arr if row_labels is label_tuple
-                    else np.asarray(row_labels, dtype=object)
-                )
-                # vectorized (pair x label) expansion — no python loops
-                hs = np.repeat(sp[pidx[:, 0], 0], row_n_lab)
-                he = np.repeat(sp[pidx[:, 0], 1], row_n_lab)
-                ts = np.repeat(sp[pidx[:, 1], 0], row_n_lab)
-                te = np.repeat(sp[pidx[:, 1], 1], row_n_lab)
-                chunks.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": np.repeat(doc_id, n_pairs * row_n_lab),
-                            "h_start": hs.astype(np.int32),
-                            "h_end": he.astype(np.int32),
-                            "t_start": ts.astype(np.int32),
-                            "t_end": te.astype(np.int32),
-                            "label": np.tile(row_labels_arr, n_pairs),
-                            "prob": probs.reshape(-1).astype(np.float64),
-                        }
+                if top1 is None:
+                    n_lab = len(row_labels)
+                    lab = (labels_arr if row_labels is label_tuple
+                           else np.asarray(row_labels, dtype=object))
+                    pairs = np.repeat(pidx, n_lab, axis=0)
+                    cols = {"label": np.tile(lab, len(pidx)),
+                            "prob": probs.reshape(-1)}
+                else:
+                    types = np.asarray(pdf["_mt"].iat[i], dtype=object)[src]
+                    keep, best = top1_decode(
+                        probs, top1[0], types[pidx[:, 0]], types[pidx[:, 1]],
+                        top1[1],
                     )
-                )
-            if chunks:
-                yield pd.concat(chunks, ignore_index=True)
+                    if len(keep) == 0:
+                        continue
+                    pairs = pidx[keep]
+                    texts = np.asarray(pdf["_mx"].iat[i], dtype=object)[src]
+                    cols = {"head_text": texts[pairs[:, 0]],
+                            "tail_text": texts[pairs[:, 1]],
+                            "label": labels_arr[best],
+                            "prob": probs[keep, best]}
+                h, t = sp[pairs[:, 0]], sp[pairs[:, 1]]
+                cols.update(_row=np.full(len(pairs), i), hs=h[:, 0],
+                            he=h[:, 1], ts=t[:, 0], te=t[:, 1])
+                for k, a in cols.items():
+                    parts.setdefault(k, []).append(a)
+            if parts:
+                yield _frame(pdf["doc_id"], parts, top1 is not None)
 
-    return packed.mapInPandas(run, _OUT_SCHEMA)
+    return run
 
 
-def neural_triples(
-    docs_tokens: DataFrame,
-    mentions: DataFrame,
-    threshold: float = config.THRESHOLD,
-    top_k: int = config.TOP_K,
-) -> DataFrame:
-    """Full neural path: score -> threshold -> top-k -> enrich -> format.
-
-    Scale shape: the threshold filter and the per-pair top-k aggregation
-    run on the SLIM scored relation (pair keys + label + prob only) —
-    mention texts/types and the label-constraint dimension join in
-    AFTERWARDS, against just the surviving triples (~7x fewer rows at
-    threshold 0.5), so the decode shuffle never carries string payloads.
-    Row-identical to enrich-first: (pair key, label) already determines
-    the row, so the join adds columns, never changes the argmax.
-    """
-    from glirel_spark.operators import decode as decode_ops
-    from glirel_spark.operators import scoring as scoring_ops
-
-    scored = score_pairs_neural(docs_tokens, mentions)
-    surv = decode_ops.threshold_filter(scored, threshold)
-    best = decode_ops.top_k_per_pair(surv, top_k)
-    m = mentions.select("doc_id", "start", "end", "type", "text")
-    h = m.toDF("doc_id", "h_start", "h_end", "h_type", "h_text")
-    t = m.toDF("doc_id", "t_start", "t_end", "t_type", "t_text")
-    enriched = best.join(h, ["doc_id", "h_start", "h_end"]).join(
-        t, ["doc_id", "t_start", "t_end"]
-    )
-    labels = scoring_ops.labels_df(docs_tokens.sparkSession)
-    enriched = enriched.join(F.broadcast(labels), "label", "left").withColumn(
-        "raw", F.lit(None).cast("int")
-    )
-    out = decode_ops.constraint_filter(enriched)
-    return decode_ops.format_output(out)
+def _frame(
+    doc_ids: pd.Series, parts: dict[str, list[np.ndarray]], formatted: bool
+) -> pd.DataFrame:
+    """One output frame per Arrow batch from the per-doc column chunks."""
+    col = {k: np.concatenate(v) for k, v in parts.items()}
+    out = {"doc_id": doc_ids.to_numpy()[col["_row"]]}
+    if formatted:  # decode.format_output: exclusive ends, NULL raw
+        out.update(
+            head_start=col["hs"].astype(np.int32),
+            head_end=(col["he"] + 1).astype(np.int32),
+            tail_start=col["ts"].astype(np.int32),
+            tail_end=(col["te"] + 1).astype(np.int32),
+            head_text=col["head_text"], tail_text=col["tail_text"],
+            label=col["label"],
+            raw=pd.array([pd.NA] * len(col["_row"]), dtype="Int32"),
+            prob=col["prob"].astype(np.float64),
+        )
+    else:
+        out.update(
+            h_start=col["hs"].astype(np.int32), h_end=col["he"].astype(np.int32),
+            t_start=col["ts"].astype(np.int32), t_end=col["te"].astype(np.int32),
+            label=col["label"], prob=col["prob"].astype(np.float64),
+        )
+    return pd.DataFrame(out)

@@ -79,6 +79,15 @@ def constraint_filter(triples: DataFrame) -> DataFrame:
     return triples.filter(head_ok & tail_ok)
 
 
+# The schema format_output produces — the one triples contract every
+# scorer path emits (the neural k=1 scorer builds it inside its UDF).
+TRIPLES_SCHEMA = (
+    "doc_id string, head_start int, head_end int, tail_start int, "
+    "tail_end int, head_text string, tail_text string, label string, "
+    "raw int, prob double"
+)
+
+
 def format_output(triples: DataFrame) -> DataFrame:
     """Final output shape (glirel/model.py:587-604): exclusive end (+1),
     head/tail text, label, score."""

@@ -402,7 +402,7 @@ def pred_type_signature(
         t = decoded
     else:
         t = decode.threshold_filter(scored)
-        t = decode.top_k_per_pair(t)
+        t = decode.top_k_per_pair(t, config.TOP_K)
         t = decode.constraint_filter(t)
     sig = (
         t.groupBy(

@@ -23,20 +23,37 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from glirel_spark import config
 
 
-def labels_df(spark: SparkSession, include_coref: bool = False) -> DataFrame:
-    """Broadcastable label dimension with entity-type constraints.
+def label_constraints(
+    labels: dict[str, dict[str, list[str]]],
+) -> list[tuple[str, list[str] | None, list[str] | None]]:
+    """(label, allowed_head, allowed_tail) in ascending label order — the
+    P9 constraint table every decode path reads. None = unconstrained
+    (glirel/modules/utils.py:76-79: `.get(..., rel_types)` default); an
+    empty list allows no type, so it drops every row of that label."""
+    out = []
+    for lab in sorted(labels):
+        spec = labels.get(lab) or {}
+        out.append((lab, spec.get("allowed_head"), spec.get("allowed_tail")))
+    return out
 
-    NULL allowed_head/allowed_tail = unconstrained
-    (glirel/modules/utils.py:76-79: `.get(..., rel_types)` default).
-    """
-    rows = []
-    for label, c in sorted(config.RELATION_LABELS.items()):
-        rows.append((label, c.get("allowed_head"), c.get("allowed_tail")))
-    if include_coref:
-        rows.append((config.COREF_LABEL, None, None))
+
+def labels_df_from_dict(
+    spark: SparkSession, labels: dict[str, dict[str, list[str]]]
+) -> DataFrame:
+    """Broadcastable label dimension with entity-type constraints
+    (NULL allowed_head/allowed_tail = unconstrained)."""
     return spark.createDataFrame(
-        rows, "label string, allowed_head array<string>, allowed_tail array<string>"
+        label_constraints(labels),
+        "label string, allowed_head array<string>, allowed_tail array<string>",
     )
+
+
+def labels_df(spark: SparkSession, include_coref: bool = False) -> DataFrame:
+    """The configured label dimension (+ the SELF coref label)."""
+    labels = dict(config.RELATION_LABELS)
+    if include_coref:
+        labels[config.COREF_LABEL] = {}
+    return labels_df_from_dict(spark, labels)
 
 
 def lexical_raw(h_text: Column, t_text: Column, label: Column, dist: Column) -> Column:
@@ -187,11 +204,9 @@ def lexical_constraint_ok(
     same truth table as the NULL-semantics array_contains form over the
     broadcast label dimension (types are non-null by construction)."""
     ok = None
-    for lab in sorted(labels):
-        spec = labels.get(lab) or {}
-        ah, at = spec.get("allowed_head"), spec.get("allowed_tail")
-        head_ok = F.col("h_type").isin(*ah) if ah else F.lit(True)
-        tail_ok = F.col("t_type").isin(*at) if at else F.lit(True)
+    for lab, ah, at in label_constraints(labels):
+        head_ok = F.col("h_type").isin(*ah) if ah is not None else F.lit(True)
+        tail_ok = F.col("t_type").isin(*at) if at is not None else F.lit(True)
         cond = head_ok & tail_ok
         ok = (
             F.when(label_col == lab, cond)

@@ -9,24 +9,13 @@ constraint filtering, exclusive-end output, score-descending order keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from glirel_spark import config
 from glirel_spark.operators import decode as decode_ops
 from glirel_spark.operators import fused
 from glirel_spark.operators import scoring as scoring_ops
-
-
-def labels_df_from_dict(
-    spark: SparkSession, labels: dict[str, dict[str, list[str]]]
-) -> DataFrame:
-    rows = [
-        (lab, c.get("allowed_head"), c.get("allowed_tail"))
-        for lab, c in sorted(labels.items())
-    ]
-    return spark.createDataFrame(
-        rows, "label string, allowed_head array<string>, allowed_tail array<string>"
-    )
+from glirel_spark.operators.scoring import labels_df_from_dict
 
 
 def extract_triples(
@@ -40,11 +29,13 @@ def extract_triples(
 
     The reference requires >= 2 entities per doc
     (spacy_integration.py:96-99) — docs with < 2 mentions fall out
-    naturally (no pairs). scorer='lexical' | 'neural'.
+    naturally (no pairs). scorer='lexical' | 'neural'. An empty label
+    dict yields an empty relation table of the same schema.
     """
     spark = docs_tokens.sparkSession
     label_dict = labels if labels is not None else config.RELATION_LABELS
-    ldf = labels_df_from_dict(spark, label_dict)
+    if not label_dict:
+        return spark.createDataFrame([], decode_ops.TRIPLES_SCHEMA)
     # one cached gazetteer/hygiene pass feeds the pair subtree AND the
     # decode enrichment (plan-keyed cache, shared with pipeline.docs_ments
     # when called on the same docs_tokens plan)
@@ -52,14 +43,13 @@ def extract_triples(
     if scorer == "neural":
         from glirel_spark.model import udf
 
-        return udf.neural_triples(
-            docs_tokens, fused.mentions_from(dm), threshold, top_k
-        )
+        return udf.neural_triples_from(dm, threshold, top_k, label_dict)
     rel = fused.pairs_from(dm).filter("is_rel")
     if top_k == 1:
         # fused per-row label argmax (round-6): works for ANY label dict
         # because the lexical label terms are literals — zero exchanges
         return scoring_ops.lexical_topk1_triples(rel, label_dict, threshold)
+    ldf = labels_df_from_dict(spark, label_dict)
     scored = scoring_ops.score_pairs_lexical(rel, ldf)
     return decode_ops.decode(
         scored, threshold, top_k,

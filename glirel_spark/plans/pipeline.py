@@ -93,8 +93,10 @@ def triples(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = config.THRESHOLD,
-    top_k: int = config.TOP_K,
+    top_k: int | None = None,
 ) -> DataFrame:
+    if top_k is None:  # read at call time, so a TOP_K override applies
+        top_k = config.TOP_K
     # k=1 (the shipped config): fused per-row label argmax — the label
     # dimension is a literal of the lexical scorer, so the crossJoin +
     # threshold + argmax aggregation collapses into ONE narrow
@@ -114,7 +116,8 @@ def triples(
     # 162.3s/42.5s at 1/4 executors (0.956 efficiency) vs slim
     # 167.1s/47.8s (0.874) — faster at both levels AND scales better.
     # Slim mode remains for scorers that emit key-only relations (the
-    # neural mapInPandas output, model/udf.neural_triples).
+    # neural scorer's scored relation at top_k > 1,
+    # model/udf.neural_triples_from).
     return decode_ops.decode(scored(spark, sf_dir), threshold, top_k)
 
 
@@ -174,6 +177,12 @@ def _eval_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
 def eval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import evaluate
 
+    if config.TOP_K != 1:
+        s = scored(spark, sf_dir)
+        gold = evaluate.gold_triples(s)
+        return evaluate.per_label_counts(
+            evaluate.annotated_pairs_filter(_eval_preds(spark, sf_dir), gold), gold
+        )
     # round-6: decode + J5 filter + TP test are row-local on the pair
     # relation for the lexical scorer at k=1 (evaluate.py docstring);
     # bit-identical to the scored-relation chain, same unchanged oracle.
@@ -196,7 +205,13 @@ def threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are all row-local on the pair relation — no scored cache, no
     # |labels|x expansion, no best⋈gold join (evaluate.py docstring;
     # bit-identical output, same unchanged oracle). The scored-relation
-    # form (evaluate.threshold_search) remains for external scorers.
+    # form (evaluate.threshold_search) remains for external scorers and
+    # for top_k > 1.
+    if config.TOP_K != 1:
+        s = scored(spark, sf_dir)
+        return evaluate.threshold_search(
+            s, evaluate.gold_triples(s), top_k=config.TOP_K
+        )
     return evaluate.threshold_search_lexical(
         pair_ops.relation_pairs(pairs(spark, sf_dir))
     )
@@ -301,6 +316,8 @@ def pred_functionality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pred_type_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import graph as graph_ops
 
+    if config.TOP_K != 1:
+        return graph_ops.pred_type_signature(scored(spark, sf_dir))
     # round-6: feed the fused k=1 decoded relation directly (same rows
     # as decode-over-scored, tests/test_fused_decode.py) — no pairs x
     # labels expansion
@@ -360,11 +377,9 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.model import udf
 
-    # fused mentions are row-identical to extract_mentions (tested) and
-    # come from the shared docs_ments cache
-    return udf.neural_triples(
-        docs_tokens(spark, sf_dir), mentions(spark, sf_dir)
-    )
+    # the scorer reads the shared docs_ments cache directly: at k=1 one
+    # repartition feeds a mapInPandas that scores and decodes
+    return udf.neural_triples_from(docs_ments(spark, sf_dir))
 
 
 # --- reference eval-protocol replay (WikiZSL/FewRel-shaped fixture) ----------

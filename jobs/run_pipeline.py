@@ -49,8 +49,7 @@ def extract_bucket_neural(docs_subset):
     dt = tables.text_of(docs_subset).select(
         "doc_id", F.split("text", " ").alias("tokens")
     )
-    ments = fused.mentions_from(fused.with_mentions(dt))
-    triples = model_udf.neural_triples(dt, ments)
+    triples = model_udf.neural_triples_from(fused.with_mentions(dt))
     return linking.link_triples(triples, linking.alias_df(spark))
 
 

@@ -1,7 +1,8 @@
-"""Round-6 fused-plan equivalence: the per-row lexical argmax decode and
-the fused threshold search must be ROW-IDENTICAL to the relational forms
-they replace (crossJoin + threshold + per-pair argmax aggregation, and
-the scored-relation grid search)."""
+"""Fused-plan equivalence: the per-row lexical argmax decode, the fused
+threshold search and the neural scorer's in-UDF k=1 decode must be
+ROW-IDENTICAL to the relational forms they replace (crossJoin or scored
+relation + threshold + per-pair argmax aggregation, and the
+scored-relation grid search)."""
 
 from __future__ import annotations
 
@@ -126,3 +127,83 @@ def test_threshold_search_lexical_dup_grid_and_raw_min(spark, rel):
     fused = evaluate.threshold_search_lexical(rel, grid=grid, raw_min=80)
     assert _rows(fused) == _rows(general)
     scored.unpersist()
+
+
+def test_k1_forms_fall_back_to_decode_chain_when_top_k_is_not_1(
+    spark, rel, monkeypatch
+):
+    """eval_counts, threshold_search and pred_type_signature take their
+    fused k=1 forms only at TOP_K == 1; otherwise they equal the
+    scored-relation decode chain at that k."""
+    from glirel_spark.operators import graph as graph_ops
+    from glirel_spark.plans import pipeline
+
+    k1_counts = _rows(pipeline.eval_counts(spark, SF))
+    monkeypatch.setattr(config, "TOP_K", 2)
+    s = scoring.score_pairs_lexical(rel, scoring.labels_df(spark)).cache()
+    gold = evaluate.gold_triples(s)
+    preds = decode_ops.decode(s, config.THRESHOLD, 2).select(
+        "doc_id",
+        F.col("head_start").alias("h_start"),
+        (F.col("head_end") - 1).alias("h_end"),
+        F.col("tail_start").alias("t_start"),
+        (F.col("tail_end") - 1).alias("t_end"),
+        "label",
+    )
+    counts = evaluate.per_label_counts(
+        evaluate.annotated_pairs_filter(preds, gold), gold
+    )
+    got = pipeline.eval_counts(spark, SF)
+    assert _rows(got, sorted(counts.columns)) == _rows(counts)
+    assert _rows(got) != k1_counts  # k=2 really predicts more
+
+    search = evaluate.threshold_search(s, gold, top_k=2)
+    assert _rows(pipeline.threshold_search(spark, SF)) == _rows(search)
+
+    decoded = decode_ops.constraint_filter(
+        decode_ops.top_k_per_pair(decode_ops.threshold_filter(s), 2)
+    )
+    sig = graph_ops.pred_type_signature(decoded=decoded)
+    assert _rows(pipeline.pred_type_signature(spark, SF)) == _rows(sig)
+    s.unpersist()
+
+
+def test_fused_neural_equals_decode_chain_sf0001(spark, neural_decode_chain):
+    """pipeline.triples_neural (in-UDF decode) == score_pairs_neural ->
+    decode, row for row, on the sf0.001 corpus."""
+    from glirel_spark.plans import pipeline
+
+    fused = pipeline.triples_neural(spark, SF)
+    chain = neural_decode_chain(
+        pipeline.docs_tokens(spark, SF), pipeline.mentions(spark, SF)
+    )
+    assert fused.columns == chain.columns
+    got, want = _rows(fused), _rows(chain)
+    assert len(want) > 1000
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1)]
+)
+def test_empty_list_constraint_drops_rows(spark, scorer, top_k):
+    """allowed_head=[] allows no head type: every row whose decoded label
+    carries it is dropped (lexical k=1, relational decode, neural k=1)
+    — whereas an absent constraint keeps them."""
+    from glirel_spark.plans import api, pipeline
+
+    docs = pipeline.docs_tokens(spark, SF).filter(
+        F.col("doc_id").cast("int") < 40
+    )
+
+    def labels_out(labels):
+        out = api.extract_triples(
+            docs, labels, threshold=0.0, top_k=top_k, scorer=scorer
+        )
+        return {r.label for r in out.select("label").distinct().collect()}
+
+    open_labels = {"used by": {}, "feeds": {}, "depends on": {}}
+    assert "used by" in labels_out(open_labels)
+    closed = dict(open_labels, **{"used by": {"allowed_head": []}})
+    got = labels_out(closed)
+    assert "used by" not in got and got

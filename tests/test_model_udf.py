@@ -1,14 +1,21 @@
 """Tensor-plane scorer: determinism, pair-ordering contract parity with
-the relational J1, label-rep caching, decode integration."""
+the relational J1, label-rep caching, decode integration through both
+the in-UDF k=1 decode and the relational decode chain, and the in-UDF
+decode helper (top1_decode)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
+from glirel_spark import config
 from glirel_spark.model.scorer import DeterministicGLiREL
-from glirel_spark.model.udf import neural_triples, score_pairs_neural
+from glirel_spark.model.udf import neural_triples, score_pairs_neural, top1_decode
 from glirel_spark.operators.mentions import extract_mentions
 from glirel_spark.operators.pairs import generate_pairs
+
+UNCONSTRAINED = {lab: {} for lab in config.RELATION_LABELS}
 
 
 def test_scorer_deterministic_across_instances():
@@ -84,13 +91,17 @@ def test_udf_pairs_match_relational_j1(spark):
     assert rel == udf_pairs
 
 
-def test_neural_triples_decode_integration(spark):
+@pytest.mark.parametrize("path", ["fused", "decode_chain"])
+def test_neural_triples_decode_integration(spark, path, neural_decode_chain):
     docs = spark.createDataFrame(
         [("d0", "spark query table scan window customer".split(" "))],
         "doc_id string, tokens array<string>",
     )
     m = extract_mentions(docs, spark)
-    out = neural_triples(docs, m, threshold=0.5, top_k=1)
+    if path == "fused":
+        out = neural_triples(docs, m, threshold=0.5, top_k=1)
+    else:
+        out = neural_decode_chain(docs, m, threshold=0.5)
     rows = out.collect()
     assert all(0.5 < r.prob <= 1.0 for r in rows)
     # top_k=1: at most one label per position pair
@@ -99,7 +110,8 @@ def test_neural_triples_decode_integration(spark):
     # output convention: exclusive end
     assert all(r.head_end > r.head_start for r in rows)
 
-def test_out_of_range_span_positions_map_correctly(spark):
+@pytest.mark.parametrize("path", ["scored", "fused"])
+def test_out_of_range_span_positions_map_correctly(spark, path):
     """P4 regression: when a mention's end exceeds the token sequence,
     the UDF must drop it BEFORE mapping pair indices back to span rows —
     otherwise every later span's positions shift (the round-1 latent
@@ -117,10 +129,21 @@ def test_out_of_range_span_positions_map_correctly(spark):
          ("d0", 2, 2, 2, "OBJECT", "table")],
         "doc_id string, m_id int, start int, end int, type string, text string",
     )
-    out = score_pairs_neural(docs, m).select(
-        "h_start", "h_end", "t_start", "t_end"
-    ).distinct().collect()
-    got = {(r.h_start, r.h_end, r.t_start, r.t_end) for r in out}
+    if path == "scored":
+        out = score_pairs_neural(docs, m).select(
+            "h_start", "h_end", "t_start", "t_end"
+        )
+    else:
+        # threshold 0 + no constraints: every scored pair decodes
+        out = neural_triples(
+            docs, m, threshold=0.0, top_k=1, labels=UNCONSTRAINED
+        ).select(
+            F.col("head_start").alias("h_start"),
+            (F.col("head_end") - 1).alias("h_end"),
+            F.col("tail_start").alias("t_start"),
+            (F.col("tail_end") - 1).alias("t_end"),
+        )
+    got = {(r.h_start, r.h_end, r.t_start, r.t_end) for r in out.distinct().collect()}
     # only the two valid spans pair up; no position may reference (1,9)
     assert got == {(0, 0, 2, 2), (2, 2, 0, 0)}
 
@@ -191,3 +214,32 @@ def test_per_example_label_sets(spark):
     got = {(r.h_start, r.h_end, r.t_start, r.t_end): r.prob
            for r in rows if r.doc_id == "d1"}
     assert got == expect
+
+
+def test_top1_decode_ties_pick_lowest_label():
+    probs = np.array([
+        [0.7, 0.9, 0.9],   # tie between labels 1 and 2 -> 1
+        [0.8, 0.8, 0.8],   # three-way tie -> 0
+        [0.2, 0.4, 0.5],   # max not above the threshold -> dropped
+        [0.3, 0.6, 0.6],   # threshold is strict: 0.6 > 0.6 is false
+    ])
+    types = np.array(["A", "A", "A", "A"], dtype=object)
+    keep, best = top1_decode(probs, 0.6, types, types, [(None, None)] * 3)
+    assert keep.tolist() == [0, 1]
+    assert best.tolist() == [1, 0]
+
+
+def test_top1_decode_constraint_on_best_label_only():
+    """A best label that fails its constraint drops the pair — no
+    fallback to the runner-up (decode applies P9 after top-k)."""
+    probs = np.array([
+        [0.9, 0.8],   # best 0 requires head X; head is Y -> dropped
+        [0.9, 0.8],   # head X -> kept with label 0
+        [0.1, 0.9],   # best 1: tail must be in [] -> dropped
+        [0.9, 0.1],   # head type None matches nothing -> dropped
+    ])
+    h = np.array(["Y", "X", "X", None], dtype=object)
+    t = np.array(["Z", "Z", "Z", "Z"], dtype=object)
+    keep, best = top1_decode(probs, 0.5, h, t, [(["X"], None), (None, [])])
+    assert keep.tolist() == [1]
+    assert best.tolist() == [0]

@@ -250,3 +250,36 @@ def test_media_evidence_adds_only_a_dimension_join(spark):
     plan = _plan(pipeline.triples_media_evidence(spark, SF))
     assert plan.count("Exchange hashpartitioning") <= 1, plan
     assert "Window" not in plan
+
+
+def _nodes_outside_cache(df) -> list[str]:
+    """One-line description of each physical-plan node, walking the
+    tree itself (AQE's toString repeats cached subtrees) and stopping at
+    cache scans."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    out, todo = [], [node]
+    while todo:
+        node = todo.pop()
+        out.append(node.simpleString(100))
+        if node.nodeName() != "InMemoryTableScan":
+            kids = node.children()
+            todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def test_neural_triples_plan_is_one_repartition_into_the_udf(spark):
+    """At top_k=1 the neural path decodes inside the scorer: its only
+    shuffle is the round-robin repartition feeding MapInPandas, and no
+    join or aggregation follows the UDF (the decode exchange and the
+    two enrichment joins are gone)."""
+    from glirel_spark.plans import pipeline
+
+    nodes = _nodes_outside_cache(pipeline.triples_neural(spark, SF))
+    plan = "\n".join(nodes)
+    exchanges = [n for n in nodes if "Exchange" in n]
+    assert len(exchanges) == 1, plan
+    assert "RoundRobinPartitioning" in exchanges[0], plan
+    assert nodes[0].startswith("MapInPandas"), plan
+    assert "Join" not in plan and "Aggregate" not in plan, plan

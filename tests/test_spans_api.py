@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from glirel_spark.operators.fused import with_mentions
@@ -78,3 +79,17 @@ def test_curriculum_sort(spark):
     out = curriculum_sort(docs).select(F.size("relations").alias("n")).collect()
     ns = [r.n for r in out]
     assert ns == sorted(ns)
+
+
+@pytest.mark.parametrize("scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1)])
+def test_extract_triples_empty_label_set_is_empty_typed_frame(spark, scorer, top_k):
+    docs = spark.createDataFrame(
+        [("d0", "spark query table scan window customer".split(" "))],
+        "doc_id string, tokens array<string>",
+    )
+    full = extract_triples(docs, top_k=top_k, scorer=scorer)
+    empty = extract_triples(docs, labels={}, top_k=top_k, scorer=scorer)
+    assert empty.count() == 0
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]

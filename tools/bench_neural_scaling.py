@@ -1,13 +1,14 @@
 """N vs 4N executor scaling for the NEURAL extraction stage.
 
 bench_scaling.py measures the lexical flagship (extraction + linking);
-this harness measures the tensor plane — the mapInPandas scorer UDF
-plus its decode — because at production scale the neural scorer IS the
-triple-extraction stage the north rule's efficiency target covers.
-Expectation and why: the scorer is map-only per document (model
-singleton per python worker, Arrow batches, zero cross-doc state), so
-it should scale near the hardware ceiling; the only exchange is the
-mentions collect_list groupBy + the decode argmax.
+this harness measures the tensor plane — the mapInPandas scorer UDF,
+which decodes in-UDF at top_k=1 (model/udf.neural_triples_from) —
+because at production scale the neural scorer IS the triple-extraction
+stage the north rule's efficiency target covers. Expectation and why:
+the scorer is map-only per document (model singleton per python worker,
+Arrow batches, zero cross-doc state), so it should scale near the
+hardware ceiling; the only exchange is the round-robin repartition
+feeding the scorer.
 
 Same protocol as bench_scaling.py: local-cluster[N,4,mem] (real
 executor JVMs), one untimed warmup per level, REPS timed runs with
@@ -117,10 +118,9 @@ inter = tables.interleaved_documents(big)
 dt = tables.text_of(inter).select(
     "doc_id", F.split("text", " ").alias("tokens"))
 dm = fused.with_mentions(dt).cache()
-ments = fused.mentions_from(dm)
 
 def job():
-    model_udf.neural_triples(dt, ments).write.format("noop").mode("overwrite").save()
+    model_udf.neural_triples_from(dm).write.format("noop").mode("overwrite").save()
 
 job()  # warmup: JIT + python worker spin-up + token-embedding cache
 times = []
