@@ -10,8 +10,8 @@ allocation-heavy stages hit the one JVM's GC wall; 2->8 executors does
 not have that artifact).
 
 The measured job: the flagship extraction+linking pipeline
-(documents -> fused mentions/pairs -> scored -> triples -> linked ->
-salted graph), fully materialized. Per level: one warmup run (JIT +
+(documents -> fused mentions/pairs -> triples (``api.triples_from``) ->
+linked -> salted graph), fully materialized. Per level: one warmup run (JIT +
 token-cache build; a production cluster is long-running), then REPS
 timed runs (default 3) with BOTH the minimum-based and median-based
 efficiency reported plus every raw time (the shared box has +-20-25%
@@ -52,9 +52,10 @@ _JOB = r"""
 import sys, time, json
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
-from glirel_spark.operators import decode as decode_ops
-from glirel_spark.operators import fused, linking, scoring
+from glirel_spark import config
+from glirel_spark.operators import fused, linking
 from glirel_spark.operators import graph as graph_ops
+from glirel_spark.plans import api
 from glirel_spark.sources import tables
 
 n_exec = {n_exec}
@@ -94,19 +95,13 @@ big = big.repartition(total_cores * 2)
 inter = tables.interleaved_documents(big)
 dt = tables.text_of(inter).select(
     "doc_id", F.split("text", " ").alias("tokens"))
-# one cached gazetteer/hygiene pass feeds pairs AND decode enrichment
+# the cached gazetteer/hygiene pass: every timed run re-reads it
 dm = fused.with_mentions(dt).cache()
 
 def job():
-    rel = fused.pairs_from(dm).filter("is_rel")
-    labels = scoring.labels_df(spark)
-    scored = scoring.score_pairs_lexical(rel, labels)
-    # payload decode: scored already carries surfaces + constraint
-    # arrays; map-side combine collapses each pair to one pre-shuffle
-    # row, so no enrich joins (measured faster AND better-scaling than
-    # the slim form at both cluster sizes — BENCH/BASELINE.md)
-    triples = decode_ops.decode(scored)
-    linked = linking.link_triples(triples, linking.alias_df(spark))
+    # the extraction plan every surface runs (api.triples_from), linked
+    # through the literal alias map as the pipeline queries do
+    linked = linking.link_triples(api.triples_from(dm), config.ALIAS_DICT)
     graph_ops.materialize_graph(linked).write.format("noop").mode("overwrite").save()
 
 job()  # warmup: JIT + cache build

@@ -105,42 +105,16 @@ def format_output(triples: DataFrame) -> DataFrame:
     )
 
 
-_SLIM_COLS = PAIR_KEY + ["label", "raw", "prob", "h_type", "t_type"]
-
-
 def decode(
     scored: DataFrame,
     threshold: float = config.THRESHOLD,
     top_k: int = config.TOP_K,
     apply_constraints: bool = True,
-    mention_texts: DataFrame | None = None,
-    labels: DataFrame | None = None,
 ) -> DataFrame:
-    """threshold -> top-k -> constraints -> format.
-
-    When ``mention_texts`` (doc_id, start, end, text) and ``labels`` (the
-    broadcastable label dimension) are given, the top-k shuffle carries
-    ONLY the slim pair relation (keys + label + raw + prob + types);
-    mention surface strings and the constraint arrays join back against
-    the post-threshold post-top-k survivors. At web scale the string
-    payload dominates shuffle bytes, and the survivors are >=|labels| x
-    fewer rows than the scored relation — identical output rows either
-    way, because (pair key, label) already determines the row.
-    """
-    out = threshold_filter(scored, threshold)
-    slim = mention_texts is not None and labels is not None
-    if slim:
-        out = out.select(*[c for c in _SLIM_COLS if c in out.columns])
-    out = top_k_per_pair(out, top_k)
-    if slim:
-        m = mention_texts.select("doc_id", "start", "end", "text")
-        h = m.toDF("doc_id", "h_start", "h_end", "h_text")
-        t = m.toDF("doc_id", "t_start", "t_end", "t_text")
-        out = (
-            out.join(h, ["doc_id", "h_start", "h_end"])
-            .join(t, ["doc_id", "t_start", "t_end"])
-            .join(F.broadcast(labels), "label", "left")
-        )
+    """threshold -> top-k -> constraints -> format, over a scored
+    relation that carries its payload (mention texts/types and the
+    constraint arrays) through the top-k."""
+    out = top_k_per_pair(threshold_filter(scored, threshold), top_k)
     if apply_constraints:
         out = constraint_filter(out)
     return format_output(out)

@@ -497,6 +497,23 @@ def threshold_search(
     return _grid_metrics(counts)
 
 
+def threshold_search_pairs(rel_pairs: DataFrame) -> DataFrame:
+    """W5 grid search for the lexical scorer over the relation pairs, at
+    ``config.TOP_K`` read at call time: the row-local
+    ``threshold_search_lexical`` at k=1, the scored-relation
+    ``threshold_search`` otherwise. The one ``TOP_K`` guard shared by the
+    ``threshold_search`` pipeline query and the spark-submit job's eval
+    report."""
+    if config.TOP_K == 1:
+        return threshold_search_lexical(rel_pairs)
+    from glirel_spark.operators import scoring
+
+    s = scoring.score_pairs_lexical(
+        rel_pairs, scoring.labels_df(rel_pairs.sparkSession)
+    )
+    return threshold_search(s, gold_triples(s), top_k=config.TOP_K)
+
+
 def _grid_metrics(counts: DataFrame) -> DataFrame:
     """Per-threshold micro/macro metrics from per-(threshold, label)
     counts — shared, unchanged float math (sorted fold for cross-engine

@@ -7,9 +7,9 @@ sf0.1 that plan has 42 exchanges and recomputes the mention subtree 3x.
 
 This module computes the identical result as pure array expressions on
 the document row: gazetteer lookup via a map literal, overlap
-resolution as an intra-array dominance filter, pair expansion as a
-nested transform — ONE narrow map stage, ZERO shuffles until decode's
-top-k window. Tests assert row-for-row equality with the relational
+resolution as an intra-array dominance filter, pair expansion as two
+chained explodes — ONE narrow map stage, ZERO shuffles (the k=1 decode
+is a projection too, scoring.lexical_topk1_triples). Tests assert row-for-row equality with the relational
 operators (which remain the general path when mentions arrive from an
 external NER table rather than a per-row rule).
 
@@ -160,38 +160,6 @@ def mentions_fused(docs_tokens: DataFrame) -> DataFrame:
     return mentions_from(with_mentions(docs_tokens))
 
 
-def pairs_col(ments: Column, max_distance: int | None = config.MAX_PAIR_DISTANCE) -> Column:
-    """array of pair structs (J1) from a mention array — no join."""
-
-    def mk(h, t):
-        dist = F.abs(h["start"] - t["start"])
-        is_rel = F.lit(True) if max_distance is None else dist <= F.lit(max_distance)
-        is_coref = h["m_id"] < t["m_id"]
-        return F.struct(
-            h["m_id"].alias("head_m_id"),
-            t["m_id"].alias("tail_m_id"),
-            h["start"].alias("h_start"),
-            h["end"].alias("h_end"),
-            t["start"].alias("t_start"),
-            t["end"].alias("t_end"),
-            h["type"].alias("h_type"),
-            t["type"].alias("t_type"),
-            h["text"].alias("h_text"),
-            t["text"].alias("t_text"),
-            dist.cast("int").alias("dist"),
-            is_rel.alias("is_rel"),
-            is_coref.alias("is_coref"),
-        )
-
-    nested = F.transform(
-        ments, lambda h: F.filter(
-            F.transform(ments, lambda t: mk(h, t)),
-            lambda p: (p["head_m_id"] != p["tail_m_id"]) & (p["is_rel"] | p["is_coref"]),
-        )
-    )
-    return F.flatten(nested)
-
-
 def pairs_from(
     docs_ments: DataFrame, max_distance: int | None = config.MAX_PAIR_DISTANCE
 ) -> DataFrame:
@@ -203,8 +171,7 @@ def pairs_from(
     run inside whole-stage codegen, whereas higher-order array lambdas
     are evaluated interpreted per element — on the fused hot path that
     interpreted k^2-per-doc struct build was the single largest CPU
-    term at sf0.1 (guide §2 step 2: per-task work). ``pairs_col``
-    remains the array-form for per-row consumers."""
+    term at sf0.1 (guide §2 step 2: per-task work)."""
     h, t = F.col("h"), F.col("t")
     dist = F.abs(h["start"] - t["start"])
     is_rel = F.lit(True) if max_distance is None else dist <= F.lit(max_distance)
@@ -234,5 +201,5 @@ def pairs_fused(
     mentions.extract_mentions; single narrow stage, zero shuffles.
 
     The mention array is materialized by with_mentions before the
-    nested pair transform references it k times (see _hygiene_col)."""
+    pair explode references it k times (see _hygiene_col)."""
     return pairs_from(with_mentions(docs_tokens), max_distance)

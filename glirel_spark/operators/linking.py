@@ -3,7 +3,7 @@
 - J7: alias-dictionary canonicalization — the reference's PID->name /
   alias remap broadcast lookup (data/process_wiki_zsl.py:19-33,
   data/re-docred/run_evaluation.py:28-43) generalized to a
-  (alias -> canonical_id) dimension, broadcast-joined.
+  (alias -> canonical_id) map, looked up as a literal map expression.
 - J8: mention-text alias matching (data_proc.py:43-52 sliding-window
   lowercase match) — at scale, candidate generation is a blocked
   MinHash-LSH join (see operators/minhash.py); here the dictionary is
@@ -26,45 +26,33 @@ def alias_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(rows, "alias string, canonical_id string")
 
 
-def canonicalize(df: DataFrame, aliases, text_col: str,
+def canonicalize(df: DataFrame, aliases: dict[str, str], text_col: str,
                  out_col: str) -> DataFrame:
     """Alias lookup; fallback id for unmatched surface forms.
 
-    ``aliases`` is either the (alias, canonical_id) dimension DataFrame
-    (broadcast left join — the general path for dictionaries that
-    arrive as data, e.g. the 11.7k-row Wikidata property table) or a
-    plain python dict, in which case the lookup compiles to a LITERAL
-    map expression inside the row projection: no join, no broadcast
-    build, zero plan nodes added (round-6; guide §2.4 — the config
-    gazetteer is a compile-time constant exactly like the mention
-    gazetteer in operators/fused.py). Same row semantics either way:
-    lowercase match, miss -> "Q:surface:<lower(text)>".
+    ``aliases`` (alias -> canonical_id) compiles to a LITERAL map
+    expression inside the row projection: no join, no broadcast build,
+    zero plan nodes added (round-6; guide §2.4 — the config gazetteer is
+    a compile-time constant exactly like the mention gazetteer in
+    operators/fused.py). Row semantics: lowercase match, miss ->
+    "Q:surface:<lower(text)>". Aliases that collide once lowercased keep
+    ONE entry: the first alias in sorted (case-sensitive) order wins, so
+    {"Spark": "Q:a", "spark": "Q:b"} links "spark" to "Q:a".
     """
-    if isinstance(aliases, dict):
-        items: list = []
-        for a, cid in sorted(aliases.items()):
-            items += [F.lit(a.lower()), F.lit(cid)]
-        lookup = F.create_map(*items)[F.lower(F.col(text_col))]
-        return df.withColumn(
-            out_col,
-            F.coalesce(
-                lookup, F.concat(F.lit("Q:surface:"), F.lower(F.col(text_col)))
-            ),
-        )
-    a = aliases.select(
-        F.lower(F.col("alias")).alias("_alias"),
-        F.col("canonical_id").alias("_canon"),
-    )
-    joined = df.join(
-        F.broadcast(a), F.lower(F.col(text_col)) == F.col("_alias"), "left"
-    )
-    return joined.withColumn(
+    lookup: dict[str, str] = {}
+    for a, cid in sorted(aliases.items()):
+        lookup.setdefault(a.lower(), cid)
+    items: list = []
+    for a, cid in lookup.items():
+        items += [F.lit(a), F.lit(cid)]
+    hit = F.create_map(*items)[F.lower(F.col(text_col))]
+    return df.withColumn(
         out_col,
-        F.coalesce(F.col("_canon"), F.concat(F.lit("Q:surface:"), F.lower(F.col(text_col)))),
-    ).drop("_alias", "_canon")
+        F.coalesce(hit, F.concat(F.lit("Q:surface:"), F.lower(F.col(text_col)))),
+    )
 
 
-def link_triples(triples: DataFrame, aliases: DataFrame) -> DataFrame:
+def link_triples(triples: DataFrame, aliases: dict[str, str]) -> DataFrame:
     """Triples -> (subj, pred, obj) with canonical entity ids."""
     out = canonicalize(triples, aliases, "head_text", "subj")
     out = canonicalize(out, aliases, "tail_text", "obj")
@@ -100,7 +88,7 @@ def fuzzy_alias_candidates(
     surface/alias pairs whose char-3-gram Jaccard >= threshold (default
     0.3 — the closed sandbox vocabulary's only fuzzy family, token-
     prefix containment like 'table'/'table scan', sits at 0.375),
-    surface != alias (exact matches are the broadcast path in
+    surface != alias (exact matches are the literal-map path in
     `canonicalize`; this op exists for typos/inflections).
 
     Scale shape — the part that matters at a 10^8-alias dictionary:
@@ -259,7 +247,7 @@ def er_edit_pairs(mentions: DataFrame, max_dist: int = 2) -> DataFrame:
     )
 
 
-def entity_types(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
+def entity_types(mentions: DataFrame, aliases: dict[str, str]) -> DataFrame:
     """Per-entity NER-type profile: for each canonical entity, the
     distribution of entity types its mentions carry — (entity, type, n,
     n_entity, share) with share = n / n_entity (ONE exactly-rounded
@@ -267,7 +255,7 @@ def entity_types(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     "Q42 is-a PER (0.98)" and to flag alias collisions (one canonical
     id drawing from two types = a linking bug surfacing as data).
 
-    Scale shape: canonicalization is the same broadcast alias join the
+    Scale shape: canonicalization is the same literal alias map the
     linking path uses; the profile is a map-side-combinable groupBy on
     (entity, type) whose result is bounded by |V| x |types|, and the
     per-entity totals re-aggregate from the profile relation itself
@@ -421,7 +409,7 @@ def canonicalized_graph(triples: DataFrame, er_map: DataFrame) -> DataFrame:
 
 
 def entity_salience(
-    mentions: DataFrame, docs_tokens: DataFrame, aliases: DataFrame
+    mentions: DataFrame, docs_tokens: DataFrame, aliases: dict[str, str]
 ) -> DataFrame:
     """Per-document entity salience features: for each (doc, canonical
     entity), mention frequency, first/last token position, and the
@@ -431,9 +419,9 @@ def entity_salience(
     Gillick 2014 use exactly these feature families). The combiner is a
     modeling choice; the features are the pipeline's job.
 
-    Scale shape: broadcast alias canonicalization (the linking path's
-    join), one map-side-combinable groupBy on (doc_id, entity) — key
-    bounded by entities-per-doc, skew-free — and one join to the
+    Scale shape: literal-map alias canonicalization (the linking
+    path's lookup), one map-side-combinable groupBy on (doc_id, entity)
+    — key bounded by entities-per-doc, skew-free — and one join to the
     per-doc token count on doc_id. Everything integer; one plan, no
     windows.
     """

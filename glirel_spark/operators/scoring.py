@@ -48,12 +48,9 @@ def labels_df_from_dict(
     )
 
 
-def labels_df(spark: SparkSession, include_coref: bool = False) -> DataFrame:
-    """The configured label dimension (+ the SELF coref label)."""
-    labels = dict(config.RELATION_LABELS)
-    if include_coref:
-        labels[config.COREF_LABEL] = {}
-    return labels_df_from_dict(spark, labels)
+def labels_df(spark: SparkSession) -> DataFrame:
+    """The configured label dimension."""
+    return labels_df_from_dict(spark, config.RELATION_LABELS)
 
 
 def lexical_raw(h_text: Column, t_text: Column, label: Column, dist: Column) -> Column:

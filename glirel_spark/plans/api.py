@@ -2,6 +2,9 @@
 points (spacy_integration.py:94-119 / model.py:493-609): take documents
 + a label dict with constraints, return relation dicts.
 
+``triples_from`` is the one documents→triples plan builder: every
+surface (the pipeline queries, the spark-submit job, the streaming twin,
+the scaling harnesses) reaches the extraction plan through it.
 ``extract_triples`` is the DataFrame-native equivalent of
 ``nlp.add_pipe("glirel")`` -> doc._.relations: threshold, top-k,
 constraint filtering, exclusive-end output, score-descending order keys.
@@ -18,42 +21,63 @@ from glirel_spark.operators import scoring as scoring_ops
 from glirel_spark.operators.scoring import labels_df_from_dict
 
 
+def triples_from(
+    docs_ments: DataFrame,
+    labels: dict[str, dict[str, list[str]]] | None = None,
+    threshold: float = config.THRESHOLD,
+    top_k: int | None = None,
+    scorer: str = "lexical",
+) -> DataFrame:
+    """(doc_id, tokens, _ments) -> relation table: the one place the
+    extraction plan is chosen (``top_k`` None = config.TOP_K, read at
+    call time; scorer='lexical' | 'neural').
+
+    - neural: ``udf.neural_triples_from`` (scores and, at k=1, decodes
+      inside one mapInPandas);
+    - lexical k=1: the fused per-row label argmax — the lexical label
+      terms are literals, so it is one narrow projection, zero
+      exchanges, for ANY label dict;
+    - lexical k>1: crossJoin(labels) then the payload decode. The scored
+      relation already carries the mention surfaces and the constraint
+      arrays, and the map-side-combined argmax collapses each pair to
+      one pre-shuffle row, so no enrichment join follows (measured at
+      320k docs, BENCH/BASELINE.md: faster at 1 and 4 executors than
+      decoding key-only rows and joining texts back).
+
+    Docs with < 2 mentions fall out naturally (no pairs; the reference
+    requires >= 2 entities, spacy_integration.py:96-99). An empty label
+    dict yields an empty relation table of the same schema. No cache is
+    added here: each plan reads ``docs_ments`` once (the neural k>1
+    enrichment aside), so callers decide what to materialize.
+    """
+    spark = docs_ments.sparkSession
+    if top_k is None:
+        top_k = config.TOP_K
+    label_dict = labels if labels is not None else config.RELATION_LABELS
+    if not label_dict:
+        return spark.createDataFrame([], decode_ops.TRIPLES_SCHEMA)
+    if scorer == "neural":
+        from glirel_spark.model import udf
+
+        return udf.neural_triples_from(docs_ments, threshold, top_k, label_dict)
+    rel = fused.pairs_from(docs_ments).filter("is_rel")
+    if top_k == 1:
+        return scoring_ops.lexical_topk1_triples(rel, label_dict, threshold)
+    scored = scoring_ops.score_pairs_lexical(rel, labels_df_from_dict(spark, label_dict))
+    return decode_ops.decode(scored, threshold, top_k)
+
+
 def extract_triples(
     docs_tokens: DataFrame,
     labels: dict[str, dict[str, list[str]]] | None = None,
     threshold: float = config.THRESHOLD,
-    top_k: int = config.TOP_K,
+    top_k: int | None = None,
     scorer: str = "lexical",
 ) -> DataFrame:
-    """documents (doc_id, tokens) -> relation table.
-
-    The reference requires >= 2 entities per doc
-    (spacy_integration.py:96-99) — docs with < 2 mentions fall out
-    naturally (no pairs). scorer='lexical' | 'neural'. An empty label
-    dict yields an empty relation table of the same schema.
-    """
-    spark = docs_tokens.sparkSession
-    label_dict = labels if labels is not None else config.RELATION_LABELS
-    if not label_dict:
-        return spark.createDataFrame([], decode_ops.TRIPLES_SCHEMA)
-    # one cached gazetteer/hygiene pass feeds the pair subtree AND the
-    # decode enrichment (plan-keyed cache, shared with pipeline.docs_ments
-    # when called on the same docs_tokens plan)
-    dm = fused.with_mentions(docs_tokens).cache()
-    if scorer == "neural":
-        from glirel_spark.model import udf
-
-        return udf.neural_triples_from(dm, threshold, top_k, label_dict)
-    rel = fused.pairs_from(dm).filter("is_rel")
-    if top_k == 1:
-        # fused per-row label argmax (round-6): works for ANY label dict
-        # because the lexical label terms are literals — zero exchanges
-        return scoring_ops.lexical_topk1_triples(rel, label_dict, threshold)
-    ldf = labels_df_from_dict(spark, label_dict)
-    scored = scoring_ops.score_pairs_lexical(rel, ldf)
-    return decode_ops.decode(
-        scored, threshold, top_k,
-        mention_texts=fused.mentions_from(dm), labels=ldf,
+    """documents (doc_id, tokens) -> relation table (``triples_from``
+    over the gazetteer/hygiene mention pass)."""
+    return triples_from(
+        fused.with_mentions(docs_tokens), labels, threshold, top_k, scorer
     )
 
 

@@ -41,10 +41,14 @@ class LineageLog:
             return []
 
     def record(self, bucket: int, n_docs: int, n_triples: int, wall_sec: float) -> None:
-        row = [(bucket, n_docs, n_triples, float(wall_sec), time.time())]
-        self.spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode("append").parquet(
-            self.path
+        """Append one lineage row, built as a literal projection (no
+        RDD built from a python list)."""
+        values = (bucket, n_docs, n_triples, float(wall_sec), time.time())
+        fields = [f.split() for f in LINEAGE_SCHEMA.split(", ")]
+        row = self.spark.range(1, numPartitions=1).select(
+            *[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(values, fields)]
         )
+        row.write.mode("append").parquet(self.path)
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(self.path)

@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
-from glirel_spark.operators import decode as decode_ops
 from glirel_spark.operators import pairs as pair_ops
 from glirel_spark.operators import scoring as scoring_ops
+from glirel_spark.plans import api
 from glirel_spark.sources import tables
 
 
@@ -83,10 +83,9 @@ def pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fused.pairs_from(docs_ments(spark, sf_dir))
 
 
-def scored(spark: SparkSession, sf_dir: str, include_coref: bool = False) -> DataFrame:
+def scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = pair_ops.relation_pairs(pairs(spark, sf_dir))
-    labels = scoring_ops.labels_df(spark, include_coref=include_coref)
-    return scoring_ops.score_pairs_lexical(rel, labels)
+    return scoring_ops.score_pairs_lexical(rel, scoring_ops.labels_df(spark))
 
 
 def triples(
@@ -95,30 +94,12 @@ def triples(
     threshold: float = config.THRESHOLD,
     top_k: int | None = None,
 ) -> DataFrame:
-    if top_k is None:  # read at call time, so a TOP_K override applies
-        top_k = config.TOP_K
-    # k=1 (the shipped config): fused per-row label argmax — the label
-    # dimension is a literal of the lexical scorer, so the crossJoin +
-    # threshold + argmax aggregation collapses into ONE narrow
-    # projection off the cached gazetteer pass: zero exchanges
-    # (round-6; guide §2.4). Row-identical to the relational decode
-    # (tests/test_fused_decode.py + the unchanged triples oracle).
-    if top_k == 1:
-        return scoring_ops.lexical_topk1_triples(
-            pair_ops.relation_pairs(pairs(spark, sf_dir)), threshold=threshold
-        )
-    # payload decode: scored (from the fused pair plan) already carries
-    # mention surfaces + broadcast-joined constraint arrays, and the
-    # map-side-combined argmax collapses each pair to ONE pre-shuffle
-    # row — so carrying the payload through the agg costs ~2x bytes/row
-    # but eliminates the 4 enrich-join exchanges of the slim form.
-    # Measured head-to-head at 320k docs (BENCH/BASELINE.md): payload
-    # 162.3s/42.5s at 1/4 executors (0.956 efficiency) vs slim
-    # 167.1s/47.8s (0.874) — faster at both levels AND scales better.
-    # Slim mode remains for scorers that emit key-only relations (the
-    # neural scorer's scored relation at top_k > 1,
-    # model/udf.neural_triples_from).
-    return decode_ops.decode(scored(spark, sf_dir), threshold, top_k)
+    # api.triples_from picks the plan: at k=1 (the shipped config) the
+    # fused per-row label argmax off the cached gazetteer pass, zero
+    # exchanges; otherwise the payload decode over the scored relation
+    return api.triples_from(
+        docs_ments(spark, sf_dir), threshold=threshold, top_k=top_k
+    )
 
 
 # --- coref clustering -------------------------------------------------------
@@ -200,19 +181,12 @@ def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import evaluate
 
-    # round-6: the lexical label dimension is a literal, so the argmax,
-    # the gold label set, the annotated filter, and the gold-hit flag
-    # are all row-local on the pair relation — no scored cache, no
+    # round-6: at k=1 the lexical label dimension is a literal, so the
+    # argmax, the gold label set, the annotated filter, and the gold-hit
+    # flag are all row-local on the pair relation — no scored cache, no
     # |labels|x expansion, no best⋈gold join (evaluate.py docstring;
-    # bit-identical output, same unchanged oracle). The scored-relation
-    # form (evaluate.threshold_search) remains for external scorers and
-    # for top_k > 1.
-    if config.TOP_K != 1:
-        s = scored(spark, sf_dir)
-        return evaluate.threshold_search(
-            s, evaluate.gold_triples(s), top_k=config.TOP_K
-        )
-    return evaluate.threshold_search_lexical(
+    # bit-identical output, same unchanged oracle)
+    return evaluate.threshold_search_pairs(
         pair_ops.relation_pairs(pairs(spark, sf_dir))
     )
 
@@ -375,11 +349,9 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- tensor-plane (neural) path ----------------------------------------------
 
 def triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from glirel_spark.model import udf
-
     # the scorer reads the shared docs_ments cache directly: at k=1 one
     # repartition feeds a mapInPandas that scores and decodes
-    return udf.neural_triples_from(docs_ments(spark, sf_dir))
+    return api.triples_from(docs_ments(spark, sf_dir), scorer="neural")
 
 
 # --- reference eval-protocol replay (WikiZSL/FewRel-shaped fixture) ----------

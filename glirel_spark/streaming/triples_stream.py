@@ -3,30 +3,24 @@ a documents stream -> (subj, pred, obj) triples, micro-batch by
 micro-batch.
 
 The reference is batch-only (SURVEY.md §2.10); a production KG pipeline
-ingests documents continuously. Design:
-
-- everything up to the threshold filter is STATELESS (narrow array
-  expressions + a broadcast label join), so it runs in append mode with
-  no state store and no watermark — the same whole-stage-codegen plan
-  as the batch path;
-- the per-pair top-k argmax and enrichment run inside ``foreachBatch``
-  via the BATCH decode (operators/decode.py): a document arrives in
-  exactly one micro-batch, so pair keys never straddle batches and
-  batch-local decode == global decode. This avoids an unbounded state
-  store that a streaming-native groupBy would require (pair keys are
-  unique forever, so their state would never be evicted).
+ingests documents continuously. Design: each micro-batch runs the batch
+extraction plan itself (``plans.api.triples_from``) inside
+``foreachBatch``. At top_k=1 that plan is one narrow projection — the
+label argmax, threshold and constraints are row-local on the pair row —
+so it needs no state store and no watermark. At top_k > 1 the decode's
+per-pair top-k is batch-local and still exact: a document arrives in
+exactly one micro-batch, so pair keys never straddle batches. A
+streaming-native groupBy would instead keep unbounded state (pair keys
+are unique forever, so their state would never be evicted).
 
 Equality with the batch pipeline is asserted in tests/test_streaming.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from glirel_spark import config
-from glirel_spark.operators import decode as decode_ops
-from glirel_spark.operators import fused
-from glirel_spark.operators import scoring as scoring_ops
+from glirel_spark.plans import api
 from glirel_spark.sources import tables
 
 DOCUMENTS_SCHEMA = (
@@ -44,20 +38,10 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def extract_triples_batch(docs_flat: DataFrame) -> DataFrame:
     """flat documents -> triples; pure function of one (micro-)batch."""
-    spark = docs_flat.sparkSession
-    import pyspark.sql.functions as F
-
     dt = tables.text_of(tables.interleaved_documents(docs_flat)).select(
         "doc_id", F.split("text", " ").alias("tokens")
     )
-    dm = fused.with_mentions(dt)
-    labels = scoring_ops.labels_df(spark)
-    rel = fused.pairs_from(dm).filter("is_rel")
-    scored = scoring_ops.score_pairs_lexical(rel, labels)
-    return decode_ops.decode(
-        scored, config.THRESHOLD, config.TOP_K,
-        mention_texts=fused.mentions_from(dm), labels=labels,
-    )
+    return api.extract_triples(dt)
 
 
 def run_extraction_stream(

@@ -1,15 +1,25 @@
 """Cluster entry point: spark-submit --py-files glirel_spark.zip \
-    jobs/run_pipeline.py --input <sf_dir> --output <dir> [--resume]
+    jobs/run_pipeline.py --input <sf_dir> --output <dir>
 
 Runs the full KG-construction pipeline (documents -> triples -> linked
-graph) with bucket-granular checkpoint-resume and per-partition lineage
-metrics. On a real cluster --input/--output are Iceberg identifiers via
-TableIO; in the sandbox they are parquet dirs.
+graph) with bucket-granular checkpoint-resume (re-running with the same
+--output skips the buckets its lineage table records as done) and
+per-partition lineage metrics. On a real cluster --input/--output are
+Iceberg identifiers via TableIO; in a local run they are parquet dirs.
+
+Each bucket runs the same extraction plan as the pipeline queries
+(``plans.api.triples_from``) and links through the literal alias map,
+so with the lexical scorer at top_k=1 a bucket is one narrow stage:
+no exchange, no join, no Python. ``--eval-report`` adds the
+threshold-grid replay (``evaluate.threshold_search_pairs``, the same
+TOP_K guard as the ``threshold_search`` query) and a submission taken
+from ``triples_from``.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import sys
 import time
@@ -19,38 +29,25 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from glirel_spark.operators import decode as decode_ops
-from glirel_spark.operators import fused, linking, scoring
+from glirel_spark import config
+from glirel_spark.operators import fused, linking
 from glirel_spark.operators import graph as graph_ops
+from glirel_spark.plans import api
 from glirel_spark.plans.lineage import LineageLog, run_resumable
 from glirel_spark.session import get_spark
 from glirel_spark.sources import tables
 
 
-def extract_bucket(docs_subset):
-    """Per-bucket stage: documents -> linked triples (lexical scorer)."""
-    spark = docs_subset.sparkSession
-    dt = tables.text_of(docs_subset).select(
-        "doc_id", F.split("text", " ").alias("tokens")
-    )
-    rel = fused.pairs_fused(dt).filter("is_rel")
-    scored = scoring.score_pairs_lexical(rel, scoring.labels_df(spark))
-    triples = decode_ops.decode(scored)
-    return linking.link_triples(triples, linking.alias_df(spark))
+def _docs_tokens(inter):
+    return tables.text_of(inter).select("doc_id", F.split("text", " ").alias("tokens"))
 
 
-def extract_bucket_neural(docs_subset):
-    """Per-bucket stage with the tensor-plane scorer (mapInPandas) —
-    the path that requires `--py-files glirel_spark.zip` to reach the
-    EXECUTOR python workers, not just the driver."""
-    spark = docs_subset.sparkSession
-    from glirel_spark.model import udf as model_udf
-
-    dt = tables.text_of(docs_subset).select(
-        "doc_id", F.split("text", " ").alias("tokens")
-    )
-    triples = model_udf.neural_triples_from(fused.with_mentions(dt))
-    return linking.link_triples(triples, linking.alias_df(spark))
+def extract_bucket(docs_subset, scorer: str = "lexical"):
+    """Per-bucket stage: documents -> linked triples. scorer='neural' is
+    the tensor-plane mapInPandas scorer, whose EXECUTOR python workers
+    import glirel_spark from `--py-files glirel_spark.zip`."""
+    triples = api.extract_triples(_docs_tokens(docs_subset), scorer=scorer)
+    return linking.link_triples(triples, config.ALIAS_DICT)
 
 
 def main() -> None:
@@ -80,7 +77,7 @@ def main() -> None:
     linked = run_resumable(
         spark,
         inter,
-        extract_bucket_neural if args.scorer == "neural" else extract_bucket,
+        functools.partial(extract_bucket, scorer=args.scorer),
         out_path=f"{args.output}/linked",
         lineage_path=f"{args.output}/lineage",
         n_buckets=args.buckets,
@@ -91,16 +88,11 @@ def main() -> None:
     if args.eval_report:
         from glirel_spark.operators import evaluate, report
 
-        dt = tables.text_of(inter).select(
-            "doc_id", F.split("text", " ").alias("tokens")
-        )
-        rel = fused.pairs_fused(dt).filter("is_rel")
-        scored = scoring.score_pairs_lexical(rel, scoring.labels_df(spark)).cache()
-        search = evaluate.threshold_search(scored, evaluate.gold_triples(scored))
+        # two consumers of the one gazetteer pass over the whole corpus
+        dm = fused.with_mentions(_docs_tokens(inter)).cache()
+        search = evaluate.threshold_search_pairs(fused.pairs_from(dm).filter("is_rel"))
         report.write_eval_report(search, f"{args.output}/eval")
-        report.write_submission(
-            decode_ops.decode(scored), f"{args.output}/eval/submission"
-        )
+        report.write_submission(api.triples_from(dm), f"{args.output}/eval/submission")
 
     n_docs = flat.count()
     n_edges = spark.read.parquet(f"{args.output}/graph").count()

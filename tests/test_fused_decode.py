@@ -183,6 +183,18 @@ def test_fused_neural_equals_decode_chain_sf0001(spark, neural_decode_chain):
     assert got == want
 
 
+def test_api_top_k2_equals_pipeline_triples(spark):
+    """At top_k=2 the api surface and the pipeline query run the same
+    payload decode (api.triples_from): row for row on sf0.001, and k=2
+    really keeps more rows than k=1."""
+    from glirel_spark.plans import api, pipeline
+
+    got = _rows(api.extract_triples(pipeline.docs_tokens(spark, SF), top_k=2))
+    want = _rows(pipeline.triples(spark, SF, top_k=2))
+    assert got == want
+    assert len(want) > pipeline.triples(spark, SF, top_k=1).count()
+
+
 @pytest.mark.parametrize(
     "scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1)]
 )

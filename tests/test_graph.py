@@ -6,8 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from glirel_spark.config import ALIAS_DICT
 from glirel_spark.operators.graph import materialize_graph, materialize_graph_direct
-from glirel_spark.operators.linking import alias_df, canonicalize, link_triples
+from glirel_spark.operators.linking import canonicalize, link_triples
 
 T_SCHEMA = (
     "doc_id string, head_start int, head_end int, tail_start int, tail_end int, "
@@ -21,15 +22,23 @@ def _triples(spark, rows):
 
 def test_canonicalize_alias_and_fallback(spark):
     df = spark.createDataFrame([("Spark",), ("unknownthing",)], "t string")
-    out = canonicalize(df, alias_df(spark), "t", "cid").collect()
+    out = canonicalize(df, ALIAS_DICT, "t", "cid").collect()
     got = {r.t: r.cid for r in out}
     assert got["Spark"] == "Q:apache_spark"         # case-insensitive match
     assert got["unknownthing"] == "Q:surface:unknownthing"
 
 
+def test_canonicalize_lowercase_alias_collision_keeps_first_sorted(spark):
+    """Aliases equal once lowercased must not raise DUPLICATED_MAP_KEY:
+    the first alias in sorted order wins ("Spark" < "spark")."""
+    df = spark.createDataFrame([("spark",), ("SPARK",)], "t string")
+    out = canonicalize(df, {"spark": "Q:b", "Spark": "Q:a"}, "t", "cid").collect()
+    assert {r.t: r.cid for r in out} == {"spark": "Q:a", "SPARK": "Q:a"}
+
+
 def test_link_triples_shape(spark):
     t = _triples(spark, [("d", 0, 1, 2, 3, "spark", "customer", "used by", 90, 0.9)])
-    out = link_triples(t, alias_df(spark)).collect()[0]
+    out = link_triples(t, ALIAS_DICT).collect()[0]
     assert (out.subj, out.pred, out.obj) == ("Q:apache_spark", "used by", "Q:customer")
 
 
@@ -40,7 +49,7 @@ def test_salted_equals_direct(spark):
         rows.append((f"d{d:02d}", 0, 1, 2, 3, "spark", "customer", "used by", 90, 0.5 + d / 100))
     rows.append(("d99", 0, 1, 2, 3, "table", "query", "feeds", 80, 0.8))
     t = _triples(spark, rows)
-    linked = link_triples(t, alias_df(spark))
+    linked = link_triples(t, ALIAS_DICT)
     a = {tuple(r) for r in materialize_graph(linked).collect()}
     b = {tuple(r) for r in materialize_graph_direct(linked).collect()}
     assert a == b
@@ -54,7 +63,7 @@ def test_graph_n_docs_distinct(spark):
         ("d1", 4, 5, 6, 7, "spark", "customer", "used by", 90, 0.7),  # same doc
         ("d2", 0, 1, 2, 3, "spark", "customer", "used by", 90, 0.8),
     ]
-    g = materialize_graph(link_triples(_triples(spark, rows), alias_df(spark)))
+    g = materialize_graph(link_triples(_triples(spark, rows), ALIAS_DICT))
     r = g.collect()[0]
     assert r.n_mentions == 3 and r.n_docs == 2
     assert r.max_prob == 0.9 and r.min_doc_id == "d1"

@@ -252,6 +252,34 @@ def test_media_evidence_adds_only_a_dimension_join(spark):
     assert "Window" not in plan
 
 
+def test_job_bucket_plan_is_one_narrow_stage(spark):
+    """The spark-submit job's per-bucket plan (lexical scorer, top_k=1):
+    documents -> linked triples with no exchange, no join (the labels
+    and the alias map are literals), no scan of a python-list RDD and no
+    python evaluation."""
+    import importlib.util
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from glirel_spark.plans.lineage import bucket_of
+    from glirel_spark.sources import tables
+
+    path = Path(__file__).resolve().parents[1] / "jobs" / "run_pipeline.py"
+    spec = importlib.util.spec_from_file_location("run_pipeline", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    inter = tables.interleaved_documents(tables.TableIO(spark, SF).table("documents"))
+    bucket = inter.filter(bucket_of(F.col("doc_id"), 2) == 0)
+    linked = job.extract_bucket(bucket)
+    plan = _plan(linked)
+    for node in ("Exchange", "BroadcastNestedLoopJoin", "BroadcastHashJoin",
+                 "ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
+                 "MapInPandas"):
+        assert node not in plan, f"{node} in the bucket plan:\n{plan}"
+    assert linked.count() > 0
+
+
 def _nodes_outside_cache(df) -> list[str]:
     """One-line description of each physical-plan node, walking the
     tree itself (AQE's toString repeats cached subtrees) and stopping at

@@ -178,7 +178,8 @@ def test_kg_degree_dist(spark):
 
 
 def test_entity_types_shares(spark):
-    from glirel_spark.operators.linking import alias_df, entity_types
+    from glirel_spark.config import ALIAS_DICT
+    from glirel_spark.operators.linking import entity_types
 
     ments = spark.createDataFrame(
         [
@@ -188,7 +189,7 @@ def test_entity_types_shares(spark):
             Row(doc_id="4", text="zzz-unknown", type="MISC"),
         ]
     )
-    out = {(r.entity, r.type): r for r in entity_types(ments, alias_df(spark)).collect()}
+    out = {(r.entity, r.type): r for r in entity_types(ments, ALIAS_DICT).collect()}
     ent = [k[0] for k in out if k[1] == "MISC"][0]
     assert ent == "Q:surface:zzz-unknown"  # surface fallback
     tech = [v for (e, t), v in out.items() if t == "TECH"][0]

@@ -91,3 +91,45 @@ def test_run_refeval_job_end_to_end(tmp_path):
         counts[key].sort_values("label").reset_index(drop=True)
         .equals(golden[key].sort_values("label").reset_index(drop=True))
     )
+
+
+def test_run_pipeline_eval_report_matches_oracle_and_query(spark, tmp_path):
+    """The spark-submit job end to end at sf0.001: the written graph
+    hashes equal to the DuckDB graph oracle, and the eval report's
+    metrics equal the threshold_search query row for row."""
+    import duckdb
+
+    from glirel_spark import oracle
+    from glirel_spark.plans import pipeline
+    from glirel_spark.sources import tables
+
+    sys.path.insert(0, str(REPO / "tools"))
+    from check_oracle import norm_hash
+
+    # the sf0.001 corpus beside the default sf0.1 one
+    sf = str(Path(tables.DEFAULT_SF_DIR).parent / "sf0.001")
+    out = tmp_path / "out"
+    r = subprocess.run(
+        [sys.executable, str(REPO / "jobs/run_pipeline.py"),
+         "--input", sf, "--output", str(out),
+         "--buckets", "2", "--cores", "2", "--eval-report"],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    want = con.execute(oracle.q_graph()).fetchdf()
+    got = spark.read.parquet(str(out / "graph")).toPandas()
+    assert len(got) == len(want) > 0
+    assert norm_hash(got) == norm_hash(want)
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted(tuple(x[c] for c in cols) for x in df.collect())
+
+    metrics = spark.read.parquet(str(out / "eval/metrics.parquet"))
+    assert rows(metrics) == rows(pipeline.threshold_search(spark, sf))
+    assert (out / "eval/submission").is_dir()

@@ -188,7 +188,7 @@ def test_entity_salience_hand_case(spark):
     out = {
         r["entity"]: r
         for r in linking.entity_salience(
-            mentions, toks, linking.alias_df(spark)
+            mentions, toks, config.ALIAS_DICT
         ).collect()
     }
     sp = out["Q:apache_spark"]

@@ -65,8 +65,8 @@ _JOB = r"""
 import sys, time, json
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
-from glirel_spark.model import udf as model_udf
 from glirel_spark.operators import fused
+from glirel_spark.plans import api
 from glirel_spark.sources import tables
 
 n_exec = {n_exec}
@@ -120,7 +120,7 @@ dt = tables.text_of(inter).select(
 dm = fused.with_mentions(dt).cache()
 
 def job():
-    model_udf.neural_triples_from(dm).write.format("noop").mode("overwrite").save()
+    api.triples_from(dm, scorer="neural").write.format("noop").mode("overwrite").save()
 
 job()  # warmup: JIT + python worker spin-up + token-embedding cache
 times = []
