@@ -17,11 +17,12 @@ non-transitive relation, so clusters genuinely need transitive closure
 Two implementations with identical results (tested equal):
 
 - ``cluster_mentions``: per-doc union-find in a cogrouped
-  ``applyInPandas`` (docs are small; state never leaves the executor)
-- ``cluster_mentions_cc``: iterative min-label propagation with pure
-  DataFrame ops — the 10^12-doc scale path (structurally GraphFrames'
-  connected-components loop), converging in O(log diameter) joins with
-  localCheckpoint to truncate lineage.
+  ``applyInPandas`` (docs are small; state never leaves the executor),
+  the general-graph reference for edge relations that arrive as
+  separate tables
+- ``cluster_ments_fused``: edges + union-find + cluster ordering in one
+  zero-shuffle ``mapInPandas`` stage over per-doc mention arrays — the
+  plan the pipeline runs
 """
 
 from __future__ import annotations
@@ -91,52 +92,6 @@ def cluster_mentions(mentions: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def cluster_mentions_cc(
-    mentions: DataFrame, edges: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """Scale path: min-label propagation to fixpoint, pure DataFrame ops.
-
-    Each iteration: every node adopts min(own label, neighbors' labels).
-    Terminates when no label changes; localCheckpoint every iteration
-    truncates the growing lineage (essential for iterative plans).
-    """
-    sym = edges.union(
-        edges.select("doc_id", F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    labels = mentions.select("doc_id", "m_id", F.col("m_id").alias("root"))
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select("doc_id", F.col("m_id").alias("b"),
-                              F.col("root").alias("nroot")),
-                ["doc_id", "b"],
-            )
-            .groupBy("doc_id", "a")
-            .agg(F.min("nroot").alias("nbr_root"))
-            .withColumnRenamed("a", "m_id")
-        )
-        new_labels = (
-            labels.join(nbr_min, ["doc_id", "m_id"], "left")
-            .select(
-                "doc_id",
-                "m_id",
-                F.least(F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))).alias("root"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), ["doc_id", "m_id"])
-            .filter(F.col("n.root") != F.col("o.root"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
 _CLUSTERED_SCHEMA = (
     "doc_id string, m_id int, start int, end int, type string, text string, "
     "cluster_idx int"
@@ -164,9 +119,9 @@ def cluster_ments_fused(
     batch, vectorized numpy end-to-end (no per-doc Python loop).
 
     At 10^12 docs this is the plan you want: clustering state never
-    leaves the row's partition; the general-graph twins
-    (cluster_mentions / cluster_mentions_cc) remain for edge relations
-    that arrive as separate tables.
+    leaves the row's partition; the general-graph union-find
+    (cluster_mentions) remains for edge relations that arrive as
+    separate tables.
     """
     import numpy as np
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from glirel_spark import config
+from glirel_spark.operators import fixpoint
 
 
 def token_dict(docs_tokens: DataFrame) -> DataFrame:
@@ -386,72 +387,22 @@ def neardup_clusters(
     must still collapse to one family, which pairwise filtering alone
     cannot express).
 
-    Scale shape: min-label propagation iterates ONLY over the edge-node
-    subgraph (docs appearing in at least one near-dup pair — a tiny
-    fraction of a deduplicated web corpus), converging in O(log
-    diameter) joins with localCheckpoint lineage truncation per round;
-    the full corpus joins in exactly once at the end (left join for the
-    singleton default). Same loop structure as coref.cluster_mentions_cc
-    / GraphFrames connected components.
+    Scale shape: fixpoint.min_label_components iterates ONLY over the
+    edge-node subgraph (docs appearing in at least one near-dup pair —
+    a tiny fraction of a deduplicated web corpus), and cuts the edge
+    relation once, so the signature + band-join + verify subtree runs
+    once rather than once per round; the full corpus joins in exactly
+    once at the end (left join for the singleton default). A chain
+    longer than max_iter rounds raises rather than returning a
+    partially merged family, because the DuckDB oracle computes the
+    full transitive closure.
     """
     if neardups is None:
         neardups = minhash_neardups_arr(docs_tokens, threshold, shingled=shingled)
     e = neardups.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
-    # round-6: the edge relation is referenced by EVERY propagation
-    # round (plus the per-round convergence count), and without a
-    # lineage cut each reference re-executed the whole signature +
-    # band-join + verify subtree — max_iter x the query. Checkpoint it
-    # once, like `labels` below; the edge subgraph is the small
-    # relation this loop is built around.
-    sym = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("root", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                labels.select(F.col("doc_id").alias("b"), F.col("root").alias("nroot")),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nroot").alias("nbr_root"))
-            .withColumnRenamed("a", "doc_id")
-        )
-        new_labels = (
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))
-                ).alias("root"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("root", "_old"), "doc_id"
-            )
-            .filter(F.col("root") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # ADVICE r2: never return a partially-merged family silently —
-        # the DuckDB oracle computes the full transitive closure, so a
-        # >max_iter-diameter chain would otherwise surface only as a
-        # hash mismatch on exotic data.
-        raise RuntimeError(
-            f"neardup_clusters did not converge in {max_iter} rounds; "
-            "raise max_iter (each round extends reachable chain length)"
-        )
+    labels = fixpoint.min_label_components(
+        e, max_iter, "neardup_clusters"
+    ).withColumnRenamed("node", "doc_id")
     docs = docs_tokens.select(F.col("doc_id").cast("string").alias("doc_id"))
     canonical = F.coalesce(F.col("root"), F.col("doc_id"))
     return docs.join(labels, "doc_id", "left").select(

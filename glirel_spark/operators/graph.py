@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from glirel_spark import config
+from glirel_spark.operators import fixpoint
 
 N_SALT = 16
 N_HUB_CAP = config.NEIGH_HUB_CAP
@@ -429,64 +430,24 @@ def components(graph: DataFrame, max_iter: int = 30) -> DataFrame:
     lexicographically smallest member — the KG-hygiene query behind
     "is this one knowledge graph or forty disconnected fragments?".
 
-    Min-label propagation to fixpoint over the DISTINCT undirected edge
-    set: each round is one (edge ⋈ label) shuffle on the node key plus a
-    min-aggregation, with localCheckpoint lineage truncation so round
-    R's plan doesn't replay rounds 1..R-1 — the same loop shape as
-    corpus_dedup.neardup_clusters / GraphFrames CC. Rounds needed =
-    O(component diameter); raises on non-convergence rather than
-    returning partially merged components (ADVICE r2 contract).
+    fixpoint.min_label_components over the DISTINCT undirected edge
+    set. Rounds needed = O(component diameter); raises on
+    non-convergence rather than returning partially merged components
+    (ADVICE r2 contract).
     """
     e = (
         graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = (
-        sym.select(F.col("a").alias("entity"))
-        .distinct()
-        .withColumn("root", F.col("entity"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                labels.select(F.col("entity").alias("b"), F.col("root").alias("nroot")),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nroot").alias("nbr_root"))
-            .withColumnRenamed("a", "entity")
-        )
-        new_labels = (
-            labels.join(nbr, "entity", "left")
-            .select(
-                "entity",
-                F.least(
-                    F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))
-                ).alias("root"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("root", "_old"), "entity")
-            .filter(F.col("root") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"components did not converge in {max_iter} rounds; raise max_iter"
-        )
+    labels = fixpoint.min_label_components(e, max_iter, "components")
     sizes = labels.groupBy("root").agg(
         F.count("*").cast("long").alias("component_size")
     )
     return labels.join(sizes, "root").select(
-        "entity", F.col("root").alias("component_id"), "component_size"
+        F.col("node").alias("entity"),
+        F.col("root").alias("component_id"),
+        "component_size",
     )
 
 
@@ -500,41 +461,30 @@ def kcore(graph: DataFrame, k: int = 2, max_iter: int = 30) -> DataFrame:
 
     Scale shape: each round recomputes degrees over the SHRINKING edge
     set (one groupBy shuffle) and semi-joins survivors back — work
-    decreases monotonically, localCheckpoint truncates lineage, and the
-    round count is bounded by the peeling depth (≤ max node degree, in
-    practice a handful). Raises on non-convergence. The DuckDB oracle
-    unrolls the same peel max_iter times (idempotent after fixpoint),
-    so Spark failing loudly past max_iter keeps the two in lockstep.
+    decreases monotonically, and the round count is bounded by the
+    peeling depth (≤ max node degree, in practice a handful). The loop
+    is fixpoint.until_stable, which raises on non-convergence. The
+    DuckDB oracle unrolls the same peel max_iter times (idempotent
+    after fixpoint), so Spark failing loudly past max_iter keeps the
+    two in lockstep.
     """
     e = (
         graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    edges = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
+    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+
+    def peel(edges: DataFrame) -> DataFrame:
         deg = edges.groupBy("a").agg(F.count("*").cast("long").alias("deg"))
         survivors = deg.filter(F.col("deg") >= k).select("a")
-        nxt = (
+        return (
             edges.join(survivors, "a", "left_semi")
             .join(survivors.withColumnRenamed("a", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            edges.join(nxt, ["a", "b"], "left_anti").limit(1).count()
-        )
-        edges = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"kcore did not converge in {max_iter} rounds; raise max_iter"
-        )
+
+    edges = fixpoint.until_stable(edges, peel, max_iter, "kcore")
     return (
         edges.groupBy("a")
         .agg(F.count("*").cast("long").alias("core_degree"))
@@ -898,15 +848,14 @@ def kg_bfs(graph: DataFrame, max_iter: int = 30) -> DataFrame:
     (entity, dist) for every entity reachable over the undirected edge
     set, seed included at dist 0.
 
-    Frontier-only iteration — the scale-critical property: each round
-    joins ONLY the current frontier against the edge relation (cost
-    proportional to the frontier's edge incidence, never the full
-    visited set), then anti-joins the visited set on the entity key to
-    keep the new ring. localCheckpoint per round truncates lineage;
-    rounds needed = eccentricity of the seed; raises on hitting
-    max_iter with a live frontier rather than returning truncated
-    distances (the DuckDB oracle bounds its recursion at the same
-    depth, so the engines stay in lockstep by contract).
+    Frontier-only iteration (fixpoint.expand_frontier) — the
+    scale-critical property: each round joins ONLY the current frontier
+    against the edge relation, so its cost is proportional to the
+    frontier's edge incidence, never the full visited set. Rounds
+    needed = eccentricity of the seed; raises on hitting max_iter with
+    a live frontier rather than returning truncated distances (the
+    DuckDB oracle bounds its recursion at the same depth, so the
+    engines stay in lockstep by contract).
     """
     e = (
         graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
@@ -914,29 +863,17 @@ def kg_bfs(graph: DataFrame, max_iter: int = 30) -> DataFrame:
         .distinct()
     )
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    seed = sym.agg(F.min("a").alias("entity"))
-    visited = seed.withColumn("dist", F.lit(0).cast("long")).localCheckpoint(
-        eager=True
+    seed = sym.agg(F.min("a").alias("entity")).withColumn(
+        "dist", F.lit(0).cast("long")
     )
-    frontier = visited.select("entity")
-    for d in range(1, max_iter + 1):
-        ring = (
-            frontier.join(sym.withColumnRenamed("a", "entity"), "entity")
-            .select(F.col("b").alias("entity"))
-            .distinct()
-            .join(visited.select("entity"), "entity", "left_anti")
-            .withColumn("dist", F.lit(d).cast("long"))
-            .localCheckpoint(eager=True)
+    nbrs = sym.withColumnRenamed("a", "entity")
+
+    def hop(frontier: DataFrame, d: int) -> DataFrame:
+        return frontier.join(nbrs, "entity").select(
+            F.col("b").alias("entity"), F.lit(d).cast("long").alias("dist")
         )
-        if ring.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(ring).localCheckpoint(eager=True)
-        frontier = ring.select("entity")
-    else:
-        raise RuntimeError(
-            f"kg_bfs frontier still live after {max_iter} rounds; raise max_iter"
-        )
-    return visited
+
+    return fixpoint.expand_frontier(seed, hop, "entity", max_iter, "kg_bfs")
 
 
 def kg_degree_dist(graph: DataFrame) -> DataFrame:
@@ -1309,11 +1246,11 @@ def kg_closure(
     Scale shape: per round, one join keyed on the frontier's dst
     against the (small, single-predicate) edge relation, one distinct,
     one anti-join keyed on (src, dst) — all skew-bounded by the
-    predicate subgraph, not the corpus. localCheckpoint per round
-    truncates lineage; rounds = longest shortest path; raises on a
-    live frontier at ``max_iter`` (the DuckDB oracle bounds its
-    recursion at the same depth, keeping the engines in lockstep by
-    contract). Note the closure of a hub-heavy predicate is
+    predicate subgraph, not the corpus. The loop is
+    fixpoint.expand_frontier; rounds = longest shortest path; raises
+    on a live frontier at dist ``max_iter`` (the DuckDB oracle bounds
+    its recursion at the same depth, keeping the engines in lockstep
+    by contract). Note the closure of a hub-heavy predicate is
     quadratic-in-reachable-set by DEFINITION — at 100 TB you run this
     on hierarchy predicates (bounded out-degree), not social edges;
     that judgment call is the caller's, the evaluation is safe either
@@ -1324,32 +1261,26 @@ def kg_closure(
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    paths = e.withColumn("dist", F.lit(1).cast("long")).localCheckpoint(eager=True)
-    frontier = paths.select("src", "dst")
-    for d in range(2, max_iter + 1):
-        ring = (
-            frontier.join(
-                e.select(F.col("src").alias("dst"), F.col("dst").alias("_nxt")),
-                "dst",
+    nxt = e.select(F.col("src").alias("dst"), F.col("dst").alias("_nxt"))
+
+    def extend(frontier: DataFrame, d: int) -> DataFrame:
+        return (
+            frontier.join(nxt, "dst")
+            .select(
+                "src",
+                F.col("_nxt").alias("dst"),
+                F.lit(d + 1).cast("long").alias("dist"),
             )
-            .select("src", F.col("_nxt").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .join(paths.select("src", "dst"), ["src", "dst"], "left_anti")
-            .withColumn("dist", F.lit(d).cast("long"))
-            .localCheckpoint(eager=True)
         )
-        if ring.limit(1).count() == 0:
-            break
-        paths = paths.unionByName(ring).localCheckpoint(eager=True)
-        frontier = ring.select("src", "dst")
-    else:
-        raise RuntimeError(
-            f"kg_closure frontier still live after {max_iter} rounds; raise max_iter"
-        )
-    return paths
+
+    # the seed is dist 1, so max_iter - 1 rounds emit at most dist max_iter
+    seed = e.withColumn("dist", F.lit(1).cast("long"))
+    return fixpoint.expand_frontier(
+        seed, extend, ["src", "dst"], max_iter - 1, "kg_closure"
+    )
 
 
 def kg_label_prop(graph: DataFrame, rounds: int = config.LP_ROUNDS) -> DataFrame:
@@ -1411,13 +1342,12 @@ def kg_bipartite_audit(graph: DataFrame, max_iter: int = 60) -> DataFrame:
     two-sided affiliation graph (user-item, author-paper) or did
     linking glue the sides together?".
 
-    Scale shape: one components() fixpoint (shared min-label loop),
-    then a MULTI-SOURCE parity BFS — all component seeds advance in
+    Scale shape: one components() fixpoint, then a MULTI-SOURCE parity
+    BFS (fixpoint.expand_frontier) — all component seeds advance in
     the same frontier, so rounds are bounded by the largest component's
     odd-diameter, not the component count. State space is at most
     2 states per node ((node, parity) visited set, anti-join keyed on
-    it — skew-free); frontier-only joins as in kg_bfs;
-    localCheckpoint per round; raises on a live frontier at max_iter.
+    it — skew-free); raises on a live frontier at max_iter.
     The DuckDB oracle runs the same two recursions (reachability +
     parity walk) to natural fixpoint — state-finite, so no depth bound
     is needed there.
@@ -1427,33 +1357,26 @@ def kg_bipartite_audit(graph: DataFrame, max_iter: int = 60) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).localCheckpoint(
-        eager=True
+    nbrs = (
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .withColumnRenamed("a", "node")
+        .localCheckpoint(eager=False)
     )
     comp = components(graph).select("entity", "component_id")
-    visited = (
+    seed = (
         comp.select(F.col("component_id").alias("node"))
         .distinct()
         .withColumn("par", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    frontier = visited
-    for _ in range(max_iter):
-        ring = (
-            frontier.join(sym.withColumnRenamed("a", "node"), "node")
-            .select(F.col("b").alias("node"), (F.lit(1) - F.col("par")).alias("par"))
-            .distinct()
-            .join(visited, ["node", "par"], "left_anti")
-            .localCheckpoint(eager=True)
+
+    def hop(frontier: DataFrame, d: int) -> DataFrame:
+        return frontier.join(nbrs, "node").select(
+            F.col("b").alias("node"), (F.lit(1) - F.col("par")).alias("par")
         )
-        if ring.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(ring).localCheckpoint(eager=True)
-        frontier = ring
-    else:
-        raise RuntimeError(
-            f"kg_bipartite_audit frontier live after {max_iter} rounds; raise max_iter"
-        )
+
+    visited = fixpoint.expand_frontier(
+        seed, hop, ["node", "par"], max_iter, "kg_bipartite_audit"
+    )
     conf = visited.groupBy("node").agg(
         (F.countDistinct("par") == 2).cast("long").alias("_c")
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
+from glirel_spark.operators import fixpoint
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
@@ -289,66 +290,22 @@ def er_clusters(
     Output: (name, canonical, cluster_size) for EVERY distinct
     lowercased mention surface form; singletons map to themselves.
 
-    Scale shape: identical to corpus_dedup.neardup_clusters — min-label
-    propagation iterates ONLY over surface forms that appear in at
-    least one edit pair (a small fraction of the vocabulary), with
-    localCheckpoint lineage truncation per round and a RAISE (not a
-    silent partial merge) if a >max_iter-diameter chain appears; the
-    full vocabulary joins in exactly once at the end for the singleton
-    default. Cluster sizes re-aggregate from the mapping relation
-    itself, not from a second mention scan.
+    Scale shape: as corpus_dedup.neardup_clusters, the loop is
+    fixpoint.min_label_components, iterating ONLY over surface forms
+    that appear in at least one edit pair (a small fraction of the
+    vocabulary) and running the blocked-Levenshtein subtree once; it
+    RAISES (not a silent partial merge) if a >max_iter-diameter chain
+    appears. The full vocabulary joins in exactly once at the end for
+    the singleton default. Cluster sizes re-aggregate from the mapping
+    relation itself, not from a second mention scan.
     """
     names = mentions.select(F.lower("text").alias("name")).distinct()
-    e = er_edit_pairs(mentions, max_dist).select("e1", "e2")
-    # round-6: the edge relation feeds every propagation round (plus
-    # the per-round convergence count) — cut its lineage once so the
-    # blocked-Levenshtein subtree is not re-executed max_iter times
-    # (same fix as corpus_dedup.neardup_clusters).
-    sym = e.select(F.col("e1").alias("a"), F.col("e2").alias("b")).union(
-        e.select(F.col("e2").alias("a"), F.col("e1").alias("b"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("a").alias("name"))
-        .distinct()
-        .withColumn("root", F.col("name"))
-        .localCheckpoint(eager=True)
+    e = er_edit_pairs(mentions, max_dist).select(
+        F.col("e1").alias("a"), F.col("e2").alias("b")
     )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                labels.select(
-                    F.col("name").alias("b"), F.col("root").alias("nroot")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nroot").alias("nbr_root"))
-            .withColumnRenamed("a", "name")
-        )
-        new_labels = (
-            labels.join(nbr, "name", "left")
-            .select(
-                "name",
-                F.least(
-                    F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))
-                ).alias("root"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("root", "_old"), "name")
-            .filter(F.col("root") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"er_clusters did not converge in {max_iter} rounds; "
-            "raising rather than returning a partially-merged cluster"
-        )
+    labels = fixpoint.min_label_components(
+        e, max_iter, "er_clusters"
+    ).withColumnRenamed("node", "name")
     mapping = names.join(labels, "name", "left").select(
         "name", F.coalesce(F.col("root"), F.col("name")).alias("canonical")
     )

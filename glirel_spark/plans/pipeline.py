@@ -104,33 +104,14 @@ def triples(
 
 # --- coref clustering -------------------------------------------------------
 
-# When the general-graph twins are requested explicitly (use_cc not
-# None): above ~100k docs the cogrouped union-find's per-doc python
-# overhead loses to the pure-DataFrame label-propagation twin; both are
-# row-identical (tests/test_coref.py) so routing is purely a plan choice.
-# The default is neither: the fused zero-shuffle clustering below.
-
-
-def mention_clusters(
-    spark: SparkSession, sf_dir: str, use_cc: bool | None = None
-) -> DataFrame:
+def mention_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import coref
 
-    if use_cc is None:
-        # default: fused zero-shuffle clustering straight off the cached
-        # gazetteer pass (edges + union-find + W6 ordering in one narrow
-        # mapInPandas stage) — row-identical to the general twins below
-        # (tests/test_coref.py::test_fused_equals_union_find_pipeline)
-        return coref.cluster_ments_fused(docs_ments(spark, sf_dir))
-    # general-graph twins, for mention/edge relations that arrive as
-    # separate tables (external NER): per-doc union-find (small docs) or
-    # label-propagation connected components (scale path)
-    m = mentions(spark, sf_dir)
-    edges = coref.coref_edges(m)
-    clustered = (
-        coref.cluster_mentions_cc(m, edges) if use_cc else coref.cluster_mentions(m, edges)
-    )
-    return coref.cluster_index(m, clustered)
+    # fused zero-shuffle clustering straight off the cached gazetteer
+    # pass (edges + union-find + W6 ordering in one narrow mapInPandas
+    # stage) — row-identical to cluster_index(cluster_mentions(...))
+    # (tests/test_coref.py::test_fused_equals_union_find_pipeline)
+    return coref.cluster_ments_fused(docs_ments(spark, sf_dir))
 
 
 def cluster_relations(spark: SparkSession, sf_dir: str) -> DataFrame:

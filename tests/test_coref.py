@@ -1,16 +1,18 @@
 """Coref clustering: union-find semantics (utils.py:86-153), cluster
 ordering by earliest mention (utils.py:139-148), A8 aggregation
-(utils.py:155-218); union-find == label-propagation CC."""
+(utils.py:155-218); union-find == fixpoint.min_label_components."""
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from glirel_spark.operators.coref import (
     aggregate_cluster_relations,
     cluster_index,
     cluster_mentions,
-    cluster_mentions_cc,
     coref_edges,
 )
+from glirel_spark.operators.fixpoint import min_label_components
 
 M_SCHEMA = "doc_id string, m_id int, start int, end int, type string, text string"
 
@@ -45,8 +47,21 @@ def test_union_find_equals_label_propagation(spark):
     m = _mentions(spark, rows)
     e = coref_edges(m)
     uf = {(r.doc_id, r.m_id): r.root for r in cluster_mentions(m, e).collect()}
-    cc = {(r.doc_id, r.m_id): r.root for r in cluster_mentions_cc(m, e).collect()}
-    assert uf == cc and len(uf) == 20
+
+    def node(col):
+        return F.struct("doc_id", F.col(col).alias("m_id")).alias(col)
+
+    cc = {
+        tuple(r.node): tuple(r.root)
+        for r in min_label_components(
+            e.select(node("a"), node("b")), 20, "coref"
+        ).collect()
+    }
+    # per doc, spark@0 - spark@9 - spark@15 is one component; the two
+    # "table" mentions are 27 apart, so they are on no edge
+    assert len(uf) == 20 and len(cc) == 12
+    assert cc == {k: (k[0], root) for k, root in uf.items() if k in cc}
+    assert all(uf[k] == k[1] for k in uf.keys() - cc.keys())
 
 
 def test_cluster_ordering_by_earliest_mention(spark):

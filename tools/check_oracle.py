@@ -57,11 +57,18 @@ def main() -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir).toPandas()
-        if name not in oracles:
+        # one failing query (say, missing reference data) must not hide
+        # the verdict on the rest; it still counts as a failure
+        try:
+            sdf = fn(spark, sf_dir).toPandas()
+            odf = con.execute(oracles[name]).fetchdf() if name in oracles else None
+        except Exception as exc:  # noqa: BLE001
+            print(f"  ERROR {name}: {exc}")
+            failures.append(name)
+            continue
+        if odf is None:
             print(f"  {name:32s} rows={len(sdf):7d}  (no oracle — rows-only)")
             continue
-        odf = con.execute(oracles[name]).fetchdf()
         cols_ok = sorted(sdf.columns) == sorted(odf.columns)
         rows_ok = len(sdf) == len(odf)
         hash_ok = cols_ok and rows_ok and norm_hash(sdf) == norm_hash(odf)
