@@ -32,10 +32,12 @@ are loadable via an ``enc_dims`` vector, so a real exported checkpoint
 (hidden 768, 24 layers) instantiates this same code — only the default
 seeded init keeps the double small and golden-checkable.
 
-All contractions are fixed-order ``np.einsum(..., optimize=False)`` —
-single-threaded C loops whose results are bit-identical in any process
-regardless of BLAS thread count (see scorer._mm for the measured `@`
-drift that rules BLAS out).
+Every contraction is a per-sequence ``@`` (OpenBLAS): a matrix's shape
+depends on its document alone, and ``DeterministicGLiREL`` pins OpenBLAS
+to one thread at run time, so a document's bits are the same whether it
+is encoded alone (golden replay) or inside any Arrow batch (executors).
+The bits do depend on the CPU kernel OpenBLAS picks at load time (see
+scorer.blas_corename); goldens are regenerated per declared kernel.
 """
 
 from __future__ import annotations
@@ -340,19 +342,18 @@ def _gelu(x: np.ndarray) -> np.ndarray:
     return 0.5 * x * (1.0 + np.tanh(0.7978845608028654 * (x + 0.044715 * x * x * x)))
 
 
-def _ein(a: np.ndarray, w: np.ndarray) -> np.ndarray:
-    return np.einsum("td,dk->tk", a, w, optimize=False)
-
-
 class NumpyTransformer:
     """A DeBERTa-style encoder in plain numpy, per-sequence.
 
-    Per-SEQUENCE (not per-batch) on purpose: every result is then
-    bit-identical whether a document is encoded alone (golden
-    generator) or inside any Arrow batch (executors) — the property
-    the golden gate depends on. Sequences here are short (prompt +
-    document <= ~150 subtokens), so the T^2 attention is microseconds
-    and the python loop over layers is negligible.
+    Per-SEQUENCE (not per-batch) on purpose: every matmul's shape then
+    depends on the document alone, so with OpenBLAS pinned to one
+    thread each result is bit-identical whether a document is encoded
+    alone (golden generator) or inside any Arrow batch (executors) —
+    the property the golden gate depends on. (Stacking rows of several
+    documents into one BLAS call does NOT keep the bits.) Sequences
+    here are short (prompt + document <= ~150 subtokens), so the T^2
+    attention is microseconds and the python loop over layers is
+    negligible.
     """
 
     def __init__(self, rng_factory, dims: np.ndarray | None = None) -> None:
@@ -400,9 +401,8 @@ class NumpyTransformer:
 
     def _layer(self, li: int) -> tuple:
         """Derived per-layer tensors, built once per process:
-        - fused [DB, 3DB] QKV weight/bias — ONE input einsum instead of
-          three (bit-identical: each output column's d-accumulation
-          order is unchanged by concatenating columns)
+        - fused [DB, 3DB] QKV weight/bias — ONE input matmul instead of
+          three
         - the relative-position key/query projections pk/pq, which are
           INPUT-INDEPENDENT (P is a parameter) and were previously
           recomputed per document
@@ -417,8 +417,8 @@ class NumpyTransformer:
             b_qkv = np.concatenate(
                 [p[pre + "wqb"], p[pre + "wkb"], p[pre + "wvb"]]
             )
-            pk = self._heads(_ein(p["enc_P"], p[pre + "Wk"]) + p[pre + "wkb"])
-            pq = self._heads(_ein(p["enc_P"], p[pre + "Wq"]) + p[pre + "wqb"])
+            pk = self._heads(p["enc_P"] @ p[pre + "Wk"] + p[pre + "wkb"])
+            pq = self._heads(p["enc_P"] @ p[pre + "Wq"] + p[pre + "wqb"])
             c = (w_qkv, b_qkv, pk, pq)
             self._layer_cache[li] = c
         return c
@@ -442,28 +442,28 @@ class NumpyTransformer:
             # key/query projections (DeBERTa-v2 position sharing);
             # fused QKV + cached pk/pq from _layer()
             w_qkv, b_qkv, pk, pq = self._layer(li)
-            qkv = _ein(x, w_qkv) + b_qkv
+            qkv = x @ w_qkv + b_qkv
             db = self.db
             qh = self._heads(qkv[:, :db])
             kh = self._heads(qkv[:, db:2 * db])
             vh = self._heads(qkv[:, 2 * db:])
-            c2c = np.einsum("htd,hsd->hts", qh, kh, optimize=False)
+            c2c = qh @ kh.transpose(0, 2, 1)
             # gather the bucketed scores: c2p[h,t,s] = <q_t, P_k[rel(t,s)]>,
             # p2c[h,t,s] = <k_s, P_q[rel(s,t)]> (note the reversed relative
             # direction on the position-to-content term, as in DeBERTa)
-            c2p_all = np.einsum("htd,hrd->htr", qh, pk, optimize=False)
+            c2p_all = qh @ pk.transpose(0, 2, 1)
             c2p = c2p_all[:, t_idx, rel]                      # [h, T, T]
-            p2c_all = np.einsum("hsd,hrd->hsr", kh, pq, optimize=False)
+            p2c_all = kh @ pq.transpose(0, 2, 1)
             p2c = p2c_all[:, t_idx, rel].transpose(0, 2, 1)   # [h, T, T]
             scores = (c2c + c2p + p2c) * scale
             scores -= scores.max(axis=-1, keepdims=True)
             e = np.exp(scores)
             att = e / e.sum(axis=-1, keepdims=True)
-            ctx = np.einsum("hts,hsd->htd", att, vh, optimize=False)
+            ctx = att @ vh
             ctx = ctx.transpose(1, 0, 2).reshape(t, self.db)
-            ctx = _ein(ctx, p[pre + "Wo"]) + p[pre + "wob"]
+            ctx = ctx @ p[pre + "Wo"] + p[pre + "wob"]
             x = _ln(x + ctx, p[pre + "ln1_g"], p[pre + "ln1_b"])
-            f = _ein(_gelu(_ein(x, p[pre + "W1"]) + p[pre + "b1"]), p[pre + "W2"]) + p[pre + "b2"]
+            f = _gelu(x @ p[pre + "W1"] + p[pre + "b1"]) @ p[pre + "W2"] + p[pre + "b2"]
             x = _ln(x + f, p[pre + "ln2_g"], p[pre + "ln2_b"])
         return x
 

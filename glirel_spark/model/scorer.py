@@ -43,6 +43,7 @@ deterministic and golden-checkable. The Spark plumbing
 
 from __future__ import annotations
 
+import ctypes
 import hashlib
 import os
 
@@ -64,14 +65,55 @@ def _rng(tag: str) -> np.random.Generator:
 
 
 def _mm(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """BLAS-free matmul: np.einsum with optimize=False runs a fixed-order
-    single-threaded sum-of-products, so results are bit-identical in any
-    process regardless of OPENBLAS/OMP thread count. `@` is NOT — OpenBLAS
-    picks kernels by thread count, and the low bits drift between the
-    executor workers and the golden generator (measured: 3% of probs).
-    Dims here are tiny (D=H=32), so the naive path costs nothing.
-    """
-    return np.einsum("ij,jk->ik", np.atleast_2d(a), np.atleast_2d(b), optimize=False)
+    """Per-document matmul through BLAS. Its bits are reproducible
+    because every operand's shape depends on one document only and
+    OpenBLAS runs single-threaded (``_pin_blas_threads``); rows of
+    several documents stacked into one call would NOT keep them, which
+    is why the batched BiLSTM stays on einsum."""
+    return np.atleast_2d(a) @ np.atleast_2d(b)
+
+
+def _openblas_fns(name: str) -> list:
+    """OpenBLAS's function ``name`` (or its 64-bit-interface twin
+    ``name64_``) in each OpenBLAS library loaded into this process
+    (numpy's own), found by path in /proc/self/maps."""
+    try:
+        with open("/proc/self/maps") as f:
+            paths = {ln.split()[-1] for ln in f if "openblas" in ln.rsplit("/", 1)[-1]}
+    except OSError:
+        return []
+    fns = []
+    for path in sorted(paths):
+        lib = ctypes.CDLL(path)
+        fn = getattr(lib, name + "64_", None) or getattr(lib, name, None)
+        if fn is not None:
+            fns.append(fn)
+    return fns
+
+
+def _pin_blas_threads() -> None:
+    """One OpenBLAS thread in this process, set at run time.
+
+    ``OPENBLAS_NUM_THREADS`` is read only when numpy loads, and a
+    process may import numpy before glirel_spark (the golden replay,
+    a test runner), so the environment pin in session.py cannot be
+    relied on. A multi-threaded gemm splits its work differently and
+    changes low bits, breaking executor == replay."""
+    for fn in _openblas_fns("openblas_set_num_threads"):
+        fn.argtypes = [ctypes.c_int]
+        fn.restype = None
+        fn(1)
+
+
+def blas_corename() -> str | None:
+    """The CPU kernel OpenBLAS dispatched to in this process (e.g.
+    'SapphireRapids', 'Haswell'). Probability bits, and therefore the
+    committed goldens, depend on it."""
+    for fn in _openblas_fns("openblas_get_corename"):
+        fn.argtypes = []
+        fn.restype = ctypes.c_char_p
+        return fn().decode()
+    return None
 
 
 class DeterministicGLiREL:
@@ -86,6 +128,7 @@ class DeterministicGLiREL:
         return cls._instance
 
     def __init__(self) -> None:
+        _pin_blas_threads()
         ckpt = os.environ.get("GLIREL_NUMPY_CHECKPOINT")
         z = np.load(ckpt) if ckpt else None
         # dimensions first (a real checkpoint re-shapes the model;

@@ -215,19 +215,21 @@ def _scorer_stage(
     if labels_col:
         cols.append(F.col(labels_col).alias("_labels"))
     packed = docs_ments.filter(F.size("_ments") >= 2).select(*cols)
-    # The scorer stage is PYTHON-CPU-bound (~10ms/doc through the
-    # transformer) while its input is tiny in BYTES (tokens + span
-    # offsets), so AQE's byte-based partition coalescing collapses it
-    # to ONE task (measured: 10k docs = 126s single-task vs ~30s on 4
-    # cores) — the advisory-size heuristic is simply the wrong metric
-    # for compute-heavy UDF stages. Pin the partition count to the
-    # cluster's core count with an explicit ROUND-ROBIN repartition:
+    # The scorer stage is PYTHON-CPU-bound (milliseconds per doc through
+    # the transformer and BiLSTM) while its input is tiny in BYTES
+    # (tokens + span offsets), so AQE's byte-based partition coalescing
+    # collapses it to ONE task (measured: 10k docs = 126s single-task vs
+    # ~30s on 4 cores) — the advisory-size heuristic is simply the wrong
+    # metric for compute-heavy UDF stages. Pin the partition count to
+    # the cluster's core count with an explicit ROUND-ROBIN repartition:
     # repartition(N) is REPARTITION_BY_NUM, which AQE never coalesces,
     # whereas repartition(N, doc_id) collapses into an upstream doc_id
     # exchange (redundant-exchange elimination) and gets coalesced with
-    # it (measured: stage back to 1 task).
+    # it (measured: stage back to 1 task). ONE task per core, not more:
+    # every task pays a fixed python-worker cost (0.15-0.3 s on 4
+    # cores), and round-robin already balances the per-doc work.
     sc = docs_ments.sparkSession.sparkContext
-    packed = packed.repartition(sc.defaultParallelism * 2)
+    packed = packed.repartition(sc.defaultParallelism)
     return packed.mapInPandas(
         _scorer(label_tuple, max_distance, top1),
         _SCORED_SCHEMA if top1 is None else decode_ops.TRIPLES_SCHEMA,

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from glirel_spark import config
+from glirel_spark.functions.memo import once
 
 _MENTION_T = "array<struct<m_id:int,start:int,end:int,type:string,text:string>>"
 
@@ -130,13 +131,18 @@ def with_mentions(docs_tokens: DataFrame, col_name: str = "_ments",
     functions/barrier.py): the hygiene filter references the candidate
     array per element and the pair expansion references the mention
     array per element — without the barrier Catalyst inlines the alias
-    and the plan degrades to O(k x full-recompute) per row.
+    and the plan degrades to O(k x full-recompute) per row. Both
+    expressions are built once per gazetteer and ``max_chars``
+    (functions/memo.py).
     """
     from glirel_spark.functions.barrier import materialized
 
-    return docs_tokens.withColumn(
-        "_cand", materialized(_candidates_col(F.col("tokens"), max_chars))
-    ).withColumn(col_name, materialized(_hygiene_col(F.col("_cand")))).drop("_cand")
+    gazetteer = (tuple(sorted(config.ENTITY_UNIGRAMS.items())),
+                 tuple(sorted(config.ENTITY_BIGRAMS.items())))
+    cand = once(("fused.candidates", gazetteer, max_chars), lambda: materialized(
+        _candidates_col(F.col("tokens"), max_chars)))
+    ments = once("fused.hygiene", lambda: materialized(_hygiene_col(F.col("_cand"))))
+    return docs_tokens.withColumn("_cand", cand).withColumn(col_name, ments).drop("_cand")
 
 
 def mentions_col(tokens: Column, max_chars: int = 50) -> Column:

@@ -16,9 +16,10 @@ so the graph is total; production would route these to a discovery queue.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
+from glirel_spark.functions.memo import once
 from glirel_spark.operators import fixpoint
 
 
@@ -38,19 +39,21 @@ def canonicalize(df: DataFrame, aliases: dict[str, str], text_col: str,
     operators/fused.py). Row semantics: lowercase match, miss ->
     "Q:surface:<lower(text)>". Aliases that collide once lowercased keep
     ONE entry: the first alias in sorted (case-sensitive) order wins, so
-    {"Spark": "Q:a", "spark": "Q:b"} links "spark" to "Q:a".
+    {"Spark": "Q:a", "spark": "Q:b"} links "spark" to "Q:a". The
+    expression is built once per alias contents and ``text_col``
+    (functions/memo.py).
     """
     lookup: dict[str, str] = {}
     for a, cid in sorted(aliases.items()):
         lookup.setdefault(a.lower(), cid)
-    items: list = []
-    for a, cid in lookup.items():
-        items += [F.lit(a), F.lit(cid)]
-    hit = F.create_map(*items)[F.lower(F.col(text_col))]
-    return df.withColumn(
-        out_col,
-        F.coalesce(hit, F.concat(F.lit("Q:surface:"), F.lower(F.col(text_col)))),
-    )
+    pairs = tuple(lookup.items())
+
+    def build() -> Column:
+        alias_map = F.create_map(*[F.lit(x) for kv in pairs for x in kv])
+        text = F.lower(F.col(text_col))
+        return F.coalesce(alias_map[text], F.concat(F.lit("Q:surface:"), text))
+
+    return df.withColumn(out_col, once(("linking.canonicalize", pairs, text_col), build))
 
 
 def link_triples(triples: DataFrame, aliases: dict[str, str]) -> DataFrame:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
+from glirel_spark.functions.memo import once
 
 
 def label_constraints(
@@ -170,13 +171,11 @@ def lexical_topk1_triples(
     # silently dropping the whole stage out of codegen (the sweep
     # log's "Code grows beyond 64 KB"). With the base hoisted, every
     # raw is a 3-node expression and the stage compiles.
-    raws = lexical_label_raws(labs, base=F.col("_lexbase"))
-    base = rel_pairs.withColumn("_lexbase", materialized(lexical_base()))
-    best_raw = F.greatest(*raws) if len(raws) > 1 else raws[0]
-    # ascending label order + first-match == (prob desc, label asc)
-    best_label = F.when(raws[0] == best_raw, F.lit(labs[0]))
-    for r, lab in zip(raws[1:], labs[1:]):
-        best_label = best_label.when(r == best_raw, F.lit(lab))
+    base = rel_pairs.withColumn(
+        "_lexbase", once("scoring.lexical_base", lambda: materialized(lexical_base()))
+    )
+    best_label, best_raw = once(("scoring.label_argmax", tuple(labs)),
+                                lambda: _label_argmax(labs))
     out = base.select(
         "doc_id", "h_start", "h_end", "t_start", "t_end",
         "h_type", "t_type", "h_text", "t_text",
@@ -186,12 +185,29 @@ def lexical_topk1_triples(
         "prob", F.col("raw").cast("double") / F.lit(float(config.SCORE_MOD - 1))
     ).filter(F.col("prob") > F.lit(threshold))
     if apply_constraints:
-        out = out.filter(lexical_constraint_ok(labels, F.col("label")))
+        table = tuple(
+            (lab, None if ah is None else tuple(ah), None if at is None else tuple(at))
+            for lab, ah, at in label_constraints(labels)
+        )
+        out = out.filter(once(("scoring.constraint_ok", table),
+                              lambda: lexical_constraint_ok(labels, F.col("label"))))
     if not formatted:
         # the pre-format decoded relation (inclusive ends, h/t types
         # kept) — what type-signature style consumers aggregate over
         return out
     return decode_ops.format_output(out)
+
+
+def _label_argmax(labs: list[str]) -> tuple[Column, Column]:
+    """(best label, best raw) over the per-label raws of a pair row with
+    a materialized ``_lexbase`` column."""
+    raws = lexical_label_raws(labs, base=F.col("_lexbase"))
+    best_raw = F.greatest(*raws) if len(raws) > 1 else raws[0]
+    # ascending label order + first-match == (prob desc, label asc)
+    best_label = F.when(raws[0] == best_raw, F.lit(labs[0]))
+    for r, lab in zip(raws[1:], labs[1:]):
+        best_label = best_label.when(r == best_raw, F.lit(lab))
+    return best_label, best_raw
 
 
 def lexical_constraint_ok(

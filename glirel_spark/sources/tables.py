@@ -59,9 +59,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
+from glirel_spark.functions.memo import once
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -112,7 +113,17 @@ def interleaved_documents(flat_docs: DataFrame) -> DataFrame:
 
     # materialize the token array: the chunk lambda slices it per chunk,
     # and Catalyst would otherwise inline (re-split) per reference
-    flat_docs = flat_docs.withColumn("_toks", materialized(F.split(F.col("text"), " ")))
+    toks = once("tables.tokens", lambda: materialized(F.split(F.col("text"), " ")))
+    return flat_docs.withColumn("_toks", toks).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        once("tables.spans", _spans_col).alias("spans"),
+    )
+
+
+def _spans_col() -> Column:
+    """The spans expression of ``interleaved_documents`` over its
+    ``_toks`` and ``doc_id`` columns; data-independent, so it is built
+    once per JVM (functions/memo.py)."""
     toks = F.col("_toks")
     n_chunks = F.ceil(F.size(toks) / F.lit(_CHUNK)).cast("int")
     did = F.col("doc_id").cast("long")
@@ -158,10 +169,7 @@ def interleaved_documents(flat_docs: DataFrame) -> DataFrame:
             i.cast("int").alias("offset"),
         ),
     )
-    return flat_docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        spans.alias("spans"),
-    )
+    return spans
 
 
 def text_of(interleaved: DataFrame) -> DataFrame:
@@ -170,9 +178,12 @@ def text_of(interleaved: DataFrame) -> DataFrame:
     Media columns are pruned by Catalyst (nested-field pruning) — only
     spans.kind / spans.text are read from storage for text-only stages.
     """
+    return interleaved.select("doc_id", once("tables.text_of", _text_col).alias("text"))
+
+
+def _text_col() -> Column:
     text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("text"))
-    joined = F.array_join(F.transform(text_spans, lambda s: s["text"]), " ")
-    return interleaved.select("doc_id", joined.alias("text"))
+    return F.array_join(F.transform(text_spans, lambda s: s["text"]), " ")
 
 
 def span_sequence_signature(interleaved: DataFrame) -> DataFrame:

@@ -160,7 +160,7 @@ def test_prompt_split_contract():
     prompt = ["[REL]", "feeds", "[REL]", "used by", "[SEP]"]
     full = m.encoder.embed_words(prompt + toks, m.pooling)
     if m.W_proj is not None:
-        full = np.einsum("ij,jk->ik", full, m.W_proj, optimize=False) + m.b_proj
+        full = full @ m.W_proj + m.b_proj  # the T6 projection's own kernel
     manual = full[:4].reshape(2, 2, m.D).mean(axis=1)
     assert np.array_equal(rel_rep, manual)
 

@@ -16,8 +16,13 @@ from pathlib import Path
 
 import pandas as pd
 
+from glirel_spark.model.scorer import blas_corename
+
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT / "tools"))
+
+# the OpenBLAS kernel (openblas_get_corename) goldens/ was generated on
+GOLDEN_BLAS_CORE = "SapphireRapids"
 
 
 def test_committed_golden_matches_regeneration():
@@ -34,9 +39,16 @@ def test_committed_golden_matches_regeneration():
         if col == "raw":
             assert f[col].isna().all() and c[col].isna().all()
             continue
-        # exact equality — prob must match BIT-for-bit (einsum kernel is
-        # thread-count independent; `@`/BLAS is not, see scorer._mm)
-        assert (f[col].values == c[col].values).all(), col
+        # exact equality — prob must match BIT-for-bit: per-document
+        # BLAS on one pinned OpenBLAS thread (scorer._mm) is
+        # reproducible, but only on the CPU kernel the goldens were
+        # generated with
+        assert (f[col].values == c[col].values).all(), (
+            f"{col} differs from the committed golden, generated with "
+            f"OpenBLAS core {GOLDEN_BLAS_CORE}; this process runs "
+            f"{blas_corename()} (regenerate with tools/gen_golden.py if "
+            f"the kernel changed)"
+        )
 
 
 def test_committed_refeval_golden_matches_regeneration():

@@ -243,3 +243,86 @@ def test_top1_decode_constraint_on_best_label_only():
     keep, best = top1_decode(probs, 0.5, h, t, [(["X"], None), (None, [])])
     assert keep.tolist() == [1]
     assert best.tolist() == [0]
+
+
+def test_scorer_udf_batch_equals_score_doc_alone():
+    """Executor == replay: documents of mixed lengths scored together in
+    one Arrow batch through the mapInPandas function are bit-equal to
+    ``score_doc`` on each document alone (the golden replay's path)."""
+    import pandas as pd
+
+    from glirel_spark.model import udf
+
+    rng = np.random.default_rng(3)
+    vocab = "spark table scan query window customer join data".split()
+    docs = []
+    for i, n in enumerate((100, 4, 37, 12, 71)):
+        toks = [str(w) for w in rng.choice(vocab, size=n)]
+        starts = np.sort(rng.choice(n - 1, size=min(6, n - 1), replace=False))
+        docs.append((f"d{i}", toks, starts, starts + (starts % 2)))
+    pdf = pd.DataFrame({
+        "doc_id": [d for d, _, _, _ in docs],
+        "tokens": [np.asarray(t, dtype=object) for _, t, _, _ in docs],
+        "_ms": [s for _, _, s, _ in docs],
+        "_me": [e for _, _, _, e in docs],
+    })
+    labels = tuple(sorted(config.RELATION_LABELS))
+    run = udf._scorer(labels, config.MAX_PAIR_DISTANCE, None)
+    got = pd.concat(list(run(iter([pdf]))), ignore_index=True)
+    model = DeterministicGLiREL.get()
+    n_expected = 0
+    for doc_id, toks, starts, ends in docs:
+        sp = model.valid_spans(np.stack([starts, ends], axis=1), len(toks))
+        pidx, probs = model.score_doc(toks, sp, labels, config.MAX_PAIR_DISTANCE)
+        rows = got[got.doc_id == doc_id]
+        assert len(rows) == probs.size
+        n_expected += probs.size
+        expect = {
+            (int(sp[h, 0]), int(sp[h, 1]), int(sp[t, 0]), int(sp[t, 1]), lab): probs[pi, ci]
+            for pi, (h, t) in enumerate(pidx) for ci, lab in enumerate(labels)
+        }
+        for r in rows.itertuples(index=False):
+            assert r.prob == expect[(r.h_start, r.h_end, r.t_start, r.t_end, r.label)]
+    assert n_expected == len(got) > 0
+
+
+_ENCODE_DIGEST = """
+import hashlib, sys
+import numpy as np  # loads OpenBLAS before the model pins its threads
+sys.path.insert(0, {root!r})
+from glirel_spark import config
+from glirel_spark.model.scorer import DeterministicGLiREL
+m = DeterministicGLiREL.get()
+labels = tuple(sorted(config.RELATION_LABELS))
+rng = np.random.default_rng(5)
+vocab = "spark table scan query window customer join data".split()
+h = hashlib.sha256()
+for n in (3, 17, 64, 150):
+    word, rel = m.encode_doc([str(w) for w in rng.choice(vocab, size=n)], labels)
+    h.update(word.tobytes())
+    h.update(rel.tobytes())
+print(h.hexdigest())
+"""
+
+
+def test_encode_doc_bits_independent_of_blas_threads():
+    """``encode_doc`` gives the same bits whatever OPENBLAS_NUM_THREADS a
+    process started with: the model pins OpenBLAS to one thread at run
+    time, after numpy has read the variable."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = _ENCODE_DIGEST.format(root=str(Path(__file__).resolve().parents[1]))
+    digests = {}
+    for threads in ("1", "2", None):
+        # OpenBLAS falls back to these when OPENBLAS_NUM_THREADS is unset
+        env = {k: v for k, v in os.environ.items() if k not in
+               ("OPENBLAS_NUM_THREADS", "GOTO_NUM_THREADS", "OMP_NUM_THREADS")}
+        if threads is not None:
+            env["OPENBLAS_NUM_THREADS"] = threads
+        out = subprocess.run([sys.executable, "-c", code], env=env, timeout=300,
+                             capture_output=True, text=True, check=True)
+        digests[threads] = out.stdout.strip()
+    assert len(set(digests.values())) == 1, digests

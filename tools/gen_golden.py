@@ -9,7 +9,8 @@ pipeline with pandas + numpy + DuckDB only —
                 value-verified against the Spark mentions operator)
   tokens     <- text.split(' ') (== docs_tokens, tests/test_tokenize.py)
   scoring    <- the SAME DeterministicGLiREL numpy kernel the executors
-                run (identical code + identical inputs -> identical bits)
+                run (identical code + identical inputs + one OpenBLAS
+                thread on the same CPU kernel -> identical bits)
   threshold / top-k / constraints / format
              <- independent pandas re-implementation of the decode path
 
@@ -270,11 +271,16 @@ def main() -> int:
     ref.to_parquet(root / "refeval_counts.parquet", index=False)
     print(f"refeval: {len(ref)} label rows -> {root / 'refeval_counts.parquet'}")
     print(ref.to_string(index=False))
-    dn = expected_docred_neural_counts()
-    dn.to_parquet(root / "docred_neural_counts.parquet", index=False)
-    tp, pn, tn = dn["tp"].sum(), dn["pred_n"].sum(), dn["true_n"].sum()
-    print(f"docred neural: {len(dn)} label rows, micro-F1 "
-          f"{2 * tp / (pn + tn):.4f} -> {root / 'docred_neural_counts.parquet'}")
+    try:
+        dn = expected_docred_neural_counts()
+    except FileNotFoundError as e:
+        print(f"docred neural: {e.filename} absent; "
+              f"{root / 'docred_neural_counts.parquet'} left as committed")
+    else:
+        dn.to_parquet(root / "docred_neural_counts.parquet", index=False)
+        tp, pn, tn = dn["tp"].sum(), dn["pred_n"].sum(), dn["true_n"].sum()
+        print(f"docred neural: {len(dn)} label rows, micro-F1 "
+              f"{2 * tp / (pn + tn):.4f} -> {root / 'docred_neural_counts.parquet'}")
     for name, sf_dir in SF_DIRS.items():
         out = expected_triples_neural(sf_dir)
         # byte-stable emission order (DuckDB parallel fetch order varies
