@@ -233,6 +233,7 @@ def eval_counts_lexical(
     """
     from glirel_spark.functions.barrier import materialized
     from glirel_spark.operators.scoring import (
+        label_argmax,
         lexical_base,
         lexical_constraint_ok,
         lexical_label_raws,
@@ -241,10 +242,7 @@ def eval_counts_lexical(
     label_dict = labels or config.RELATION_LABELS
     labs = sorted(label_dict)
     raws = lexical_label_raws(labs, base=F.col("_lexbase"))
-    best_raw = F.greatest(*raws) if len(raws) > 1 else raws[0]
-    best_label = F.when(raws[0] == best_raw, F.lit(labs[0]))
-    for r, lab in zip(raws[1:], labs[1:]):
-        best_label = best_label.when(r == best_raw, F.lit(lab))
+    best_label, best_raw = label_argmax(labs, raws)
     gold_labs = F.filter(
         F.array(*[
             F.when(r >= F.lit(raw_min), F.lit(lab)).otherwise(F.lit(None))
@@ -309,19 +307,20 @@ def threshold_search_lexical(
     tests/test_fused_decode.py and the unchanged oracle.
     """
     from glirel_spark.functions.barrier import materialized
-    from glirel_spark.operators.scoring import lexical_base, lexical_label_raws
+    from glirel_spark.operators.scoring import (
+        label_argmax,
+        lexical_base,
+        lexical_label_raws,
+    )
 
     labs = sorted(labels or config.RELATION_LABELS)
     gs = sorted(set(grid))
     # base hoisted behind the barrier, as in lexical_topk1_triples: the
-    # raws are referenced three times each (argmax, when-chain, gold
-    # array) and inlining the base per reference bloats the generated
-    # consume method (see scoring.py).
+    # raws are referenced three times each (greatest, the argmax
+    # position, gold array) and inlining the base per reference bloats
+    # the generated consume method (see scoring.py).
     raws = lexical_label_raws(labs, base=F.col("_lexbase"))
-    best_raw = F.greatest(*raws) if len(raws) > 1 else raws[0]
-    best_label = F.when(raws[0] == best_raw, F.lit(labs[0]))
-    for r, lab in zip(raws[1:], labs[1:]):
-        best_label = best_label.when(r == best_raw, F.lit(lab))
+    best_label, best_raw = label_argmax(labs, raws)
     gold_labs = F.filter(
         F.array(*[
             F.when(r >= F.lit(raw_min), F.lit(lab)).otherwise(F.lit(None))

@@ -98,7 +98,7 @@ def score_pairs_lexical(rel_pairs: DataFrame, labels: DataFrame) -> DataFrame:
 # through an exchange (guide §2.4 "remove shuffles outright" + §2.3
 # "aggregate before you shuffle" taken to its limit). Row-identical to
 # the relational form (tests/test_fused_decode.py): threshold-then-
-# argmax == argmax-then-threshold at k=1, and the when-chain over
+# argmax == argmax-then-threshold at k=1, and the first maximal raw in
 # label-ascending order reproduces the min(struct(-prob, label))
 # tie-break exactly.
 
@@ -163,19 +163,27 @@ def lexical_topk1_triples(
     labs = sorted(labels)
     if not labs:
         raise ValueError("lexical_topk1_triples needs a non-empty label set")
-    # The shared label-independent base term is materialized ONCE per
-    # row (barrier): without it each of the |labels| raw expressions
-    # inlines the 15-node base at every reference (greatest + the
-    # argmax when-chain), and the resulting projection pushed the
-    # Generate stage's consume method past janino's 64 KB limit —
-    # silently dropping the whole stage out of codegen (the sweep
-    # log's "Code grows beyond 64 KB"). With the base hoisted, every
-    # raw is a 3-node expression and the stage compiles.
+    # Two per-row barriers keep the stage's generated consume method
+    # under HotSpot's 8,000-byte JIT limit (-XX:HugeMethodLimit; see
+    # functions/barrier.py). Over it the method is never compiled to
+    # machine code and the stage runs in the bytecode interpreter for the
+    # life of the JVM. (1) The label-independent base is computed once:
+    # otherwise each of the |labels| raws inlines the 15-node base at
+    # every reference. (2) The argmax label is computed once: the
+    # constraint filter reads ``label``, and Catalyst pushes a filter
+    # below the projection that defines its columns, so each
+    # ``label == lab`` test of the chain would carry its own copy of the
+    # argmax.
+    # tests/test_plan_shape.py guards the limit.
     base = rel_pairs.withColumn(
         "_lexbase", once("scoring.lexical_base", lambda: materialized(lexical_base()))
     )
-    best_label, best_raw = once(("scoring.label_argmax", tuple(labs)),
-                                lambda: _label_argmax(labs))
+
+    def fenced_argmax():
+        label, raw = label_argmax(labs, lexical_label_raws(labs, base=F.col("_lexbase")))
+        return materialized(label), raw
+
+    best_label, best_raw = once(("scoring.label_argmax", tuple(labs)), fenced_argmax)
     out = base.select(
         "doc_id", "h_start", "h_end", "t_start", "t_end",
         "h_type", "t_type", "h_text", "t_text",
@@ -198,15 +206,14 @@ def lexical_topk1_triples(
     return decode_ops.format_output(out)
 
 
-def _label_argmax(labs: list[str]) -> tuple[Column, Column]:
-    """(best label, best raw) over the per-label raws of a pair row with
-    a materialized ``_lexbase`` column."""
-    raws = lexical_label_raws(labs, base=F.col("_lexbase"))
+def label_argmax(labs: list[str], raws: list[Column]) -> tuple[Column, Column]:
+    """(best label, best raw) over the per-label ``raws`` of a pair row,
+    ``labs`` ascending. ``array_position`` returns the FIRST maximal raw,
+    so ascending label order gives the (prob desc, label asc)
+    tie-break."""
     best_raw = F.greatest(*raws) if len(raws) > 1 else raws[0]
-    # ascending label order + first-match == (prob desc, label asc)
-    best_label = F.when(raws[0] == best_raw, F.lit(labs[0]))
-    for r, lab in zip(raws[1:], labs[1:]):
-        best_label = best_label.when(r == best_raw, F.lit(lab))
+    pos = F.array_position(F.array(*raws), best_raw).cast("int")
+    best_label = F.element_at(F.array(*[F.lit(lab) for lab in labs]), pos)
     return best_label, best_raw
 
 

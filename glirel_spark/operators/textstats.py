@@ -188,14 +188,6 @@ LANG_PROFILES: dict[str, dict[str, int]] = {
 }
 
 
-def _bigram_count(text, bg: str):
-    """Non-overlapping occurrence count via replace-and-measure — the
-    same greedy left-to-right count as str.count / DuckDB replace()."""
-    return (
-        (F.length(text) - F.length(F.replace(text, F.lit(bg), F.lit("")))) / 2
-    ).cast("long")
-
-
 # --- deterministic stratified sampling ---------------------------------------
 # The standard training-data pipeline op after dedup/quality/lang-id:
 # downsample over-represented strata (languages, sources) with a
@@ -255,15 +247,27 @@ def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, lang_pred, lang_score): argmax over per-language weighted
     bigram counts, normalized by the document bigram count. Ties go to
     the alphabetically-first language; all-zero scores -> 'und'."""
+    from glirel_spark.functions.barrier import materialized
+
     text = F.col("text")
     langs = sorted(LANG_PROFILES)
     n_bigrams = F.greatest(F.length(text) - 1, F.lit(1)).cast("long")
+    n_chars = F.length(text).cast("long")
 
     def score_int(lang: str):
-        s = F.lit(0).cast("long")
-        for bg, w in LANG_PROFILES[lang].items():
-            s = s + F.lit(w) * _bigram_count(text, bg)
-        return s
+        # sum_bg w * count(bg). count is the non-overlapping occurrence
+        # count via replace-and-measure, the same greedy left-to-right
+        # count as str.count / DuckDB replace(): len(text) minus len(text
+        # without bg) is exactly 2 * count. The halving is hoisted out of
+        # the sum (the weighted sum of the differences is even and
+        # non-negative, so >> 1 is exact): one shift per language instead
+        # of a double division and checked cast per bigram keeps the
+        # generated method small (see below).
+        prof = LANG_PROFILES[lang]
+        kept = F.lit(0).cast("long")
+        for bg, w in prof.items():
+            kept = kept + F.lit(w) * F.length(F.replace(text, F.lit(bg), F.lit("")))
+        return F.shiftright(F.lit(sum(prof.values())) * n_chars - kept, 1)
 
     # array_max over (score, rev_alpha_rank, lang) structs: max score wins,
     # ties resolve to the alphabetically-first language (max rev rank).
@@ -275,13 +279,16 @@ def lang_id(docs: DataFrame) -> DataFrame:
         )
         for i, lang in enumerate(langs)
     ])
-    best = F.array_max(entries)
+    # computed once per row (barrier): pred and score read ``best`` at
+    # four places, and the projection's method must stay under
+    # HotSpot's 8,000-byte JIT limit (functions/barrier.py)
+    best = F.col("_best")
     pred = F.when(best["s"] > 0, best["lang"]).otherwise(F.lit("und"))
     score = F.when(
         best["s"] > 0,
         best["s"].cast("double") / (n_bigrams * 10).cast("double"),
     ).otherwise(F.lit(0.0))
-    return docs.select(
+    return docs.withColumn("_best", materialized(F.array_max(entries))).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         pred.alias("lang_pred"),
         score.alias("lang_score"),

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 LINEAGE_SCHEMA = (
     "bucket int, n_docs long, n_triples long, wall_sec double, finished_at double"
@@ -32,13 +32,19 @@ class LineageLog:
         self.path = path
 
     def completed_buckets(self) -> list[int]:
-        try:
-            return [
-                r.bucket
-                for r in self.spark.read.parquet(self.path).select("bucket").distinct().collect()
-            ]
-        except Exception:  # first run: no lineage yet
+        if not self._exists():  # first run: no lineage yet
             return []
+        return [r.bucket for r in self.metrics().select("bucket").distinct().collect()]
+
+    def _exists(self) -> bool:
+        """Whether the lineage table exists. Asked of the file system, not
+        by a failing read: a failed query also reaches the session's
+        query listeners, and the one behind ``Observation`` logs it as
+        an ERROR with a stack trace."""
+        jvm = self.spark.sparkContext._jvm
+        path = jvm.org.apache.hadoop.fs.Path(self.path)
+        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+        return path.getFileSystem(conf).exists(path)
 
     def record(self, bucket: int, n_docs: int, n_triples: int, wall_sec: float) -> None:
         """Append one lineage row, built as a literal projection (no
@@ -75,6 +81,13 @@ def run_resumable(
     on resume, and the overwrite makes that replay idempotent — no
     duplicate rows can survive, matching Iceberg's
     dynamic-partition-overwrite snapshot semantics.
+
+    A processed bucket costs two Spark jobs: its write and its lineage
+    row. The lineage counts (docs in, rows written) are two
+    ``Observation``s that the write itself collects, so nothing re-runs
+    the bucket's scan to count its input or reads its output back.
+    ``process_bucket`` must read every row of its subset once (no limit
+    or sample), or ``n_docs`` counts only the rows it read.
     """
     log = LineageLog(spark, lineage_path)
     done = set(log.completed_buckets())
@@ -83,12 +96,13 @@ def run_resumable(
         if b in done:
             continue
         t0 = time.perf_counter()
-        subset = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        bucket_dir = f"{out_path}/_bucket={b}"
-        out = process_bucket(subset)
-        out.write.mode("overwrite").parquet(bucket_dir)
+        docs_in, rows_out = Observation(), Observation()
+        subset = (
+            bucketed.filter(F.col("_bucket") == b).drop("_bucket")
+            .observe(docs_in, F.count(F.lit(1)).alias("n"))
+        )
+        out = process_bucket(subset).observe(rows_out, F.count(F.lit(1)).alias("n"))
+        out.write.mode("overwrite").parquet(f"{out_path}/_bucket={b}")
         wall = time.perf_counter() - t0
-        n_docs = subset.count()
-        n_out = spark.read.parquet(bucket_dir).count()
-        log.record(b, n_docs, n_out, wall)
+        log.record(b, docs_in.get["n"], rows_out.get["n"], wall)
     return spark.read.parquet(out_path).drop("_bucket")

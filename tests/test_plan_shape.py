@@ -252,11 +252,8 @@ def test_media_evidence_adds_only_a_dimension_join(spark):
     assert "Window" not in plan
 
 
-def test_job_bucket_plan_is_one_narrow_stage(spark):
-    """The spark-submit job's per-bucket plan (lexical scorer, top_k=1):
-    documents -> linked triples with no exchange, no join (the labels
-    and the alias map are literals), no scan of a python-list RDD and no
-    python evaluation."""
+def _job_bucket(spark):
+    """jobs/run_pipeline.py's extract_bucket over bucket 0 of 2."""
     import importlib.util
     from pathlib import Path
 
@@ -270,8 +267,15 @@ def test_job_bucket_plan_is_one_narrow_stage(spark):
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
     inter = tables.interleaved_documents(tables.TableIO(spark, SF).table("documents"))
-    bucket = inter.filter(bucket_of(F.col("doc_id"), 2) == 0)
-    linked = job.extract_bucket(bucket)
+    return job.extract_bucket(inter.filter(bucket_of(F.col("doc_id"), 2) == 0))
+
+
+def test_job_bucket_plan_is_one_narrow_stage(spark):
+    """The spark-submit job's per-bucket plan (lexical scorer, top_k=1):
+    documents -> linked triples with no exchange, no join (the labels
+    and the alias map are literals), no scan of a python-list RDD and no
+    python evaluation."""
+    linked = _job_bucket(spark)
     plan = _plan(linked)
     for node in ("Exchange", "BroadcastNestedLoopJoin", "BroadcastHashJoin",
                  "ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
@@ -311,3 +315,25 @@ def test_neural_triples_plan_is_one_repartition_into_the_udf(spark):
     assert "RoundRobinPartitioning" in exchanges[0], plan
     assert nodes[0].startswith("MapInPandas"), plan
     assert "Join" not in plan and "Aggregate" not in plan, plan
+
+
+def test_generated_methods_fit_the_jit_limit(spark):
+    """No whole-stage-codegen method of the lexical family or the
+    language-id family exceeds HotSpot's 8,000-byte JIT limit: a stage
+    over it never leaves the bytecode interpreter (functions/barrier.py).
+    Catalyst inlining an expensive alias into a predicate or into several
+    output columns is what pushes a stage over; the barriers in
+    scoring.lexical_topk1_triples and textstats.lang_id keep it under."""
+    from glirel_spark.functions.barrier import JIT_METHOD_LIMIT, max_method_bytes
+    from glirel_spark.plans import pipeline
+
+    plans = {"extract_bucket": _job_bucket(spark)}
+    for fn in (pipeline.triples, pipeline.graph, pipeline.pred_type_signature,
+               pipeline.lang_id, pipeline.lang_confusion, pipeline.corpus_routing,
+               pipeline.routing_stats):
+        plans[fn.__name__] = fn(spark, SF)
+    sizes = {name: max_method_bytes(df) for name, df in plans.items()}
+    # 0 would mean the probe saw no codegen stage (e.g. an AQE plan)
+    assert all(sizes.values()), f"a plan has no codegen stage: {sizes}"
+    over = {name: n for name, n in sizes.items() if n > JIT_METHOD_LIMIT}
+    assert not over, f"methods over {JIT_METHOD_LIMIT} bytes: {over} (all: {sizes})"

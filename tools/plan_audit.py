@@ -6,8 +6,9 @@ plan-affecting change:
 
 Each section also reports the quick scale-smell counters the plan
 guards assert in tests/test_plan_shape.py (shuffle exchanges, windows,
-broadcasts, nested-loop joins) so a reviewer can scan the table first
-and read only the plans that look wrong.
+broadcasts, nested-loop joins, the largest generated method) so a
+reader can scan the table first and read only the plans that look
+wrong.
 """
 
 from __future__ import annotations
@@ -59,6 +60,8 @@ def formatted_plan(df) -> str:
 
 
 def counters(df) -> dict[str, int]:
+    from glirel_spark.functions.barrier import max_method_bytes
+
     # count on the executedPlan tree string (same source as the
     # test_plan_shape guards) — the "formatted" text splits node names
     # from arguments, which breaks adjacency-based counting
@@ -71,6 +74,8 @@ def counters(df) -> dict[str, int]:
         "broadcasts": len(re.findall(r"BroadcastExchange", plan)),
         "bnl_joins": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
         "cartesian": len(re.findall(r"CartesianProduct", plan)),
+        # over barrier.JIT_METHOD_LIMIT the stage is never JIT-compiled
+        "max_method_bytes": max_method_bytes(df),
     }
 
 
@@ -99,16 +104,18 @@ def main() -> int:
         "exchanges, `single_part` = single-partition exchanges (only\n"
         "acceptable over provably tiny frames), `bnl_joins` =\n"
         "broadcast nested loops (acceptable only with a literal-ish\n"
-        "build side), `cartesian` must be 0.\n\n"
+        "build side), `cartesian` must be 0, `max_method_bytes` =\n"
+        "largest generated method, which HotSpot JIT-compiles only up\n"
+        "to 8,000 bytes.\n\n"
         "| query | shuffles | range_exch | single_part | windows |"
-        " broadcasts | bnl_joins | cartesian |\n"
-        "|---|---|---|---|---|---|---|---|\n"
+        " broadcasts | bnl_joins | cartesian | max_method_bytes |\n"
+        "|---|---|---|---|---|---|---|---|---|\n"
     )
     for name, c in rows:
         hdr += (
             f"| {name} | {c['shuffles']} | {c['range_exch']} |"
             f" {c['single_part']} | {c['windows']} | {c['broadcasts']} |"
-            f" {c['bnl_joins']} | {c['cartesian']} |\n"
+            f" {c['bnl_joins']} | {c['cartesian']} | {c['max_method_bytes']} |\n"
         )
     (REPO / "PLANS.md").write_text(hdr + "\n" + "\n".join(sections))
     print("wrote PLANS.md")
