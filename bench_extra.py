@@ -16,23 +16,14 @@ Env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same as bench.py)
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from bench import BENCH_QUERIES, CPUS, SF_DIR  # noqa: E402
 from glirel_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-BENCH_QUERIES = [
-    "triples", "triples_neural", "coref_clusters", "threshold_search",
-    "graph", "minhash_neardups", "simhash", "ann_topk", "ann_topk_kmeans",
-    "doc_quality", "media_features", "events_sessionized",
-]
 
 
 def main() -> None:

@@ -43,7 +43,7 @@ ENTITY_UNIGRAMS: dict[str, str] = {
 # CHAR-shorter overlapping spans (equal-length overlaps both survive).
 # This engine INTENTIONALLY deviates: token-length dominance with an
 # earlier-start tie-break — a deterministic total order (see
-# mentions.resolve_overlaps docstring for the rationale).
+# fused._hygiene_col docstring for the rationale).
 ENTITY_BIGRAMS: dict[tuple[str, str], str] = {
     ("hash", "join"): "ALGO",
     ("table", "scan"): "ALGO",

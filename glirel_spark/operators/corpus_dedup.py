@@ -8,13 +8,12 @@ in DuckDB bit-for-bit.
 Scale notes (the whole point of these ops):
 - token-id assignment: a map-side char hash per token — no vocabulary
   table, no global sort, no corpus-wide state of any kind.
-- minhash: explode to (doc, shingle) then ONE groupBy(doc) computing
-  all K mins as conditional aggregates — a single shuffle keyed by doc,
-  partial-aggregated map-side.
+- minhash: the distinct-shingle array and all K permutation minima are
+  array expressions on the doc row — map-only, no shuffle.
 - LSH banding: signature -> (band, key) rows; candidate pairs via an
   equi-join on the band key (never an all-pairs product). Band keys are
   near-uniform, so the join is skew-free; verification Jaccard joins
-  shingle sets only for candidate pairs.
+  the two shingle arrays of candidate pairs only.
 """
 
 from __future__ import annotations
@@ -25,62 +24,11 @@ from glirel_spark import config
 from glirel_spark.operators import fixpoint
 
 
-def token_dict(docs_tokens: DataFrame) -> DataFrame:
-    """(token, tid) with tid = the per-character polynomial hash of the
-    token. tid is a PURE FUNCTION of the token string — no dense rank, no
-    global sort, no corpus-wide ordering state (the scale defect of a
-    vocabulary window) — so this dictionary is merely a compute-saving
-    materialization: hashing runs once per DISTINCT token instead of
-    once per corpus position."""
-    vocab = docs_tokens.select(F.explode("tokens").alias("token")).distinct()
-    return vocab.withColumn("tid", _char_hash(F.col("token")))
-
-
-def doc_token_ids(docs_tokens: DataFrame, use_dict: bool = True) -> DataFrame:
-    """(doc_id, pos, tid) — token stream with integer ids.
-
-    tid = per-character polynomial hash (mod HASH_P), replayed exactly by
-    the DuckDB oracle (oracle_corpus.CTE_THASH). Two equivalent plans:
-    - use_dict=True: hash the DISTINCT vocabulary once, broadcast-join
-      back — right when the vocabulary fits in a broadcast (most corpora
-      by Heaps' law);
-    - use_dict=False: compute the hash inline per position — zero
-      corpus-wide state, right for adversarial vocabularies (a 100 TB
-      web crawl with billions of distinct junk tokens).
-    Because tid = f(token), BOTH plans yield identical values — the
-    choice is an optimizer decision, never a semantic one.
-    """
-    toks = docs_tokens.select(
-        "doc_id", F.posexplode("tokens").alias("pos", "token")
-    )
-    if use_dict:
-        return toks.join(F.broadcast(token_dict(docs_tokens)), "token").select(
-            "doc_id", "pos", "tid"
-        )
-    return toks.select("doc_id", "pos", _char_hash(F.col("token")).alias("tid"))
-
-
-def shingles(doc_tids: DataFrame, k: int = config.SHINGLE_K) -> DataFrame:
-    """(doc_id, sh): distinct polynomial hashes of k-token windows.
-
-    sh = ((tid1 * B + tid2) * B + tid3) mod P — windows built with a
-    self-equi-join on (doc, pos+i) offsets kept narrow by the shared
-    doc_id hash partitioning.
-    """
-    b, p = config.SHINGLE_BASE, config.HASH_P
-    t0 = doc_tids.select("doc_id", "pos", F.col("tid").alias("t0"))
-    t1 = doc_tids.select("doc_id", (F.col("pos") - 1).alias("pos"), F.col("tid").alias("t1"))
-    t2 = doc_tids.select("doc_id", (F.col("pos") - 2).alias("pos"), F.col("tid").alias("t2"))
-    win = t0.join(t1, ["doc_id", "pos"]).join(t2, ["doc_id", "pos"])
-    sh = (((F.col("t0") % p) * b + F.col("t1")) % p * b + F.col("t2")) % p
-    return win.select("doc_id", sh.alias("sh")).distinct()
-
-
 # ---------------------------------------------------------------------------
-# Join-free minhash (the scale path): per-char polynomial token hashes,
-# shingles + the FULL signature as array expressions on the doc row —
-# zero shuffles until the LSH band join. 3x faster than the join form at
-# sf0.1 and the plan holds at any corpus size (pure map + one equi-join).
+# Join-free minhash: per-char polynomial token hashes, shingles + the
+# FULL signature as array expressions on the doc row — zero shuffles
+# until the LSH band join; the plan holds at any corpus size (pure map +
+# one equi-join).
 # ---------------------------------------------------------------------------
 
 def _char_hash(tok) -> "F.Column":
@@ -169,17 +117,6 @@ def minhash_neardups_arr(
     )
 
 
-def minhash_signature(sh: DataFrame) -> DataFrame:
-    """(doc_id, mh0..mh{K-1}): K affine-permutation minima in ONE
-    aggregation pass (map-side combined)."""
-    p = config.HASH_P
-    aggs = [
-        F.min((F.col("sh") * a + b) % p).alias(f"mh{i}")
-        for i, (a, b) in enumerate(config.MINHASH_AB)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def lsh_bands(sig: DataFrame) -> DataFrame:
     """signature -> (doc_id, band, band_key) rows; rows-per-band =
     MINHASH_K / MINHASH_BANDS hashes combined into one key."""
@@ -211,48 +148,15 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_verify(cands: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs only.
-
-    |A∩B| via join on (shingle) restricted to candidate doc pairs;
-    |A∪B| = |A| + |B| − |A∩B|. jaccard emitted as an exact rational
-    (inter, union) plus the IEEE quotient.
-    """
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    s1 = sh.toDF("doc1", "sh")
-    s2 = sh.toDF("doc2", "sh")
-    inter = (
-        cands.join(s1, "doc1")
-        .join(s2, ["doc2", "sh"])
-        .groupBy("doc1", "doc2")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        cands.join(inter, ["doc1", "doc2"], "left")
-        .join(sizes.toDF("doc1", "n1"), "doc1")
-        .join(sizes.toDF("doc2", "n2"), "doc2")
-        .select(
-            "doc1", "doc2",
-            F.coalesce("inter", F.lit(0)).cast("long").alias("inter"),
-            (F.col("n1") + F.col("n2") - F.coalesce("inter", F.lit(0))).cast("long").alias("un"),
-        )
-    )
-    return out.withColumn("jaccard", F.col("inter").cast("double") / F.col("un"))
-
-
 def jaccard_verify_arr(cands: DataFrame, shingled: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate pairs, row-local off the per-doc
-    shingle ARRAYS (round-6 rewrite of ``jaccard_verify`` for callers
-    that hold a ``with_shingle_array`` frame).
+    """Exact shingle-set Jaccard for candidate pairs only, row-local off
+    the per-doc shingle ARRAYS of a ``with_shingle_array`` frame.
 
-    The exploded form shuffles the full (doc, shingle) relation to
-    intersect-join it against the candidates; here the candidate pair
-    joins each side's shingle array (same bytes, |shingles|x fewer
-    rows) and the intersection/union sizes are one ``array_intersect``
-    per pair — no per-shingle shuffle at all (guide §2.3 "shuffle keys
-    and metadata, move heavy bytes once"). Output contract and values
-    identical to ``jaccard_verify`` (arrays are distinct by
-    construction, so |array_intersect| == the join-counted overlap).
+    Each candidate pair joins each side's shingle array, and the
+    intersection is one ``array_intersect`` per pair — no per-shingle
+    shuffle at all. Arrays are distinct by construction, so
+    |A∩B| = |array_intersect|; |A∪B| = |A| + |B| − |A∩B|. jaccard is
+    emitted as the exact rational (inter, un) plus the IEEE quotient.
     """
     s = shingled.select("doc_id", "_sh")
     return (
@@ -269,15 +173,6 @@ def jaccard_verify_arr(cands: DataFrame, shingled: DataFrame) -> DataFrame:
         )
         .withColumn("jaccard", F.col("inter").cast("double") / F.col("un"))
     )
-
-
-def minhash_neardups(docs_tokens: DataFrame,
-                     threshold: float = config.NEARDUP_JACCARD) -> DataFrame:
-    """Full pipeline: near-duplicate pairs with verified Jaccard >= t."""
-    sh = shingles(doc_token_ids(docs_tokens))
-    sig = minhash_signature(sh)
-    cands = candidate_pairs(lsh_bands(sig))
-    return jaccard_verify(cands, sh).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -743,7 +638,7 @@ def minhash_hard_negatives(
     Pure composition of the existing sketch machinery — same cached
     shingle pass, same band join, same exact verify — with the verify
     filter inverted, so the 100 TB story is identical to
-    minhash_neardups (never all-pairs, candidates only).
+    minhash_neardups_arr (never all-pairs, candidates only).
     """
     if shingled is None:
         shingled = with_shingle_array(docs_tokens)
@@ -841,7 +736,7 @@ def allpairs_neardups(
 ) -> DataFrame:
     """EXACT set-similarity self-join by prefix filtering (Bayardo et
     al. 2007 AllPairs / Xiao et al. PPJoin family) — the no-LSH
-    complement to minhash_neardups: ZERO false negatives by
+    complement to minhash_neardups_arr: ZERO false negatives by
     construction, same output contract (doc1, doc2, inter, un,
     jaccard), threshold as the exact rational t_num/t_den.
 
@@ -858,7 +753,7 @@ def allpairs_neardups(
     fanout is bounded by how many docs share a *rare* shingle. One df
     aggregation (map-side combined), one per-doc ranking window
     (per-key frames), prefix equi-join, and the exact verify runs on
-    candidates only (shared jaccard_verify). The threshold test is
+    candidates only (shared jaccard_verify_arr). The threshold test is
     integer cross-multiplication (inter * t_den >= un * t_num) — no
     float boundary.
     """

@@ -1,22 +1,29 @@
 """Fused per-document mention + pair plan (the 100-TB hot path).
 
 Mention extraction, span hygiene, and pair generation are all
-*per-document* computations, yet the general relational operators
-(mentions.py / pairs.py) express them as windows + self-joins — at
-sf0.1 that plan has 42 exchanges and recomputes the mention subtree 3x.
-
-This module computes the identical result as pure array expressions on
+*per-document* computations, so they run as pure array expressions on
 the document row: gazetteer lookup via a map literal, overlap
 resolution as an intra-array dominance filter, pair expansion as two
 chained explodes — ONE narrow map stage, ZERO shuffles (the k=1 decode
-is a projection too, scoring.lexical_topk1_triples). Tests assert row-for-row equality with the relational
-operators (which remain the general path when mentions arrive from an
-external NER table rather than a per-row rule).
+is a projection too, scoring.lexical_topk1_triples). The relational
+form of the same semantics (windows + self-joins; 42 exchanges when
+Spark planned it at sf0.1) is the DuckDB oracle (oracle.CTE_MENTIONS /
+CTE_PAIRS), and tests assert row-for-row equality with it.
 
-Semantics preserved (same citations as mentions.py/pairs.py):
-dedup P10, keep-longer overlap P11 w/ earlier-start tie-break, long-
-entity filter P12, end-inclusive spans, J1 bidirectional pairs with
-distance predicate + coref i<j mask, row-major ordering by m_id.
+Reference semantics preserved:
+- gazetteer mentions stand in for an upstream NER stage (the reference
+  takes ``ner`` as given input, glirel/model.py:496)
+- dedup spans on (start, end), P10 (glirel/modules/utils.py:6-36)
+- long-entity filter P12 BEFORE overlap resolution
+  (data/process_wiki_zsl.py:72, then :143-162)
+- keep-longer overlap P11 with an earlier-start tie-break
+  (process_wiki_zsl.py:143-162; see _hygiene_col)
+- token indices end-INCLUSIVE (README.md:153)
+- J1 pairs (``generate_entity_pairs_indices``, glirel/modules/base.py:
+  59-109): relation pairs bidirectional with no self-pairs and the
+  distance predicate |h_start - t_start| <= max_distance; coref pairs
+  i < j with no distance predicate; rows are the union of the two
+  masks, ordered row-major by (head m_id, tail m_id).
 """
 
 from __future__ import annotations
@@ -77,6 +84,22 @@ def _candidates_col(tokens: Column, max_chars: int = 50) -> Column:
 def _hygiene_col(cand: Column) -> Column:
     """P11 dominance filter + (start,end) numbering over a MATERIALIZED
     candidates column.
+
+    Span s is removed when an overlapping span t in the same doc
+    dominates it: longer, or equal length with an earlier start. One
+    pass of dominance (not iterative) equals the reference's greedy on
+    this two-level (unigram vs bigram) hierarchy.
+
+    INTENTIONAL DEVIATION from the reference tie-break: the reference
+    removes a span only when strictly SHORTER in CHAR length, keeping
+    both equal-length overlapping spans (e.g. 'sort merge'/'merge
+    join'); this engine measures length in TOKENS and drops the
+    later-starting of two equal-length overlapping spans. Rationale:
+    a deterministic total order — results are identical under any
+    partitioning and exactly replayable in the DuckDB oracle, whereas
+    keep-both produces order-dependent pair lists downstream. The
+    oracle (oracle.CTE_MENTIONS mkept) applies the same rule, so both
+    stay row-identical.
 
     IMPORTANT performance contract: ``cand`` must be a plain column
     reference (materialized by a projection boundary), NOT a composite
@@ -145,12 +168,6 @@ def with_mentions(docs_tokens: DataFrame, col_name: str = "_ments",
     return docs_tokens.withColumn("_cand", cand).withColumn(col_name, ments).drop("_cand")
 
 
-def mentions_col(tokens: Column, max_chars: int = 50) -> Column:
-    """Single-expression form (tests/small rows only — quadratic
-    re-evaluation without projection boundaries; use with_mentions)."""
-    return _hygiene_col(_candidates_col(tokens, max_chars))
-
-
 def mentions_from(docs_ments: DataFrame) -> DataFrame:
     """Exploded mentions table from a (possibly cached) with_mentions
     frame — lets callers share ONE gazetteer/hygiene pass across the
@@ -161,8 +178,8 @@ def mentions_from(docs_ments: DataFrame) -> DataFrame:
 
 
 def mentions_fused(docs_tokens: DataFrame) -> DataFrame:
-    """Exploded mentions table — same schema/rows as
-    mentions.extract_mentions, one narrow stage."""
+    """Exploded mentions table (doc_id, m_id, start, end, type, text) —
+    the oracle's ``mentions`` rows, one narrow stage."""
     return mentions_from(with_mentions(docs_tokens))
 
 
@@ -203,8 +220,8 @@ def pairs_from(
 def pairs_fused(
     docs_tokens: DataFrame, max_distance: int | None = config.MAX_PAIR_DISTANCE
 ) -> DataFrame:
-    """Exploded pairs table — same rows as pairs.generate_pairs over
-    mentions.extract_mentions; single narrow stage, zero shuffles.
+    """Exploded pairs table — the oracle's ``pairs`` rows; single
+    narrow stage, zero shuffles.
 
     The mention array is materialized by with_mentions before the
     pair explode references it k times (see _hygiene_col)."""

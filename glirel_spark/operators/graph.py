@@ -8,8 +8,8 @@ single task's input to ~1/S of the hot key (AQE skew handling remains
 as backstop for keys we didn't predict).
 
 The aggregation is algebraic (counts sum, max-of-max), so the salted
-plan is semantics-identical to the direct one — tested equal, and the
-direct plan is the DuckDB oracle.
+plan is semantics-identical to a direct groupBy(subj, pred, obj) — the
+DuckDB oracle's plan, and what the tests compare it with.
 """
 
 from __future__ import annotations
@@ -61,16 +61,6 @@ def materialize_graph(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
         F.max("_maxp").alias("max_prob"),
         F.min("_mind").alias("min_doc_id"),
     ).select(*_KEYS, "n_mentions", "n_docs", "max_prob", "min_doc_id")
-
-
-def materialize_graph_direct(linked: DataFrame) -> DataFrame:
-    """Reference plan (no salting) — used to assert salted == direct."""
-    return linked.groupBy(*_KEYS).agg(
-        F.count("*").cast("long").alias("n_mentions"),
-        F.countDistinct("doc_id").cast("long").alias("n_docs"),
-        F.max("prob").alias("max_prob"),
-        F.min("doc_id").alias("min_doc_id"),
-    )
 
 
 def upsert_graph(

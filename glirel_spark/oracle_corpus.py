@@ -9,7 +9,7 @@ from glirel_spark import config as c
 from glirel_spark.oracle import CTE_TOKENS
 
 # token ids: per-character polynomial hash — shared by every sketch
-# (minhash, simhash, fingerprint). Matches corpus_dedup.doc_token_ids /
+# (minhash, simhash, fingerprint). Matches corpus_dedup._char_hash /
 # with_shingle_array arithmetic exactly; the oracle re-derives the same
 # values with joins — plans differ, results must not.
 CTE_THASH = f"""

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
-from glirel_spark.operators import pairs as pair_ops
 from glirel_spark.operators import scoring as scoring_ops
 from glirel_spark.plans import api
 from glirel_spark.sources import tables
@@ -71,7 +70,7 @@ def docs_ments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused per-doc plan (operators/fused.py): zero-shuffle narrow
-    stage, row-identical to mention_ops.extract_mentions (tested)."""
+    stage, row-identical to the DuckDB ``mentions`` oracle (tested)."""
     from glirel_spark.operators import fused
 
     return fused.mentions_from(docs_ments(spark, sf_dir))
@@ -84,7 +83,7 @@ def pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rel = pair_ops.relation_pairs(pairs(spark, sf_dir))
+    rel = pairs(spark, sf_dir).filter("is_rel")
     return scoring_ops.score_pairs_lexical(rel, scoring_ops.labels_df(spark))
 
 
@@ -149,7 +148,7 @@ def eval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation for the lexical scorer at k=1 (evaluate.py docstring);
     # bit-identical to the scored-relation chain, same unchanged oracle.
     return evaluate.eval_counts_lexical(
-        pair_ops.relation_pairs(pairs(spark, sf_dir))
+        pairs(spark, sf_dir).filter("is_rel")
     )
 
 
@@ -168,7 +167,7 @@ def threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |labels|x expansion, no best⋈gold join (evaluate.py docstring;
     # bit-identical output, same unchanged oracle)
     return evaluate.threshold_search_pairs(
-        pair_ops.relation_pairs(pairs(spark, sf_dir))
+        pairs(spark, sf_dir).filter("is_rel")
     )
 
 
@@ -278,7 +277,7 @@ def pred_type_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # labels expansion
     return graph_ops.pred_type_signature(
         decoded=scoring_ops.lexical_topk1_triples(
-            pair_ops.relation_pairs(pairs(spark, sf_dir)), formatted=False
+            pairs(spark, sf_dir).filter("is_rel"), formatted=False
         )
     )
 
@@ -691,7 +690,7 @@ def calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scored expansion, no distinct — evaluate.gold_triples_lexical);
     # calibration_table's semi-join and bucket agg are unchanged.
     gold = evaluate.gold_triples_lexical(
-        pair_ops.relation_pairs(pairs(spark, sf_dir))
+        pairs(spark, sf_dir).filter("is_rel")
     ).select(
         "doc_id",
         F.col("h_start").alias("head_start"),

@@ -32,6 +32,14 @@ for _k, _v in _BLAS_PINS.items():
     os.environ.setdefault(_k, _v)
 
 
+def default_driver_memory() -> str:
+    """16g, capped at half the box's physical memory: a heap that large
+    is seldom collected, so two sessions at 16g on a 15 GB box get
+    OOM-killed instead of failing with a Java OutOfMemoryError."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app: str = "glirel_spark",
     cores: int | None = None,
@@ -61,7 +69,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # NOTE on shuffle compression: at sandbox scale (sf<=0.1) the

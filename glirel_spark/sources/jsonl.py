@@ -72,7 +72,7 @@ def docs_tokens_from_jsonl(df: DataFrame) -> DataFrame:
 def mentions_from_jsonl(df: DataFrame) -> DataFrame:
     """(doc_id, start, end, type, text) — end-INCLUSIVE, the engine's
     mentions shape; external NER replaces the gazetteer stage, exactly
-    the external-annotations path generate_pairs serves."""
+    the external-annotations path model/udf.neural_triples serves."""
     m = df.select("doc_id", F.explode("ner").alias("n"))
     spans = m.select(
         "doc_id",

@@ -61,7 +61,6 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from glirel_spark import config
 from glirel_spark.functions.memo import once
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -89,11 +88,6 @@ class TableIO:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    io = TableIO(spark, sf_dir)
-    return {t: io.table(t) for t in config.TABLES}
 
 
 def interleaved_documents(flat_docs: DataFrame) -> DataFrame:

@@ -48,11 +48,6 @@ def latest_snapshot(out_dir: str) -> str | None:
     return os.path.join(out_dir, versions[-1]) if versions else None
 
 
-def read_latest_graph(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = latest_snapshot(out_dir)
-    return spark.read.parquet(path) if path else None
-
-
 def read_prev_graph(
     spark: SparkSession, out_dir: str, batch_id: int
 ) -> DataFrame | None:

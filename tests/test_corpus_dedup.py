@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from glirel_spark.operators.corpus_dedup import (
     exact_dedup,
     fingerprint,
-    minhash_neardups,
+    minhash_neardups_arr,
     simhash,
     simhash_neardups,
 )
@@ -28,7 +28,7 @@ def test_minhash_finds_neardup_rejects_distinct(spark):
     near = BASE + " extra"          # one token appended -> high jaccard
     other = "a b c d e f g h i j k l m n o p"
     df = _docs(spark, [BASE, near, other])
-    out = minhash_neardups(df, threshold=0.5).collect()
+    out = minhash_neardups_arr(df, threshold=0.5).collect()
     pairs = {(r.doc1, r.doc2) for r in out}
     assert ("d0", "d1") in pairs
     assert all("d2" not in p for p in pairs)
@@ -63,18 +63,6 @@ def test_simhash_distinct_docs_far(spark):
                        "m n o p q r s t"])
     sh = simhash(df)
     assert sh.select(F.countDistinct("simhash")).collect()[0][0] >= 2
-
-
-def test_doc_token_ids_dict_equals_inline(spark):
-    """tid = f(token): the broadcast-dictionary plan and the inline
-    map-side plan must produce identical ids (plan choice, not
-    semantics)."""
-    from glirel_spark.operators.corpus_dedup import doc_token_ids
-
-    df = _docs(spark, [BASE, "completely novel words not in base"])
-    a = sorted(map(tuple, doc_token_ids(df, use_dict=True).collect()))
-    b = sorted(map(tuple, doc_token_ids(df, use_dict=False).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_neardup_clusters_transitive_families(spark):

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from glirel_spark import config
 from glirel_spark.operators import decode as decode_ops
 from glirel_spark.operators import evaluate
-from glirel_spark.operators import pairs as pair_ops
 from glirel_spark.operators import scoring
 
 SF = "/root/testdata/sf0.001"
@@ -27,7 +26,7 @@ def _rows(df, cols=None):
 def rel(spark):
     from glirel_spark.plans import pipeline
 
-    return pair_ops.relation_pairs(pipeline.pairs(spark, SF))
+    return pipeline.pairs(spark, SF).filter("is_rel")
 
 
 def test_lexical_topk1_equals_relational_decode(spark, rel):
@@ -99,7 +98,6 @@ def test_threshold_search_lexical_equals_scored_form(spark, rel):
 
 
 def test_eval_counts_lexical_equals_scored_chain(spark, rel):
-    from glirel_spark.operators import pairs as pair_ops  # noqa: F401
     from glirel_spark.plans import pipeline
 
     SFD = SF

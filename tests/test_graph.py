@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from glirel_spark.config import ALIAS_DICT
-from glirel_spark.operators.graph import materialize_graph, materialize_graph_direct
+from glirel_spark.operators.graph import materialize_graph
 from glirel_spark.operators.linking import canonicalize, link_triples
 
 T_SCHEMA = (
@@ -18,6 +18,21 @@ T_SCHEMA = (
 
 def _triples(spark, rows):
     return spark.createDataFrame(rows, T_SCHEMA)
+
+
+def _direct(linked):
+    """The graph oracle's plan (oracle.q_graph): one DuckDB GROUP BY
+    subj, pred, obj over the same linked rows."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("linked", linked.select("subj", "pred", "obj", "doc_id", "prob").toPandas())
+    return sorted(con.execute(
+        "SELECT subj, pred, obj, CAST(count(*) AS BIGINT) AS n_mentions,"
+        " CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,"
+        " max(prob) AS max_prob, min(doc_id) AS min_doc_id"
+        " FROM linked GROUP BY subj, pred, obj"
+    ).fetchall())
 
 
 def test_canonicalize_alias_and_fallback(spark):
@@ -50,9 +65,8 @@ def test_salted_equals_direct(spark):
     rows.append(("d99", 0, 1, 2, 3, "table", "query", "feeds", 80, 0.8))
     t = _triples(spark, rows)
     linked = link_triples(t, ALIAS_DICT)
-    a = {tuple(r) for r in materialize_graph(linked).collect()}
-    b = {tuple(r) for r in materialize_graph_direct(linked).collect()}
-    assert a == b
+    a = sorted(tuple(r) for r in materialize_graph(linked).collect())
+    assert a == _direct(linked)
     hot = next(r for r in a if r[0] == "Q:apache_spark")
     assert hot[3] == 40 and hot[4] == 40  # n_mentions, n_docs
 
@@ -63,8 +77,10 @@ def test_graph_n_docs_distinct(spark):
         ("d1", 4, 5, 6, 7, "spark", "customer", "used by", 90, 0.7),  # same doc
         ("d2", 0, 1, 2, 3, "spark", "customer", "used by", 90, 0.8),
     ]
-    g = materialize_graph(link_triples(_triples(spark, rows), ALIAS_DICT))
-    r = g.collect()[0]
+    linked = link_triples(_triples(spark, rows), ALIAS_DICT)
+    g = materialize_graph(linked).collect()
+    assert [tuple(r) for r in g] == _direct(linked)
+    r = g[0]
     assert r.n_mentions == 3 and r.n_docs == 2
     assert r.max_prob == 0.9 and r.min_doc_id == "d1"
 
@@ -150,9 +166,8 @@ def test_salted_equals_direct_under_zipfian_skew(spark):
         linked.groupBy("subj").count().orderBy(F.desc("count")).first()["count"] / n
     )
     assert hot_share > 0.2  # the distribution really is skewed
-    a = {tuple(r) for r in materialize_graph(linked).collect()}
-    b = {tuple(r) for r in materialize_graph_direct(linked).collect()}
-    assert a == b
+    a = sorted(tuple(r) for r in materialize_graph(linked).collect())
+    assert a == _direct(linked)
     # the salted partial splits the hot key into many buckets
     salted = linked.withColumn("_salt", F.pmod(F.hash("doc_id"), F.lit(16)))
     buckets = (

@@ -1,5 +1,5 @@
 """Tensor-plane scorer: determinism, pair-ordering contract parity with
-the relational J1, label-rep caching, decode integration through both
+the fused J1, label-rep caching, decode integration through both
 the in-UDF k=1 decode and the relational decode chain, and the in-UDF
 decode helper (top1_decode)."""
 
@@ -12,8 +12,7 @@ from pyspark.sql import functions as F
 from glirel_spark import config
 from glirel_spark.model.scorer import DeterministicGLiREL
 from glirel_spark.model.udf import neural_triples, score_pairs_neural, top1_decode
-from glirel_spark.operators.mentions import extract_mentions
-from glirel_spark.operators.pairs import generate_pairs
+from glirel_spark.operators.fused import mentions_fused, pairs_fused
 
 UNCONSTRAINED = {lab: {} for lab in config.RELATION_LABELS}
 
@@ -77,10 +76,10 @@ def test_udf_pairs_match_relational_j1(spark):
         [("d0", "spark query table scan window spark".split(" "))],
         "doc_id string, tokens array<string>",
     )
-    m = extract_mentions(docs, spark)
+    m = mentions_fused(docs)
     rel = {
         (r.h_start, r.h_end, r.t_start, r.t_end)
-        for r in generate_pairs(m).filter("is_rel").collect()
+        for r in pairs_fused(docs).filter("is_rel").collect()
     }
     udf_pairs = {
         (r.h_start, r.h_end, r.t_start, r.t_end)
@@ -97,7 +96,7 @@ def test_neural_triples_decode_integration(spark, path, neural_decode_chain):
         [("d0", "spark query table scan window customer".split(" "))],
         "doc_id string, tokens array<string>",
     )
-    m = extract_mentions(docs, spark)
+    m = mentions_fused(docs)
     if path == "fused":
         out = neural_triples(docs, m, threshold=0.5, top_k=1)
     else:
@@ -155,7 +154,7 @@ def test_udf_scores_match_direct_score_doc(spark):
     docs = spark.createDataFrame(
         [("d0", toks)], "doc_id string, tokens array<string>"
     )
-    m = extract_mentions(docs, spark)
+    m = mentions_fused(docs)
     rows = score_pairs_neural(docs, m).collect()
     model = DeterministicGLiREL()
     sp = np.asarray(

@@ -8,15 +8,17 @@ predicate (base.py:95-97) and the coref i<j mask (base.py:83-100).
 
 from __future__ import annotations
 
-from glirel_spark.operators.pairs import generate_pairs
+from glirel_spark.operators.fused import _MENTION_T, pairs_from
 
 
 def _mentions_df(spark, spans, doc_id="d0"):
-    rows = [
-        (doc_id, i, s, e, "T", f"tok{s}") for i, (s, e) in enumerate(spans)
-    ]
+    """One (doc_id, tokens, _ments) row, the with_mentions shape, with a
+    hand-built mention array numbered in (start, end) order."""
+    tokens = [f"tok{i}" for i in range(max(e for _, e in spans) + 1)]
+    ments = [(i, s, e, "T", f"tok{s}") for i, (s, e) in enumerate(spans)]
     return spark.createDataFrame(
-        rows, "doc_id string, m_id int, start int, end int, type string, text string"
+        [(doc_id, tokens, ments)],
+        f"doc_id string, tokens array<string>, _ments {_MENTION_T}",
     )
 
 
@@ -25,7 +27,7 @@ def test_golden_20_pairs(spark):
     # expected 20-pair tensor (test_rel_rep.py:33-53), row-major.
     m = _mentions_df(spark, [(1, 1), (2, 2), (3, 3), (4, 4), (5, 5)])
     got = (
-        generate_pairs(m, max_distance=None)
+        pairs_from(m, max_distance=None)
         .orderBy("head_m_id", "tail_m_id")
         .select("h_start", "h_end", "t_start", "t_end")
         .collect()
@@ -44,7 +46,7 @@ def test_distance_predicate(spark):
     # |h_start - t_start| <= D keeps rel pairs; beyond-D i<j pairs
     # survive only as coref (the combined mask union, base.py:100).
     m = _mentions_df(spark, [(0, 0), (3, 3), (100, 100)])
-    rows = generate_pairs(m, max_distance=8).collect()
+    rows = pairs_from(m, max_distance=8).collect()
     got = {(r.head_m_id, r.tail_m_id): (r.is_rel, r.is_coref) for r in rows}
     assert got[(0, 1)] == (True, True)
     assert got[(1, 0)] == (True, False)
@@ -56,7 +58,7 @@ def test_distance_predicate(spark):
 
 def test_no_self_pairs_and_counts(spark):
     m = _mentions_df(spark, [(i, i) for i in range(6)])
-    df = generate_pairs(m, max_distance=None)
+    df = pairs_from(m, max_distance=None)
     assert df.count() == 6 * 5
     assert df.filter("head_m_id = tail_m_id").count() == 0
 
@@ -64,5 +66,5 @@ def test_no_self_pairs_and_counts(spark):
 def test_cross_document_isolation(spark):
     a = _mentions_df(spark, [(0, 0), (1, 1)], doc_id="a")
     b = _mentions_df(spark, [(0, 0), (1, 1)], doc_id="b")
-    df = generate_pairs(a.union(b), max_distance=None)
+    df = pairs_from(a.union(b), max_distance=None)
     assert df.count() == 4  # 2 per doc, never across docs

@@ -4,7 +4,7 @@ These are the invariants the correctness architecture RELIES on rather
 than merely exhibits: gen_golden.py replays docs one at a time and
 asserts bit-equality with batched executor output, so batch-composition
 invariance of the encoder is load-bearing; the pair-ordering contract
-is what keeps the relational J1 and the in-UDF pair generation
+is what keeps the fused J1 (fused.pairs_from) and the in-UDF pair generation
 row-identical. Spark itself stays out of these tests (one process,
 no session) so hypothesis can run hundreds of examples cheaply.
 """

@@ -1,6 +1,7 @@
 """spark-submit launch-path regressions: the submitted --master must
 win (get_spark silently overrode it until the PYSPARK_GATEWAY_PORT
-check), and the --py-files artifact must build deterministically."""
+check), the default driver heap must fit the box, and the --py-files
+artifact must build deterministically."""
 
 from __future__ import annotations
 
@@ -30,6 +31,21 @@ def test_submitted_master_is_respected(tmp_path):
         capture_output=True, text=True, timeout=240,
     )
     assert "MASTER: local-cluster[2,2,2048]" in out.stdout, out.stderr[-2000:]
+
+
+def test_driver_heap_fits_the_box(spark):
+    """The default driver heap is at most 16g and at most half the
+    box's physical memory; SPARK_DRIVER_MEM, when set, wins."""
+    import os
+
+    got = spark.sparkContext.getConf().get("spark.driver.memory")
+    if "SPARK_DRIVER_MEM" in os.environ:
+        assert got == os.environ["SPARK_DRIVER_MEM"]
+        return
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    units = {"m": 1, "g": 1024}
+    got_mb = int(got[:-1]) * units[got[-1].lower()]
+    assert 0 < got_mb <= min(16 * 1024, phys_mb // 2), got
 
 
 def test_dist_zip_is_deterministic_and_importable(tmp_path):

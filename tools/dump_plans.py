@@ -13,13 +13,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry  # noqa: E402
+from bench import BENCH_QUERIES  # noqa: E402
 from glirel_spark.session import get_spark  # noqa: E402
-
-BENCH_QUERIES = [
-    "triples", "triples_neural", "coref_clusters", "threshold_search",
-    "graph", "minhash_neardups", "simhash", "ann_topk", "ann_topk_kmeans",
-    "doc_quality", "media_features", "events_sessionized",
-]
+from plan_audit import formatted_plan  # noqa: E402
 
 
 def main() -> None:
@@ -33,9 +29,7 @@ def main() -> None:
     qs = entry.queries()
     for name in names:
         df = qs[name](spark, sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         (out_dir / f"{name}_{suffix}.txt").write_text(plan)
         print(f"wrote {name}_{suffix}.txt ({len(plan.splitlines())} lines)")
     spark.stop()

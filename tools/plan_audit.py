@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import re
 import sys
+import traceback
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -91,10 +92,22 @@ def main() -> int:
 
     rows = []
     sections = []
+    failures = []
     for name in HEADLINE:
-        df = queries[name](spark, sf_dir)
-        plan = formatted_plan(df)
-        c = counters(df)
+        # one failing query (say, missing reference data) must not hide
+        # the audit of the rest; it is written as a named ERROR row
+        try:
+            df = queries[name](spark, sf_dir)
+            plan = formatted_plan(df)
+            c = counters(df)
+        except Exception as exc:  # noqa: BLE001
+            traceback.print_exc()
+            err = (str(exc).strip() or type(exc).__name__).splitlines()[0]
+            print(f"  ERROR {name}: {err}")
+            failures.append(name)
+            rows.append((name, None))
+            sections.append(f"## {name}\n\nERROR: `{err}`\n")
+            continue
         rows.append((name, c))
         sections.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
 
@@ -112,6 +125,9 @@ def main() -> int:
         "|---|---|---|---|---|---|---|---|---|\n"
     )
     for name, c in rows:
+        if c is None:
+            hdr += f"| {name} | ERROR |" + " |" * 7 + "\n"
+            continue
         hdr += (
             f"| {name} | {c['shuffles']} | {c['range_exch']} |"
             f" {c['single_part']} | {c['windows']} | {c['broadcasts']} |"
@@ -120,6 +136,9 @@ def main() -> int:
     (REPO / "PLANS.md").write_text(hdr + "\n" + "\n".join(sections))
     print("wrote PLANS.md")
     spark.stop()
+    if failures:
+        print("FAILED:", failures)
+        return 1
     return 0
 
 
