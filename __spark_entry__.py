@@ -275,8 +275,7 @@ def oracle_sql() -> dict[str, str]:
         "docred_pairs": oracle.q_docred_pairs(),
         "docred_eval": oracle.q_docred_type_prior_eval(),
         "docred_eval_xsplit": oracle.q_docred_type_prior_eval(
-            eval_path="/root/reference/data/re-docred/data/test_revised.json",
-            prior_path="/root/reference/data/re-docred/data/dev_revised.json",
+            eval_path=config.DOCRED_TEST, prior_path=config.DOCRED_DEV
         ),
         "docred_distant_mentions": oracle.q_docred_distant_mentions(),
         "docred_distant_triples": oracle.q_docred_distant_triples(),

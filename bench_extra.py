@@ -9,7 +9,12 @@ cycle spread ("a delta is real only if it exceeds the spread").
 Timing methodology is identical: noop sink, full materialization,
 plan+execution included, session startup excluded.
 
-Usage: python bench_extra.py [cycles] [query ...]
+A query that raises prints ``ERROR <name>: <exc>`` to stderr, is listed
+under ``errors`` and is not timed; the other queries go on.
+
+Usage: python bench_extra.py [cycles] [all | query ...]
+       (no query = the bench.py headline set; ``all`` = every
+       __spark_entry__.queries() entry)
 Env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same as bench.py)
 """
 
@@ -30,16 +35,29 @@ def main() -> None:
     import __spark_entry__ as entry
 
     cycles = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    names = sys.argv[2:] or BENCH_QUERIES
-    spark = get_spark("bench-extra", cores=CPUS)
     queries = entry.queries()
+    names = sys.argv[2:] or BENCH_QUERIES
+    if names == ["all"]:
+        names = list(queries)
+    spark = get_spark("bench-extra", cores=CPUS)
     samples: dict[str, list[float]] = {n: [] for n in names}
+    errors: dict[str, str] = {}
     t_all = time.perf_counter()
     for cycle in range(cycles + 1):  # cycle 0 = warmup (cache builds)
         for name in names:
+            if name in errors:
+                continue
             spark.sparkContext.setJobDescription(f"bench_extra c{cycle}: {name}")
             t0 = time.perf_counter()
-            queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            try:
+                queries[name](spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            except Exception as exc:  # noqa: BLE001
+                print(f"ERROR {name}: {exc}", file=sys.stderr)
+                errors[name] = (str(exc) or repr(exc)).splitlines()[0]
+                del samples[name]
+                continue
             dt = round(time.perf_counter() - t0, 3)
             if cycle > 0:
                 samples[name].append(dt)
@@ -52,9 +70,10 @@ def main() -> None:
         "metric": "bench_extra_interleaved_min_total",
         "value": round(sum(best.values()), 3),
         "unit": "sec",
-        "queries": {n: best[n] for n in names},
+        "queries": best,
+        "errors": errors,
         "per_rep": samples,
-        "max_cycle_spread": round(max(spread.values()), 3),
+        "max_cycle_spread": round(max(spread.values(), default=0.0), 3),
         "spread": spread,
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "cpus": CPUS,

@@ -258,3 +258,10 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+# --------------------------------------------------------------------------
+# Re-DocRED reference data (read by sources/docred.py and its oracle twins)
+# --------------------------------------------------------------------------
+DOCRED_DEV = "/root/reference/data/re-docred/data/dev_revised.json"
+DOCRED_TEST = "/root/reference/data/re-docred/data/test_revised.json"
+WIKIDATA_PROPERTIES = "/root/reference/data/all_wikidata_properties.json"

@@ -219,7 +219,7 @@ def simhash_neardups(docs_tokens: DataFrame,
     # n_chunks union branches) re-expanded the signature aggregation;
     # cut the lineage once — at scale this is "materialize the
     # signature table", the standard sketch-store boundary.
-    sig = simhash(docs_tokens).localCheckpoint(eager=False)
+    sig = fixpoint.materialize(simhash(docs_tokens))
     n_chunks = max_hamming + 1
     chunk_bits = config.SIMHASH_BITS // n_chunks
     blocks = None
@@ -769,15 +769,13 @@ def allpairs_neardups(
         .withColumn("rk", F.row_number().over(w))
         .withColumn("n", F.count("*").over(W.partitionBy("doc_id")))
     )
-    pref = (
+    # both sides of the candidate self-join read the prefix index:
+    # materialize it once instead of running the ranking window twice
+    pref = fixpoint.materialize(
         ranked.filter(
             F.col("rk")
             <= F.col("n") - F.expr(f"({t_num} * n + {t_den} - 1) DIV {t_den}") + 1
-        )
-        .select("doc_id", "sh")
-        # both sides of the candidate self-join read the prefix index:
-        # materialize it once instead of running the ranking window twice
-        .localCheckpoint(eager=False)
+        ).select("doc_id", "sh")
     )
     cands = (
         pref.select(F.col("doc_id").alias("doc1"), "sh")

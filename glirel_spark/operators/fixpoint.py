@@ -1,17 +1,28 @@
-"""Fixpoint loops over DataFrames: the one implementation of
-every iterative graph loop in the repo (connected components, k-core
-peeling, BFS, transitive closure, parity BFS).
+"""Lineage cuts and loops over DataFrames: the one place the repo cuts
+a plan's lineage (``materialize``) and the one implementation of every
+iterative graph loop (connected components, k-core and k-truss
+peeling, BFS, transitive closure, parity BFS, PageRank, label
+propagation).
 
-Each loop cuts the lineage of every relation it produces
-(``localCheckpoint``), so round R's plan scans round R-1's result
-instead of replaying rounds 1..R-1. The cuts are lazy: a relation is
-materialized by the convergence check that reads it, not at
-plan-construction time.
+``materialize`` is the only caller of ``localCheckpoint``. The cut is
+lazy: a relation is computed by the first action that reads it (a
+convergence check, a driver fetch, the query's own sink), not when the
+cut is placed. Under AQE, placing a cut over a shuffle still runs that
+shuffle's map stage while the plan is built; only the final stage
+waits. A durable checkpoint, when a caller needs one, is a change to
+this one function.
 
-Each loop raises past ``max_iter`` rather than return a partial result
-(a partially merged component, a truncated distance). The DuckDB
-oracles unroll the same bounds, so a silent partial result would
-surface only as a hash mismatch on exotic data.
+The loops cut every relation they produce, so round R's plan scans
+round R-1's result instead of replaying rounds 1..R-1:
+- ``until_stable`` runs a step until a round changes no row;
+- ``expand_frontier`` grows a visited set ring by ring until a ring
+  is empty;
+- ``iterate`` runs a step a fixed number of rounds.
+
+The convergence loops raise past ``max_iter`` rather than return a
+partial result (a partially merged component, a truncated distance).
+The DuckDB oracles unroll the same bounds, so a silent partial result
+would surface only as a hash mismatch on exotic data.
 """
 
 from __future__ import annotations
@@ -19,6 +30,27 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: later plans that read the result scan its
+    cached partitions instead of re-running the subtree that made it.
+    Use it where a relation has several consumers or is the state of a
+    loop. The cut is executor-local and lazy (see the module
+    docstring)."""
+    return df.localCheckpoint(eager=False)
+
+
+def iterate(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], rounds: int
+) -> DataFrame:
+    """Apply ``state = step(state)`` exactly ``rounds`` times, cutting
+    the lineage after each round; return the last state. For loops
+    whose round count is a parameter, not a convergence test: no round
+    counts rows to decide whether to stop."""
+    for _ in range(rounds):
+        state = materialize(step(state))
+    return state
 
 
 def until_stable(
@@ -35,10 +67,10 @@ def until_stable(
     propagation) or remove them (peeling). Rounds = rounds of change
     + 1; raises if the state still changes in round ``max_iter``.
     """
-    state = state.localCheckpoint(eager=False)
+    state = materialize(state)
     cols = state.columns
     for _ in range(max_iter):
-        new = step(state).localCheckpoint(eager=False)
+        new = materialize(step(state))
         changed = state.join(new, cols, "left_anti").limit(1).count()
         state = new
         if changed == 0:
@@ -63,10 +95,10 @@ def min_label_components(edges: DataFrame, max_iter: int, name: str) -> DataFram
     decide whether to stop. The symmetric edge set is cut once, so the
     subtree that produced ``edges`` runs once, not once per round.
     """
-    sym = (
-        edges.select("a", "b")
-        .union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint(eager=False)
+    sym = materialize(
+        edges.select("a", "b").union(
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
     )
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -106,18 +138,15 @@ def expand_frontier(
     included; raises if the ring of round ``max_iter`` is still
     non-empty. ``step`` must return the seed's columns.
     """
-    visited = seed.localCheckpoint(eager=False)
+    visited = materialize(seed)
     frontier = visited
     for d in range(1, max_iter + 1):
-        ring = (
-            step(frontier, d)
-            .distinct()
-            .join(visited.select(key), key, "left_anti")
-            .localCheckpoint(eager=False)
+        ring = materialize(
+            step(frontier, d).distinct().join(visited.select(key), key, "left_anti")
         )
         if ring.limit(1).count() == 0:
             return visited
-        visited = visited.unionByName(ring).localCheckpoint(eager=False)
+        visited = materialize(visited.unionByName(ring))
         frontier = ring
     raise RuntimeError(
         f"{name} frontier still live after {max_iter} rounds; raise max_iter"

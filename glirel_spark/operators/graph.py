@@ -24,6 +24,21 @@ N_HUB_CAP = config.NEIGH_HUB_CAP
 _KEYS = ["subj", "pred", "obj"]
 
 
+def _edges(graph: DataFrame, both_ways: bool = False) -> DataFrame:
+    """(a, b): the distinct directed entity edges of ``graph``, self-loops
+    dropped. With ``both_ways``, also every edge reversed (a union-all:
+    a reciprocal pair then appears twice per direction, so callers that
+    need a set add ``.distinct()``)."""
+    e = (
+        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    if not both_ways:
+        return e
+    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
 def materialize_graph(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
     """linked triples -> graph edges with support stats.
 
@@ -425,12 +440,7 @@ def components(graph: DataFrame, max_iter: int = 30) -> DataFrame:
     non-convergence rather than returning partially merged components
     (ADVICE r2 contract).
     """
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    labels = fixpoint.min_label_components(e, max_iter, "components")
+    labels = fixpoint.min_label_components(_edges(graph), max_iter, "components")
     sizes = labels.groupBy("root").agg(
         F.count("*").cast("long").alias("component_size")
     )
@@ -458,12 +468,7 @@ def kcore(graph: DataFrame, k: int = 2, max_iter: int = 30) -> DataFrame:
     after fixpoint), so Spark failing loudly past max_iter keeps the
     two in lockstep.
     """
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+    edges = _edges(graph, both_ways=True).distinct()
 
     def peel(edges: DataFrame) -> DataFrame:
         deg = edges.groupBy("a").agg(F.count("*").cast("long").alias("deg"))
@@ -504,28 +509,24 @@ def pagerank_int(
 
     Per iteration: one shuffle keyed on subj (contribution join), one
     on obj (incoming sum); dangling mass (no-out-edge nodes) is
-    redistributed uniformly, truncated DIV n. localCheckpoint per round
-    truncates the iterative lineage. Output: (entity, rank_scaled).
+    redistributed uniformly, truncated DIV n. The rounds run through
+    fixpoint.iterate, which cuts the lineage after each one. Building
+    the plan counts the nodes, because n is a literal in it.
+    Output: (entity, rank_scaled).
     """
-    e = (
-        graph.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
+    e = fixpoint.materialize(_edges(graph).toDF("src", "dst"))
+    nodes = fixpoint.materialize(
         e.select(F.col("src").alias("entity"))
         .union(e.select(F.col("dst").alias("entity")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank_scaled", F.lit(0).cast("long"))
     outdeg = e.groupBy("src").agg(F.count("*").cast("long").alias("odeg"))
     teleport = (100 - damping_pct) * scale // 100
-    ranks = nodes.withColumn("rank_scaled", F.lit(scale).cast("long"))
-    for _ in range(iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         with_deg = ranks.join(
             outdeg.withColumnRenamed("src", "entity"), "entity", "left"
         )
@@ -546,7 +547,7 @@ def pagerank_int(
             .groupBy("dst")
             .agg(F.sum("c").cast("long").alias("incoming"))
         )
-        ranks = (
+        return (
             nodes.join(contrib.withColumnRenamed("dst", "entity"), "entity", "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -559,9 +560,10 @@ def pagerank_int(
                     )
                 ).cast("long").alias("rank_scaled"),
             )
-            .localCheckpoint(eager=True)
         )
-    return ranks
+
+    ranks = nodes.withColumn("rank_scaled", F.lit(scale).cast("long"))
+    return fixpoint.iterate(ranks, step, iters)
 
 
 def triangles(graph: DataFrame) -> DataFrame:
@@ -847,12 +849,7 @@ def kg_bfs(graph: DataFrame, max_iter: int = 30) -> DataFrame:
     DuckDB oracle bounds its recursion at the same depth, so the
     engines stay in lockstep by contract).
     """
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = _edges(graph, both_ways=True)
     seed = sym.agg(F.min("a").alias("entity")).withColumn(
         "dist", F.lit(0).cast("long")
     )
@@ -1085,12 +1082,7 @@ def kg_walks(
     """
     from glirel_spark.operators.corpus_dedup import _char_hash
 
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = _edges(graph, both_ways=True)
     steps = sym.select(
         "a", "b",
         F.explode(F.sequence(F.lit(1), F.lit(walk_len))).alias("t"),
@@ -1101,15 +1093,14 @@ def kg_walks(
             F.col("a"), F.lit(">"), F.col("b"),
         )
     )
-    succ = (
+    # one consumer per rollout step: materialize once (on a cluster,
+    # write the successor table) instead of recomputing the argmin
+    # aggregation walk_len times
+    succ = fixpoint.materialize(
         steps.withColumn("_h", h)
         .groupBy("t", "a")
         .agg(F.min(F.struct(F.col("_h").alias("h"), F.col("b").alias("b"))).alias("_m"))
         .select("t", "a", F.col("_m.b").alias("nxt"))
-        # one consumer per rollout step: materialize once (on a cluster,
-        # write the successor table) instead of recomputing the argmin
-        # aggregation walk_len times
-        .localCheckpoint(eager=False)
     )
     walk = (
         sym.select("a")
@@ -1246,12 +1237,8 @@ def kg_closure(
     that judgment call is the caller's, the evaluation is safe either
     way.
     """
-    e = (
-        graph.filter(F.col("pred") == pred)
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e = fixpoint.materialize(
+        _edges(graph.filter(F.col("pred") == pred)).toDF("src", "dst")
     )
     nxt = e.select(F.col("src").alias("dst"), F.col("dst").alias("_nxt"))
 
@@ -1288,29 +1275,22 @@ def kg_label_prop(graph: DataFrame, rounds: int = config.LP_ROUNDS) -> DataFrame
     labels, one (node, label) count — map-side combinable, so a hub's
     incident messages collapse to partial counts per map task — and
     one argmax per node via min(struct(-n, label)) inside the
-    aggregate (no window). localCheckpoint per round truncates
-    lineage; total cost is rounds x O(|E|) with no growing state,
-    unlike closure-style algorithms.
+    aggregate (no window). The rounds run through fixpoint.iterate,
+    which cuts the lineage after each one; total cost is rounds x
+    O(|E|) with no growing state, unlike closure-style algorithms.
+    The edge set is NOT deduped after the reversal: a reciprocal pair
+    sends two messages each way, as the oracle counts them.
     """
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).localCheckpoint(
-        eager=True
-    )
-    lab = sym.select(F.col("a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    for _ in range(rounds):
+    sym = fixpoint.materialize(_edges(graph, both_ways=True))
+
+    def step(lab: DataFrame) -> DataFrame:
         msgs = sym.join(lab.withColumnRenamed("node", "a"), "a").select(
             F.col("b").alias("node"), "label"
         )
         counts = msgs.groupBy("node", "label").agg(
             F.count("*").cast("long").alias("n")
         )
-        lab = (
+        return (
             counts.groupBy("node")
             .agg(
                 F.min(
@@ -1318,8 +1298,12 @@ def kg_label_prop(graph: DataFrame, rounds: int = config.LP_ROUNDS) -> DataFrame
                 ).alias("_m")
             )
             .select("node", F.col("_m.label").alias("label"))
-            .localCheckpoint(eager=True)
         )
+
+    lab = sym.select(F.col("a").alias("node")).distinct().withColumn(
+        "label", F.col("node")
+    )
+    lab = fixpoint.iterate(lab, step, rounds)
     return lab.select(F.col("node").alias("entity"), F.col("label").alias("community"))
 
 
@@ -1342,15 +1326,8 @@ def kg_bipartite_audit(graph: DataFrame, max_iter: int = 60) -> DataFrame:
     parity walk) to natural fixpoint — state-finite, so no depth bound
     is needed there.
     """
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    nbrs = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .withColumnRenamed("a", "node")
-        .localCheckpoint(eager=False)
+    nbrs = fixpoint.materialize(
+        _edges(graph, both_ways=True).withColumnRenamed("a", "node")
     )
     comp = components(graph).select("entity", "component_id")
     seed = (
@@ -1432,12 +1409,7 @@ def kg_summary(graph: DataFrame) -> DataFrame:
     the deduped edge set on the reversed key (distinct (a,b) relation:
     ~1 row per key, skew already collapsed by the dedup).
     """
-    ed = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    ed = fixpoint.materialize(_edges(graph))
     n_edges = ed.agg(F.count("*").cast("long").alias("n_edges_directed"))
     n_ent = (
         ed.select(F.col("a").alias("e"))
@@ -1493,47 +1465,36 @@ def ktruss(
 
     Scale shape: each round's support count is the co-partitioned
     wedge join triangles/two_hop use, over a SHRINKING edge set; the
-    peel is a semi-join on the edge key; localCheckpoint truncates
-    lineage; raises past max_iter (oracle unrolls the same bound,
-    idempotent at fixpoint). Hub-pair wedge fanout is the known hot
-    spot at scale — the degree-ordering orientation used for pure
-    triangle counting can't be applied mid-peel, so production runs
-    this after a hub cap (graph.py N_HUB_CAP discipline).
+    peel is a semi-join on the edge key. The loop is
+    fixpoint.until_stable over the edge set alone, which raises past
+    max_iter (oracle unrolls the same bound, idempotent at fixpoint);
+    the output's support is counted once more on the converged edges.
+    Hub-pair wedge fanout is the known hot spot at scale — the
+    degree-ordering orientation used for pure triangle counting can't
+    be applied mid-peel, so production runs this after a hub cap
+    (graph.py N_HUB_CAP discipline).
     """
-    e = (
-        graph.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    edges = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    tri = None
-    for _ in range(max_iter):
+
+    def support(edges: DataFrame) -> DataFrame:
         n1 = edges.select("a", F.col("b").alias("c"))
         n2 = edges.select(F.col("a").alias("b"), F.col("b").alias("c"))
-        tri = (
+        return (
             edges.join(n1, "a")
             .join(n2, ["b", "c"])
             .groupBy("a", "b")
             .agg(F.count("*").cast("long").alias("support"))
-            .localCheckpoint(eager=True)
         )
-        nxt = edges.join(
-            tri.filter(F.col("support") >= k - 2), ["a", "b"], "left_semi"
-        ).localCheckpoint(eager=True)
-        changed = edges.join(nxt, ["a", "b"], "left_anti").limit(1).count()
-        edges = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"ktruss did not converge in {max_iter} rounds; raise max_iter"
+
+    def peel(edges: DataFrame) -> DataFrame:
+        return edges.join(
+            support(edges).filter(F.col("support") >= k - 2), ["a", "b"], "left_semi"
         )
+
+    edges = fixpoint.until_stable(
+        _edges(graph, both_ways=True).distinct(), peel, max_iter, "ktruss"
+    )
     return (
-        edges.join(tri, ["a", "b"])
+        edges.join(support(edges), ["a", "b"])
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", "support")
     )

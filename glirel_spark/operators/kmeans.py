@@ -48,6 +48,23 @@ def _unit(v: np.ndarray) -> np.ndarray:
     return v / n[:, None]
 
 
+def unit_sample(sf_dir: str, sample_max: int) -> np.ndarray:
+    """The fit sample shared by the k-means and PQ codebooks: at most
+    ``sample_max`` embeddings, strided over the vec_id order (so the
+    sample does not depend on parquet row order), unit-normalized,
+    float64."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+    vec_ids = np.asarray(t.column("vec_id"))
+    order = np.argsort(vec_ids, kind="stable")
+    emb = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)[order]
+    stride = max(1, len(emb) // sample_max)
+    return _unit(emb[::stride][:sample_max])
+
+
 @lru_cache(maxsize=8)
 def fit_centroids(
     sf_dir: str,
@@ -60,16 +77,7 @@ def fit_centroids(
     Returned as nested tuples so the lru_cache key/value is hashable
     and callers can't mutate the shared fit.
     """
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vec_ids = np.asarray(t.column("vec_id"))
-    order = np.argsort(vec_ids, kind="stable")
-    emb = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)[order]
-    stride = max(1, len(emb) // sample_max)
-    x = _unit(emb[::stride][:sample_max])
+    x = unit_sample(sf_dir, sample_max)
 
     # init: evenly spaced sample points (deterministic, spread)
     idx = (np.arange(n_cells) * len(x)) // n_cells

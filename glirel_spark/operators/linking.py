@@ -117,12 +117,10 @@ def fuzzy_alias_candidates(
     # explodes/counts below — cut the lineage once per side so the
     # distinct + char-shingle pass is not re-executed per reference
     # (at scale: materialize the per-surface shingle table once).
-    s_docs = cd.with_shingle_array(_as_char_docs(surf, "s")).localCheckpoint(
-        eager=False
+    s_docs = fixpoint.materialize(cd.with_shingle_array(_as_char_docs(surf, "s")))
+    a_docs = fixpoint.materialize(
+        cd.with_shingle_array(_as_char_docs(alias_norm.select("s"), "s"))
     )
-    a_docs = cd.with_shingle_array(
-        _as_char_docs(alias_norm.select("s"), "s")
-    ).localCheckpoint(eager=False)
 
     s_bands = cd.lsh_bands(cd.minhash_signature_arr(None, shingled=s_docs))
     a_bands = cd.lsh_bands(cd.minhash_signature_arr(None, shingled=a_docs))
@@ -425,14 +423,12 @@ def er_sorted_neighborhood(
     from glirel_spark.operators.packing import _with_global_offset
 
     names = mentions.select(F.lower("text").alias("name")).distinct()
-    ranked = (
+    # consumed by BOTH sides of the neighbor join: materialize the
+    # rank relation once instead of running the prefix sum twice
+    ranked = fixpoint.materialize(
         _with_global_offset(
             names.withColumn("_one", F.lit(1).cast("long")), "name", "_one"
-        )
-        .select("name", F.col("s").alias("rank"))
-        # consumed by BOTH sides of the neighbor join: materialize the
-        # rank relation once instead of running the prefix sum twice
-        .localCheckpoint(eager=False)
+        ).select("name", F.col("s").alias("rank"))
     )
     l = ranked.select(
         F.col("name").alias("e1"),

@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import Column, functions as F
 
 from glirel_spark import config
-from glirel_spark.operators.kmeans import _unit
+from glirel_spark.operators.kmeans import unit_sample
 
 
 @lru_cache(maxsize=8)
@@ -41,16 +41,7 @@ def fit_pq(
     """Per-subspace L2 k-means codebooks over UNIT-NORMALIZED vectors
     (so the asymmetric inner-product score approximates cosine).
     Returns tuple[m][ks][d//m] of floats."""
-    import pyarrow.parquet as pq_
-
-    t = pq_.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vec_ids = np.asarray(t.column("vec_id"))
-    order = np.argsort(vec_ids, kind="stable")
-    emb = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)[order]
-    stride = max(1, len(emb) // sample_max)
-    x = _unit(emb[::stride][:sample_max])
+    x = unit_sample(sf_dir, sample_max)
     d = x.shape[1]
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     ds = d // m

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from glirel_spark import config
+from glirel_spark.operators import fixpoint
 
 
 def doc_quality(docs: DataFrame) -> DataFrame:
@@ -945,7 +946,7 @@ def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     partition), then a pure map over the vocab applying the merge via
     a higher-order fold (no shuffle). The R driver fetches are single
     rows — the same bounded-action pattern as the threshold grid — and
-    lineage is truncated per round with localCheckpoint so plan depth
+    each round's vocab goes through fixpoint.materialize, so plan depth
     stays O(1). Inherently sequential across rounds (each merge changes
     the next round's pair counts): R is small by definition of the op.
 
@@ -964,7 +965,7 @@ def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
 def _bpe_train(docs: DataFrame, rounds: int):
     """Shared BPE trainer: returns (final word->symbols vocab relation
     (w, freq, sym), merge list [(round, left, right, merged, count)])."""
-    words = (
+    words = fixpoint.materialize(
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
@@ -973,7 +974,6 @@ def _bpe_train(docs: DataFrame, rounds: int):
             "w", "freq",
             F.concat(F.split("w", ""), F.array(F.lit("</w>"))).alias("sym"),
         )
-        .localCheckpoint(eager=True)
     )
     out = []
     for rnd in range(1, rounds + 1):
@@ -1001,34 +1001,36 @@ def _bpe_train(docs: DataFrame, rounds: int):
         left, right, cnt = best["b"]["l"], best["b"]["r"], -best["b"]["nc"]
         merged = left + right
         sym = F.col("sym")
-        words = words.select(
-            "w", "freq",
-            F.aggregate(
-                F.sequence(F.lit(0), F.size(sym) - 1),
-                F.struct(
-                    F.array().cast("array<string>").alias("out"),
-                    F.lit(False).alias("skip"),
-                ),
-                lambda acc, i: F.when(
-                    acc["skip"],
-                    F.struct(acc["out"].alias("out"), F.lit(False).alias("skip")),
-                )
-                .when(
-                    (F.get(sym, i) == left) & (F.get(sym, i + 1) == right),
+        words = fixpoint.materialize(
+            words.select(
+                "w", "freq",
+                F.aggregate(
+                    F.sequence(F.lit(0), F.size(sym) - 1),
                     F.struct(
-                        F.concat(acc["out"], F.array(F.lit(merged))).alias("out"),
-                        F.lit(True).alias("skip"),
-                    ),
-                )
-                .otherwise(
-                    F.struct(
-                        F.concat(acc["out"], F.array(F.get(sym, i))).alias("out"),
+                        F.array().cast("array<string>").alias("out"),
                         F.lit(False).alias("skip"),
+                    ),
+                    lambda acc, i: F.when(
+                        acc["skip"],
+                        F.struct(acc["out"].alias("out"), F.lit(False).alias("skip")),
                     )
-                ),
-                lambda acc: acc["out"],
-            ).alias("sym"),
-        ).localCheckpoint(eager=True)
+                    .when(
+                        (F.get(sym, i) == left) & (F.get(sym, i + 1) == right),
+                        F.struct(
+                            F.concat(acc["out"], F.array(F.lit(merged))).alias("out"),
+                            F.lit(True).alias("skip"),
+                        ),
+                    )
+                    .otherwise(
+                        F.struct(
+                            F.concat(acc["out"], F.array(F.get(sym, i))).alias("out"),
+                            F.lit(False).alias("skip"),
+                        )
+                    ),
+                    lambda acc: acc["out"],
+                ).alias("sym"),
+            )
+        )
         out.append((rnd, left, right, merged, int(cnt)))
     return words, out
 

@@ -925,10 +925,8 @@ def q_docred_eval_neural() -> str:
 # cross-engine check on real reference data, no goldens involved.
 # --------------------------------------------------------------------------
 
-_DOCRED_DEV = "/root/reference/data/re-docred/data/dev_revised.json"
-_WIKIDATA_PROPS = "/root/reference/data/all_wikidata_properties.json"
 _DOCRED_READ = (
-    f"read_json('{_DOCRED_DEV}', maximum_object_size=104857600)"
+    f"read_json('{c.DOCRED_DEV}', maximum_object_size=104857600)"
 )
 
 
@@ -1084,9 +1082,6 @@ SELECT h_name, pid, t_name,
 FROM sup GROUP BY h_name, pid, t_name"""
 
 
-_DOCRED_TEST_PATH = "/root/reference/data/re-docred/data/test_revised.json"
-
-
 def _docred_typed_sql(alias: str, path: str) -> str:
     """CTE chain deriving the typed gold-label relation `{alias}` from
     a DocRED-format file (suffix keeps eval/prior sources distinct)."""
@@ -1120,7 +1115,7 @@ lab_{alias} AS (
 
 
 def q_docred_type_prior_eval(
-    eval_path: str = _DOCRED_DEV, prior_path: str | None = None
+    eval_path: str = c.DOCRED_DEV, prior_path: str | None = None
 ) -> str:
     """Type-prior eval twin. prior_path=None fits the prior on the eval
     split itself (in-sample); a distinct path is the held-out form
@@ -1177,7 +1172,7 @@ WITH docs AS (
 props AS (
   SELECT regexp_extract(property, 'P[0-9]+$') AS pid,
          propertyLabel AS pred_label
-  FROM read_json('{_WIKIDATA_PROPS}')
+  FROM read_json('{c.WIKIDATA_PROPERTIES}')
 ),
 lab AS (
   SELECT title, vertexSet, unnest(labels) AS l FROM docs

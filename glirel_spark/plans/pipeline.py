@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from glirel_spark import config
+from glirel_spark.operators import fixpoint
 from glirel_spark.operators import scoring as scoring_ops
 from glirel_spark.plans import api
 from glirel_spark.sources import tables
@@ -207,8 +208,8 @@ def graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def graph_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materialized graph as a lineage-truncated (localCheckpoint,
-    lazy) input for the KG analytics family.
+    """The materialized graph as a lineage-truncated
+    (fixpoint.materialize) input for the KG analytics family.
 
     Round-6: every kg_* query references the graph relation several
     times (unions, self-joins, iterative peels), and each reference
@@ -222,13 +223,13 @@ def graph_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle run still computes the graph from the parquet inputs; the
     checkpoint only stops ONE query from rebuilding it N times.
     """
-    return graph(spark, sf_dir).localCheckpoint(eager=False)
+    return fixpoint.materialize(graph(spark, sf_dir))
 
 
 def _linked_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """linked_triples with the same lineage-truncation treatment, for
     the doc-granularity analytics that reference it repeatedly."""
-    return linked_triples(spark, sf_dir).localCheckpoint(eager=False)
+    return fixpoint.materialize(linked_triples(spark, sf_dir))
 
 
 def entity_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,7 +704,7 @@ def calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # preds + gold-correct preds); cut the neural subtree's lineage so
     # the scorer runs once (same round-6 treatment as refeval/docred).
     return evaluate.calibration_table(
-        triples_neural(spark, sf_dir).localCheckpoint(eager=False), gold
+        fixpoint.materialize(triples_neural(spark, sf_dir)), gold
     )
 
 

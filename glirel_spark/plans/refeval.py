@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from glirel_spark import config
 from glirel_spark.model.udf import score_pairs_neural
 from glirel_spark.operators import decode as decode_ops
-from glirel_spark.operators import evaluate
+from glirel_spark.operators import evaluate, fixpoint
 from glirel_spark.sources import jsonl
 
 
@@ -57,8 +57,6 @@ def evaluate_jsonl(
     )
     # round-6: same lineage cut as docred_neural_counts — the counts
     # consumers otherwise re-execute the neural scorer per reference.
-    preds = evaluate.annotated_pairs_filter(preds, gold).localCheckpoint(
-        eager=False
-    )
+    preds = fixpoint.materialize(evaluate.annotated_pairs_filter(preds, gold))
     counts = evaluate.per_label_counts(preds, gold)
     return counts, evaluate.micro_macro(counts)

@@ -28,9 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import broadcast
 
-DOCRED_DEV = "/root/reference/data/re-docred/data/dev_revised.json"
-DOCRED_TEST = "/root/reference/data/re-docred/data/test_revised.json"
-WIKIDATA_PROPERTIES = "/root/reference/data/all_wikidata_properties.json"
+from glirel_spark.config import DOCRED_DEV, DOCRED_TEST, WIKIDATA_PROPERTIES
 
 _SCHEMA = (
     "title string, "
@@ -560,7 +558,7 @@ def docred_neural_counts(docs: DataFrame) -> DataFrame:
     """
     from glirel_spark.model import udf as model_udf
     from glirel_spark.operators import decode as decode_ops
-    from glirel_spark.operators import evaluate
+    from glirel_spark.operators import evaluate, fixpoint
 
     pids = docred_corpus_pids(docs)
     toks = docs.select(
@@ -579,9 +577,7 @@ def docred_neural_counts(docs: DataFrame) -> DataFrame:
     # re-executed the neural mapInPandas scorer — cut the lineage once
     # (the scored predictions ARE the materialized artifact a real
     # eval run writes before counting).
-    annotated = evaluate.annotated_pairs_filter(preds, gold).localCheckpoint(
-        eager=False
-    )
+    annotated = fixpoint.materialize(evaluate.annotated_pairs_filter(preds, gold))
     return evaluate.per_label_counts(annotated, gold)
 
 

@@ -1,14 +1,19 @@
 """Round counts and raise bounds of every fixpoint caller, pinned on one
 6-node chain n0 - n1 - ... - n5: each caller raises at max_iter = m - 1
 and returns the whole-chain answer at max_iter = m. The DuckDB oracles
-unroll the same bounds, so m must not move."""
+unroll the same bounds, so m must not move. Also: fixpoint.materialize
+is the only lineage cut in the package."""
 
 from __future__ import annotations
 
+import inspect
+from pathlib import Path
+
 import pytest
 
+import glirel_spark
 from glirel_spark import config
-from glirel_spark.operators import corpus_dedup, graph, linking
+from glirel_spark.operators import corpus_dedup, fixpoint, graph, linking
 
 N = 6
 NODES = [f"n{i}" for i in range(N)]
@@ -70,6 +75,11 @@ def _kg_bipartite_audit(spark, max_iter):
     }
 
 
+def _ktruss(spark, max_iter):
+    out = graph.ktruss(_graph(spark), k=3, max_iter=max_iter)
+    return {(r.a, r.b, r.support) for r in out.collect()}
+
+
 CASES = {
     # caller: (run, m, answer at m)
     "components": (_components, 6, {(n, "n0", N) for n in NODES}),
@@ -89,6 +99,9 @@ CASES = {
         {(NODES[i], NODES[j], j - i) for i in range(N) for j in range(i + 1, N)},
     ),
     "kg_bipartite_audit": (_kg_bipartite_audit, 6, {("n0", N, 0, True)}),
+    # a chain has no triangle: round 1 peels every edge, round 2 sees
+    # the empty edge set is stable
+    "ktruss": (_ktruss, 2, set()),
 }
 
 
@@ -98,3 +111,15 @@ def test_chain_rounds_and_raise_bound(spark, name):
     with pytest.raises(RuntimeError, match=f"^{name} "):
         run(spark, m - 1)
     assert run(spark, m) == answer
+
+
+def test_materialize_is_the_only_lineage_cut():
+    pkg = Path(glirel_spark.__file__).parent
+    cuts = [
+        f"{path.relative_to(pkg)}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for line in path.read_text().splitlines()
+        if "localCheckpoint(" in line
+    ]
+    assert cuts == ["operators/fixpoint.py: return df.localCheckpoint(eager=False)"]
+    assert "localCheckpoint(" in inspect.getsource(fixpoint.materialize)

@@ -215,7 +215,7 @@ def expected_docred_neural_counts() -> pd.DataFrame:
     data/re-docred/run_evaluation.py:124-184."""
     import json
 
-    d = json.loads(Path("/root/reference/data/re-docred/data/dev_revised.json").read_text())
+    d = json.loads(Path(config.DOCRED_DEV).read_text())
     model = DeterministicGLiREL.get()
     pids = tuple(sorted({l["r"] for doc in d for l in doc["labels"]}))
 
