@@ -34,10 +34,11 @@ seeded init keeps the double small and golden-checkable.
 
 Every contraction is a per-sequence ``@`` (OpenBLAS): a matrix's shape
 depends on its document alone, and ``DeterministicGLiREL`` pins OpenBLAS
-to one thread at run time, so a document's bits are the same whether it
-is encoded alone (golden replay) or inside any Arrow batch (executors).
-The bits do depend on the CPU kernel OpenBLAS picks at load time (see
-scorer.blas_corename); goldens are regenerated per declared kernel.
+to one thread and to the declared kernel ``scorer.BLAS_CORE`` at run
+time, so a document's bits are the same whether it is encoded alone
+(golden replay) or inside any Arrow batch (executors), and equal the
+committed goldens. A CPU without that kernel's AVX-512 instructions
+runs another kernel, whose low bits differ; the model warns then.
 """
 
 from __future__ import annotations

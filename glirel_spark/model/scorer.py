@@ -46,6 +46,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import warnings
 
 import numpy as np
 
@@ -58,6 +59,11 @@ _SEED = 42
 
 SUBTOKEN_POOLING = "first"  # configs/config_wiki_zsl.yaml:26
 
+# The OpenBLAS kernel whose bits the committed goldens are (its AVX-512
+# double-precision gemm; SapphireRapids and Cooperlake give the same
+# bits). DeterministicGLiREL pins it at run time (_pin_blas_core).
+BLAS_CORE = "SkylakeX"
+
 
 def _rng(tag: str) -> np.random.Generator:
     h = hashlib.blake2b(f"{_SEED}:{tag}".encode(), digest_size=8).digest()
@@ -67,9 +73,10 @@ def _rng(tag: str) -> np.random.Generator:
 def _mm(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Per-document matmul through BLAS. Its bits are reproducible
     because every operand's shape depends on one document only and
-    OpenBLAS runs single-threaded (``_pin_blas_threads``); rows of
-    several documents stacked into one call would NOT keep them, which
-    is why the batched BiLSTM stays on einsum."""
+    OpenBLAS runs single-threaded (``_pin_blas_threads``) on the
+    declared kernel ``BLAS_CORE`` (``_pin_blas_core``); rows of several
+    documents stacked into one call would NOT keep them, which is why
+    the batched BiLSTM stays on einsum."""
     return np.atleast_2d(a) @ np.atleast_2d(b)
 
 
@@ -106,14 +113,43 @@ def _pin_blas_threads() -> None:
 
 
 def blas_corename() -> str | None:
-    """The CPU kernel OpenBLAS dispatched to in this process (e.g.
-    'SapphireRapids', 'Haswell'). Probability bits, and therefore the
-    committed goldens, depend on it."""
+    """The CPU kernel OpenBLAS dispatches to in this process (e.g.
+    'SkylakeX', 'Haswell'). Probability bits depend on it: they equal
+    the committed goldens' only on ``BLAS_CORE``, which
+    ``DeterministicGLiREL`` pins."""
     for fn in _openblas_fns("openblas_get_corename"):
         fn.argtypes = []
         fn.restype = ctypes.c_char_p
         return fn().decode()
     return None
+
+
+def _pin_blas_core() -> None:
+    """Dispatch OpenBLAS to ``BLAS_CORE`` in this process, at run time.
+
+    OpenBLAS picks its kernel from the CPU model when numpy loads, and
+    a model it does not know gets a generic kernel (e.g. 'Prescott')
+    whose low bits differ. ``OPENBLAS_CORETYPE`` is read only at that
+    load, so, as for the thread pin, it is set here and the dispatch is
+    re-run. A CPU that lacks the kernel's instructions keeps its own
+    kernel (``DeterministicGLiREL`` warns)."""
+    if blas_corename() == BLAS_CORE or not _has_avx512():
+        return
+    os.environ["OPENBLAS_CORETYPE"] = BLAS_CORE
+    for quit_, init in zip(_openblas_fns("gotoblas_dynamic_quit"),
+                           _openblas_fns("gotoblas_dynamic_init")):
+        quit_.restype = init.restype = None
+        quit_()
+        init()
+
+
+def _has_avx512() -> bool:
+    """Whether the CPU and OS run the AVX-512 set ``BLAS_CORE`` needs."""
+    try:
+        from numpy.core._multiarray_umath import __cpu_features__
+    except ImportError:  # numpy >= 2
+        from numpy._core._multiarray_umath import __cpu_features__
+    return bool(__cpu_features__.get("AVX512_SKX"))
 
 
 class DeterministicGLiREL:
@@ -128,7 +164,14 @@ class DeterministicGLiREL:
         return cls._instance
 
     def __init__(self) -> None:
+        _pin_blas_core()
         _pin_blas_threads()
+        if blas_corename() != BLAS_CORE:
+            warnings.warn(
+                f"OpenBLAS runs kernel {blas_corename()}, not {BLAS_CORE}: "
+                f"neural scores will not be bit-equal to the committed goldens",
+                RuntimeWarning, stacklevel=2,
+            )
         ckpt = os.environ.get("GLIREL_NUMPY_CHECKPOINT")
         z = np.load(ckpt) if ckpt else None
         # dimensions first (a real checkpoint re-shapes the model;

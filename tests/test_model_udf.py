@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from glirel_spark import config
-from glirel_spark.model.scorer import DeterministicGLiREL
+from glirel_spark.model.scorer import BLAS_CORE, DeterministicGLiREL
 from glirel_spark.model.udf import neural_triples, score_pairs_neural, top1_decode
 from glirel_spark.operators.fused import mentions_fused, pairs_fused
 
@@ -325,3 +325,43 @@ def test_encode_doc_bits_independent_of_blas_threads():
                              capture_output=True, text=True, check=True)
         digests[threads] = out.stdout.strip()
     assert len(set(digests.values())) == 1, digests
+
+
+_CORENAME = """
+import sys
+import numpy as np  # dispatches OpenBLAS to a kernel before the model loads
+sys.path.insert(0, {root!r})
+from glirel_spark.model.scorer import DeterministicGLiREL, blas_corename
+DeterministicGLiREL()
+print(blas_corename())
+"""
+
+
+def _cpu_has_avx512_skx() -> bool:
+    """AVX-512 F/CD/BW/DQ/VL, the set the SkylakeX kernel runs on
+    (read apart from scorer._has_avx512, so a broken gate there cannot
+    skip this guard)."""
+    try:
+        from numpy.core._multiarray_umath import __cpu_features__
+    except ImportError:  # numpy >= 2
+        from numpy._core._multiarray_umath import __cpu_features__
+    return bool(__cpu_features__.get("AVX512_SKX"))
+
+
+@pytest.mark.skipif(not _cpu_has_avx512_skx(), reason="CPU lacks AVX-512 (SKX set)")
+def test_model_pins_declared_blas_core():
+    """A process that loaded numpy first still scores on ``BLAS_CORE``,
+    the kernel the committed goldens are the bits of: the model re-runs
+    OpenBLAS's dispatch at run time, whatever CPU model it detected."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = _CORENAME.format(root=str(Path(__file__).resolve().parents[1]))
+    # a model built earlier in this process set it; numpy must load
+    # with the kernel it detects itself
+    env = {k: v for k, v in os.environ.items() if k != "OPENBLAS_CORETYPE"}
+    out = subprocess.run([sys.executable, "-c", code], env=env, timeout=300,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == BLAS_CORE, out.stderr

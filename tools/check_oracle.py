@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -35,7 +36,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as entry
 
     from glirel_spark.session import get_spark

@@ -10,7 +10,9 @@ pipeline with pandas + numpy + DuckDB only —
   tokens     <- text.split(' ') (== docs_tokens, tests/test_tokenize.py)
   scoring    <- the SAME DeterministicGLiREL numpy kernel the executors
                 run (identical code + identical inputs + one OpenBLAS
-                thread on the same CPU kernel -> identical bits)
+                thread on the declared kernel scorer.BLAS_CORE, which
+                the model pins -> identical bits; the goldens are that
+                kernel's bits)
   threshold / top-k / constraints / format
              <- independent pandas re-implementation of the decode path
 
