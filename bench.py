@@ -1,18 +1,27 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark harness: queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+Usage: python bench.py [all | query ...]
+       (no query = the BENCH_QUERIES headline set; ``all`` = every
+       __spark_entry__.queries() entry)
+Env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS
 
 Each query is forced to full materialization with the noop sink (count()
 would let Catalyst skip projected columns). Times include plan +
-execution, excluding session startup.
+execution, excluding session startup. Each query's Spark jobs carry a
+``bench rep<r>: <query>`` job description.
 
-Contention discipline (round-4): each query runs REPS times (default 2)
-and reports the MIN — two rounds in a row the committed single-shot
-artifact was distorted by a contended box (r3: 73.7s committed vs 47.8s
-measured idle). ``value`` is the sum of per-query minima (the engine's
-repeatable cost); ``rep1_total`` preserves the old single-pass
-semantics (includes one-time cache builds) for cross-round trend
-comparison, and ``wall_clock_total`` is the whole run.
+Contention discipline: the reps run as INTERLEAVED cycles over the whole
+set (default 2), so host drift hits every query evenly. ``value`` is the
+sum of per-query minima over all reps (the engine's repeatable cost);
+``rep1_total`` is the cold first pass (one-time cache builds included),
+``per_rep`` every raw time, and ``spread`` each query's max/min over reps
+2..REPS — a delta is real only if it exceeds the spread.
+
+A query that raises prints ``ERROR <name>: <exc>`` to stderr, is listed
+under ``errors`` and is not timed; the other queries go on, and the run
+exits 1 after printing its JSON line.
 """
 
 from __future__ import annotations
@@ -21,6 +30,7 @@ import json
 import os
 import sys
 import time
+import traceback
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -48,36 +58,51 @@ BENCH_QUERIES = [
 ]
 
 
-def main() -> None:
+def main() -> int:
     import __spark_entry__ as entry
 
-    spark = get_spark("bench", cores=CPUS)
     queries = entry.queries()
-    best: dict[str, float] = {}
-    rep1: dict[str, float] = {}
+    names = sys.argv[1:] or BENCH_QUERIES
+    if names == ["all"]:
+        names = list(queries)
+    spark = get_spark("bench", cores=CPUS)
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    errors: dict[str, str] = {}
     t_all = time.perf_counter()
-    for rep in range(REPS):
-        for name in BENCH_QUERIES:
-            fn = queries[name]
+    for rep in range(1, REPS + 1):
+        for name in names:
+            if name in errors:
+                continue
+            spark.sparkContext.setJobDescription(f"bench rep{rep}: {name}")
             t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = round(time.perf_counter() - t0, 3)
-            if rep == 0:
-                rep1[name] = dt
-            best[name] = min(best.get(name, dt), dt)
+            try:
+                queries[name](spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            except Exception as exc:  # noqa: BLE001
+                traceback.print_exc()
+                print(f"ERROR {name}: {exc}", file=sys.stderr)
+                errors[name] = (str(exc) or repr(exc)).splitlines()[0]
+                del samples[name]
+                continue
+            samples[name].append(round(time.perf_counter() - t0, 3))
+    spark.sparkContext.setJobDescription(None)
     wall = round(time.perf_counter() - t_all, 3)
-    total = round(sum(best.values()), 3)
+    best = {n: min(v) for n, v in samples.items()}
+    rep1 = {n: v[0] for n, v in samples.items()}
+    spread = {
+        n: round(max(v[1:]) / max(min(v[1:]), 1e-9), 3)
+        for n, v in samples.items() if len(v) > 1
+    }
 
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-    flagship = best["triples"]
+    flagship = best.get("triples")
     result = {
-        # min-of-REPS per query (warm protocol); rep1_total below preserves
-        # the cold single-pass protocol used through round 3 for
-        # cross-round comparison.
         "metric": "headline_queries_min_total",
-        "value": total,
+        "value": round(sum(best.values()), 3),
         "unit": "sec",
         "queries": best,
+        "errors": errors,
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "n_docs": n_docs,
         "flagship_docs_per_sec": round(n_docs / flagship, 1) if flagship else None,
@@ -85,11 +110,15 @@ def main() -> None:
         "reps": REPS,
         "rep1_total": round(sum(rep1.values()), 3),
         "rep1_queries": rep1,
+        "per_rep": samples,
+        "spread": spread,
+        "max_cycle_spread": round(max(spread.values(), default=0.0), 3),
         "wall_clock_total": wall,
     }
     spark.stop()
     print(json.dumps(result))
+    return 1 if errors else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

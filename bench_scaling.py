@@ -1,24 +1,42 @@
 """Two-cluster-size scaling evidence (BASELINE.json north_rule:
 throughput scaling efficiency >= 0.8 from N to 4N executors).
 
-Sandbox stand-in: Spark's ``local-cluster[N, 4, mem]`` master spawns N
-REAL executor JVMs on this box — a faithful N vs 4N *executor*
+Usage: python bench_scaling.py [--scorer lexical|neural]
+Env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_SCALE_REPLICATE,
+       SPARK_GRAFT_SCALE_N, SPARK_GRAFT_SCALE_REPS
+
+Sandbox stand-in: Spark's ``local-cluster[N, cores, mem]`` master spawns
+N REAL executor JVMs on this box — a faithful N vs 4N *executor*
 comparison (separate heaps, separate GC, real shuffle service), unlike
 ``local[c]`` thread scaling which bottlenecks on the single shared heap
 (measured: local[8]->local[32] saturates at ~2.2x because the
 allocation-heavy stages hit the one JVM's GC wall; 2->8 executors does
 not have that artifact).
 
-The measured job: the flagship extraction+linking pipeline
-(documents -> fused mentions/pairs -> triples (``api.triples_from``) ->
-linked -> salted graph), fully materialized. Per level: one warmup run (JIT +
-token-cache build; a production cluster is long-running), then REPS
-timed runs (default 3) with BOTH the minimum-based and median-based
-efficiency reported plus every raw time (the shared box has +-20-25%
-run-to-run noise; min isolates each level's achievable time, median
-guards against min's optimistic bias — ADVICE r2). Input:
-the sf corpus replicated REPLICATE x with offset doc ids
-(deterministic; no external data).
+The measured job, per ``--scorer``:
+- lexical (default): the flagship extraction+linking pipeline
+  (documents -> fused mentions/pairs -> triples (``api.triples_from``)
+  -> linked -> salted graph), fully materialized;
+- neural: the tensor plane, ``api.triples_from(scorer="neural")`` — the
+  mapInPandas scorer that decodes in-UDF at top_k=1. It is map-only per
+  document (model singleton per python worker, Arrow batches, zero
+  cross-doc state); the only exchange is the round-robin repartition
+  feeding the scorer.
+
+Protocol (both scorers): per level, one untimed warmup run (JIT, python
+worker spin-up, token-cache build; a production cluster is
+long-running), then REPS timed runs (default 3) with BOTH the
+minimum-based and median-based efficiency reported plus every raw time
+(the shared box has +-20-25% run-to-run noise; min isolates each level's
+achievable time, median guards against min's optimistic bias). Each
+level runs under a ``taskset`` cpuset (when taskset is on PATH): its
+executor cores plus one driver/daemon core per executor, capped at the
+CPUs this process may use. A fixed driver allowance is itself an
+asymmetry: at N it doubles the cpuset and the JVM-side work (Arrow IPC,
+shuffle, daemons) rides the idle cores, while at 4N the same work shares
+a 1.25x cpuset — on a real cluster every executor host carries its own
+proportional OS/daemon slack. Input: the sf corpus replicated REPLICATE
+x with offset doc ids (deterministic; no external data).
 
 Prints one JSON line and appends a row to BENCH/BASELINE.md:
   efficiency = (T_N / T_4N) / 4      (1.0 = perfect linear scaling)
@@ -26,27 +44,66 @@ Prints one JSON line and appends a row to BENCH/BASELINE.md:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# N=1 vs 4N=4 executors x 4 cores: measured on this box, raw CPU scales
-# 3.82x from 4 to 16 busy cores (all-core turbo frequency scaling), so
-# the machine ceiling for this pair is ~0.95; the 8->32-core pair is
-# hardware-capped at ~0.79 (3.17x) before Spark runs a single task.
-REPLICATE = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICATE", "64"))
 N_EXEC_LO = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
 REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "3"))
-CORES_PER_EXEC = 4
-# 12 GiB per executor (same at BOTH levels, so memory-per-core is
-# equal and the comparison fair): at 8 GiB the 320k-doc cached mention
-# relation was marginal against the single executor's storage
-# fraction, making T_N vary with eviction luck run to run.
-EXEC_MEM_MB = 12288
+
+# per scorer: the timed job body, the REPLICATE default (each makes a
+# timed run at N, 4 cores per executor, long against its jitter: the
+# neural encoder costs ms per doc), the metric-name prefix and the
+# BENCH/BASELINE.md row-label prefix
+SCORERS = {
+    "lexical": (
+        # the extraction plan every surface runs, linked through the
+        # literal alias map as the pipeline queries do
+        "graph_ops.materialize_graph(linking.link_triples("
+        "api.triples_from(dm), config.ALIAS_DICT))",
+        64, "", "",
+    ),
+    "neural": ('api.triples_from(dm, scorer="neural")', 16, "neural_", "neural "),
+}
+
+
+def cores_per_executor(n_lo: int, n_cpus: int) -> int:
+    """4 cores per executor where the box holds the 4N level at that
+    size (16+ CPUs at N=1), else what fits, at least 1. On 32 CPUs, 1 vs
+    4 executors x 4 cores: raw CPU scales 3.82x from 4 to 16 busy cores
+    (all-core turbo), so that pair's machine ceiling is ~0.95; an 8->32
+    core pair is hardware-capped at ~0.79 before Spark runs a task."""
+    return max(1, min(4, n_cpus // (4 * n_lo)))
+
+
+def cpuset(n_exec: int, cores_per_exec: int, cpus: list[int]) -> str:
+    """taskset list for one level: the executors' cores plus one driver
+    core per executor, capped at ``cpus``; written as ranges."""
+    ids = cpus[: n_exec * cores_per_exec + n_exec]
+    runs: list[list[int]] = []
+    for c in ids:
+        if runs and c == runs[-1][1] + 1:
+            runs[-1][1] = c
+        else:
+            runs.append([c, c])
+    return ",".join(f"{a}-{b}" if b > a else str(a) for a, b in runs)
+
+
+def executor_memory_mb(cores_per_exec: int, n_hi: int) -> int:
+    """3 GiB per executor core, the same at BOTH levels so memory per
+    core is equal and the comparison fair (at 8 GiB per 4 cores the
+    320k-doc cached mention relation was marginal against the single
+    executor's storage fraction, making T_N vary with eviction luck),
+    capped so the 4N level's heaps fit in half the box's memory."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return min(3072 * cores_per_exec, half_mb // n_hi)
+
 
 _JOB = r"""
 import sys, time, json
@@ -63,8 +120,22 @@ total_cores = n_exec * {cores_per_exec}
 spark = (
     SparkSession.builder
     .master(f"local-cluster[{{n_exec}},{cores_per_exec},{exec_mem}]")
-    .appName(f"scaling-{{n_exec}}x{cores_per_exec}")
+    .appName(f"{scorer}-scaling-{{n_exec}}x{cores_per_exec}")
     .config("spark.executor.memory", "{exec_mem}m")
+    # AQE upgrades the mention-enrichment joins to broadcast at this
+    # doc count; the default 1g driver heap OOMs building the table —
+    # a deploy sizing fact, not an engine property (measured: N-level
+    # died 'Not enough memory to build and broadcast')
+    .config("spark.driver.memory", "4g")
+    # executor python workers must import glirel_spark (mapInPandas UDF);
+    # local stand-in for spark-submit --py-files glirel_spark.zip
+    .config("spark.executorEnv.PYTHONPATH", {repo!r})
+    # single-threaded BLAS in python workers (session._BLAS_PINS):
+    # un-pinned OpenBLAS spawns ncpu spin-waiting threads per worker —
+    # 16 workers x 32 spinners made 4 executors 1.5x SLOWER than 1
+    .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
+    .config("spark.executorEnv.OMP_NUM_THREADS", "1")
+    .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     .config("spark.sql.shuffle.partitions", str(total_cores * 2))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -79,6 +150,12 @@ spark = (
     # this is a sandbox-only serial term (see BENCH/BASELINE.md).
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    # the taskset cpuset is SATURATED by design (workers at 100% for
+    # minutes + executor/driver/master/worker JVMs all pinned): the
+    # default 120s network timeout sees heartbeat starvation as a dead
+    # executor — lengthen, don't unpin
+    .config("spark.network.timeout", "600s")
+    .config("spark.executor.heartbeatInterval", "60s")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("WARN")
@@ -99,17 +176,9 @@ dt = tables.text_of(inter).select(
 dm = fused.with_mentions(dt).cache()
 
 def job():
-    # the extraction plan every surface runs (api.triples_from), linked
-    # through the literal alias map as the pipeline queries do
-    linked = linking.link_triples(api.triples_from(dm), config.ALIAS_DICT)
-    graph_ops.materialize_graph(linked).write.format("noop").mode("overwrite").save()
+    {body}.write.format("noop").mode("overwrite").save()
 
-job()  # warmup: JIT + cache build
-# min of {reps} timed runs: the box has +-20-25% run-to-run noise
-# (page-cache drift, thermal/turbo sag under sustained load); min
-# isolates each level's achievable time, which is what the efficiency
-# ratio is about. Single-run ratios measured 0.53-1.005 on identical
-# code; min-of-2 in one session reproduces within a few percent.
+job()  # warmup: JIT + python worker spin-up + cache build
 times = []
 for _ in range({reps}):
     t0 = time.perf_counter()
@@ -123,68 +192,69 @@ print(json.dumps({{"n_exec": n_exec, "sec": elapsed, "n_docs": n_docs,
 """
 
 
-def run_level(n_exec: int) -> dict:
+def run_level(scorer: str, replicate: int, n_exec: int, cores_per_exec: int,
+              exec_mem: int, cpus: str | None) -> dict:
     code = _JOB.format(
-        repo=str(REPO), n_exec=n_exec, cores_per_exec=CORES_PER_EXEC,
-        exec_mem=EXEC_MEM_MB, sf_dir=SF_DIR, replicate=REPLICATE,
-        reps=REPS,
+        repo=str(REPO), n_exec=n_exec, cores_per_exec=cores_per_exec,
+        exec_mem=exec_mem, sf_dir=SF_DIR, replicate=replicate, reps=REPS,
+        scorer=scorer, body=SCORERS[scorer][0],
     )
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, check=True
-    )
+    cmd = [sys.executable, "-c", code]
+    if cpus is not None:
+        cmd = ["taskset", "-c", cpus] + cmd
+    out = subprocess.run(cmd, capture_output=True, text=True, check=True)
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 
 
 def main() -> None:
-    lo = run_level(N_EXEC_LO)
-    hi = run_level(N_EXEC_LO * 4)
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--scorer", choices=sorted(SCORERS), default="lexical")
+    scorer = ap.parse_args().scorer
+    _, default_replicate, metric_prefix, row_prefix = SCORERS[scorer]
+    replicate = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICATE", default_replicate))
+    n_hi = N_EXEC_LO * 4
+    cpus = sorted(os.sched_getaffinity(0))
+    cpe = cores_per_executor(N_EXEC_LO, len(cpus))
+    mem = executor_memory_mb(cpe, n_hi)
+    set_lo = set_hi = None
+    if shutil.which("taskset"):
+        set_lo, set_hi = cpuset(N_EXEC_LO, cpe, cpus), cpuset(n_hi, cpe, cpus)
+    lo = run_level(scorer, replicate, N_EXEC_LO, cpe, mem, set_lo)
+    hi = run_level(scorer, replicate, n_hi, cpe, mem, set_hi)
     eff = (lo["sec"] / hi["sec"]) / 4.0
-    # ADVICE r2: min-of-N biases optimistic on a noisy shared box —
-    # report the median-based ratio alongside (REPS now defaults to 3
-    # so the median is a real middle run, not a tie-breaker).
     med_lo = sorted(lo["all_runs"])[len(lo["all_runs"]) // 2]
     med_hi = sorted(hi["all_runs"])[len(hi["all_runs"]) // 2]
     eff_median = (med_lo / med_hi) / 4.0
     result = {
-        "metric": f"scaling_efficiency_{N_EXEC_LO}_to_{N_EXEC_LO * 4}_executors",
+        "metric": f"{metric_prefix}scaling_efficiency_{N_EXEC_LO}_to_{n_hi}_executors",
         "value": round(eff, 3),
         "value_median": round(eff_median, 3),
         "all_runs_lo": lo["all_runs"],
         "all_runs_hi": hi["all_runs"],
         "unit": "ratio",
-        "cluster_lo": f"local-cluster[{N_EXEC_LO},{CORES_PER_EXEC},{EXEC_MEM_MB}]",
-        "cluster_hi": f"local-cluster[{N_EXEC_LO * 4},{CORES_PER_EXEC},{EXEC_MEM_MB}]",
+        "cluster_lo": f"local-cluster[{N_EXEC_LO},{cpe},{mem}]",
+        "cluster_hi": f"local-cluster[{n_hi},{cpe},{mem}]",
         "t_lo_sec": round(lo["sec"], 3),
         "t_hi_sec": round(hi["sec"], 3),
         "docs_per_sec_lo": round(lo["n_docs"] / lo["sec"], 1),
         "docs_per_sec_hi": round(hi["n_docs"] / hi["sec"], 1),
         "n_docs": lo["n_docs"],
         "sf_dir": SF_DIR,
-        "replicate": REPLICATE,
+        "replicate": replicate,
+        "cpuset_lo": set_lo,
+        "cpuset_hi": set_hi,
     }
     print(json.dumps(result))
-    bench_md = REPO / "BENCH" / "BASELINE.md"
-    bench_md.parent.mkdir(exist_ok=True)
-    if not bench_md.exists():
-        bench_md.write_text(
-            "# BENCH/BASELINE — measured throughput & scaling\n\n"
-            "Flagship job: documents -> fused mentions/pairs -> scored -> "
-            "triples -> linked -> salted graph (fully materialized, noop sink).\n"
-            "Cluster-size stand-in: `local-cluster[N,4,4096]` — N real "
-            "executor JVMs (separate heaps/GC, real shuffle) — N vs 4N "
-            "executors per BASELINE.json (efficiency >= 0.8 target). "
-            "Warm-JVM measurement (one untimed warmup per level).\n\n"
-            "| executors | n_docs | T_N s | T_4N s | docs/s @N | "
-            "docs/s @4N | efficiency |\n|---|---|---|---|---|---|---|\n"
-        )
-    with bench_md.open("a") as f:
+    pin = f"taskset {set_lo} / {set_hi}" if set_lo else "no taskset"
+    with (REPO / "BENCH" / "BASELINE.md").open("a") as f:
         f.write(
-            f"| {N_EXEC_LO} vs {N_EXEC_LO * 4} | {result['n_docs']} | "
+            f"| {row_prefix}{N_EXEC_LO} vs {n_hi} | {result['n_docs']} | "
             f"{result['t_lo_sec']} | {result['t_hi_sec']} | "
             f"{result['docs_per_sec_lo']} | {result['docs_per_sec_hi']} | "
             f"{result['value']} (median {result['value_median']}, "
-            f"runs lo={result['all_runs_lo']} hi={result['all_runs_hi']}) |\n"
+            f"{cpe} core(s)/executor, {pin}, runs lo={result['all_runs_lo']} "
+            f"hi={result['all_runs_hi']}) |\n"
         )
 
 

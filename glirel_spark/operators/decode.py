@@ -109,12 +109,10 @@ def decode(
     scored: DataFrame,
     threshold: float = config.THRESHOLD,
     top_k: int = config.TOP_K,
-    apply_constraints: bool = True,
 ) -> DataFrame:
     """threshold -> top-k -> constraints -> format, over a scored
     relation that carries its payload (mention texts/types and the
     constraint arrays) through the top-k."""
-    out = top_k_per_pair(threshold_filter(scored, threshold), top_k)
-    if apply_constraints:
-        out = constraint_filter(out)
-    return format_output(out)
+    return format_output(
+        constraint_filter(top_k_per_pair(threshold_filter(scored, threshold), top_k))
+    )

@@ -146,7 +146,6 @@ def lexical_topk1_triples(
     rel_pairs: DataFrame,
     labels: dict[str, dict[str, list[str]]] | None = None,
     threshold: float = config.THRESHOLD,
-    apply_constraints: bool = True,
     formatted: bool = True,
 ) -> DataFrame:
     """Fused k=1 lexical decode: one narrow projection from pairs to
@@ -192,13 +191,12 @@ def lexical_topk1_triples(
     ).withColumn(
         "prob", F.col("raw").cast("double") / F.lit(float(config.SCORE_MOD - 1))
     ).filter(F.col("prob") > F.lit(threshold))
-    if apply_constraints:
-        table = tuple(
-            (lab, None if ah is None else tuple(ah), None if at is None else tuple(at))
-            for lab, ah, at in label_constraints(labels)
-        )
-        out = out.filter(once(("scoring.constraint_ok", table),
-                              lambda: lexical_constraint_ok(labels, F.col("label"))))
+    table = tuple(
+        (lab, None if ah is None else tuple(ah), None if at is None else tuple(at))
+        for lab, ah, at in label_constraints(labels)
+    )
+    out = out.filter(once(("scoring.constraint_ok", table),
+                          lambda: lexical_constraint_ok(labels, F.col("label"))))
     if not formatted:
         # the pre-format decoded relation (inclusive ends, h/t types
         # kept) — what type-signature style consumers aggregate over

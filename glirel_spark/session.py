@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 # Spark already owns the core-level parallelism (one worker per task
 # slot), and OpenBLAS's default pool spawns ncpu SPIN-WAITING threads
 # PER WORKER — measured 5-7x slowdown on the tensor-plane stage with
-# 16 workers x 32 spinning threads (tools/bench_neural_scaling.py
+# 16 workers x 32 spinning threads (``bench_scaling.py --scorer neural``
 # found it: the 4-executor level ran 1.5x SLOWER than 1 executor until
 # pinned). Set on the driver (local-mode workers inherit its env) and
 # exported to executors in get_spark.

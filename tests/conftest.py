@@ -19,9 +19,9 @@ def spark():
 
 @pytest.fixture(scope="session")
 def neural_decode_chain():
-    """The relational k=1 reference for the neural path: the scored
-    relation (score_pairs_neural) -> enrich with mention text/type and
-    the label dimension -> decode.decode."""
+    """The relational reference for the neural path: the scored relation
+    (score_pairs_neural) -> enrich with mention text/type and the label
+    dimension -> decode.decode at ``top_k``."""
     from pyspark.sql import functions as F
 
     from glirel_spark import config
@@ -29,7 +29,7 @@ def neural_decode_chain():
     from glirel_spark.operators import decode as decode_ops
     from glirel_spark.operators import scoring
 
-    def chain(docs, mentions, threshold=config.THRESHOLD):
+    def chain(docs, mentions, threshold=config.THRESHOLD, top_k=1):
         scored = score_pairs_neural(docs, mentions)
         m = mentions.select("doc_id", "start", "end", "type", "text")
         h = m.toDF("doc_id", "h_start", "h_end", "h_type", "h_text")
@@ -40,6 +40,6 @@ def neural_decode_chain():
             .join(F.broadcast(scoring.labels_df(docs.sparkSession)), "label", "left")
             .withColumn("raw", F.lit(None).cast("int"))
         )
-        return decode_ops.decode(enriched, threshold, 1)
+        return decode_ops.decode(enriched, threshold, top_k)
 
     return chain

@@ -166,19 +166,27 @@ def test_k1_forms_fall_back_to_decode_chain_when_top_k_is_not_1(
     s.unpersist()
 
 
-def test_fused_neural_equals_decode_chain_sf0001(spark, neural_decode_chain):
-    """pipeline.triples_neural (in-UDF decode) == score_pairs_neural ->
-    decode, row for row, on the sf0.001 corpus."""
-    from glirel_spark.plans import pipeline
+@pytest.mark.parametrize("top_k", [1, 2])
+def test_fused_neural_equals_decode_chain_sf0001(spark, neural_decode_chain, top_k):
+    """The neural plan (k=1: in-UDF decode; k=2: the scored relation,
+    the _ments explode, the two mention joins and the broadcast label
+    join) == score_pairs_neural -> decode, row for row, on the sf0.001
+    corpus. k=2 really keeps more rows than k=1."""
+    from glirel_spark.plans import api, pipeline
 
-    fused = pipeline.triples_neural(spark, SF)
+    fused = api.triples_from(
+        pipeline.docs_ments(spark, SF), top_k=top_k, scorer="neural"
+    )
     chain = neural_decode_chain(
-        pipeline.docs_tokens(spark, SF), pipeline.mentions(spark, SF)
+        pipeline.docs_tokens(spark, SF), pipeline.mentions(spark, SF),
+        top_k=top_k,
     )
     assert fused.columns == chain.columns
     got, want = _rows(fused), _rows(chain)
     assert len(want) > 1000
     assert got == want
+    if top_k > 1:
+        assert len(want) > pipeline.triples_neural(spark, SF).count()
 
 
 def test_api_top_k2_equals_pipeline_triples(spark):
@@ -194,11 +202,12 @@ def test_api_top_k2_equals_pipeline_triples(spark):
 
 
 @pytest.mark.parametrize(
-    "scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1)]
+    "scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1), ("neural", 2)]
 )
 def test_empty_list_constraint_drops_rows(spark, scorer, top_k):
     """allowed_head=[] allows no head type: every row whose decoded label
-    carries it is dropped (lexical k=1, relational decode, neural k=1)
+    carries it is dropped (lexical k=1, relational decode, neural k=1
+    and k>1)
     — whereas an absent constraint keeps them."""
     from glirel_spark.plans import api, pipeline
 

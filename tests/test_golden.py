@@ -16,13 +16,10 @@ from pathlib import Path
 
 import pandas as pd
 
-from glirel_spark.model.scorer import blas_corename
+from glirel_spark.model.scorer import BLAS_CORE, blas_corename
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT / "tools"))
-
-# the OpenBLAS kernel (openblas_get_corename) goldens/ was generated on
-GOLDEN_BLAS_CORE = "SapphireRapids"
 
 
 def test_committed_golden_matches_regeneration():
@@ -44,10 +41,11 @@ def test_committed_golden_matches_regeneration():
         # reproducible, but only on the CPU kernel the goldens were
         # generated with
         assert (f[col].values == c[col].values).all(), (
-            f"{col} differs from the committed golden, generated with "
-            f"OpenBLAS core {GOLDEN_BLAS_CORE}; this process runs "
-            f"{blas_corename()} (regenerate with tools/gen_golden.py if "
-            f"the kernel changed)"
+            f"{col} differs from the committed golden, which holds the "
+            f"bits of the declared OpenBLAS kernel scorer.BLAS_CORE = "
+            f"{BLAS_CORE}; this process runs {blas_corename()}. Do not "
+            f"regenerate the goldens on another kernel: they would hold "
+            f"that kernel's bits instead of the declared contract's"
         )
 
 

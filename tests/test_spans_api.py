@@ -81,7 +81,9 @@ def test_curriculum_sort(spark):
     assert ns == sorted(ns)
 
 
-@pytest.mark.parametrize("scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1)])
+@pytest.mark.parametrize(
+    "scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1), ("neural", 2)]
+)
 def test_extract_triples_empty_label_set_is_empty_typed_frame(spark, scorer, top_k):
     docs = spark.createDataFrame(
         [("d0", "spark query table scan window customer".split(" "))],

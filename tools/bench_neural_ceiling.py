@@ -2,9 +2,9 @@
 numpy scorer compute as model/udf.neural_triples, run as bare
 taskset-pinned multiprocessing — no Spark, no JVM, no shuffle.
 
-Why: tools/bench_neural_scaling.py measures the Spark stage at 4 vs 16
-executor cores (cpusets 0-7 and 0-19, mirroring its fixed 4-core
-driver allowance). If THIS harness — pure python processes doing the
+Why: ``bench_scaling.py --scorer neural`` measures the Spark stage at
+4 vs 16 executor cores on a 16+ CPU box (cpusets 0-4 and 0-19: one
+driver core per executor). If THIS harness — pure python processes doing the
 identical forward passes under the identical cpusets — scales at the
 same ratio, the loss is memory-bandwidth/turbo physics of 16
 concurrent numpy processes on this box, not a Spark plan defect; the
@@ -77,14 +77,11 @@ def run_level(n_procs: int, cpus: str, n_docs: int) -> float:
 
 def main() -> None:
     mp.set_start_method("spawn")
-    # mirror bench_neural_scaling's cpusets exactly (proportional
-    # driver allowance by default, like the scaling harness; set
-    # SPARK_GRAFT_SCALE_FIXED_ALLOWANCE=1 for the old fixed 4-core
-    # protocol):
-    # lo = 4 exec cores + allowance, 4 busy workers
+    # mirror bench_scaling's cpusets at 4 cores per executor (one
+    # driver core per executor):
+    # lo = 4 exec cores + 1 allowance core, 4 busy workers
     # hi = 16 exec cores + 4 allowance cores, 16 busy workers
-    fixed = os.environ.get("SPARK_GRAFT_SCALE_FIXED_ALLOWANCE") == "1"
-    cpuset_lo = "0-7" if fixed else "0-4"
+    cpuset_lo = "0-4"
     lo = run_level(4, cpuset_lo, DOCS_PER_PROC)
     hi = run_level(16, "0-19", DOCS_PER_PROC)
     result = {

@@ -1,8 +1,10 @@
-"""Dump `.explain("formatted")` physical plans of the headline queries
-to PLANS.md — the committed plan-audit artifact. Regenerate after any
-plan-affecting change:
+"""Dump `.explain("formatted")` physical plans of named queries to a
+markdown file — by default the headline set into PLANS.md, the committed
+plan-audit artifact. Regenerate after any plan-affecting change:
 
-    python tools/plan_audit.py [sf_dir]
+    python tools/plan_audit.py [--sf SF_DIR] [--out PATH] [query ...]
+
+A before/after comparison of a plan change is two runs into two paths.
 
 Each section also reports the quick scale-smell counters the plan
 guards assert in tests/test_plan_shape.py (shuffle exchanges, windows,
@@ -13,6 +15,7 @@ wrong.
 
 from __future__ import annotations
 
+import argparse
 import re
 import sys
 import traceback
@@ -81,7 +84,12 @@ def counters(df) -> dict[str, int]:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("queries", nargs="*", default=HEADLINE)
+    ap.add_argument("--sf", default="/root/testdata/sf0.001", help="input sf dir")
+    ap.add_argument("--out", type=Path, default=REPO / "PLANS.md")
+    args = ap.parse_args()
+    sf_dir = args.sf
 
     import __spark_entry__ as entry
 
@@ -93,7 +101,7 @@ def main() -> int:
     rows = []
     sections = []
     failures = []
-    for name in HEADLINE:
+    for name in args.queries:
         # one failing query (say, missing reference data) must not hide
         # the audit of the rest; it is written as a named ERROR row
         try:
@@ -133,8 +141,8 @@ def main() -> int:
             f" {c['single_part']} | {c['windows']} | {c['broadcasts']} |"
             f" {c['bnl_joins']} | {c['cartesian']} | {c['max_method_bytes']} |\n"
         )
-    (REPO / "PLANS.md").write_text(hdr + "\n" + "\n".join(sections))
-    print("wrote PLANS.md")
+    args.out.write_text(hdr + "\n" + "\n".join(sections))
+    print(f"wrote {args.out}")
     spark.stop()
     if failures:
         print("FAILED:", failures)
