@@ -262,6 +262,7 @@ TABLES = [
 # --------------------------------------------------------------------------
 # Re-DocRED reference data (read by sources/docred.py and its oracle twins)
 # --------------------------------------------------------------------------
-DOCRED_DEV = "/root/reference/data/re-docred/data/dev_revised.json"
-DOCRED_TEST = "/root/reference/data/re-docred/data/test_revised.json"
-WIKIDATA_PROPERTIES = "/root/reference/data/all_wikidata_properties.json"
+REFERENCE_DIR = "/root/reference"  # the reference checkout's root
+DOCRED_DEV = f"{REFERENCE_DIR}/data/re-docred/data/dev_revised.json"
+DOCRED_TEST = f"{REFERENCE_DIR}/data/re-docred/data/test_revised.json"
+WIKIDATA_PROPERTIES = f"{REFERENCE_DIR}/data/all_wikidata_properties.json"

@@ -189,6 +189,18 @@ def _suffix_sum_counts_grouped(
     )
 
 
+def _gold_labels(labs: list[str], raws: list["F.Column"], raw_min: int) -> "F.Column":
+    """The pair's gold label set: every label whose lexical raw score is
+    >= ``raw_min``, in ``labs`` order."""
+    return F.filter(
+        F.array(*[
+            F.when(r >= F.lit(raw_min), F.lit(lab)).otherwise(F.lit(None))
+            for lab, r in zip(labs, raws)
+        ]),
+        lambda x: x.isNotNull(),
+    )
+
+
 def gold_triples_lexical(
     rel_pairs: DataFrame,
     labels: dict[str, dict[str, list[str]]] | None = None,
@@ -204,13 +216,7 @@ def gold_triples_lexical(
 
     labs = sorted(labels or config.RELATION_LABELS)
     raws = lexical_label_raws(labs, base=F.col("_lexbase"))
-    gold_labs = F.filter(
-        F.array(*[
-            F.when(r >= F.lit(raw_min), F.lit(lab)).otherwise(F.lit(None))
-            for lab, r in zip(labs, raws)
-        ]),
-        lambda x: x.isNotNull(),
-    )
+    gold_labs = _gold_labels(labs, raws, raw_min)
     return rel_pairs.withColumn(
         "_lexbase", materialized(lexical_base())
     ).select(*_POS, F.explode(gold_labs).alias("label"))
@@ -243,13 +249,7 @@ def eval_counts_lexical(
     labs = sorted(label_dict)
     raws = lexical_label_raws(labs, base=F.col("_lexbase"))
     best_label, best_raw = label_argmax(labs, raws)
-    gold_labs = F.filter(
-        F.array(*[
-            F.when(r >= F.lit(raw_min), F.lit(lab)).otherwise(F.lit(None))
-            for lab, r in zip(labs, raws)
-        ]),
-        lambda x: x.isNotNull(),
-    )
+    gold_labs = _gold_labels(labs, raws, raw_min)
     prob = best_raw.cast("int").cast("double") / F.lit(float(config.SCORE_MOD - 1))
     pp = rel_pairs.withColumn("_lexbase", materialized(lexical_base())).select(
         best_label.alias("label"),
@@ -321,13 +321,7 @@ def threshold_search_lexical(
     # the generated consume method (see scoring.py).
     raws = lexical_label_raws(labs, base=F.col("_lexbase"))
     best_label, best_raw = label_argmax(labs, raws)
-    gold_labs = F.filter(
-        F.array(*[
-            F.when(r >= F.lit(raw_min), F.lit(lab)).otherwise(F.lit(None))
-            for lab, r in zip(labs, raws)
-        ]),
-        lambda x: x.isNotNull(),
-    )
+    gold_labs = _gold_labels(labs, raws, raw_min)
     pp = rel_pairs.withColumn("_lexbase", materialized(lexical_base())).select(
         best_label.alias("label"),
         best_raw.cast("int").alias("_braw"),

@@ -22,7 +22,7 @@ centroid). This module is that trained path:
   expression (argmax over k fold-dot scores, smallest index on ties)
   — no explode, no per-row Python, so the 10^12-row side stays a
   narrow projection inside whole-stage codegen.
-- ``probe_cells``: the query side explodes to its top-``n_probe``
+- ``probe_cells_expr``: the query side explodes to its top-``n_probe``
   cells — queries are tiny, so the x P row blow-up is free, and
   multi-probe buys back the recall a single-cell probe loses.
 
@@ -37,9 +37,16 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from glirel_spark import config
+from glirel_spark.operators.similarity import (
+    _dot,
+    _norm,
+    cell_topk,
+    query_side,
+    with_norm,
+)
 
 
 def _unit(v: np.ndarray) -> np.ndarray:
@@ -96,15 +103,6 @@ def fit_centroids(
     return tuple(tuple(float(v) for v in row) for row in cents)
 
 
-def _dot(a: Column, b: Column) -> Column:
-    # identical fold shape to similarity._dot / oracle _DOT
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def cell_scores(emb_col: Column, centroids) -> Column:
     """Array of fold-dot scores, one per centroid (centroids are
     unit-norm, so argmax dot == argmax cosine for a fixed vector).
@@ -147,6 +145,16 @@ def assign_cell_expr(emb_col: Column, centroids) -> Column:
     return F.element_at(probe_cells_expr(emb_col, centroids, 1), 1)
 
 
+def _with_cells(emb: DataFrame, centroids, corpus_probe: int) -> DataFrame:
+    """Corpus + norm + cell: the assigned cell, or with
+    ``corpus_probe=A>1`` one row per each of the vector's top-A cells."""
+    if corpus_probe == 1:
+        cell = assign_cell_expr(F.col("embedding"), centroids)
+    else:
+        cell = F.explode(probe_cells_expr(F.col("embedding"), centroids, corpus_probe))
+    return with_norm(emb).withColumn("cell", cell)
+
+
 def build_index(
     emb: DataFrame, centroids, path: str, corpus_probe: int = 1
 ) -> None:
@@ -159,20 +167,7 @@ def build_index(
     (A x index size for the recall lift measured in test_kmeans_ivf) —
     search_index dedupes matches. On a cluster this table is the
     Iceberg index table."""
-    from glirel_spark.operators import similarity
-
-    normed = similarity.with_norm(emb)
-    if corpus_probe == 1:
-        base = normed.withColumn(
-            "cell", assign_cell_expr(F.col("embedding"), centroids)
-        )
-    else:
-        base = normed.withColumn(
-            "cell",
-            F.explode(
-                probe_cells_expr(F.col("embedding"), centroids, corpus_probe)
-            ),
-        )
+    base = _with_cells(emb, centroids, corpus_probe)
     base.write.partitionBy("cell").mode("overwrite").parquet(path)
 
 
@@ -189,12 +184,9 @@ def search_index(
     PARTITION column, so with the query side broadcast Spark inserts a
     dynamic-partition-pruning subquery on the index scan — only probed
     cells' files are read. Ranking semantics identical to
-    ``kmeans_ivf_topk``.
+    ``kmeans_ivf_topk``; matches are always deduped, since the index
+    may be multi-assigned.
     """
-    from pyspark.sql import Window as W
-
-    from glirel_spark.operators.similarity import _norm
-
     q = queries.select(
         "q_id",
         "q_emb",
@@ -203,21 +195,7 @@ def search_index(
             probe_cells_expr(F.col("q_emb"), centroids, n_probe)
         ).alias("cell"),
     )
-    pairs = index.join(F.broadcast(q), "cell").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
-    scored = pairs.select(
-        "q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine")
-    ).dropDuplicates(["q_id", "n_id"])  # multi-assigned indexes match twice
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
+    return cell_topk(index, q, k, dedup=True)
 
 
 def kmeans_ivf_topk(
@@ -244,45 +222,12 @@ def kmeans_ivf_topk(
     an equi hash join on cell, costing |Q| x n_probe x (A x N /
     n_cells) instead of |Q| x N.
     """
-    from glirel_spark.operators import similarity
-
-    normed = similarity.with_norm(emb)
-    if corpus_probe == 1:
-        base = normed.withColumn(
-            "cell", assign_cell_expr(F.col("embedding"), centroids)
-        )
-    else:
-        base = normed.withColumn(
-            "cell",
-            F.explode(
-                probe_cells_expr(F.col("embedding"), centroids, corpus_probe)
-            ),
-        )
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    base = _with_cells(emb, centroids, corpus_probe)
+    q = query_side(
+        base,
+        n_queries,
         F.explode(
             probe_cells_expr(F.col("embedding"), centroids, n_probe)
         ).alias("cell"),
     )
-    pairs = base.join(F.broadcast(q), "cell").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
-    scored = pairs.select(
-        "q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine")
-    )
-    if corpus_probe > 1:
-        # identical rows when a neighbour matches via several cells
-        scored = scored.dropDuplicates(["q_id", "n_id"])
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
+    return cell_topk(base, q, k, dedup=corpus_probe > 1)

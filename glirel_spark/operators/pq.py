@@ -28,6 +28,12 @@ from pyspark.sql import Column, functions as F
 
 from glirel_spark import config
 from glirel_spark.operators.kmeans import unit_sample
+from glirel_spark.operators.similarity import (
+    _dot,
+    _norm,
+    rerank_exact,
+    topk_per_query,
+)
 
 
 @lru_cache(maxsize=8)
@@ -67,23 +73,12 @@ def fit_pq(
     return tuple(books)
 
 
-def _norm_emb(emb_col: Column) -> Column:
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(emb_col, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    return F.transform(emb_col, lambda x: x.cast("double") / nrm)
-
-
 def with_normalized(emb, col_name: str = "_ne"):
     """emb + a MATERIALIZED unit-normalized embedding column.
 
-    Round-6 fix: ``_norm_emb`` is a composite expression — the norm
-    fold nested inside a per-element transform — and Catalyst inlines
-    alias references, so every downstream reference (``encode_expr``
+    Round-6 fix: the normalized embedding is a composite expression —
+    the norm fold nested inside a per-element transform — and Catalyst
+    inlines alias references, so every downstream reference (``encode_expr``
     slices it m*ks times per row) re-evaluated the full normalize, and
     the norm itself re-folded per ELEMENT: O(m*ks*d^2) interpreted work
     per corpus row, measured at ~104s per PQ query at sf0.1. The two
@@ -93,14 +88,7 @@ def with_normalized(emb, col_name: str = "_ne"):
     (same expressions, evaluated once)."""
     from glirel_spark.functions.barrier import materialized
 
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    df = emb.withColumn("_pqnrm", materialized(nrm))
+    df = emb.withColumn("_pqnrm", materialized(_norm(F.col("embedding"))))
     ne = F.transform(
         F.col("embedding"), lambda x: x.cast("double") / F.col("_pqnrm")
     )
@@ -110,14 +98,6 @@ def with_normalized(emb, col_name: str = "_ne"):
 def _l2(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, t: acc + t,
     )
@@ -179,28 +159,28 @@ def lut_expr(qn: Column, books) -> Column:
     )
 
 
-def pq_topk(
-    emb,
-    books,
-    n_queries: int = config.ANN_N_QUERIES,
-    k: int = config.ANN_TOP_K,
-):
-    """ADC top-k over the PQ-compressed corpus: corpus rows carry ONLY
-    (vec_id, codes); each query broadcasts its LUT; the score is m
-    lookups folded in fixed j-order (bit-exact vs the oracle's
-    ORDER BY j list_reduce). Rank by (pq_score desc, n_id asc)."""
-    from pyspark.sql import Window as W
-
-    m = len(books)
-    ks = len(books[0])
-    corpus = with_normalized(emb).select(
-        "vec_id", encode_expr(F.col("_ne"), books).alias("codes")
+def _codes(emb, books, *extra: Column):
+    """The compressed corpus: (vec_id, *extra, codes)."""
+    return with_normalized(emb).select(
+        "vec_id", *extra, encode_expr(F.col("_ne"), books).alias("codes")
     )
-    q = with_normalized(emb.filter(F.col("vec_id") < n_queries)).select(
+
+
+def _luts(emb, books, n_queries: int, *extra: Column):
+    """The query side: (q_id, *extra, lut) of the first ``n_queries``
+    vec_ids."""
+    return with_normalized(emb.filter(F.col("vec_id") < n_queries)).select(
         F.col("vec_id").alias("q_id"),
+        *extra,
         lut_expr(F.col("_ne"), books).alias("lut"),
     )
-    pairs = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+
+
+def _adc_topk(pairs, books, k: int):
+    """Top-k by ADC score over (vec_id, codes) x (q_id, lut) pairs: m
+    lookups folded in fixed j-order from 0.0 (bit-exact vs the oracle's
+    ORDER BY j list_reduce). Rank by (pq_score desc, n_id asc)."""
+    m, ks = len(books), len(books[0])
     score = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0.0),
@@ -210,12 +190,22 @@ def pq_topk(
     scored = pairs.select(
         "q_id", F.col("vec_id").alias("n_id"), score.alias("pq_score")
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("pq_score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "pq_score", F.col("rk").cast("int").alias("rk"))
+    return topk_per_query(scored, "pq_score", k)
+
+
+def pq_topk(
+    emb,
+    books,
+    n_queries: int = config.ANN_N_QUERIES,
+    k: int = config.ANN_TOP_K,
+):
+    """ADC top-k over the PQ-compressed corpus: corpus rows carry ONLY
+    (vec_id, codes); each query broadcasts its LUT."""
+    pairs = _codes(emb, books).join(
+        F.broadcast(_luts(emb, books, n_queries)),
+        F.col("vec_id") != F.col("q_id"),
     )
+    return _adc_topk(pairs, books, k)
 
 
 def pq_topk_rerank(
@@ -234,49 +224,8 @@ def pq_topk_rerank(
     happens. Recall is set by P(true neighbour in the shortlist), which
     the R/k ratio controls. Output matches ann_topk (q_id, n_id,
     cosine, rk) — same schema, cheaper plan, approximate shortlist."""
-    from pyspark.sql import Window as W
-
-    m = len(books)
-    ks = len(books[0])
-    corpus = with_normalized(emb).select(
-        "vec_id", encode_expr(F.col("_ne"), books).alias("codes")
-    )
-    nrm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    base = emb.select("vec_id", "embedding", nrm.alias("nrm"))
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    qlut = with_normalized(emb.filter(F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("q_id"),
-        lut_expr(F.col("_ne"), books).alias("lut"),
-    )
-    pairs = corpus.join(F.broadcast(qlut), F.col("vec_id") != F.col("q_id"))
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(F.col("lut"), j * ks + F.element_at(F.col("codes"), j + 1) + 1),
-    )
-    w1 = W.partitionBy("q_id").orderBy(F.desc("pq_score"), F.asc("n_id"))
-    short = (
-        pairs.select("q_id", F.col("vec_id").alias("n_id"), adc.alias("pq_score"))
-        .withColumn("_r", F.row_number().over(w1))
-        .filter(F.col("_r") <= shortlist)
-        .select("q_id", "n_id")
-    )
-    fetched = short.join(
-        base.select(F.col("vec_id").alias("n_id"), "embedding", "nrm"), "n_id"
-    ).join(F.broadcast(q), "q_id")
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w2 = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        fetched.select("q_id", "n_id", cos.alias("cosine"))
-        .withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
+    short = pq_topk(emb, books, n_queries, shortlist).select("q_id", "n_id")
+    return rerank_exact(short, emb, n_queries, k)
 
 
 def ivfpq_topk(
@@ -298,58 +247,22 @@ def ivfpq_topk(
     scan is code-bytes not floats, the join is cell-pruned, and raw
     vectors are touched for shortlist x queries rows only. Every stage
     reuses the hash-gated building blocks (kmeans.assign_cell_expr /
-    probe_cells_expr, encode_expr, lut_expr), so the composition is
-    value-checkable end-to-end."""
-    from pyspark.sql import Window as W
-
+    probe_cells_expr, encode_expr, lut_expr, similarity.rerank_exact),
+    so the composition is value-checkable end-to-end."""
     from glirel_spark.operators.kmeans import assign_cell_expr, probe_cells_expr
 
-    m = len(books)
-    ks = len(books[0])
-    corpus = with_normalized(emb).select(
-        "vec_id",
-        assign_cell_expr(F.col("embedding"), cents).alias("cell"),
-        encode_expr(F.col("_ne"), books).alias("codes"),
+    corpus = _codes(
+        emb, books, assign_cell_expr(F.col("embedding"), cents).alias("cell")
     )
-    qside = with_normalized(emb.filter(F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("q_id"),
-        F.explode(
-            probe_cells_expr(F.col("embedding"), cents, n_probe)
-        ).alias("cell"),
-        lut_expr(F.col("_ne"), books).alias("lut"),
+    qside = _luts(
+        emb,
+        books,
+        n_queries,
+        F.explode(probe_cells_expr(F.col("embedding"), cents, n_probe)).alias("cell"),
     )
     pairs = corpus.join(
         F.broadcast(qside),
         (corpus["cell"] == qside["cell"]) & (F.col("vec_id") != F.col("q_id")),
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(F.col("lut"), j * ks + F.element_at(F.col("codes"), j + 1) + 1),
-    )
-    w1 = W.partitionBy("q_id").orderBy(F.desc("pq_score"), F.asc("n_id"))
-    short = (
-        pairs.select("q_id", F.col("vec_id").alias("n_id"), adc.alias("pq_score"))
-        .withColumn("_r", F.row_number().over(w1))
-        .filter(F.col("_r") <= shortlist)
-        .select("q_id", "n_id")
-    )
-    nrm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    base = emb.select("vec_id", "embedding", nrm.alias("nrm"))
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    fetched = short.join(
-        base.select(F.col("vec_id").alias("n_id"), "embedding", "nrm"), "n_id"
-    ).join(F.broadcast(q), "q_id")
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    w2 = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        fetched.select("q_id", "n_id", cos.alias("cosine"))
-        .withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
+    short = _adc_topk(pairs, books, shortlist).select("q_id", "n_id")
+    return rerank_exact(short, emb, n_queries, k)

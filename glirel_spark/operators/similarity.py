@@ -1,14 +1,25 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>), and the
+search kernels the trained-IVF (``kmeans.py``) and product-quantization
+(``pq.py``) paths share.
 
 - ``brute_force_topk``: exact cosine top-k of every query against the
-  corpus — the correctness baseline. Dot products run JVM-side via
-  ``zip_with`` + a left-fold ``aggregate`` (deterministic summation
-  order -> bit-identical to the DuckDB oracle's list_reduce).
+  corpus — the correctness baseline.
 - ``ivf_topk``: the scale path — IVF-style coarse quantization. Cell
   centroids here are deterministic hash cells (argmax-dim sign pattern);
   at 10^12 rows the same plan holds with k-means centroids: probe only
   matching cells, so the candidate join is |Q| x (N / n_cells), not
   |Q| x N. Exactness is traded for the probe ratio, like any ANN.
+
+Shared kernels, one definition each:
+
+- ``_dot`` / ``_norm``: JVM-side folds (cast to double, multiply, then a
+  left-fold ``aggregate`` from 0.0). The summation order is fixed, so
+  every cosine is bit-identical to the DuckDB oracle's list_reduce.
+- ``query_side``: the first ``n_queries`` vec_ids as (q_id, q_emb, q_nrm).
+- ``topk_per_query``: row_number over (score desc, n_id asc), rk <= k.
+- ``cell_topk``: probed-cell candidates -> exact-cosine top-k.
+- ``rerank_exact``: a (q_id, n_id) shortlist -> raw-vector fetch by id
+  -> exact-cosine top-k.
 
 Everything is expressed as joins + window top-k; no UDF in the hot path.
 """
@@ -42,6 +53,65 @@ def with_norm(emb: DataFrame) -> DataFrame:
     return emb.withColumn("nrm", _norm(F.col("embedding")))
 
 
+def query_side(base: DataFrame, n_queries: int, *extra: Column) -> DataFrame:
+    """The first ``n_queries`` vec_ids of ``base`` (vec_id, embedding,
+    nrm) as (q_id, q_emb, q_nrm, *extra)."""
+    return base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        *extra,
+    )
+
+
+def _cosine_scores(pairs: DataFrame) -> DataFrame:
+    """(q_id, n_id, cosine) of query x corpus pairs carrying (q_id,
+    q_emb, q_nrm) and (vec_id, embedding, nrm)."""
+    cos = _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
+    return pairs.select("q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine"))
+
+
+def topk_per_query(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The ``k`` best n_ids of each q_id by ``score``; ties broken by
+    neighbour id (deterministic)."""
+    w = W.partitionBy("q_id").orderBy(F.desc(score), F.asc("n_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "n_id", score, F.col("rk").cast("int").alias("rk"))
+    )
+
+
+def cell_topk(
+    corpus: DataFrame, q: DataFrame, k: int, dedup: bool = False
+) -> DataFrame:
+    """Exact-cosine top-k over the corpus rows sharing a ``cell`` with
+    the (broadcast) query side. ``dedup`` drops the repeats of a
+    neighbour that matches through several cells."""
+    pairs = corpus.join(F.broadcast(q), "cell").filter(
+        F.col("vec_id") != F.col("q_id")
+    )
+    scored = _cosine_scores(pairs)
+    if dedup:
+        scored = scored.dropDuplicates(["q_id", "n_id"])
+    return topk_per_query(scored, "cosine", k)
+
+
+def rerank_exact(
+    shortlist: DataFrame, emb: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """Re-rank a (q_id, n_id) shortlist by exact cosine: only the listed
+    neighbours' raw vectors are fetched (an id-keyed join back to the
+    vector table), never the whole corpus."""
+    base = with_norm(emb).select("vec_id", "embedding", "nrm")
+    fetched = (
+        shortlist.withColumnRenamed("n_id", "vec_id")
+        .join(base, "vec_id")
+        .join(F.broadcast(query_side(base, n_queries)), "q_id")
+    )
+    return topk_per_query(_cosine_scores(fetched), "cosine", k)
+
+
 def brute_force_topk(
     emb: DataFrame,
     n_queries: int = config.ANN_N_QUERIES,
@@ -49,24 +119,12 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbours (cosine) for the first n_queries vec_ids.
 
-    The query side is tiny -> broadcast; the corpus scans once. Ties on
-    cosine broken by neighbour id (deterministic).
+    The query side is tiny -> broadcast; the corpus scans once.
     """
     base = with_norm(emb).select("vec_id", "embedding", "nrm")
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
+    q = query_side(base, n_queries)
     pairs = base.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    scored = pairs.select("q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine"))
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
+    return topk_per_query(_cosine_scores(pairs), "cosine", k)
 
 
 def cell_of(emb_col: Column, n_cells: int = config.IVF_N_CELLS) -> Column:
@@ -92,20 +150,20 @@ def ivf_topk(
     key (sign pattern), shuffle-partitioned by cell.
     """
     base = with_norm(emb).withColumn("cell", cell_of(F.col("embedding"), n_cells))
-    q = base.filter(F.col("vec_id") < n_queries).select(
+    return cell_topk(base, query_side(base, n_queries, F.col("cell")), k)
+
+
+def _cell_neighbours(base: DataFrame) -> DataFrame:
+    """Blocked self-join: every pair of vectors sharing a ``cell``,
+    lower id first, as (q_id, n_id, cosine)."""
+    a = base.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
-        F.col("cell"),
+        "cell",
     )
-    pairs = base.join(F.broadcast(q), "cell").filter(F.col("vec_id") != F.col("q_id"))
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
-    scored = pairs.select("q_id", F.col("vec_id").alias("n_id"), cos.alias("cosine"))
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
+    return _cosine_scores(
+        a.join(base, "cell").filter(F.col("q_id") < F.col("vec_id"))
     )
 
 
@@ -129,24 +187,17 @@ def semantic_dedup(
     shuffle key, a skewed cell is AQE-splittable, and the corpus is
     touched exactly twice (assign scan + blocked self-join). Cell
     assignment is the same single codegen expression the trained-IVF
-    path uses (kmeans.assign_cell_expr); cosine is the fold-ordered
-    dot, bit-identical to the DuckDB oracle.
+    path uses (kmeans.assign_cell_expr).
     """
     from glirel_spark.operators.kmeans import assign_cell_expr
 
     base = with_norm(emb).withColumn(
         "cell", assign_cell_expr(F.col("embedding"), centroids).cast("int")
     )
-    a = base.select(F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"),
-                    F.col("nrm").alias("n1"), "cell")
-    b = base.select(F.col("vec_id").alias("v2"), F.col("embedding").alias("e2"),
-                    F.col("nrm").alias("n2"), "cell")
-    cos = _dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2"))
     dropped = (
-        a.join(b, "cell")
-        .filter(F.col("v1") < F.col("v2"))
-        .filter(cos >= F.lit(min_cosine))
-        .select(F.col("v2").alias("vec_id"))
+        _cell_neighbours(base)
+        .filter(F.col("cosine") >= F.lit(min_cosine))
+        .select(F.col("n_id").alias("vec_id"))
         .distinct()
         .withColumn("_dropped", F.lit(True))
     )
@@ -160,14 +211,8 @@ def embedding_neardups(emb: DataFrame, min_cosine: float = 0.98,
     """Near-duplicate detection by embedding cosine, blocked by coarse
     cell (near-identical vectors share sign patterns)."""
     base = with_norm(emb).withColumn("cell", cell_of(F.col("embedding"), n_cells))
-    a = base.select(F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"),
-                    F.col("nrm").alias("n1"), "cell")
-    b = base.select(F.col("vec_id").alias("v2"), F.col("embedding").alias("e2"),
-                    F.col("nrm").alias("n2"), "cell")
-    cos = _dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2"))
     return (
-        a.join(b, "cell")
-        .filter(F.col("v1") < F.col("v2"))
-        .select("v1", "v2", cos.alias("cosine"))
+        _cell_neighbours(base)
         .filter(F.col("cosine") >= min_cosine)
+        .select(F.col("q_id").alias("v1"), F.col("n_id").alias("v2"), "cosine")
     )

@@ -10,11 +10,15 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from glirel_spark.config import DOCRED_DEV, DOCRED_TEST, WIKIDATA_PROPERTIES
+from glirel_spark.config import (
+    DOCRED_DEV,
+    DOCRED_TEST,
+    REFERENCE_DIR,
+    WIKIDATA_PROPERTIES,
+)
 from glirel_spark.sources import docred
 
-# the reference checkout's root, which holds the data/ tree
-REFERENCE_IMAGE = Path(WIKIDATA_PROPERTIES).parents[1] / "image.png"
+REFERENCE_IMAGE = Path(REFERENCE_DIR) / "image.png"
 
 
 def _needs(path) -> pytest.MarkDecorator:

@@ -317,20 +317,42 @@ def test_neural_triples_plan_is_one_repartition_into_the_udf(spark):
     assert "Join" not in plan and "Aggregate" not in plan, plan
 
 
+def test_kmeans_ann_plan_is_one_shuffle_without_aggregate(spark):
+    """ann_topk_kmeans (single-assigned corpus) ranks straight off the
+    broadcast cell join: its only non-broadcast exchange feeds the
+    per-query window, and no dedup aggregate creeps in. The
+    multi-assigned corpus of ann_topk_kmeans_multi keeps its dedup."""
+    import re
+
+    from glirel_spark.plans import pipeline
+
+    def names(df):
+        return [re.match(r"\w+", n).group() for n in _nodes_outside_cache(df)]
+
+    single = names(pipeline.ann_topk_kmeans(spark, SF))
+    assert single.count("Exchange") == 1, single
+    assert not [n for n in single if "Aggregate" in n], single
+    multi = names(pipeline.ann_topk_kmeans_multi(spark, SF))
+    assert [n for n in multi if "Aggregate" in n], multi
+
+
 def test_generated_methods_fit_the_jit_limit(spark):
-    """No whole-stage-codegen method of the lexical family or the
-    language-id family exceeds HotSpot's 8,000-byte JIT limit: a stage
-    over it never leaves the bytecode interpreter (functions/barrier.py).
-    Catalyst inlining an expensive alias into a predicate or into several
-    output columns is what pushes a stage over; the barriers in
-    scoring.lexical_topk1_triples and textstats.lang_id keep it under."""
+    """No whole-stage-codegen method of the lexical family, the
+    language-id family or the embedding-search family exceeds HotSpot's
+    8,000-byte JIT limit: a stage over it never leaves the bytecode
+    interpreter (functions/barrier.py). Catalyst inlining an expensive
+    alias into a predicate or into several output columns is what pushes
+    a stage over; the barriers in scoring.lexical_topk1_triples,
+    textstats.lang_id and pq.with_normalized keep it under."""
     from glirel_spark.functions.barrier import JIT_METHOD_LIMIT, max_method_bytes
     from glirel_spark.plans import pipeline
 
     plans = {"extract_bucket": _job_bucket(spark)}
     for fn in (pipeline.triples, pipeline.graph, pipeline.pred_type_signature,
                pipeline.lang_id, pipeline.lang_confusion, pipeline.corpus_routing,
-               pipeline.routing_stats):
+               pipeline.routing_stats, pipeline.ann_topk, pipeline.ann_topk_kmeans,
+               pipeline.ann_topk_pq, pipeline.ann_topk_pq_rerank,
+               pipeline.ann_topk_ivfpq):
         plans[fn.__name__] = fn(spark, SF)
     sizes = {name: max_method_bytes(df) for name, df in plans.items()}
     # 0 would mean the probe saw no codegen stage (e.g. an AQE plan)

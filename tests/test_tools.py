@@ -1,6 +1,7 @@
 """The measurement tools: bench.py's timing loop (failure isolation,
-spread, exit status), tools/plan_audit.py's named-query dump, and
-bench_scaling.py's cluster-shape helpers."""
+spread, exit status), tools/plan_audit.py's named-query dump,
+bench_scaling.py's cluster-shape helpers, and tools/check_oracle.py's
+missing-input SKIP rule."""
 
 from __future__ import annotations
 
@@ -76,3 +77,25 @@ def test_scaling_cluster_shape_fits_the_usable_cpus():
     assert bs.cores_per_executor(1, 2) == 1
     assert bs.cpuset(1, 1, [2, 5, 6, 7]) == "2,5"
     assert bs.cpuset(4, 1, [0, 1, 4, 5, 6, 9]) == "0-1,4-6,9"
+
+
+def test_check_oracle_skips_only_errors_naming_a_missing_file(tmp_path):
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", REPO / "tools" / "check_oracle.py"
+    )
+    co = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(co)
+
+    gone = tmp_path / "absent" / "dev_revised.json"
+    here = tmp_path / "present.json"
+    here.write_text("{}")
+    spark_msg = f"[PATH_NOT_FOUND] Path does not exist: file:{gone}. SQLSTATE: 42K03"
+    duck_msg = f'IO Error: No files found that match the pattern "{gone}"'
+    py_msg = f"[Errno 2] No such file or directory: '{gone}'"
+    for msg in (spark_msg, duck_msg, py_msg):
+        assert co.missing_path(Exception(msg)) == str(gone), msg
+    # an existing file, a ratio and no path at all are ERRORs, not SKIPs
+    for msg in (f"Path exists: file:{here}.", "bad ratio a/b", "division by zero"):
+        assert co.missing_path(Exception(msg)) is None, msg

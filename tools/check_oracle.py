@@ -4,11 +4,17 @@ given sf, compare row count, column names, and an order-insensitive
 value hash. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+A query whose Spark-side or DuckDB-side error names a file that does not
+exist (say, absent reference data) is a named SKIP; any other exception
+is an ERROR. The run exits 1 exactly when some query is FAIL or ERROR.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import re
 import sys
 from pathlib import Path
 
@@ -30,6 +36,21 @@ def norm_hash(df: pd.DataFrame) -> str:
         h.update("\x1f".join(r).encode())
         h.update(b"\x1e")
     return h.hexdigest()
+
+
+# an absolute path at the start of the message, after a space, a quote,
+# a bracket or a ``file:`` scheme
+_PATH = re.compile(r"(?:^|[\s'\"`(\[]|file:)(/[^\s'\"`,;:()\[\]]+)")
+
+
+def missing_path(exc: BaseException) -> str | None:
+    """The first absolute path named in ``exc``'s message that does not
+    exist on disk, or None."""
+    for m in _PATH.finditer(str(exc)):
+        path = m.group(1).rstrip(".")
+        if not os.path.exists(path):
+            return path
+    return None
 
 
 def main() -> int:
@@ -54,18 +75,22 @@ def main() -> int:
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    failures = []
+    fails, errors, skips = [], [], []
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        # one failing query (say, missing reference data) must not hide
-        # the verdict on the rest; it still counts as a failure
+        # one failing query must not hide the verdict on the rest
         try:
             sdf = fn(spark, sf_dir).toPandas()
             odf = con.execute(oracles[name]).fetchdf() if name in oracles else None
         except Exception as exc:  # noqa: BLE001
-            print(f"  ERROR {name}: {exc}")
-            failures.append(name)
+            path = missing_path(exc)
+            if path is None:
+                print(f"  ERROR {name}: {exc}")
+                errors.append(name)
+            else:
+                print(f"  SKIP {name}: missing {path}")
+                skips.append(name)
             continue
         if odf is None:
             print(f"  {name:32s} rows={len(sdf):7d}  (no oracle — rows-only)")
@@ -80,14 +105,16 @@ def main() -> int:
             f"{'' if cols_ok else ' vs ' + str(sorted(odf.columns))} hash={'=' if hash_ok else 'X'} {status}"
         )
         if status == "FAIL":
-            failures.append(name)
+            fails.append(name)
             if cols_ok and rows_ok:
                 m = sdf.merge(odf, how="outer", indicator=True)
                 diff = m[m["_merge"] != "both"]
                 print(diff.head(10).to_string())
     spark.stop()
-    if failures:
-        print("FAILED:", failures)
+    if skips:
+        print("SKIPPED (missing inputs):", skips)
+    if fails or errors:
+        print("FAILED:", {"FAIL": fails, "ERROR": errors})
         return 1
     print("all queries match")
     return 0
