@@ -217,14 +217,15 @@ def kmeans_ivf_topk(
     A x index size for recall that single-assignment can't reach —
     boundary vectors become visible from both neighboring cells); a
     neighbour can then match through several cells, so candidates are
-    deduped on (q_id, n_id) before ranking. Query side: tiny, exploded
-    to its top-``n_probe`` cells and broadcast — the candidate join is
-    an equi hash join on cell, costing |Q| x n_probe x (A x N /
-    n_cells) instead of |Q| x N.
+    deduped on (q_id, n_id) before ranking. Query side: tiny, taken
+    from the un-replicated corpus (one row per query), exploded to its
+    top-``n_probe`` cells and broadcast — the candidate join is an equi
+    hash join on cell, costing |Q| x n_probe x (A x N / n_cells)
+    instead of |Q| x N.
     """
     base = _with_cells(emb, centroids, corpus_probe)
     q = query_side(
-        base,
+        with_norm(emb),
         n_queries,
         F.explode(
             probe_cells_expr(F.col("embedding"), centroids, n_probe)

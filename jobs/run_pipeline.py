@@ -7,6 +7,16 @@ graph) with bucket-granular checkpoint-resume (re-running with the same
 per-partition lineage metrics. On a real cluster --input/--output are
 Iceberg identifiers via TableIO; in a local run they are parquet dirs.
 
+The buckets still to run are processed concurrently
+(``lineage.run_resumable``): at most min(buckets to run, default
+parallelism, driver CPUs) at once, with lineage commits serialized. A
+bucket's ``wall_sec`` is its own interval, which overlaps those of the
+buckets in flight with it. If a bucket fails, no further bucket
+starts, the running ones commit, and the job exits with the bucket's
+error; a rerun with the same --output processes the rest. The printed
+``n_docs`` is the sum of the lineage table's per-bucket ``n_docs``, not
+a second scan of the corpus.
+
 Each bucket runs the same extraction plan as the pipeline queries
 (``plans.api.triples_from``) and links through the literal alias map,
 so with the lexical scorer at top_k=1 a bucket is one narrow stage:
@@ -71,8 +81,9 @@ def main() -> None:
     spark = get_spark("kgc-pipeline", cores=args.cores)
     t0 = time.perf_counter()
 
-    flat = tables.TableIO(spark, args.input).table("documents")
-    inter = tables.interleaved_documents(flat)
+    inter = tables.interleaved_documents(
+        tables.TableIO(spark, args.input).table("documents")
+    )
 
     linked = run_resumable(
         spark,
@@ -94,14 +105,15 @@ def main() -> None:
         report.write_eval_report(search, f"{args.output}/eval")
         report.write_submission(api.triples_from(dm), f"{args.output}/eval/submission")
 
-    n_docs = flat.count()
     n_edges = spark.read.parquet(f"{args.output}/graph").count()
     wall = time.perf_counter() - t0
-    metrics = LineageLog(spark, f"{args.output}/lineage").metrics()
+    rows = LineageLog(spark, f"{args.output}/lineage").metrics().orderBy("bucket").collect()
+    # every doc lands in exactly one bucket, and every bucket has one row
+    n_docs = sum(r.n_docs for r in rows)
     per_bucket = [
         {"bucket": r.bucket, "n_docs": r.n_docs, "n_triples": r.n_triples,
          "wall_sec": round(r.wall_sec, 2)}
-        for r in metrics.orderBy("bucket").collect()
+        for r in rows
     ]
     print(json.dumps({
         "n_docs": n_docs,

@@ -135,3 +135,33 @@ def test_semantic_dedup_drops_lowest_id_keeps_rep(spark):
     assert got[3] == (1, True) and got[4][1] is True
     assert got[5] == (2, True)
     assert len(got) == 6  # one row per input vector
+
+
+def test_embedding_neardups_matches_oracle_where_pairs_survive(spark):
+    """The declared ``embedding_neardups`` query keeps no pair of the
+    synthetic embeddings at its default min_cosine (0.98), so its oracle
+    check compares two empty frames. At 0.3, 138 same-cell pairs of the
+    sf0.001 embeddings survive (cosines reach 0.48 there); the fold, the
+    cell blocking and the lower-id-first order must give the DuckDB
+    oracle's rows, value for value."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    from glirel_spark import oracle_corpus
+    from glirel_spark.sources import tables
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracle import norm_hash
+
+    emb_path = Path(tables.DEFAULT_SF_DIR).parent / "sf0.001" / "embeddings.parquet"
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{emb_path}')")
+    want = con.execute(oracle_corpus.q_embedding_neardups(min_cosine=0.3)).fetchdf()
+    got = embedding_neardups(
+        spark.read.parquet(str(emb_path)), min_cosine=0.3
+    ).toPandas()
+    assert len(got) == len(want) > 0
+    assert sorted(got.columns) == sorted(want.columns)
+    assert norm_hash(got) == norm_hash(want)
