@@ -6,7 +6,8 @@ Model: the corpus is processed in doc-id buckets (the unit of resume —
 an Iceberg snapshot commit per bucket on a real cluster; a parquet
 append per bucket here, via TableIO). The lineage table records every
 completed bucket with row counts and wall time. Resume = anti-join the
-bucket list against completed lineage — only unprocessed buckets run.
+bucket list against completed lineage — only unprocessed buckets run,
+several at a time (``run_resumable``).
 
 This is deliberately NOT Spark streaming state: batch + snapshot-
 granular resume, per SURVEY.md §2.10 (the reference is batch;
