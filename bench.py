@@ -47,7 +47,7 @@ BENCH_QUERIES = [
     "triples_neural",     # tensor-plane scorer via mapInPandas
     "coref_clusters",     # union-find clustering
     "threshold_search",   # eval replay over the whole grid
-    "graph",              # linking + salted materialization
+    "graph",              # linking + two-exchange materialization
     "minhash_neardups",   # LSH dedup
     "simhash",            # simhash signatures
     "ann_topk",           # brute-force cosine top-k

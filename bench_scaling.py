@@ -16,14 +16,14 @@ not have that artifact).
 The measured job, per ``--scorer``:
 - lexical (default): the flagship extraction+linking pipeline
   (documents -> fused mentions/pairs -> triples (``api.triples_from``)
-  -> linked -> salted graph), fully materialized;
+  -> linked -> graph), fully materialized;
 - neural: the tensor plane, ``api.triples_from(scorer="neural")`` — the
   mapInPandas scorer that decodes in-UDF at top_k=1. It is map-only per
   document (model singleton per python worker, Arrow batches, zero
   cross-doc state); the only exchange is the round-robin repartition
   feeding the scorer.
 
-Protocol (both scorers): per level, one untimed warmup run (JIT, python
+Protocol (both scorers): per level, two untimed warmup runs (JIT, python
 worker spin-up, token-cache build; a production cluster is
 long-running), then REPS timed runs (default 3) with BOTH the
 minimum-based and median-based efficiency reported plus every raw time
@@ -178,7 +178,8 @@ dm = fused.with_mentions(dt).cache()
 def job():
     {body}.write.format("noop").mode("overwrite").save()
 
-job()  # warmup: JIT + python worker spin-up + cache build
+for _ in range(2):  # warmups: cache build, JIT, python workers; then the JIT settles
+    job()
 times = []
 for _ in range({reps}):
     t0 = time.perf_counter()

@@ -435,7 +435,8 @@ class NumpyTransformer:
         t = len(ids)
         pos = np.arange(t)
         rel = np.clip(pos[:, None] - pos[None, :], -self.relk, self.relk) + self.relk
-        t_idx = pos[:, None]
+        # rel as a flat index into each head's [T, 2*relk+1] rows: one take per gather
+        flat = pos[:, None] * (2 * self.relk + 1) + rel
         scale = 1.0 / np.sqrt(3.0 * self.dh)  # DeBERTa: 3 score terms
         for li in range(self.layers):
             pre = f"enc_l{li}_"
@@ -453,9 +454,9 @@ class NumpyTransformer:
             # p2c[h,t,s] = <k_s, P_q[rel(s,t)]> (note the reversed relative
             # direction on the position-to-content term, as in DeBERTa)
             c2p_all = qh @ pk.transpose(0, 2, 1)
-            c2p = c2p_all[:, t_idx, rel]                      # [h, T, T]
+            c2p = c2p_all.reshape(self.heads, -1).take(flat, axis=1)  # [h, T, T]
             p2c_all = kh @ pq.transpose(0, 2, 1)
-            p2c = p2c_all[:, t_idx, rel].transpose(0, 2, 1)   # [h, T, T]
+            p2c = p2c_all.reshape(self.heads, -1).take(flat, axis=1).transpose(0, 2, 1)
             scores = (c2c + c2p + p2c) * scale
             scores -= scores.max(axis=-1, keepdims=True)
             e = np.exp(scores)

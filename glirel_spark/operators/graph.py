@@ -1,14 +1,12 @@
 """Graph materialization with explicit hot-key skew handling.
 
 north_rule: (subj, pred, obj) triples into partitioned tables with
-salting for hot-entity skew. Entity frequency is Zipfian at corpus
-scale, so a naive groupBy(subj, pred, obj) puts the hottest entity's
-whole key range on one reducer. Two-stage salted aggregation bounds any
-single task's input to ~1/S of the hot key (AQE skew handling remains
-as backstop for keys we didn't predict).
-
-The aggregation is algebraic (counts sum, max-of-max), so the salted
-plan is semantics-identical to a direct groupBy(subj, pred, obj) — the
+hot-entity skew handled. Entity frequency is Zipfian at corpus scale, so
+a naive groupBy(subj, pred, obj) puts the hottest entity's whole key
+range on one reducer; materialize_graph bounds every reducer's share of
+a hot key (AQE skew handling remains as backstop for keys we didn't
+predict). The aggregation is algebraic (counts sum, max-of-max), so it
+is semantics-identical to a direct groupBy(subj, pred, obj) — the
 DuckDB oracle's plan, and what the tests compare it with.
 """
 
@@ -19,7 +17,6 @@ from pyspark.sql import DataFrame, functions as F
 from glirel_spark import config
 from glirel_spark.operators import fixpoint
 
-N_SALT = 16
 N_HUB_CAP = config.NEIGH_HUB_CAP
 _KEYS = ["subj", "pred", "obj"]
 
@@ -39,48 +36,35 @@ def _edges(graph: DataFrame, both_ways: bool = False) -> DataFrame:
     return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
-def materialize_graph(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
+def materialize_graph(linked: DataFrame) -> DataFrame:
     """linked triples -> graph edges with support stats.
 
     Output: subj, pred, obj, n_mentions (total supporting triples),
     n_docs (distinct supporting docs), max_prob, min_doc_id (stable
     sample provenance pointer).
 
-    Plan shape — ONE scan of `linked`, one chain, no join (the round-4
-    rewrite; the earlier form read `linked` twice — a salted-agg branch
-    and a distinct-docs branch — and joined them back):
-      stage A: groupBy(keys, doc_id) — skew-free even when keys alone
-        are hot (doc_id spreads hub triples), map-side combine does
-        most of the work; per-doc count/max make every later stat
-        algebraic, n_docs becomes a row count.
-      stage B (salted partial): groupBy(keys, salt-of-doc) — bounds
-        per-reducer rows for a hub triple supported by billions of
-        docs.
-      stage C (final): groupBy(keys) over <= n_salt rows per key.
+    ONE scan of `linked`, no join, two exchanges, each bounding what
+    one reducer gets of a hot key:
+      stage A: groupBy(keys, doc_id) — doc_id is the salt: a hub triple
+        spreads over every reducer by doc; per-doc count/max make every
+        later stat algebraic.
+      stage B: groupBy(keys), n_docs = the per-doc row count. Its
+        map-side partial aggregate (Spark always runs it) sends at most
+        one row per key from each stage-A partition.
     """
     per_doc = linked.groupBy(*_KEYS, "doc_id").agg(
         F.count("*").alias("_n"),
         F.max("prob").alias("_maxp"),
     )
-    partial = per_doc.withColumn(
-        "_salt", F.pmod(F.hash("doc_id"), F.lit(n_salt))
-    ).groupBy(*_KEYS, "_salt").agg(
-        F.sum("_n").alias("_n"),
-        F.max("_maxp").alias("_maxp"),
-        F.count("*").alias("_nd"),
-        F.min("doc_id").alias("_mind"),
-    )
-    return partial.groupBy(*_KEYS).agg(
+    return per_doc.groupBy(*_KEYS).agg(
         F.sum("_n").cast("long").alias("n_mentions"),
-        F.sum("_nd").cast("long").alias("n_docs"),
+        F.count("*").cast("long").alias("n_docs"),
         F.max("_maxp").alias("max_prob"),
-        F.min("_mind").alias("min_doc_id"),
+        F.min("doc_id").alias("min_doc_id"),
     ).select(*_KEYS, "n_mentions", "n_docs", "max_prob", "min_doc_id")
 
 
-def upsert_graph(
-    existing: DataFrame, new_linked: DataFrame, n_salt: int = N_SALT
-) -> DataFrame:
+def upsert_graph(existing: DataFrame, new_linked: DataFrame) -> DataFrame:
     """Incremental KG maintenance: fold a NEW batch of linked triples
     into an already-materialized graph without rescanning the corpus —
     the production shape (the corpus grows daily; re-aggregating 10^12
@@ -91,7 +75,7 @@ def upsert_graph(
     min-of-min, and n_docs adds PROVIDED batch doc_ids are new —
     which append-only ingestion guarantees (each doc is processed
     exactly once; the same idempotency contract plans/lineage.py
-    enforces for resume). The batch side runs the same salted
+    enforces for resume). The batch side runs the same two-exchange
     materialization as a full build; the merge is one full-outer join
     on the triple key, shuffled on exactly the partitioning a
     key-bucketed graph table already has (on a cluster: the sink table
@@ -100,7 +84,7 @@ def upsert_graph(
     row-for-row — tested, and the driver query's oracle is the full
     rebuild itself.
     """
-    delta = materialize_graph(new_linked, n_salt=n_salt)
+    delta = materialize_graph(new_linked)
     o, d = existing.alias("o"), delta.alias("d")
     both = o.join(d, _KEYS, "full")
 
@@ -135,8 +119,8 @@ def entity_degrees(graph: DataFrame) -> DataFrame:
     Shape: union-all of the two endpoint projections + ONE aggregation.
     Every aggregate is algebraic (sum / count-distinct-over-small-pred-
     set), so map-side combine does the heavy lifting; at 10^12 triples
-    hub entities are exactly the skewed keys the upstream salted
-    materialization already spreads, and the same two-stage pattern
+    hub entities are exactly the skewed keys the upstream
+    materialization already spreads by doc, and the same two-stage pattern
     applies here if a single entity's edge list outgrows a reducer.
     """
     out = graph.select(
@@ -163,7 +147,7 @@ def two_hop_paths(graph: DataFrame, min_mentions: int = 1) -> DataFrame:
     Self equi-join on the bridge entity: both sides shuffle-partition on
     the SAME key (b), so Catalyst plans one exchange per side and no
     broadcast of the (potentially huge) edge set; hub-entity skew on b
-    is the AQE skew-join case, or pre-salt b as in materialization.
+    is the AQE skew-join case, or salt b.
     Self-loops through the bridge (a == b or b == c) are excluded;
     a == c (length-2 cycles) are kept — they are real paths.
     """
@@ -1369,8 +1353,7 @@ def kg_snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     Scale shape: ONE full-outer join keyed on the (subj, pred, obj)
     key of two already-aggregated snapshots (each ~1 row per key —
     no fanout), then a map-only status projection. Hot-entity skew was
-    already absorbed by the salted materialization that produced the
-    inputs.
+    already absorbed by the materialization that produced the inputs.
     """
     o = old.select(
         *_KEYS, F.col("n_mentions").alias("n_before")

@@ -19,6 +19,14 @@ from glirel_spark.plans import api
 from glirel_spark.sources import tables
 
 
+def _interleaved_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    flat = tables.TableIO(spark, sf_dir).table("documents")
+    target = spark.sparkContext.defaultParallelism
+    if flat.rdd.getNumPartitions() < target:
+        flat = flat.repartition(target)
+    return tables.interleaved_documents(flat)
+
+
 def interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaved corpus, MATERIALIZED (cached).
 
@@ -37,11 +45,12 @@ def interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's cache manager keys on the logical plan, so every query in
     the session shares one cache entry per sf_dir.
     """
-    flat = tables.TableIO(spark, sf_dir).table("documents")
-    target = spark.sparkContext.defaultParallelism
-    if flat.rdd.getNumPartitions() < target:
-        flat = flat.repartition(target)
-    return tables.interleaved_documents(flat).cache()
+    return _interleaved_plan(spark, sf_dir).cache()
+
+
+def _docs_tokens_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = tables.text_of(_interleaved_plan(spark, sf_dir))
+    return docs.select("doc_id", F.split("text", " ").alias("tokens"))
 
 
 def docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,8 +61,7 @@ def docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_tokenize.py); the general-text path is
     functions/tokenize.tokens_native.
     """
-    docs = tables.text_of(interleaved(spark, sf_dir))
-    return docs.select("doc_id", F.split("text", " ").alias("tokens")).cache()
+    return _docs_tokens_plan(spark, sf_dir).cache()
 
 
 def docs_ments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,11 +70,14 @@ def docs_ments(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage; the mention table, the pair table, and the decode enrichment
     all derive from it, so one cache entry (plan-keyed, shared across
     every query in the session) replaces three recomputations. On a
-    cluster this is "write the mention-annotated corpus as a table" —
-    the same stage boundary as docs_tokens."""
+    cluster this is "write the mention-annotated corpus as a table".
+    It caches the uncached token plan (with_mentions fences its own
+    arrays), so a job that reads only this pass builds one cache; the
+    cache manager still substitutes a ``docs_tokens`` or ``interleaved``
+    cache that another query built (tests/test_plan_shape.py)."""
     from glirel_spark.operators import fused
 
-    return fused.with_mentions(docs_tokens(spark, sf_dir)).cache()
+    return fused.with_mentions(_docs_tokens_plan(spark, sf_dir)).cache()
 
 
 def mentions(spark: SparkSession, sf_dir: str) -> DataFrame:

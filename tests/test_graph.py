@@ -1,6 +1,6 @@
-"""Linking + graph materialization: alias canonicalization (J7), salted
-two-stage aggregation == direct aggregation (skew-safety is semantics-
-preserving)."""
+"""Linking + graph materialization: alias canonicalization (J7), the
+two-exchange aggregation == direct aggregation (skew-safety is
+semantics-preserving)."""
 
 from __future__ import annotations
 
@@ -57,7 +57,7 @@ def test_link_triples_shape(spark):
     assert (out.subj, out.pred, out.obj) == ("Q:apache_spark", "used by", "Q:customer")
 
 
-def test_salted_equals_direct(spark):
+def test_two_stage_equals_direct(spark):
     # skewed: one hot (subj,pred,obj) key across many docs
     rows = []
     for d in range(40):
@@ -139,12 +139,13 @@ def test_triangles(spark):
     assert {tuple(r) for r in triangles(g).collect()} == {("A", "B", "C")}
 
 
-def test_salted_equals_direct_under_zipfian_skew(spark):
+def test_two_stage_equals_direct_under_zipfian_skew(spark):
     """SURVEY §7 'hot-entity skew': a Zipf-distributed synthetic edge
     set (hottest entity on ~25% of all rows, like a web-scale KG's top
-    entity) must aggregate identically through the salted two-stage
-    plan, and the salted partial must spread the hot key across salt
-    buckets (the property that bounds any one reducer's share)."""
+    entity) must aggregate identically through the two-stage plan, and
+    the exchange into the final aggregate must be fed by a map-side
+    partial aggregate (the property that bounds any one reducer's share
+    of the hot key to one row per upstream partition)."""
     from pyspark.sql import functions as F
 
     n = 20000
@@ -166,16 +167,14 @@ def test_salted_equals_direct_under_zipfian_skew(spark):
         linked.groupBy("subj").count().orderBy(F.desc("count")).first()["count"] / n
     )
     assert hot_share > 0.2  # the distribution really is skewed
-    a = sorted(tuple(r) for r in materialize_graph(linked).collect())
+    g = materialize_graph(linked)
+    a = sorted(tuple(r) for r in g.collect())
     assert a == _direct(linked)
-    # the salted partial splits the hot key into many buckets
-    salted = linked.withColumn("_salt", F.pmod(F.hash("doc_id"), F.lit(16)))
-    buckets = (
-        salted.groupBy("subj", "pred", "obj", "_salt").count()
-        .groupBy("subj", "pred", "obj").count()
-        .orderBy(F.desc("count")).first()["count"]
-    )
-    assert buckets == 16
+    # the final adaptive plan, each node on a line above its first child
+    plan = g._jdf.queryExecution().executedPlan().toString().splitlines()
+    i = next(i for i, line in enumerate(plan)
+             if "Exchange hashpartitioning(subj" in line and "doc_id" not in line)
+    assert "Aggregate(" in plan[i + 1] and "partial_" in plan[i + 1], "\n".join(plan)
 
 
 def _g(spark, edges):

@@ -287,18 +287,70 @@ def test_job_bucket_plan_is_one_narrow_stage(spark):
 def _nodes_outside_cache(df) -> list[str]:
     """One-line description of each physical-plan node, walking the
     tree itself (AQE's toString repeats cached subtrees) and stopping at
-    cache scans."""
+    cache scans. After an action, the adaptive plan is the final one and
+    the walk descends into its query stages."""
     node = df._jdf.queryExecution().executedPlan()
     if node.nodeName() == "AdaptiveSparkPlan":
         node = node.executedPlan()
     out, todo = [], [node]
     while todo:
         node = todo.pop()
+        if node.nodeName().endswith("QueryStage"):
+            node = node.plan()
         out.append(node.simpleString(100))
         if node.nodeName() != "InMemoryTableScan":
             kids = node.children()
             todo += [kids.apply(i) for i in range(kids.size())]
     return out
+
+
+def test_neural_graph_job_builds_one_cache(spark):
+    """documents -> triples_neural -> link -> graph in a session with no
+    other cache reads one cache, the gazetteer pass: its token and
+    interleave plans are not cached under it, so a job builds one
+    cache in one Spark job."""
+    from glirel_spark import config
+    from glirel_spark.operators import graph, linking
+    from glirel_spark.plans import pipeline
+
+    spark.catalog.clearCache()
+    job = graph.materialize_graph(
+        linking.link_triples(pipeline.triples_neural(spark, SF), config.ALIAS_DICT)
+    )
+    # every InMemoryRelation the job reads, nested cached plans included
+    plan = job._jdf.queryExecution().withCachedData().toString()
+    assert plan.count("InMemoryRelation") == 1, plan
+
+
+def test_docs_ments_reads_an_existing_tokens_cache(spark):
+    """The cache manager matches plans: once docs_tokens is cached, the
+    cached plan of docs_ments is built on it (one gazetteer pass over
+    the shared tokens), not on a second tokenization."""
+    from glirel_spark.plans import pipeline
+
+    spark.catalog.clearCache()
+    pipeline.docs_tokens(spark, SF)
+    ments = pipeline.docs_ments(spark, SF)._jdf.queryExecution().withCachedData()
+    assert ments.nodeName() == "InMemoryRelation"
+    cached = ments.cacheBuilder().cachedPlan().toString()
+    assert "InMemoryTableScan [doc_id#" in cached and "tokens#" in cached, cached
+
+
+def test_graph_final_plan_has_two_exchanges(spark):
+    """materialize_graph shuffles twice, into the (triple, doc_id)
+    aggregate and into the final (triple) aggregate: two aggregations,
+    each a partial and a final aggregate node."""
+    from glirel_spark.operators.graph import materialize_graph
+
+    rows = [(f"d{i % 7}", f"s{i % 3}", "p", f"o{i % 2}", i / 50) for i in range(50)]
+    linked = spark.createDataFrame(rows, "doc_id string, subj string, pred string, obj string, prob double")
+    g = materialize_graph(linked)
+    g.collect()  # the final adaptive plan exists only after an action
+    nodes = _nodes_outside_cache(g)
+    exchanges = [n for n in nodes if n.startswith("Exchange")]
+    assert len(exchanges) == 2, "\n".join(nodes)
+    assert all("hashpartitioning" in n for n in exchanges), "\n".join(nodes)
+    assert sum("Aggregate(" in n for n in nodes) == 4, "\n".join(nodes)
 
 
 def test_neural_triples_plan_is_one_repartition_into_the_udf(spark):
@@ -337,16 +389,23 @@ def test_kmeans_ann_plan_is_one_shuffle_without_aggregate(spark):
 
 
 def test_generated_methods_fit_the_jit_limit(spark):
-    """No whole-stage-codegen method of the lexical family, the
-    language-id family or the embedding-search family exceeds HotSpot's
-    8,000-byte JIT limit: a stage over it never leaves the bytecode
-    interpreter (functions/barrier.py). Catalyst inlining an expensive
-    alias into a predicate or into several output columns is what pushes
-    a stage over; the barriers in scoring.lexical_topk1_triples,
-    textstats.lang_id and pq.with_normalized keep it under."""
+    """No whole-stage-codegen method of the gazetteer pass, the lexical
+    family, the language-id family or the embedding-search family
+    exceeds HotSpot's 8,000-byte JIT limit: a stage over it never leaves
+    the bytecode interpreter (functions/barrier.py). Catalyst inlining an
+    expensive alias into a predicate or into several output columns is
+    what pushes a stage over; the barriers in fused.with_mentions,
+    scoring.lexical_topk1_triples, textstats.lang_id and
+    pq.with_normalized keep it under."""
     from glirel_spark.functions.barrier import JIT_METHOD_LIMIT, max_method_bytes
+    from glirel_spark.operators import fused
     from glirel_spark.plans import pipeline
 
+    # the gazetteer pass that docs_ments caches, measured while no cache
+    # holds it (a cached plan measures as its cache scan)
+    spark.catalog.clearCache()
+    sizes = {"docs_ments": max_method_bytes(
+        fused.with_mentions(pipeline._docs_tokens_plan(spark, SF)))}
     plans = {"extract_bucket": _job_bucket(spark)}
     for fn in (pipeline.triples, pipeline.graph, pipeline.pred_type_signature,
                pipeline.lang_id, pipeline.lang_confusion, pipeline.corpus_routing,
@@ -354,7 +413,7 @@ def test_generated_methods_fit_the_jit_limit(spark):
                pipeline.ann_topk_pq, pipeline.ann_topk_pq_rerank,
                pipeline.ann_topk_ivfpq):
         plans[fn.__name__] = fn(spark, SF)
-    sizes = {name: max_method_bytes(df) for name, df in plans.items()}
+    sizes |= {name: max_method_bytes(df) for name, df in plans.items()}
     # 0 would mean the probe saw no codegen stage (e.g. an AQE plan)
     assert all(sizes.values()), f"a plan has no codegen stage: {sizes}"
     over = {name: n for name, n in sizes.items() if n > JIT_METHOD_LIMIT}
