@@ -170,10 +170,8 @@ for r in reps[1:]:
     big = big.unionByName(r)
 big = big.repartition(total_cores * 2)
 inter = tables.interleaved_documents(big)
-dt = tables.text_of(inter).select(
-    "doc_id", F.split("text", " ").alias("tokens"))
 # the cached gazetteer/hygiene pass: every timed run re-reads it
-dm = fused.with_mentions(dt).cache()
+dm = fused.with_mentions(tables.docs_tokens(inter)).cache()
 
 def job():
     {body}.write.format("noop").mode("overwrite").save()

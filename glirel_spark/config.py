@@ -95,7 +95,6 @@ SCORE_W_LCH = 23
 # decode thresholds (reference threshold grid: config_wiki_zsl.yaml:65)
 THRESHOLD = 0.5
 THRESHOLD_GRID = [0.01, 0.1, 0.2, 0.3, 0.5, 0.6]
-TOP_K = 1  # per entity pair (config_wiki_zsl.yaml:62)
 
 # gold standard for the evaluation replay = lexical score above this raw
 # value (so gold is deterministically derivable in both engines)

@@ -15,14 +15,14 @@ Design (SURVEY.md §4, north_star):
   transformer forward as the word reps — no cross-doc caching is
   possible, and none is attempted.
 - output has one of two shapes:
-  * at top_k = 1 (``neural_triples_from``) the threshold, the per-pair
-    argmax and the P9 type constraint run inside the UDF
-    (``top1_decode``), and it emits the formatted triples
+  * ``neural_triples_from`` (every top_k) runs the threshold, the
+    per-pair top-k and the P9 type constraint inside the UDF
+    (``topk_decode``) and emits the formatted triples
     (``decode.TRIPLES_SCHEMA``) — no decode shuffle, no enrichment
-    joins, ~|labels|x fewer rows out of Python;
-  * otherwise (``score_pairs_neural``) it emits the scored-pair
-    relation (doc_id, positions, label, prob), the same shape the
-    lexical scorer produces, for the relational decode / eval plans.
+    joins, ~|labels|/k x fewer rows out of Python;
+  * ``score_pairs_neural`` emits the scored-pair relation (doc_id,
+    positions, label, prob), the same shape the lexical scorer
+    produces, for the relational calibration / reference-eval plans.
 """
 
 from __future__ import annotations
@@ -57,40 +57,43 @@ def pack_mentions(docs_tokens: DataFrame, mentions: DataFrame) -> DataFrame:
     return docs_tokens.join(packed, "doc_id")
 
 
-def top1_decode(
+def topk_decode(
     probs: np.ndarray,
     threshold: float,
+    k: int,
     h_types: np.ndarray,
     t_types: np.ndarray,
     constraints: list[tuple[list[str] | None, list[str] | None]],
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The k=1 decode of one document's scores -> (kept pair indices,
-    their label indices).
+    """The top-k decode of one document's scores -> (pair index, label
+    index) of every kept (pair, rank), pair-major then rank order.
 
     ``probs`` [P, C] is ``score_doc``'s output over ASCENDING labels;
     ``h_types``/``t_types`` are the pairs' head/tail mention types and
     ``constraints[c]`` the (allowed_head, allowed_tail) of label c
     (None = unconstrained, [] = nothing allowed). Row-identical to the
-    relational threshold -> top_k_per_pair(1) -> constraint_filter chain:
-    - np.argmax returns the FIRST maximum, i.e. (prob desc, label asc);
-    - at k=1, argmax-then-threshold == threshold-then-argmax;
-    - the constraint applies to the best label only (decode applies P9
-      after top-k), so a pair whose best label fails it is dropped, not
-      re-assigned to its runner-up.
+    relational threshold -> top_k_per_pair(k) -> constraint_filter chain:
+    - a stable argsort of -probs ranks (prob desc, label asc); its first
+      column is np.argmax's first maximum;
+    - the labels above the threshold are a prefix of that ranking, so
+      ranking-then-threshold == threshold-then-ranking;
+    - the constraint applies to each kept label (decode applies P9
+      after top-k), so a failing label is dropped, not replaced by the
+      next one in rank.
     """
-    best = np.argmax(probs, axis=1)
-    keep = probs[np.arange(len(best)), best] > threshold
+    order = np.argsort(-probs, axis=1, kind="stable")[:, :k]
+    keep = np.take_along_axis(probs, order, axis=1) > threshold
     for c, (ah, at) in enumerate(constraints):
         if ah is None and at is None:
             continue
-        ok = np.ones(len(best), dtype=bool)
+        ok = np.ones(len(order), dtype=bool)
         if ah is not None:
             ok &= _isin(h_types, ah)
         if at is not None:
             ok &= _isin(t_types, at)
-        keep &= (best != c) | ok
-    idx = np.flatnonzero(keep)
-    return idx, best[idx]
+        keep &= (order != c) | ok[:, None]
+    pidx, rank = np.nonzero(keep)
+    return pidx, order[pidx, rank]
 
 
 def _isin(values: np.ndarray, allowed: list[str]) -> np.ndarray:
@@ -135,54 +138,29 @@ def score_pairs_neural(
 def neural_triples_from(
     docs_ments: DataFrame,
     threshold: float = config.THRESHOLD,
-    top_k: int | None = None,
+    top_k: int = 1,
     labels: dict[str, dict[str, list[str]]] | None = None,
 ) -> DataFrame:
-    """(doc_id, tokens, _ments) -> formatted triples: the one place the
-    neural path picks its plan (``top_k`` None = config.TOP_K).
-
-    top_k = 1: one round-robin repartition, one mapInPandas that scores
-    AND decodes (``top1_decode``), then nothing — mention text and type
-    ride through the packed input, so there is no decode shuffle and no
-    enrichment join. Otherwise: the scored relation through the slim
-    relational decode (threshold and top-k on pair keys + label + prob,
-    mention texts/types and the constraint dimension joined against the
-    survivors only).
+    """(doc_id, tokens, _ments) -> formatted triples, one plan for
+    every ``top_k``: one round-robin repartition, one mapInPandas that
+    scores AND decodes (``topk_decode``), then nothing — mention text
+    and type ride through the packed input, so there is no decode
+    shuffle and no enrichment join.
     """
-    if top_k is None:
-        top_k = config.TOP_K
     label_dict = config.RELATION_LABELS if labels is None else labels
     table = scoring_ops.label_constraints(label_dict)
-    label_tuple = tuple(lab for lab, _, _ in table)
-    if top_k == 1:
-        top1 = (threshold, [(ah, at) for _, ah, at in table])
-        return _scorer_stage(
-            docs_ments, label_tuple, config.MAX_PAIR_DISTANCE, top1=top1
-        )
-    scored = _scorer_stage(docs_ments, label_tuple, config.MAX_PAIR_DISTANCE)
-    best = decode_ops.top_k_per_pair(
-        decode_ops.threshold_filter(scored, threshold), top_k
+    decode = (threshold, top_k, [(ah, at) for _, ah, at in table])
+    return _scorer_stage(
+        docs_ments, tuple(lab for lab, _, _ in table),
+        config.MAX_PAIR_DISTANCE, decode=decode,
     )
-    m = docs_ments.select("doc_id", F.explode("_ments").alias("m")).select(
-        "doc_id", "m.start", "m.end", "m.type", "m.text"
-    )
-    h = m.toDF("doc_id", "h_start", "h_end", "h_type", "h_text")
-    t = m.toDF("doc_id", "t_start", "t_end", "t_type", "t_text")
-    ldf = scoring_ops.labels_df_from_dict(docs_ments.sparkSession, label_dict)
-    enriched = (
-        best.join(h, ["doc_id", "h_start", "h_end"])
-        .join(t, ["doc_id", "t_start", "t_end"])
-        .join(F.broadcast(ldf), "label", "left")
-        .withColumn("raw", F.lit(None).cast("int"))
-    )
-    return decode_ops.format_output(decode_ops.constraint_filter(enriched))
 
 
 def neural_triples(
     docs_tokens: DataFrame,
     mentions: DataFrame,
     threshold: float = config.THRESHOLD,
-    top_k: int | None = None,
+    top_k: int = 1,
     labels: dict[str, dict[str, list[str]]] | None = None,
 ) -> DataFrame:
     """``neural_triples_from`` for a mention table (doc_id, start, end,
@@ -198,19 +176,20 @@ def _scorer_stage(
     label_tuple: tuple[str, ...],
     max_distance: int | None,
     labels_col: str | None = None,
-    top1: tuple[float, list] | None = None,
+    decode: tuple[float, int, list] | None = None,
 ) -> DataFrame:
     """docs with >= 2 mentions -> repartition -> the scorer mapInPandas.
 
-    ``top1`` = (threshold, per-label constraints) decodes in the UDF and
-    emits decode.TRIPLES_SCHEMA; None emits the scored relation.
+    ``decode`` = (threshold, top_k, per-label constraints) decodes in
+    the UDF and emits decode.TRIPLES_SCHEMA; None emits the scored
+    relation.
     """
 
     cols = [
         "doc_id", "tokens",
         F.col("_ments.start").alias("_ms"), F.col("_ments.end").alias("_me"),
     ]
-    if top1 is not None:
+    if decode is not None:
         cols += [F.col("_ments.type").alias("_mt"), F.col("_ments.text").alias("_mx")]
     if labels_col:
         cols.append(F.col(labels_col).alias("_labels"))
@@ -231,19 +210,19 @@ def _scorer_stage(
     sc = docs_ments.sparkSession.sparkContext
     packed = packed.repartition(sc.defaultParallelism)
     return packed.mapInPandas(
-        _scorer(label_tuple, max_distance, top1),
-        _SCORED_SCHEMA if top1 is None else decode_ops.TRIPLES_SCHEMA,
+        _scorer(label_tuple, max_distance, decode),
+        _SCORED_SCHEMA if decode is None else decode_ops.TRIPLES_SCHEMA,
     )
 
 
 def _scorer(
     label_tuple: tuple[str, ...],
     max_distance: int | None,
-    top1: tuple[float, list] | None,
+    decode: tuple[float, int, list] | None,
 ):
     """The mapInPandas function: per Arrow batch, encode every document,
-    score its pairs, and emit the scored relation or, with ``top1``, the
-    decoded triples — one pandas frame per batch."""
+    score its pairs, and emit the scored relation or, with ``decode``,
+    the decoded triples — one pandas frame per batch."""
     labels_arr = np.asarray(label_tuple, dtype=object)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -284,7 +263,7 @@ def _scorer(
                 )
                 if len(pidx) == 0:
                     continue
-                if top1 is None:
+                if decode is None:
                     n_lab = len(row_labels)
                     lab = (labels_arr if row_labels is label_tuple
                            else np.asarray(row_labels, dtype=object))
@@ -293,9 +272,9 @@ def _scorer(
                             "prob": probs.reshape(-1)}
                 else:
                     types = np.asarray(pdf["_mt"].iat[i], dtype=object)[src]
-                    keep, best = top1_decode(
-                        probs, top1[0], types[pidx[:, 0]], types[pidx[:, 1]],
-                        top1[1],
+                    keep, best = topk_decode(
+                        probs, decode[0], decode[1], types[pidx[:, 0]],
+                        types[pidx[:, 1]], decode[2],
                     )
                     if len(keep) == 0:
                         continue
@@ -311,7 +290,7 @@ def _scorer(
                 for k, a in cols.items():
                     parts.setdefault(k, []).append(a)
             if parts:
-                yield _frame(pdf["doc_id"], parts, top1 is not None)
+                yield _frame(pdf["doc_id"], parts, decode is not None)
 
     return run
 

@@ -31,7 +31,7 @@ def threshold_filter(scored: DataFrame, threshold: float = config.THRESHOLD) -> 
     return scored.filter(F.col("prob") > F.lit(threshold))
 
 
-def top_k_per_pair(scored: DataFrame, k: int = config.TOP_K) -> DataFrame:
+def top_k_per_pair(scored: DataFrame, k: int = 1) -> DataFrame:
     """k == 1 (the reference's eval setting) runs as an AGGREGATION, not
     a window: min(struct(-prob, label, payload)) per pair key gets
     map-side partial combine, so the shuffle carries ONE row per pair
@@ -80,7 +80,7 @@ def constraint_filter(triples: DataFrame) -> DataFrame:
 
 
 # The schema format_output produces — the one triples contract every
-# scorer path emits (the neural k=1 scorer builds it inside its UDF).
+# scorer path emits (the neural scorer builds it inside its UDF).
 TRIPLES_SCHEMA = (
     "doc_id string, head_start int, head_end int, tail_start int, "
     "tail_end int, head_text string, tail_text string, label string, "
@@ -108,7 +108,7 @@ def format_output(triples: DataFrame) -> DataFrame:
 def decode(
     scored: DataFrame,
     threshold: float = config.THRESHOLD,
-    top_k: int = config.TOP_K,
+    top_k: int = 1,
 ) -> DataFrame:
     """threshold -> top-k -> constraints -> format, over a scored
     relation that carries its payload (mention texts/types and the

@@ -10,8 +10,15 @@
   A2 macro (per-label P/R/F then unweighted mean, `_prf_divide`
   zero-division -> 0).
 - W5 threshold search: score ONCE, decode per threshold (the reference
-  re-decodes a cached forward pass, model.py:638; relationally this is
-  a crossJoin with the threshold grid — the scored DataFrame is reused).
+  re-decodes a cached forward pass, model.py:638). For the lexical
+  scorer at k=1 the per-pair argmax and the gold set are row-local, so
+  every threshold's counts come out of one pass over the pair relation
+  (``threshold_search_lexical``).
+
+The gold standard is deterministic: every (pair, label) whose lexical
+raw score is >= ``config.GOLD_RAW_MIN``. The fused forms here are
+checked against the DuckDB oracle (oracle.q_eval_counts /
+q_threshold_search, tests/test_fused_decode.py).
 
 Float determinism for the oracle: micro metrics derive from integer
 sums; macro means are computed by a SORTED left-fold over per-label
@@ -26,11 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 from glirel_spark import config
 
 _POS = ["doc_id", "h_start", "h_end", "t_start", "t_end"]
-
-
-def gold_triples(scored: DataFrame, raw_min: int = config.GOLD_RAW_MIN) -> DataFrame:
-    """Deterministic gold standard: lexical raw >= raw_min (dedup'd)."""
-    return scored.filter(F.col("raw") >= raw_min).select(*_POS, "label").distinct()
 
 
 def annotated_pairs_filter(preds: DataFrame, gold: DataFrame) -> DataFrame:
@@ -132,63 +134,6 @@ def _grid_nb(prob: "F.Column", gs: list[float]) -> "F.Column":
     )
 
 
-def _suffix_sum_counts(bb: DataFrame, g: DataFrame, gs: list[float]) -> DataFrame:
-    """Per-(threshold, label) counts from the per-pair best relation.
-
-    ``bb``: one row per gold-annotated pair — (label = argmax label,
-    _nb = thresholds its prob exceeds, _hit = argmax label in the
-    pair's gold set). ``g``: the gold (pair, label) relation flattened
-    to one row per gold label occurrence (position columns optional —
-    only the label column is consumed here).
-    """
-    true_n = g.groupBy("label").agg(F.count("*").alias("true_n"))
-    agg = (
-        bb.filter(F.col("_nb") > 0)
-        .groupBy("label", "_nb")
-        .agg(F.count("*").alias("_n"), F.sum("_hit").alias("_tp"))
-    )
-    return _suffix_sum_counts_grouped(
-        agg, g.select("label").distinct(), true_n, gs
-    )
-
-
-def _suffix_sum_counts_grouped(
-    agg: DataFrame, gold_labels: DataFrame, true_n: DataFrame, gs: list[float]
-) -> DataFrame:
-    """Counts tail over pre-aggregated inputs: ``agg`` (label, _nb, _n,
-    _tp), ``gold_labels`` (distinct gold label vocabulary), ``true_n``
-    (label, true_n)."""
-    spark = agg.sparkSession
-    grid_df = spark.createDataFrame([(t,) for t in sorted(set(gs))], "threshold double")
-    th_map = spark.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(gs)], "_ti int, threshold double"
-    )
-    pl = (
-        agg.select(
-            "label",
-            F.explode(F.sequence(F.lit(1), F.col("_nb"))).alias("_ti"),
-            "_n", "_tp",
-        )
-        .groupBy("label", "_ti")
-        .agg(F.sum("_n").alias("pred_n"), F.sum("_tp").alias("tp"))
-        .join(F.broadcast(th_map), "_ti")
-        .select("threshold", "label", "tp", "pred_n")
-    )
-    base = grid_df.crossJoin(gold_labels).unionByName(
-        pl.select("threshold", "label")
-    ).distinct()
-    return (
-        base.join(pl, ["threshold", "label"], "left")
-        .join(true_n, "label", "left")
-        .select(
-            "threshold", "label",
-            F.coalesce("tp", F.lit(0)).cast("long").alias("tp"),
-            F.coalesce("pred_n", F.lit(0)).cast("long").alias("pred_n"),
-            F.coalesce("true_n", F.lit(0)).cast("long").alias("true_n"),
-        )
-    )
-
-
 def _gold_labels(labs: list[str], raws: list["F.Column"], raw_min: int) -> "F.Column":
     """The pair's gold label set: every label whose lexical raw score is
     >= ``raw_min``, in ``labs`` order."""
@@ -206,11 +151,10 @@ def gold_triples_lexical(
     labels: dict[str, dict[str, list[str]]] | None = None,
     raw_min: int = config.GOLD_RAW_MIN,
 ) -> DataFrame:
-    """The deterministic gold relation (``gold_triples`` over the
-    lexical scorer), derived row-locally from the pair relation: one
-    narrow explode, no pairs × labels expansion, no distinct (one row
-    per (pair, label) by construction). Same row set as
-    ``gold_triples(score_pairs_lexical(rel_pairs, labels_df))``."""
+    """The deterministic gold relation (every (pair, label) whose
+    lexical raw score is >= ``raw_min``), derived row-locally from the
+    pair relation: one narrow explode, no pairs × labels expansion, no
+    distinct (one row per (pair, label) by construction)."""
     from glirel_spark.functions.barrier import materialized
     from glirel_spark.operators.scoring import lexical_base, lexical_label_raws
 
@@ -229,8 +173,9 @@ def eval_counts_lexical(
     raw_min: int = config.GOLD_RAW_MIN,
 ) -> DataFrame:
     """A3 per-label counts fused to the pair row (round-6), row-exact to
-    ``per_label_counts(annotated_pairs_filter(_eval_preds, gold), gold)``
-    over the lexical scorer at k=1: the decoded prediction (argmax +
+    ``per_label_counts(annotated_pairs_filter(preds, gold), gold)`` over
+    the lexical scorer's k=1 triples (oracle.q_eval_counts): the
+    decoded prediction (argmax +
     threshold + P9 constraint), the J5 annotated filter (gold set
     non-empty) and the TP test (argmax label ∈ gold set) are all
     row-local, so the counts need ONE narrow pass + one
@@ -301,10 +246,10 @@ def threshold_search_lexical(
     (argmax label ∈ gold set) are ALL row-local expressions on the pair
     relation — the 5.4M-row scored cache, the per-pair argmax exchange,
     and the best⋈gold join of the scored-relation form disappear
-    (guide §2.4). Counts and metric arithmetic run through exactly the
-    same code as ``threshold_search`` (``_suffix_sum_counts`` /
-    ``_grid_metrics``), so the output is bit-identical — asserted by
-    tests/test_fused_decode.py and the unchanged oracle.
+    (guide §2.4). Per-threshold counts are a suffix sum over the grid
+    buckets; the metric arithmetic is ``_grid_metrics``. Hash-equal to
+    oracle.q_threshold_search, which decodes the scored relation at
+    every threshold (tests/test_fused_decode.py).
     """
     from glirel_spark.functions.barrier import materialized
     from glirel_spark.operators.scoring import (
@@ -396,121 +341,9 @@ def threshold_search_lexical(
     return _grid_metrics(counts)
 
 
-def threshold_search(
-    scored: DataFrame,
-    gold: DataFrame,
-    grid: list[float] = config.THRESHOLD_GRID,
-    top_k: int = config.TOP_K,
-) -> DataFrame:
-    """W5: one scored DataFrame, decoded at every threshold.
-
-    Implemented as crossJoin with the grid then a single window per
-    (threshold, pair) — Spark evaluates all thresholds in one pass over
-    the scored relation (the reference's forward-pass reuse, made
-    automatic by relational form). Returns per-threshold metrics.
-    """
-    from pyspark.sql import Window as W
-
-    grid_df = scored.sparkSession.createDataFrame(
-        [(t,) for t in grid], "threshold double"
-    )
-    g = gold.select(*_POS, "label").distinct()
-    gold_pos = gold.select(*_POS).distinct()
-    true_n = g.groupBy("label").agg(F.count("*").alias("true_n"))
-    if top_k == 1:
-        # Algebraic rewrite, two steps. (1) With k=1 the survivor at
-        # threshold t is the global per-pair argmax whenever its
-        # prob > t — compute the argmax ONCE as an aggregation
-        # (map-side combined; see decode.top_k_per_pair). (2) The
-        # per-threshold counts are a SUFFIX SUM over prob buckets:
-        # with the grid sorted ascending, a pair whose prob exceeds
-        # exactly nb thresholds contributes to thresholds 1..nb, so
-        # one groupBy(label, nb) on the big side + an explode of the
-        # TINY (label x |grid|) relation replaces the old grid
-        # crossJoin + distinct + two semi-joins over |pairs| x |grid|
-        # rows (that chain dominated the query at ~9s warm in the
-        # round-4 bench).
-        # set(): a duplicated grid value would otherwise yield two _ti
-        # rows in th_map for the same threshold and duplicate count rows.
-        gs = sorted(set(grid))
-        best = (
-            scored.groupBy(*_POS)
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("prob")).alias("_np"),
-                        F.col("label").alias("_lab"),
-                    )
-                ).alias("_b")
-            )
-            .select(*_POS, F.col("_b._lab").alias("label"),
-                    (-F.col("_b._np")).alias("prob"))
-        )
-        # J5 annotated-pairs filter + gold-hit marking as ONE inner
-        # join: gold folded to a per-position label set, the inner
-        # join IS the annotated semi-filter, and the hit flag is an
-        # array membership test — one shuffle instead of two.
-        gp = g.groupBy(*_POS).agg(F.collect_set("label").alias("_glabs"))
-        bb = best.join(gp, _POS).select(
-            "label", _grid_nb(F.col("prob"), gs).alias("_nb"),
-            F.array_contains("_glabs", F.col("label")).cast("int").alias("_hit"),
-        )
-        counts = _suffix_sum_counts(bb, g, gs)
-    else:
-        st = scored.crossJoin(F.broadcast(grid_df)).filter(
-            F.col("prob") > F.col("threshold")
-        )
-        w = W.partitionBy("threshold", *_POS).orderBy(F.desc("prob"), F.asc("label"))
-        preds = (
-            st.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= top_k)
-            .select("threshold", *_POS, "label")
-        )
-        preds = preds.join(gold_pos, _POS, "left_semi")
-        # per-threshold per-label counts, then metrics (same math)
-        p = preds.distinct()
-        tp = p.join(g, _POS + ["label"], "left_semi").groupBy(
-            "threshold", "label"
-        ).agg(F.count("*").alias("tp"))
-        pred_n = p.groupBy("threshold", "label").agg(F.count("*").alias("pred_n"))
-        base = grid_df.crossJoin(g.select("label").distinct()).unionByName(
-            p.select("threshold", "label").distinct()
-        ).distinct()
-        counts = (
-            base.join(tp, ["threshold", "label"], "left")
-            .join(pred_n, ["threshold", "label"], "left")
-            .join(true_n, "label", "left")
-            .select(
-                "threshold", "label",
-                F.coalesce("tp", F.lit(0)).cast("long").alias("tp"),
-                F.coalesce("pred_n", F.lit(0)).cast("long").alias("pred_n"),
-                F.coalesce("true_n", F.lit(0)).cast("long").alias("true_n"),
-            )
-        )
-    return _grid_metrics(counts)
-
-
-def threshold_search_pairs(rel_pairs: DataFrame) -> DataFrame:
-    """W5 grid search for the lexical scorer over the relation pairs, at
-    ``config.TOP_K`` read at call time: the row-local
-    ``threshold_search_lexical`` at k=1, the scored-relation
-    ``threshold_search`` otherwise. The one ``TOP_K`` guard shared by the
-    ``threshold_search`` pipeline query and the spark-submit job's eval
-    report."""
-    if config.TOP_K == 1:
-        return threshold_search_lexical(rel_pairs)
-    from glirel_spark.operators import scoring
-
-    s = scoring.score_pairs_lexical(
-        rel_pairs, scoring.labels_df(rel_pairs.sparkSession)
-    )
-    return threshold_search(s, gold_triples(s), top_k=config.TOP_K)
-
-
 def _grid_metrics(counts: DataFrame) -> DataFrame:
     """Per-threshold micro/macro metrics from per-(threshold, label)
-    counts — shared, unchanged float math (sorted fold for cross-engine
-    bit-stability) for every threshold-search plan."""
+    counts (a sorted fold for cross-engine bit-stability)."""
     per = counts.select(
         "threshold", "label",
         _safe_div(F.col("tp"), F.col("pred_n")).alias("p"),

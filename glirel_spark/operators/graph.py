@@ -363,39 +363,26 @@ def pred_functionality(graph: DataFrame) -> DataFrame:
     )
 
 
-def pred_type_signature(
-    scored: DataFrame | None = None, decoded: DataFrame | None = None
-) -> DataFrame:
+def pred_type_signature(decoded: DataFrame) -> DataFrame:
     """Relation type signatures: for each predicate, the distribution of
     (head entity type, tail entity type) slots over decoded triples —
     the schema-induction step that turns an untyped triple store into
-    "works_for: PER -> ORG (0.94)". Consumes the typed scored relation
-    (pre-format decode keeps h_type/t_type on the row, so no join back
+    "works_for: PER -> ORG (0.94)". Consumes the typed decoded relation
+    (label, h_type, t_type; e.g. scoring.lexical_topk1_triples with
+    formatted=False, which keeps the types on the row, so no join back
     to mentions is needed).
 
     Output per (pred, subj_type, obj_type): ``n`` supporting triples,
     ``n_pred`` total for the predicate, and ``share`` = n / n_pred (one
     exactly-rounded division).
 
-    Scale shape: decode is the existing fused plan; the signature agg is
-    a tiny-result groupBy with full map-side combine (cube of |labels| x
-    |types|^2 keys), and the per-pred totals re-aggregate FROM the
-    signature relation itself — no second pass over triples, and the
-    totals join is broadcast.
+    Scale shape: the signature agg is a tiny-result groupBy with full
+    map-side combine (cube of |labels| x |types|^2 keys), and the
+    per-pred totals re-aggregate FROM the signature relation itself —
+    no second pass over triples, and the totals join is broadcast.
     """
-    from glirel_spark.operators import decode
-
-    if decoded is not None:
-        # round-6: callers on the fused k=1 plan pass the already
-        # decoded typed relation (scoring.lexical_topk1_triples
-        # formatted=False) — no scored-relation expansion to re-decode
-        t = decoded
-    else:
-        t = decode.threshold_filter(scored)
-        t = decode.top_k_per_pair(t, config.TOP_K)
-        t = decode.constraint_filter(t)
     sig = (
-        t.groupBy(
+        decoded.groupBy(
             F.col("label").alias("pred"),
             F.col("h_type").alias("subj_type"),
             F.col("t_type").alias("obj_type"),

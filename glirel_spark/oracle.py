@@ -142,7 +142,7 @@ scored AS (
 """
 
 
-def cte_triples(threshold: float = c.THRESHOLD, top_k: int = c.TOP_K,
+def cte_triples(threshold: float = c.THRESHOLD, top_k: int = 1,
                 constrained: bool = True) -> str:
     constraint = ""
     if constrained:
@@ -387,11 +387,13 @@ def q_eval_metrics() -> str:
     )
 
 
-def q_threshold_search() -> str:
+def q_threshold_search(
+    grid: list[float] = c.THRESHOLD_GRID, raw_min: int = c.GOLD_RAW_MIN
+) -> str:
     """W5: per-threshold metrics over the grid, decoding once-scored rows."""
-    grid = ", ".join(f"({t})" for t in c.THRESHOLD_GRID)
+    values = ", ".join(f"({t})" for t in grid)
     body = f"""
-grid(threshold) AS (VALUES {grid}),
+grid(threshold) AS (VALUES {values}),
 st AS (
   SELECT s.*, g.threshold,
          row_number() OVER (
@@ -402,12 +404,12 @@ st AS (
 ),
 gold AS (
   SELECT DISTINCT doc_id, h_start, h_end, t_start, t_end, label
-  FROM scored WHERE raw >= {c.GOLD_RAW_MIN}
+  FROM scored WHERE raw >= {raw_min}
 ),
 preds AS (
   SELECT DISTINCT p.threshold, p.doc_id, p.h_start, p.h_end, p.t_start, p.t_end, p.label
   FROM st p
-  WHERE p._rk <= {c.TOP_K} AND EXISTS (
+  WHERE p._rk = 1 AND EXISTS (
     SELECT 1 FROM gold g WHERE g.doc_id = p.doc_id AND g.h_start = p.h_start
       AND g.h_end = p.h_end AND g.t_start = p.t_start AND g.t_end = p.t_end)
 ),
@@ -723,7 +725,7 @@ def q_pred_type_signature() -> str:
 , typed AS (
   SELECT label AS pred, h_type AS subj_type, t_type AS obj_type
   FROM thresholded
-  WHERE _rk <= {c.TOP_K}
+  WHERE _rk = 1
     AND (allowed_head IS NULL OR list_contains(allowed_head, h_type))
     AND (allowed_tail IS NULL OR list_contains(allowed_tail, t_type))
 ),

@@ -25,14 +25,15 @@ def triples_from(
     docs_ments: DataFrame,
     labels: dict[str, dict[str, list[str]]] | None = None,
     threshold: float = config.THRESHOLD,
-    top_k: int | None = None,
+    top_k: int = 1,
     scorer: str = "lexical",
 ) -> DataFrame:
     """(doc_id, tokens, _ments) -> relation table: the one place the
-    extraction plan is chosen (``top_k`` None = config.TOP_K, read at
-    call time; scorer='lexical' | 'neural').
+    extraction plan is chosen, and the one place a caller picks
+    ``top_k`` (labels kept per entity pair; 1 is the reference's eval
+    setting, config_wiki_zsl.yaml:62). scorer='lexical' | 'neural'.
 
-    - neural: ``udf.neural_triples_from`` (scores and, at k=1, decodes
+    - neural: ``udf.neural_triples_from`` (scores and decodes at any k
       inside one mapInPandas);
     - lexical k=1: the fused per-row label argmax — the lexical label
       terms are literals, so it is one narrow projection, zero
@@ -47,12 +48,14 @@ def triples_from(
     Docs with < 2 mentions fall out naturally (no pairs; the reference
     requires >= 2 entities, spacy_integration.py:96-99). An empty label
     dict yields an empty relation table of the same schema. No cache is
-    added here: each plan reads ``docs_ments`` once (the neural k>1
-    enrichment aside), so callers decide what to materialize.
+    added here: each plan reads ``docs_ments`` once, so callers decide
+    what to materialize. ``top_k`` < 1 raises ValueError: the scorers
+    would otherwise read it differently (the relational rank filter
+    keeps nothing, the in-UDF rank slice counts from the end).
     """
+    if top_k < 1:
+        raise ValueError(f"top_k must be >= 1, got {top_k}")
     spark = docs_ments.sparkSession
-    if top_k is None:
-        top_k = config.TOP_K
     label_dict = labels if labels is not None else config.RELATION_LABELS
     if not label_dict:
         return spark.createDataFrame([], decode_ops.TRIPLES_SCHEMA)
@@ -71,7 +74,7 @@ def extract_triples(
     docs_tokens: DataFrame,
     labels: dict[str, dict[str, list[str]]] | None = None,
     threshold: float = config.THRESHOLD,
-    top_k: int | None = None,
+    top_k: int = 1,
     scorer: str = "lexical",
 ) -> DataFrame:
     """documents (doc_id, tokens) -> relation table (``triples_from``

@@ -49,18 +49,12 @@ def interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_tokens_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = tables.text_of(_interleaved_plan(spark, sf_dir))
-    return docs.select("doc_id", F.split("text", " ").alias("tokens"))
+    return tables.docs_tokens(_interleaved_plan(spark, sf_dir))
 
 
 def docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id string, tokens array<string>) from the interleaved corpus.
-
-    The corpus text is single-space-joined closed-vocabulary words, so
-    split-by-space == the reference regex tokenizer (asserted in
-    tests/test_tokenize.py); the general-text path is
-    functions/tokenize.tokens_native.
-    """
+    """(doc_id string, tokens array<string>) from the interleaved corpus
+    (``tables.docs_tokens``), cached."""
     return _docs_tokens_plan(spark, sf_dir).cache()
 
 
@@ -103,9 +97,9 @@ def triples(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = config.THRESHOLD,
-    top_k: int | None = None,
+    top_k: int = 1,
 ) -> DataFrame:
-    # api.triples_from picks the plan: at k=1 (the shipped config) the
+    # api.triples_from picks the plan: at k=1 (the reference's eval) the
     # fused per-row label argmax off the cached gazetteer pass, zero
     # exchanges; otherwise the payload decode over the scored relation
     return api.triples_from(
@@ -135,30 +129,12 @@ def cluster_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- evaluation replay ------------------------------------------------------
 
-def _eval_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """triples back in inclusive-index space for gold matching."""
-    return triples(spark, sf_dir).select(
-        "doc_id",
-        F.col("head_start").alias("h_start"),
-        (F.col("head_end") - 1).alias("h_end"),
-        F.col("tail_start").alias("t_start"),
-        (F.col("tail_end") - 1).alias("t_end"),
-        "label",
-    )
-
-
 def eval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import evaluate
 
-    if config.TOP_K != 1:
-        s = scored(spark, sf_dir)
-        gold = evaluate.gold_triples(s)
-        return evaluate.per_label_counts(
-            evaluate.annotated_pairs_filter(_eval_preds(spark, sf_dir), gold), gold
-        )
     # round-6: decode + J5 filter + TP test are row-local on the pair
     # relation for the lexical scorer at k=1 (evaluate.py docstring);
-    # bit-identical to the scored-relation chain, same unchanged oracle.
+    # hash-equal to the q_eval_counts oracle (tests/test_fused_decode.py).
     return evaluate.eval_counts_lexical(
         pairs(spark, sf_dir).filter("is_rel")
     )
@@ -177,8 +153,8 @@ def threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmax, the gold label set, the annotated filter, and the gold-hit
     # flag are all row-local on the pair relation — no scored cache, no
     # |labels|x expansion, no best⋈gold join (evaluate.py docstring;
-    # bit-identical output, same unchanged oracle)
-    return evaluate.threshold_search_pairs(
+    # hash-equal to the q_threshold_search oracle)
+    return evaluate.threshold_search_lexical(
         pairs(spark, sf_dir).filter("is_rel")
     )
 
@@ -282,13 +258,11 @@ def pred_functionality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pred_type_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import graph as graph_ops
 
-    if config.TOP_K != 1:
-        return graph_ops.pred_type_signature(scored(spark, sf_dir))
-    # round-6: feed the fused k=1 decoded relation directly (same rows
-    # as decode-over-scored, tests/test_fused_decode.py) — no pairs x
-    # labels expansion
+    # round-6: feed the fused k=1 decoded relation directly (hash-equal
+    # to the q_pred_type_signature oracle, tests/test_fused_decode.py)
+    # — no pairs x labels expansion
     return graph_ops.pred_type_signature(
-        decoded=scoring_ops.lexical_topk1_triples(
+        scoring_ops.lexical_topk1_triples(
             pairs(spark, sf_dir).filter("is_rel"), formatted=False
         )
     )
@@ -341,7 +315,7 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- tensor-plane (neural) path ----------------------------------------------
 
 def triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the scorer reads the shared docs_ments cache directly: at k=1 one
+    # the scorer reads the shared docs_ments cache directly: one
     # repartition feeds a mapInPandas that scores and decodes
     return api.triples_from(docs_ments(spark, sf_dir), scorer="neural")
 

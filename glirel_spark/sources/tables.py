@@ -175,6 +175,15 @@ def text_of(interleaved: DataFrame) -> DataFrame:
     return interleaved.select("doc_id", once("tables.text_of", _text_col).alias("text"))
 
 
+def docs_tokens(interleaved: DataFrame) -> DataFrame:
+    """(doc_id, tokens array<string>): the text spans split on the single
+    space ``text_of`` joins them with. The corpus text is space-joined
+    closed-vocabulary words, so split-by-space == the reference regex
+    tokenizer (asserted in tests/test_tokenize.py); the general-text
+    path is functions/tokenize.tokens_native."""
+    return text_of(interleaved).select("doc_id", F.split("text", " ").alias("tokens"))
+
+
 def _text_col() -> Column:
     text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("text"))
     return F.array_join(F.transform(text_spans, lambda s: s["text"]), " ")

@@ -18,7 +18,7 @@ Equality with the batch pipeline is asserted in tests/test_streaming.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from glirel_spark.plans import api
 from glirel_spark.sources import tables
@@ -38,10 +38,9 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def extract_triples_batch(docs_flat: DataFrame) -> DataFrame:
     """flat documents -> triples; pure function of one (micro-)batch."""
-    dt = tables.text_of(tables.interleaved_documents(docs_flat)).select(
-        "doc_id", F.split("text", " ").alias("tokens")
+    return api.extract_triples(
+        tables.docs_tokens(tables.interleaved_documents(docs_flat))
     )
-    return api.extract_triples(dt)
 
 
 def run_extraction_stream(

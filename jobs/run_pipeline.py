@@ -21,9 +21,9 @@ Each bucket runs the same extraction plan as the pipeline queries
 (``plans.api.triples_from``) and links through the literal alias map,
 so with the lexical scorer at top_k=1 a bucket is one narrow stage:
 no exchange, no join, no Python. ``--eval-report`` adds the
-threshold-grid replay (``evaluate.threshold_search_pairs``, the same
-TOP_K guard as the ``threshold_search`` query) and a submission taken
-from ``triples_from``.
+threshold-grid replay (``evaluate.threshold_search_lexical``, the plan
+of the ``threshold_search`` query) and a submission taken from
+``triples_from``.
 """
 
 from __future__ import annotations
@@ -37,8 +37,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F
-
 from glirel_spark import config
 from glirel_spark.operators import fused, linking
 from glirel_spark.operators import graph as graph_ops
@@ -48,15 +46,11 @@ from glirel_spark.session import get_spark
 from glirel_spark.sources import tables
 
 
-def _docs_tokens(inter):
-    return tables.text_of(inter).select("doc_id", F.split("text", " ").alias("tokens"))
-
-
 def extract_bucket(docs_subset, scorer: str = "lexical"):
     """Per-bucket stage: documents -> linked triples. scorer='neural' is
     the tensor-plane mapInPandas scorer, whose EXECUTOR python workers
     import glirel_spark from `--py-files glirel_spark.zip`."""
-    triples = api.extract_triples(_docs_tokens(docs_subset), scorer=scorer)
+    triples = api.extract_triples(tables.docs_tokens(docs_subset), scorer=scorer)
     return linking.link_triples(triples, config.ALIAS_DICT)
 
 
@@ -100,8 +94,8 @@ def main() -> None:
         from glirel_spark.operators import evaluate, report
 
         # two consumers of the one gazetteer pass over the whole corpus
-        dm = fused.with_mentions(_docs_tokens(inter)).cache()
-        search = evaluate.threshold_search_pairs(fused.pairs_from(dm).filter("is_rel"))
+        dm = fused.with_mentions(tables.docs_tokens(inter)).cache()
+        search = evaluate.threshold_search_lexical(fused.pairs_from(dm).filter("is_rel"))
         report.write_eval_report(search, f"{args.output}/eval")
         report.write_submission(api.triples_from(dm), f"{args.output}/eval/submission")
 

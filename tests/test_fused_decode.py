@@ -1,18 +1,26 @@
-"""Fused-plan equivalence: the per-row lexical argmax decode, the fused
-threshold search and the neural scorer's in-UDF k=1 decode must be
-ROW-IDENTICAL to the relational forms they replace (crossJoin or scored
-relation + threshold + per-pair argmax aggregation, and the
-scored-relation grid search)."""
+"""Fused-plan equivalence: the per-row lexical argmax decode and the
+neural scorer's in-UDF decode must be ROW-IDENTICAL to the relational
+forms they replace (crossJoin or scored relation + threshold + per-pair
+top-k), and the fused k=1 query plans (grid search, eval counts, type
+signature) must hash-equal their DuckDB oracle, which decodes the
+scored relation, on the sf0.001 corpus."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from glirel_spark import config
+from glirel_spark import config, oracle
 from glirel_spark.operators import decode as decode_ops
 from glirel_spark.operators import evaluate
 from glirel_spark.operators import scoring
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+from check_oracle import norm_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -27,6 +35,25 @@ def rel(spark):
     from glirel_spark.plans import pipeline
 
     return pipeline.pairs(spark, SF).filter("is_rel")
+
+
+@pytest.fixture(scope="module")
+def con():
+    c = duckdb.connect()
+    c.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF}/documents.parquet')"
+    )
+    yield c
+    c.close()
+
+
+def _assert_oracle_equal(df, con, sql):
+    """The driver's comparison: same columns, same row count, same
+    normalized value hash."""
+    got, want = df.toPandas(), con.execute(sql).fetchdf()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) == len(want) > 0
+    assert norm_hash(got) == norm_hash(want)
 
 
 def test_lexical_topk1_equals_relational_decode(spark, rel):
@@ -75,103 +102,49 @@ def test_lexical_label_raws_match_lexical_raw(spark, rel):
             assert r[f"_f{i}"] == r[f"_g{i}"]
 
 
-def test_pred_type_signature_decoded_input_equals_scored(spark, rel):
+def test_pred_type_signature_decoded_input_equals_scored(rel, con):
+    """The fused k=1 typed relation's signature == the oracle's
+    signature over the scored relation's threshold -> top-1 ->
+    constraint decode."""
     from glirel_spark.operators import graph as graph_ops
 
-    s = scoring.score_pairs_lexical(rel, scoring.labels_df(spark))
-    via_scored = graph_ops.pred_type_signature(s)
-    via_decoded = graph_ops.pred_type_signature(
+    sig = graph_ops.pred_type_signature(
         decoded=scoring.lexical_topk1_triples(rel, formatted=False)
     )
-    assert via_decoded.columns == via_scored.columns
-    assert _rows(via_decoded) == _rows(via_scored)
+    _assert_oracle_equal(sig, con, oracle.q_pred_type_signature())
 
 
-def test_threshold_search_lexical_equals_scored_form(spark, rel):
-    ldf = scoring.labels_df(spark)
-    scored = scoring.score_pairs_lexical(rel, ldf).cache()
-    general = evaluate.threshold_search(scored, evaluate.gold_triples(scored))
-    fused = evaluate.threshold_search_lexical(rel)
-    assert fused.columns == general.columns
-    assert _rows(fused) == _rows(general)
-    scored.unpersist()
-
-
-def test_eval_counts_lexical_equals_scored_chain(spark, rel):
-    from glirel_spark.plans import pipeline
-
-    SFD = SF
-    s = scoring.score_pairs_lexical(rel, scoring.labels_df(spark)).cache()
-    gold = evaluate.gold_triples(s)
-    preds = pipeline._eval_preds(spark, SFD)
-    general = evaluate.per_label_counts(
-        evaluate.annotated_pairs_filter(preds, gold), gold
+def test_threshold_search_lexical_equals_scored_form(rel, con):
+    """The one-pass grid search == the oracle's scored-relation decode
+    at every grid threshold."""
+    _assert_oracle_equal(
+        evaluate.threshold_search_lexical(rel), con, oracle.q_threshold_search()
     )
-    fused = evaluate.eval_counts_lexical(rel)
-    assert sorted(fused.columns) == sorted(general.columns)
-    assert _rows(fused) == _rows(general)
-    s.unpersist()
 
 
-def test_threshold_search_lexical_dup_grid_and_raw_min(spark, rel):
-    """Duplicate grid values + non-default gold cut: same counts both
-    forms (the r5 duplicate-grid-dedup fix must survive the rewrite)."""
+def test_eval_counts_lexical_equals_scored_chain(rel, con):
+    """Row-local counts == the oracle's scored -> triples -> J5 filter
+    -> per-label counts chain."""
+    _assert_oracle_equal(
+        evaluate.eval_counts_lexical(rel), con, oracle.q_eval_counts()
+    )
+
+
+def test_threshold_search_lexical_dup_grid_and_raw_min(rel, con):
+    """Duplicate grid values + non-default gold cut: same metrics as the
+    oracle (the r5 duplicate-grid-dedup fix must survive the rewrite)."""
     grid = [0.2, 0.5, 0.2, 0.05]
-    ldf = scoring.labels_df(spark)
-    scored = scoring.score_pairs_lexical(rel, ldf).cache()
-    general = evaluate.threshold_search(
-        scored, evaluate.gold_triples(scored, raw_min=80), grid=grid
+    _assert_oracle_equal(
+        evaluate.threshold_search_lexical(rel, grid=grid, raw_min=80),
+        con, oracle.q_threshold_search(grid=grid, raw_min=80),
     )
-    fused = evaluate.threshold_search_lexical(rel, grid=grid, raw_min=80)
-    assert _rows(fused) == _rows(general)
-    scored.unpersist()
-
-
-def test_k1_forms_fall_back_to_decode_chain_when_top_k_is_not_1(
-    spark, rel, monkeypatch
-):
-    """eval_counts, threshold_search and pred_type_signature take their
-    fused k=1 forms only at TOP_K == 1; otherwise they equal the
-    scored-relation decode chain at that k."""
-    from glirel_spark.operators import graph as graph_ops
-    from glirel_spark.plans import pipeline
-
-    k1_counts = _rows(pipeline.eval_counts(spark, SF))
-    monkeypatch.setattr(config, "TOP_K", 2)
-    s = scoring.score_pairs_lexical(rel, scoring.labels_df(spark)).cache()
-    gold = evaluate.gold_triples(s)
-    preds = decode_ops.decode(s, config.THRESHOLD, 2).select(
-        "doc_id",
-        F.col("head_start").alias("h_start"),
-        (F.col("head_end") - 1).alias("h_end"),
-        F.col("tail_start").alias("t_start"),
-        (F.col("tail_end") - 1).alias("t_end"),
-        "label",
-    )
-    counts = evaluate.per_label_counts(
-        evaluate.annotated_pairs_filter(preds, gold), gold
-    )
-    got = pipeline.eval_counts(spark, SF)
-    assert _rows(got, sorted(counts.columns)) == _rows(counts)
-    assert _rows(got) != k1_counts  # k=2 really predicts more
-
-    search = evaluate.threshold_search(s, gold, top_k=2)
-    assert _rows(pipeline.threshold_search(spark, SF)) == _rows(search)
-
-    decoded = decode_ops.constraint_filter(
-        decode_ops.top_k_per_pair(decode_ops.threshold_filter(s), 2)
-    )
-    sig = graph_ops.pred_type_signature(decoded=decoded)
-    assert _rows(pipeline.pred_type_signature(spark, SF)) == _rows(sig)
-    s.unpersist()
 
 
 @pytest.mark.parametrize("top_k", [1, 2])
 def test_fused_neural_equals_decode_chain_sf0001(spark, neural_decode_chain, top_k):
-    """The neural plan (k=1: in-UDF decode; k=2: the scored relation,
-    the _ments explode, the two mention joins and the broadcast label
-    join) == score_pairs_neural -> decode, row for row, on the sf0.001
-    corpus. k=2 really keeps more rows than k=1."""
+    """The neural plan (the in-UDF decode at every k) ==
+    score_pairs_neural -> decode, row for row, on the sf0.001 corpus.
+    k=2 really keeps more rows than k=1."""
     from glirel_spark.plans import api, pipeline
 
     fused = api.triples_from(
@@ -201,14 +174,25 @@ def test_api_top_k2_equals_pipeline_triples(spark):
     assert len(want) > pipeline.triples(spark, SF, top_k=1).count()
 
 
+@pytest.mark.parametrize("scorer", ["lexical", "neural"])
+def test_top_k_below_1_is_rejected(spark, scorer):
+    """Both scorers refuse a rank count below 1 at plan build, rather
+    than one keeping nothing and the other slicing from the end."""
+    from glirel_spark.plans import api, pipeline
+
+    for k in (0, -1):
+        with pytest.raises(ValueError, match="top_k"):
+            api.triples_from(pipeline.docs_ments(spark, SF), top_k=k, scorer=scorer)
+
+
 @pytest.mark.parametrize(
     "scorer,top_k", [("lexical", 1), ("lexical", 2), ("neural", 1), ("neural", 2)]
 )
 def test_empty_list_constraint_drops_rows(spark, scorer, top_k):
     """allowed_head=[] allows no head type: every row whose decoded label
-    carries it is dropped (lexical k=1, relational decode, neural k=1
-    and k>1)
-    — whereas an absent constraint keeps them."""
+    carries it is dropped (lexical k=1, relational decode, the neural
+    in-UDF decode at k=1 and k>1) — whereas an absent constraint keeps
+    them."""
     from glirel_spark.plans import api, pipeline
 
     docs = pipeline.docs_tokens(spark, SF).filter(

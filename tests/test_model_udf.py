@@ -1,7 +1,7 @@
 """Tensor-plane scorer: determinism, pair-ordering contract parity with
 the fused J1, label-rep caching, decode integration through both
-the in-UDF k=1 decode and the relational decode chain, and the in-UDF
-decode helper (top1_decode)."""
+the in-UDF decode and the relational decode chain, and the in-UDF
+decode helper (topk_decode)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from glirel_spark import config
 from glirel_spark.model.scorer import BLAS_CORE, DeterministicGLiREL
-from glirel_spark.model.udf import neural_triples, score_pairs_neural, top1_decode
+from glirel_spark.model.udf import neural_triples, score_pairs_neural, topk_decode
 from glirel_spark.operators.fused import mentions_fused, pairs_fused
 
 UNCONSTRAINED = {lab: {} for lab in config.RELATION_LABELS}
@@ -215,7 +215,7 @@ def test_per_example_label_sets(spark):
     assert got == expect
 
 
-def test_top1_decode_ties_pick_lowest_label():
+def test_topk_decode_k1_ties_pick_lowest_label():
     probs = np.array([
         [0.7, 0.9, 0.9],   # tie between labels 1 and 2 -> 1
         [0.8, 0.8, 0.8],   # three-way tie -> 0
@@ -223,12 +223,12 @@ def test_top1_decode_ties_pick_lowest_label():
         [0.3, 0.6, 0.6],   # threshold is strict: 0.6 > 0.6 is false
     ])
     types = np.array(["A", "A", "A", "A"], dtype=object)
-    keep, best = top1_decode(probs, 0.6, types, types, [(None, None)] * 3)
+    keep, best = topk_decode(probs, 0.6, 1, types, types, [(None, None)] * 3)
     assert keep.tolist() == [0, 1]
     assert best.tolist() == [1, 0]
 
 
-def test_top1_decode_constraint_on_best_label_only():
+def test_topk_decode_k1_constraint_on_best_label_only():
     """A best label that fails its constraint drops the pair — no
     fallback to the runner-up (decode applies P9 after top-k)."""
     probs = np.array([
@@ -239,8 +239,43 @@ def test_top1_decode_constraint_on_best_label_only():
     ])
     h = np.array(["Y", "X", "X", None], dtype=object)
     t = np.array(["Z", "Z", "Z", "Z"], dtype=object)
-    keep, best = top1_decode(probs, 0.5, h, t, [(["X"], None), (None, [])])
+    keep, best = topk_decode(probs, 0.5, 1, h, t, [(["X"], None), (None, [])])
     assert keep.tolist() == [1]
+    assert best.tolist() == [0]
+
+
+def test_topk_decode_k2_tie_at_rank_2_picks_lower_label():
+    probs = np.array([
+        [0.6, 0.9, 0.6],   # rank 2: labels 0 and 2 tie -> 0
+        [0.7, 0.7, 0.9],   # rank 2: labels 0 and 1 tie -> 0
+    ])
+    types = np.array(["A", "A"], dtype=object)
+    keep, best = topk_decode(probs, 0.5, 2, types, types, [(None, None)] * 3)
+    assert keep.tolist() == [0, 0, 1, 1]
+    assert best.tolist() == [1, 0, 2, 0]
+
+
+def test_topk_decode_k2_threshold_between_ranks_keeps_one_row():
+    probs = np.array([
+        [0.2, 0.8, 0.4],   # rank 1 above 0.5, rank 2 below -> one row
+        [0.5, 0.3, 0.9],   # rank 2 at the threshold: strict -> one row
+    ])
+    types = np.array(["A", "A"], dtype=object)
+    keep, best = topk_decode(probs, 0.5, 2, types, types, [(None, None)] * 3)
+    assert keep.tolist() == [0, 1]
+    assert best.tolist() == [1, 2]
+
+
+def test_topk_decode_k2_constraint_failing_rank_2_drops_only_that_row():
+    """The rank-2 label fails its constraint: only its row goes, the
+    rank-1 row stays, and rank 3 does not move up."""
+    probs = np.array([[0.9, 0.8, 0.7]])
+    h = np.array(["X"], dtype=object)
+    t = np.array(["Z"], dtype=object)
+    keep, best = topk_decode(
+        probs, 0.5, 2, h, t, [(None, None), (["Y"], None), (None, None)]
+    )
+    assert keep.tolist() == [0]
     assert best.tolist() == [0]
 
 

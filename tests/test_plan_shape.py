@@ -5,6 +5,8 @@ just the benchmark."""
 
 from __future__ import annotations
 
+import pytest
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -353,14 +355,17 @@ def test_graph_final_plan_has_two_exchanges(spark):
     assert sum("Aggregate(" in n for n in nodes) == 4, "\n".join(nodes)
 
 
-def test_neural_triples_plan_is_one_repartition_into_the_udf(spark):
-    """At top_k=1 the neural path decodes inside the scorer: its only
-    shuffle is the round-robin repartition feeding MapInPandas, and no
-    join or aggregation follows the UDF (the decode exchange and the
-    two enrichment joins are gone)."""
-    from glirel_spark.plans import pipeline
+@pytest.mark.parametrize("top_k", [1, 2])
+def test_neural_triples_plan_is_one_repartition_into_the_udf(spark, top_k):
+    """At every top_k the neural path decodes inside the scorer: its
+    only shuffle is the round-robin repartition feeding MapInPandas, and
+    no join or aggregation follows the UDF (no decode exchange and no
+    enrichment joins)."""
+    from glirel_spark.plans import api, pipeline
 
-    nodes = _nodes_outside_cache(pipeline.triples_neural(spark, SF))
+    nodes = _nodes_outside_cache(api.triples_from(
+        pipeline.docs_ments(spark, SF), top_k=top_k, scorer="neural"
+    ))
     plan = "\n".join(nodes)
     exchanges = [n for n in nodes if "Exchange" in n]
     assert len(exchanges) == 1, plan

@@ -17,8 +17,8 @@ pipeline with pandas + numpy + DuckDB only —
              <- independent pandas re-implementation of the decode path
 
 so the Spark-side plumbing (mapInPandas batching, span packing, the
-slim top-k aggregation, enrichment joins, constraint filter, output
-format) is value-checked end-to-end; only the numeric kernel is shared,
+in-UDF threshold / top-k / constraint decode, output format) is
+value-checked end-to-end; only the numeric kernel is shared,
 which is exactly what "deterministic test double" means. With real
 GLiREL weights this same script would run the reference PyTorch model
 (reference decode semantics: glirel/model.py:363-490).
