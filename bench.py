@@ -19,9 +19,13 @@ sum of per-query minima over all reps (the engine's repeatable cost);
 ``per_rep`` every raw time, and ``spread`` each query's max/min over reps
 2..REPS — a delta is real only if it exceeds the spread.
 
-A query that raises prints ``ERROR <name>: <exc>`` to stderr, is listed
-under ``errors`` and is not timed; the other queries go on, and the run
-exits 1 after printing its JSON line.
+A query whose error names a file that does not exist (say, absent
+reference data; the rule of tools/check_oracle.py) prints
+``SKIP <name>: missing <path>`` to stderr and is listed under
+``skipped``. Any other query that raises prints ``ERROR <name>: <exc>``
+to stderr and is listed under ``errors``. Neither is timed; the other
+queries go on, and the run exits 1 after printing its JSON line exactly
+when ``errors`` is non-empty.
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from glirel_spark.session import get_spark  # noqa: E402
+from tools.check_oracle import missing_path  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -68,10 +73,11 @@ def main() -> int:
     spark = get_spark("bench", cores=CPUS)
     samples: dict[str, list[float]] = {n: [] for n in names}
     errors: dict[str, str] = {}
+    skipped: dict[str, str] = {}
     t_all = time.perf_counter()
     for rep in range(1, REPS + 1):
         for name in names:
-            if name in errors:
+            if name not in samples:
                 continue
             spark.sparkContext.setJobDescription(f"bench rep{rep}: {name}")
             t0 = time.perf_counter()
@@ -80,10 +86,15 @@ def main() -> int:
                     "overwrite"
                 ).save()
             except Exception as exc:  # noqa: BLE001
+                del samples[name]
+                path = missing_path(exc)
+                if path is not None:
+                    print(f"SKIP {name}: missing {path}", file=sys.stderr)
+                    skipped[name] = path
+                    continue
                 traceback.print_exc()
                 print(f"ERROR {name}: {exc}", file=sys.stderr)
                 errors[name] = (str(exc) or repr(exc)).splitlines()[0]
-                del samples[name]
                 continue
             samples[name].append(round(time.perf_counter() - t0, 3))
     spark.sparkContext.setJobDescription(None)
@@ -103,6 +114,7 @@ def main() -> int:
         "unit": "sec",
         "queries": best,
         "errors": errors,
+        "skipped": skipped,
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "n_docs": n_docs,
         "flagship_docs_per_sec": round(n_docs / flagship, 1) if flagship else None,

@@ -14,83 +14,20 @@ same mention text AND |h_start - t_start| <= COREF_MAX_DIST — a
 non-transitive relation, so clusters genuinely need transitive closure
 (chains of windowed same-text mentions).
 
-Two implementations with identical results (tested equal):
-
-- ``cluster_mentions``: per-doc union-find in a cogrouped
-  ``applyInPandas`` (docs are small; state never leaves the executor),
-  the general-graph reference for edge relations that arrive as
-  separate tables
-- ``cluster_ments_fused``: edges + union-find + cluster ordering in one
-  zero-shuffle ``mapInPandas`` stage over per-doc mention arrays — the
-  plan the pipeline runs
+``cluster_ments_fused`` runs edges + union-find + cluster ordering in
+one zero-shuffle ``mapInPandas`` stage over per-doc mention arrays —
+the plan the pipeline runs. Its independent specification is the
+``coref_clusters`` oracle's ``coref_edges`` CTE; tests/test_coref.py
+also checks it against a pure-Python union-find, and edge relations of
+a general graph go through ``fixpoint.min_label_components``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, Window as W
+from pyspark.sql import DataFrame, functions as F
 
 COREF_MAX_DIST = 12
-
-_CLUSTER_SCHEMA = "doc_id string, m_id int, root int"
-
-
-def coref_edges(mentions: DataFrame, max_dist: int = COREF_MAX_DIST) -> DataFrame:
-    """(doc_id, a, b) undirected edges, a < b by m_id."""
-    h = mentions.select("doc_id", F.col("m_id").alias("a"),
-                        F.col("start").alias("sa"), F.col("text").alias("ta"))
-    t = mentions.select("doc_id", F.col("m_id").alias("b"),
-                        F.col("start").alias("sb"), F.col("text").alias("tb"))
-    return (
-        h.join(t, "doc_id")
-        .filter(
-            (F.col("a") < F.col("b"))
-            & (F.col("ta") == F.col("tb"))
-            & (F.abs(F.col("sa") - F.col("sb")) <= max_dist)
-        )
-        .select("doc_id", "a", "b")
-    )
-
-
-def cluster_mentions(mentions: DataFrame, edges: DataFrame) -> DataFrame:
-    """Union-find per document (utils.py:111-137) via cogrouped
-    applyInPandas. Returns (doc_id, m_id, root) with root = min m_id of
-    the component."""
-
-    def uf(key, mdf: pd.DataFrame, edf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[int, int] = {int(m): int(m) for m in mdf["m_id"]}
-
-        def find(u: int) -> int:
-            while parent[u] != u:
-                parent[u] = parent[parent[u]]
-                u = parent[u]
-            return u
-
-        for a, b in zip(edf["a"], edf["b"]):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                # deterministic: smaller id becomes the root
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        return pd.DataFrame(
-            {
-                "doc_id": key[0],
-                "m_id": list(parent.keys()),
-                "root": [find(m) for m in parent.keys()],
-            }
-        )
-
-    # toDF re-projects the edge columns so the cogroup of two frames that
-    # share lineage (edges derive from mentions) is not flagged as an
-    # ambiguous self-join; in production the two inputs are separate tables.
-    e = edges.select("doc_id", "a", "b").toDF("doc_id", "a", "b")
-    return (
-        mentions.select("doc_id", "m_id")
-        .groupBy("doc_id")
-        .cogroup(e.groupBy("doc_id"))
-        .applyInPandas(uf, _CLUSTER_SCHEMA)
-    )
-
 
 _CLUSTERED_SCHEMA = (
     "doc_id string, m_id int, start int, end int, type string, text string, "
@@ -109,7 +46,7 @@ def cluster_ments_fused(
     per-doc mention arrays (the cached gazetteer pass,
     fused.with_mentions).
 
-    Row-identical to cluster_index(cluster_mentions(...)) — tested — by
+    Equal to per-doc union-find over the coref edges — tested — by
     this argument: the coref edge rule (same text, |Δstart| <= d) is an
     interval graph on a line per (doc, text) group, so its connected
     components are exactly the maximal runs of start-sorted mentions
@@ -119,9 +56,7 @@ def cluster_ments_fused(
     batch, vectorized numpy end-to-end (no per-doc Python loop).
 
     At 10^12 docs this is the plan you want: clustering state never
-    leaves the row's partition; the general-graph union-find
-    (cluster_mentions) remains for edge relations that arrive as
-    separate tables.
+    leaves the row's partition.
     """
     import numpy as np
 
@@ -191,28 +126,6 @@ def cluster_ments_fused(
     return docs_ments.select("doc_id", ments_col).mapInPandas(
         run, _CLUSTERED_SCHEMA
     )
-
-
-def cluster_index(mentions: DataFrame, clustered: DataFrame) -> DataFrame:
-    """W6: cluster_idx = dense_rank of clusters by earliest mention start
-    within the doc (utils.py:139-148). Returns (doc_id, m_id, start, end,
-    text, cluster_idx)."""
-    cl = clustered.select(
-        F.col("doc_id").alias("_cdoc"), F.col("m_id").alias("_cmid"), "root"
-    )
-    m = mentions.join(
-        cl,
-        (F.col("doc_id") == F.col("_cdoc")) & (F.col("m_id") == F.col("_cmid")),
-    ).drop("_cdoc", "_cmid")
-    cstart = m.groupBy(F.col("doc_id").alias("_rdoc"), F.col("root").alias("_rroot")).agg(
-        F.min("start").alias("c_start"), F.min("m_id").alias("c_mid")
-    )
-    w = W.partitionBy("_rdoc").orderBy("c_start", "c_mid")
-    ranked = cstart.withColumn("cluster_idx", F.dense_rank().over(w) - 1)
-    return m.join(
-        ranked.select("_rdoc", "_rroot", "cluster_idx"),
-        (F.col("doc_id") == F.col("_rdoc")) & (F.col("root") == F.col("_rroot")),
-    ).select("doc_id", "m_id", "start", "end", "type", "text", "cluster_idx")
 
 
 def aggregate_cluster_relations(

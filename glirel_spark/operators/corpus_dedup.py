@@ -18,7 +18,7 @@ Scale notes (the whole point of these ops):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from glirel_spark import config
 from glirel_spark.operators import fixpoint
@@ -257,13 +257,20 @@ def fingerprint(docs_tokens: DataFrame) -> DataFrame:
     (guide §2.4). Zero shuffles now; identical values. Docs with zero
     tokens are filtered (the exploded form dropped them implicitly).
     """
-    fp = F.aggregate(
-        F.transform(F.col("tokens"), _char_hash),
+    return docs_tokens.where(F.size("tokens") > 0).select(
+        "doc_id", fingerprint_expr(F.col("tokens")).alias("fp")
+    )
+
+
+def fingerprint_expr(tokens: Column) -> Column:
+    """The document fingerprint of a token array: the per-char token
+    hash folded as (acc * FINGERPRINT_BASE + tid) % HASH_P in token
+    order. Map-only, so the streaming dedup (streaming/dedup_state.py)
+    computes it on the arriving row."""
+    return F.aggregate(
+        F.transform(tokens, _char_hash),
         F.lit(0).cast("long"),
         lambda acc, t: (acc * config.FINGERPRINT_BASE + t) % config.HASH_P,
-    )
-    return docs_tokens.where(F.size("tokens") > 0).select(
-        "doc_id", fp.alias("fp")
     )
 
 

@@ -114,8 +114,8 @@ def mention_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fused zero-shuffle clustering straight off the cached gazetteer
     # pass (edges + union-find + W6 ordering in one narrow mapInPandas
-    # stage) — row-identical to cluster_index(cluster_mentions(...))
-    # (tests/test_coref.py::test_fused_equals_union_find_pipeline)
+    # stage); tests/test_coref.py checks it against a pure-Python
+    # union-find
     return coref.cluster_ments_fused(docs_ments(spark, sf_dir))
 
 

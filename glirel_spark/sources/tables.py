@@ -36,18 +36,19 @@ tested):
    .append()``) and ``completed_buckets`` reads the ``t.snapshots``
    metadata table — one atomic commit, exactly-once without the
    idempotency crutch.
-4. Streaming graph maintenance (streaming/graph_stream.py): the
-   ``v{batch_id}`` snapshot directories become snapshots of ONE graph
-   table; ``read_prev_graph(batch_id)`` becomes a time-travel read of
+4. Streaming graph maintenance (streaming/graph_stream.py, under the
+   streaming/commit.py protocol): the ``v{batch_id}`` snapshot
+   directories become snapshots of ONE graph table;
+   ``commit.read_prev(batch_id)`` becomes a time-travel read of
    the snapshot whose summary carries ``glirel.batch = batch_id - 1``,
    and failed-attempt isolation (the round-4 replay fix) maps onto
    write-audit-publish: stage with ``spark.wap.id = batch_id``, publish
    on success — an orphaned staged snapshot is invisible to readers,
-   which is exactly the semantics read_prev_graph enforces by ignoring
+   which is exactly the semantics read_prev enforces by ignoring
    ``v>=batch_id`` directories.
-5. ``latest_snapshot`` -> the catalog's current-snapshot pointer (no
-   directory listing); snapshot diff (graph.kg_snapshot_diff) can run
-   between any two snapshot ids via two time-travel reads.
+5. ``commit.latest_snapshot`` -> the catalog's current-snapshot
+   pointer (no directory listing); snapshot diff (graph.kg_snapshot_diff)
+   can run between any two snapshot ids via two time-travel reads.
 
 The interleaved table is synthesized *deterministically and
 Spark-natively* (pure array expressions, no per-row Python, no shuffle)

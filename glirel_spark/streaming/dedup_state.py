@@ -3,9 +3,9 @@ streaming twin of operators/corpus_dedup.exact_dedup for an ingestion
 pipeline that must drop duplicates ON ARRIVAL (a crawler feed), not in
 a nightly batch.
 
-Key = the order-sensitive document fingerprint (identical fold to
-corpus_dedup.fingerprint, but computed MAP-ONLY as an array fold on the
-doc row — a stream cannot pre-shuffle a (doc, pos) relation). State per
+Key = the order-sensitive document fingerprint
+(corpus_dedup.fingerprint_expr, the batch fingerprint's own fold —
+map-only, an array fold on the arriving doc row). State per
 fingerprint is ONE string: the keeper doc_id, fixed forever by the
 first micro-batch that sees the fingerprint (first-occurrence-wins —
 the streaming analog of the batch rule keeper = min(doc_id), equal to
@@ -24,25 +24,12 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from glirel_spark import config
+from glirel_spark.operators.corpus_dedup import fingerprint_expr
 
 OUT_SCHEMA = "doc_id string, fp long, keeper string, is_duplicate boolean"
 STATE_SCHEMA = "keeper string"
-
-
-def fingerprint_expr(tokens: Column) -> Column:
-    """Map-only twin of corpus_dedup.fingerprint's sorted-fold: same
-    per-char token hash, same (acc * BASE + tid) % P fold in token
-    order — bit-identical fp, zero shuffles."""
-    from glirel_spark.operators.corpus_dedup import _char_hash
-
-    return F.aggregate(
-        F.transform(tokens, _char_hash),
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * config.FINGERPRINT_BASE + t) % config.HASH_P,
-    )
 
 
 def dedup_stateful(docs: DataFrame) -> DataFrame:

@@ -11,9 +11,9 @@ store or watermark is needed. Like the flagship extraction twin
 (triples_stream.py), the per-batch transform runs inside
 ``foreachBatch``: the interleave synthesis uses the ``materialized``
 expression barrier (functions/barrier.py), whose benign-nondeterminism
-trick streaming analysis rejects outside a batch context — and a real
-deployment wants the per-batch parquet append + checkpoint resume
-anyway.
+trick streaming analysis rejects outside a batch context. Each batch's
+rows are committed to ``out/v{batch_id}`` under the streaming/commit.py
+protocol.
 
 Equality with the batch operators is asserted in tests/test_streaming.py.
 """
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from glirel_spark.operators import multimodal
 from glirel_spark.sources import tables
+from glirel_spark.streaming.commit import commit_batch, run_available_now
 
 
 def caption_pairs_batch(docs_flat: DataFrame) -> DataFrame:
@@ -40,42 +41,17 @@ def interleaved_chunks_batch(docs_flat: DataFrame) -> DataFrame:
     )
 
 
-def read_media_out(spark, out_path: str) -> DataFrame:
-    """Read the union of all committed micro-batch outputs under
-    ``out_path`` (each batch lives in its own ``b{batch_id:05d}``
-    subdir; recursiveFileLookup skips partition discovery so no
-    synthetic column appears)."""
-    return (
-        spark.read.option("recursiveFileLookup", "true").parquet(out_path)
-    )
-
-
 def run_media_stream(
     docs_stream: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
     out_path: str,
     checkpoint: str,
 ):
-    """Drive the stream to completion (availableNow), writing each
-    micro-batch's transformed rows to a batch-id-keyed subdir of
-    ``out_path`` (parquet); the checkpoint dir makes the ingest
-    resumable at micro-batch granularity. Keying the write on
-    batch_id (overwrite mode) makes replay idempotent: a failure
-    between the write and the checkpoint commit rewrites the SAME
-    subdir on replay instead of double-appending the batch — the
-    contract graph_stream.read_prev_graph documents. Read results
-    back with read_media_out."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        transform(batch_df).write.mode("overwrite").parquet(
-            f"{out_path}/b{batch_id:05d}"
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the stream to completion (availableNow), committing each
+    micro-batch's transformed rows to ``out_path/v{batch_id}``; read
+    them back with commit.read_batches."""
+    return run_available_now(
+        docs_stream,
+        lambda df, batch_id: commit_batch(transform(df), out_path, batch_id),
+        checkpoint,
     )
-    q.awaitTermination()
-    return q

@@ -2,21 +2,24 @@
 registers across document micro-batches by elementwise max — the merge
 law that makes sketches the cardinality structure of choice at 10^12
 rows (registers from disjoint shards combine without rescanning either
-shard; the same snapshot-versioned foreachBatch commit protocol as
-streaming/graph_stream.py).
+shard). Commits follow the snapshot-versioned protocol of
+streaming/commit.py, the same one streaming/graph_stream.py uses: batch
+N folds into ``v{N-1}`` and commits ``v{N}``.
 
-Stream-final registers == one-shot batch registers, asserted in
-tests/test_streaming.py.
+Stream-final registers == one-shot batch registers, also after a
+replayed micro-batch, asserted in tests/test_streaming.py.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from glirel_spark.operators.textstats import hll_dense_registers
-from glirel_spark.streaming.graph_stream import latest_snapshot
+from glirel_spark.streaming.commit import (
+    commit_batch,
+    read_prev,
+    run_available_now,
+)
 
 
 def merge_registers(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -38,28 +41,16 @@ def merge_registers(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def run_hll_stream(docs_stream: DataFrame, out_dir: str, checkpoint: str):
     """Per micro-batch: build the batch's register frame, max-merge
-    into the latest snapshot, commit as the next version directory."""
+    into the previous snapshot, commit as the batch's version."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         # the stream carries the raw flat documents table — the same
         # relation the batch distinct_hll consumes via _flat_docs
         batch_regs = hll_dense_registers(batch_df)
-        prev_path = latest_snapshot(out_dir)
+        prev = read_prev(batch_df.sparkSession, out_dir, batch_id)
         merged = (
-            batch_regs
-            if prev_path is None
-            else merge_registers(spark.read.parquet(prev_path), batch_regs)
+            batch_regs if prev is None else merge_registers(prev, batch_regs)
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"v{batch_id:05d}")
-        )
+        commit_batch(merged, out_dir, batch_id)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return run_available_now(docs_stream, sink, checkpoint)

@@ -13,7 +13,11 @@ exactly one micro-batch, so pair keys never straddle batches. A
 streaming-native groupBy would instead keep unbounded state (pair keys
 are unique forever, so their state would never be evicted).
 
-Equality with the batch pipeline is asserted in tests/test_streaming.py.
+Each micro-batch's triples are committed to ``out/v{batch_id}`` under
+the streaming/commit.py protocol, so a replayed batch rewrites its own
+directory instead of appending its rows twice. Equality with the batch
+pipeline, and a replay that adds no row, are asserted in
+tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from glirel_spark.plans import api
 from glirel_spark.sources import tables
+from glirel_spark.streaming.commit import commit_batch, run_available_now
 
 DOCUMENTS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -46,19 +51,13 @@ def extract_triples_batch(docs_flat: DataFrame) -> DataFrame:
 def run_extraction_stream(
     docs_stream: DataFrame, out_path: str, checkpoint: str
 ):
-    """Drive the stream to completion (availableNow), appending each
-    micro-batch's decoded triples to ``out_path`` (parquet). The
-    checkpoint dir makes the stream resumable at micro-batch
-    granularity — the streaming counterpart of plans/lineage.py."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        extract_triples_batch(batch_df).write.mode("append").parquet(out_path)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the stream to completion (availableNow), committing each
+    micro-batch's decoded triples to ``out_path/v{batch_id}``; read them
+    back with commit.read_batches."""
+    return run_available_now(
+        docs_stream,
+        lambda df, batch_id: commit_batch(
+            extract_triples_batch(df), out_path, batch_id
+        ),
+        checkpoint,
     )
-    q.awaitTermination()
-    return q

@@ -1,6 +1,10 @@
-"""Structured Streaming twin == batch operator on the same input."""
+"""Structured Streaming twin == batch operator on the same input, and
+the micro-batch commit protocol (streaming/commit.py) under a forced
+replay."""
 
 from __future__ import annotations
+
+import os
 
 from glirel_spark.operators.events import windowed_counts
 from glirel_spark.streaming.events_stream import (
@@ -10,6 +14,43 @@ from glirel_spark.streaming.events_stream import (
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def _two_batch_docs(spark, tmp_path):
+    """(documents, stream): the documents split at the median doc_id
+    into two files, fed as TWO micro-batches (maxFilesPerTrigger=1)."""
+    import time
+
+    import pyspark.sql.functions as F
+
+    from glirel_spark.streaming.triples_stream import DOCUMENTS_SCHEMA
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    cut = docs.agg(F.percentile_approx("doc_id", 0.5)).collect()[0][0]
+    src = tmp_path / "docs_src"
+    src.mkdir()
+    docs.filter(F.col("doc_id") <= cut).coalesce(1).write.parquet(
+        str(src / "b0")
+    )
+    time.sleep(1.1)  # file-source ordering is by modification time
+    docs.filter(F.col("doc_id") > cut).coalesce(1).write.parquet(
+        str(src / "b1")
+    )
+    stream = (
+        spark.readStream.schema(DOCUMENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    return docs, stream
+
+
+def _forget_commit(checkpoint, batch_id):
+    """Delete micro-batch ``batch_id``'s commit record, so the next run
+    on ``checkpoint`` replays it — what a crash between the sink's
+    write and the checkpoint commit leaves behind."""
+    for name in (str(batch_id), f".{batch_id}.crc"):
+        os.remove(os.path.join(checkpoint, "commits", name))
 
 
 def test_stream_equals_batch(spark):
@@ -28,27 +69,37 @@ def test_stream_equals_batch(spark):
 
 
 def test_triples_stream_equals_batch(spark, tmp_path):
-    """Streaming extraction (foreachBatch decode) == batch flagship."""
+    """Streaming extraction (foreachBatch decode) over two micro-batches
+    == batch flagship; replaying the second micro-batch adds no row."""
     from glirel_spark.plans import pipeline
-    from glirel_spark.streaming.triples_stream import (
-        read_documents_stream,
-        run_extraction_stream,
-    )
+    from glirel_spark.streaming.commit import read_batches
+    from glirel_spark.streaming.triples_stream import run_extraction_stream
 
+    _, stream_in = _two_batch_docs(spark, tmp_path)
     out = str(tmp_path / "triples")
     ckpt = str(tmp_path / "ckpt")
-    run_extraction_stream(read_documents_stream(spark, SF), out, ckpt)
-    got = {
-        (r.doc_id, r.head_start, r.head_end, r.tail_start, r.tail_end,
-         r.label, r.prob)
-        for r in spark.read.parquet(out).collect()
-    }
+    run_extraction_stream(stream_in, out, ckpt)
+
+    def rows():
+        return [
+            (r.doc_id, r.head_start, r.head_end, r.tail_start, r.tail_end,
+             r.label, r.prob)
+            for r in read_batches(spark, out).collect()
+        ]
+
+    got = rows()
     want = {
         (r.doc_id, r.head_start, r.head_end, r.tail_start, r.tail_end,
          r.label, r.prob)
         for r in pipeline.triples(spark, SF).collect()
     }
-    assert got == want and len(got) > 0
+    assert set(got) == want and len(got) == len(want) > 0
+
+    _forget_commit(ckpt, 1)
+    q = run_extraction_stream(stream_in, out, ckpt)
+    assert q.lastProgress["batchId"] == 1  # batch 1 ran again
+    replayed = rows()
+    assert len(replayed) == len(got) and set(replayed) == want
 
 
 def test_stateful_sessionize_equals_batch_closed_sessions(spark):
@@ -189,7 +240,7 @@ def test_stateful_dedup_equals_batch_across_micro_batches(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from glirel_spark.operators.corpus_dedup import exact_dedup, fingerprint
-    from glirel_spark.streaming.dedup_state import dedup_stateful, fingerprint_expr
+    from glirel_spark.streaming.dedup_state import dedup_stateful
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
@@ -235,49 +286,17 @@ def test_stateful_dedup_equals_batch_across_micro_batches(spark, tmp_path):
     }
     assert got == want and len(got) == docs.count()
 
-    # the map-only fp expression is bit-identical to the sorted-fold form
-    a = {r.doc_id: r.fp2 for r in docs.select(
-        "doc_id", fingerprint_expr(F.split("text", " ")).alias("fp2")
-    ).collect()}
-    b = {r.doc_id: r.fp for r in fps.collect()}
-    assert a == b
-
 
 def test_graph_maintenance_stream_two_batches(spark, tmp_path):
     """Snapshot-versioned incremental KG maintenance: split the corpus
     into TWO micro-batches; the final snapshot must equal the one-shot
     batch materialization (upsert(materialize(A), B) == materialize(A
     union B)), and there must be one snapshot per micro-batch."""
-    import os
-    import time
-
-    import pyspark.sql.functions as F
-
     from glirel_spark.plans import pipeline
-    from glirel_spark.streaming.graph_stream import (
-        latest_snapshot,
-        run_graph_maintenance_stream,
-    )
-    from glirel_spark.streaming.triples_stream import DOCUMENTS_SCHEMA
+    from glirel_spark.streaming.commit import latest_snapshot
+    from glirel_spark.streaming.graph_stream import run_graph_maintenance_stream
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    cut = docs.agg(F.percentile_approx("doc_id", 0.5)).collect()[0][0]
-    src = tmp_path / "docs_src"
-    src.mkdir()
-    docs.filter(F.col("doc_id") <= cut).coalesce(1).write.parquet(
-        str(src / "b0")
-    )
-    time.sleep(1.1)  # file-source ordering is by modification time
-    docs.filter(F.col("doc_id") > cut).coalesce(1).write.parquet(
-        str(src / "b1")
-    )
-
-    stream_in = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
+    _, stream_in = _two_batch_docs(spark, tmp_path)
     out = str(tmp_path / "graph_snaps")
     run_graph_maintenance_stream(stream_in, out, str(tmp_path / "gs_ckpt"))
 
@@ -293,44 +312,38 @@ def test_graph_maintenance_stream_two_batches(spark, tmp_path):
 def test_hll_register_merge_stream_two_batches(spark, tmp_path):
     """HLL registers max-merged across TWO micro-batches must equal the
     one-shot batch registers — the sketch merge law under the same
-    snapshot-versioned commit protocol as the graph stream."""
-    import time
-
-    import pyspark.sql.functions as F
-
+    snapshot-versioned commit protocol as the graph stream. A replay of
+    batch 1 folds into v00000, not into a stale v00001 with an inflated
+    register left by a failed attempt."""
     from glirel_spark.operators.textstats import hll_dense_registers
-    from glirel_spark.streaming.graph_stream import latest_snapshot
+    from glirel_spark.streaming.commit import latest_snapshot
     from glirel_spark.streaming.sketch_stream import run_hll_stream
-    from glirel_spark.streaming.triples_stream import DOCUMENTS_SCHEMA
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    cut = docs.agg(F.percentile_approx("doc_id", 0.5)).collect()[0][0]
-    src = tmp_path / "hll_src"
-    src.mkdir()
-    docs.filter(F.col("doc_id") <= cut).coalesce(1).write.parquet(
-        str(src / "b0")
-    )
-    time.sleep(1.1)
-    docs.filter(F.col("doc_id") > cut).coalesce(1).write.parquet(
-        str(src / "b1")
-    )
-    stream_in = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
+    docs, stream_in = _two_batch_docs(spark, tmp_path)
     out = str(tmp_path / "hll_snaps")
-    run_hll_stream(stream_in, out, str(tmp_path / "hll_ckpt"))
+    ckpt = str(tmp_path / "hll_ckpt")
+    run_hll_stream(stream_in, out, ckpt)
 
-    got = {
-        (r.lang, r.reg): r.m
-        for r in spark.read.parquet(latest_snapshot(out)).collect()
-    }
+    def final():
+        return {
+            (r.lang, r.reg): r.m
+            for r in spark.read.parquet(latest_snapshot(out)).collect()
+        }
+
     want = {
         (r.lang, r.reg): r.m for r in hll_dense_registers(docs).collect()
     }
-    assert got == want and len(got) > 0
+    assert final() == want and len(want) > 0
+
+    stale = dict(want)
+    stale[min(stale)] = 60  # above any register a 30-bit hash can set
+    spark.createDataFrame(
+        [(lang, reg, m) for (lang, reg), m in stale.items()],
+        "lang string, reg int, m int",
+    ).write.mode("overwrite").parquet(f"{out}/v00001")
+    _forget_commit(ckpt, 1)
+    run_hll_stream(stream_in, out, ckpt)
+    assert final() == want
 
 
 def test_stateful_funnel_equals_batch(spark):
@@ -386,33 +399,23 @@ def test_stateful_funnel_equals_batch(spark):
 def test_graph_changelog_stream_replay_law(spark, tmp_path):
     """Per-commit changelog publishing: two micro-batches produce two
     changelog directories, and replaying them over the first snapshot
-    reconstructs the final snapshot's support counts."""
-    import os
-    import time
+    reconstructs the final snapshot's support counts. Both hold after
+    a checkpoint replay of batch 1 over a stale v00001, whose final
+    snapshot still equals the batch graph."""
+    from glirel_spark.plans import pipeline
+    from glirel_spark.streaming.graph_stream import run_graph_maintenance_stream
 
-    import pyspark.sql.functions as F
-
-    from glirel_spark.streaming.graph_stream import (
-        run_graph_maintenance_with_changelog,
-    )
-    from glirel_spark.streaming.triples_stream import DOCUMENTS_SCHEMA
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    cut = docs.agg(F.percentile_approx("doc_id", 0.5)).collect()[0][0]
-    src = tmp_path / "docs_src"
-    src.mkdir()
-    docs.filter(F.col("doc_id") <= cut).coalesce(1).write.parquet(str(src / "b0"))
-    time.sleep(1.1)
-    docs.filter(F.col("doc_id") > cut).coalesce(1).write.parquet(str(src / "b1"))
-
-    stream_in = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
+    _, stream_in = _two_batch_docs(spark, tmp_path)
     out = str(tmp_path / "graph_snaps")
-    run_graph_maintenance_with_changelog(stream_in, out, str(tmp_path / "cg_ckpt"))
+    ckpt = str(tmp_path / "cg_ckpt")
+    run_graph_maintenance_stream(stream_in, out, ckpt)
+
+    snap = spark.read.parquet(f"{out}/v00001")
+    spark.createDataFrame(snap.collect()[:1], snap.schema).write.mode(
+        "overwrite"
+    ).parquet(f"{out}/v00001")
+    _forget_commit(ckpt, 1)
+    run_graph_maintenance_stream(stream_in, out, ckpt)
 
     logs = sorted(os.listdir(os.path.join(out, "changelog")))
     assert logs == ["v00000", "v00001"]
@@ -430,11 +433,11 @@ def test_graph_changelog_stream_replay_law(spark, tmp_path):
         else:
             assert base[(r.subj, r.pred, r.obj)] == r.n_before
         base[(r.subj, r.pred, r.obj)] = r.n_after
-    final = {
-        (r.subj, r.pred, r.obj): r.n_mentions
-        for r in spark.read.parquet(f"{out}/v00001").collect()
-    }
+    snap = spark.read.parquet(f"{out}/v00001").collect()
+    final = {(r.subj, r.pred, r.obj): r.n_mentions for r in snap}
     assert base == final and len(final) > 0
+    want = {tuple(r) for r in pipeline.graph(spark, SF).collect()}
+    assert {tuple(r) for r in snap} == want
 
 
 def test_funnel_cross_batch_timestamp_tie(spark, tmp_path):
@@ -492,12 +495,12 @@ def test_funnel_cross_batch_timestamp_tie(spark, tmp_path):
     assert batch == {0: 1, 1: 1, 2: 1}
 
 
-def test_read_prev_graph_ignores_failed_attempt(spark, tmp_path):
+def test_read_prev_ignores_failed_attempt(spark, tmp_path):
     """Regression (round-4 ADVICE): prev snapshot for micro-batch N is
     v{N-1} by construction — a partial v{N} left by a failed attempt
     must be ignored, or a replay would double-fold the batch and
     overwrite a path it is lazily reading."""
-    from glirel_spark.streaming.graph_stream import read_prev_graph
+    from glirel_spark.streaming.commit import read_prev
 
     out = str(tmp_path / "g")
     spark.createDataFrame(
@@ -508,13 +511,13 @@ def test_read_prev_graph_ignores_failed_attempt(spark, tmp_path):
         [("x", "p", "y", 99)], ["subj", "pred", "obj", "n_mentions"]
     ).write.parquet(f"{out}/v00001")
 
-    assert read_prev_graph(spark, out, 0) is None
-    prev1 = read_prev_graph(spark, out, 1)
+    assert read_prev(spark, out, 0) is None
+    prev1 = read_prev(spark, out, 1)
     assert [tuple(r) for r in prev1.collect()] == [("a", "p", "b", 3)]
     # replay of batch 1 ignores the stale v00001
-    prev_replay = read_prev_graph(spark, out, 1)
+    prev_replay = read_prev(spark, out, 1)
     assert prev_replay.collect() == prev1.collect()
-    assert read_prev_graph(spark, out, 5) is None  # gap -> None, not dir max
+    assert read_prev(spark, out, 5) is None  # gap -> None, not dir max
 
 
 def test_media_stream_twins_equal_batch(spark, tmp_path):
@@ -523,10 +526,10 @@ def test_media_stream_twins_equal_batch(spark, tmp_path):
     operators' rows."""
     from glirel_spark.operators import multimodal
     from glirel_spark.sources.tables import interleaved_documents
+    from glirel_spark.streaming.commit import read_batches
     from glirel_spark.streaming.media_stream import (
         caption_pairs_batch,
         interleaved_chunks_batch,
-        read_media_out,
         run_media_stream,
     )
     from glirel_spark.streaming.triples_stream import read_documents_stream
@@ -541,7 +544,7 @@ def test_media_stream_twins_equal_batch(spark, tmp_path):
         out = str(tmp_path / f"{name}_out")
         ckpt = str(tmp_path / f"{name}_ckpt")
         run_media_stream(read_documents_stream(spark, SF), tfn, out, ckpt)
-        got = read_media_out(spark, out)
+        got = read_batches(spark, out)
         want = bfn(batch_inter)
         assert got.count() == want.count() > 0
         assert got.exceptAll(want).count() == 0

@@ -1,7 +1,7 @@
 """The measurement tools: bench.py's timing loop (failure isolation,
 spread, exit status), tools/plan_audit.py's named-query dump,
 bench_scaling.py's cluster-shape helpers, and tools/check_oracle.py's
-missing-input SKIP rule."""
+missing-input SKIP rule, which plan_audit.py and bench.py share."""
 
 from __future__ import annotations
 
@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 SF = "/root/testdata/sf0.001"
@@ -59,6 +61,26 @@ def test_plan_audit_writes_named_queries_to_the_given_path(tmp_path):
     rows = [l for l in out.read_text().splitlines() if l.startswith("| triples |")]
     assert len(rows) == 1 and "ERROR" not in rows[0]
     assert "## triples" in out.read_text()
+
+
+def test_plan_audit_skips_a_query_with_missing_inputs(tmp_path):
+    from glirel_spark import config
+
+    if os.path.exists(config.DOCRED_DEV):
+        pytest.skip(f"{config.DOCRED_DEV} exists, so nothing is missing")
+    out = tmp_path / "plans.md"
+    r = subprocess.run(
+        [sys.executable, str(REPO / "tools/plan_audit.py"),
+         "--sf", SF, "--out", str(out), "docred_distant_mentions"],
+        capture_output=True, text=True, timeout=600, env=ENV,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert f"SKIP docred_distant_mentions: missing {config.DOCRED_DEV}" in r.stdout
+    rows = [
+        l for l in out.read_text().splitlines()
+        if l.startswith("| docred_distant_mentions |")
+    ]
+    assert rows == ["| docred_distant_mentions | SKIP |" + " |" * 7]
 
 
 def test_scaling_cluster_shape_fits_the_usable_cpus():

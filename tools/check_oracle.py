@@ -18,7 +18,6 @@ import re
 import sys
 from pathlib import Path
 
-import duckdb
 import pandas as pd
 
 
@@ -58,6 +57,8 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import duckdb
+
     import __spark_entry__ as entry
 
     from glirel_spark.session import get_spark

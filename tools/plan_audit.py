@@ -11,6 +11,11 @@ guards assert in tests/test_plan_shape.py (shuffle exchanges, windows,
 broadcasts, nested-loop joins, the largest generated method) so a
 reader can scan the table first and read only the plans that look
 wrong.
+
+A query whose error names a file that does not exist (say, absent
+reference data) is a named SKIP row, by the rule of
+tools/check_oracle.py; any other exception is a named ERROR row. The
+run exits 1 exactly when some query is ERROR.
 """
 
 from __future__ import annotations
@@ -23,6 +28,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.check_oracle import missing_path  # noqa: E402
 
 HEADLINE = [
     "triples",
@@ -100,21 +107,24 @@ def main() -> int:
 
     rows = []
     sections = []
-    failures = []
     for name in args.queries:
-        # one failing query (say, missing reference data) must not hide
-        # the audit of the rest; it is written as a named ERROR row
+        # one failing query must not hide the audit of the rest; it is
+        # written as a named SKIP or ERROR row
         try:
             df = queries[name](spark, sf_dir)
             plan = formatted_plan(df)
             c = counters(df)
         except Exception as exc:  # noqa: BLE001
-            traceback.print_exc()
-            err = (str(exc).strip() or type(exc).__name__).splitlines()[0]
-            print(f"  ERROR {name}: {err}")
-            failures.append(name)
-            rows.append((name, None))
-            sections.append(f"## {name}\n\nERROR: `{err}`\n")
+            path = missing_path(exc)
+            if path is None:
+                traceback.print_exc()
+                status = "ERROR"
+                why = (str(exc).strip() or type(exc).__name__).splitlines()[0]
+            else:
+                status, why = "SKIP", f"missing {path}"
+            print(f"  {status} {name}: {why}")
+            rows.append((name, status))
+            sections.append(f"## {name}\n\n{status}: `{why}`\n")
             continue
         rows.append((name, c))
         sections.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
@@ -133,8 +143,8 @@ def main() -> int:
         "|---|---|---|---|---|---|---|---|---|\n"
     )
     for name, c in rows:
-        if c is None:
-            hdr += f"| {name} | ERROR |" + " |" * 7 + "\n"
+        if isinstance(c, str):
+            hdr += f"| {name} | {c} |" + " |" * 7 + "\n"
             continue
         hdr += (
             f"| {name} | {c['shuffles']} | {c['range_exch']} |"
@@ -144,6 +154,10 @@ def main() -> int:
     args.out.write_text(hdr + "\n" + "\n".join(sections))
     print(f"wrote {args.out}")
     spark.stop()
+    skips = [name for name, c in rows if c == "SKIP"]
+    failures = [name for name, c in rows if c == "ERROR"]
+    if skips:
+        print("SKIPPED (missing inputs):", skips)
     if failures:
         print("FAILED:", failures)
         return 1
