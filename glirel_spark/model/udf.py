@@ -205,8 +205,12 @@ def _scorer_stage(
     # whereas repartition(N, doc_id) collapses into an upstream doc_id
     # exchange (redundant-exchange elimination) and gets coalesced with
     # it (measured: stage back to 1 task). ONE task per core, not more:
-    # every task pays a fixed python-worker cost (0.15-0.3 s on 4
-    # cores), and round-robin already balances the per-doc work.
+    # round-robin already balances the per-doc work, and every task pays
+    # a python-worker start. On CPython < 3.13 that start is the per-task
+    # importlib.invalidate_caches() re-parsing the zips and the jar on
+    # the worker's path (0.14-0.38 s a task on 4 cores);
+    # glirel_spark/__init__.py skips unchanged archives, so a reused
+    # worker's task setup takes < 1 ms.
     sc = docs_ments.sparkSession.sparkContext
     packed = packed.repartition(sc.defaultParallelism)
     return packed.mapInPandas(
@@ -302,6 +306,7 @@ def _frame(
     col = {k: np.concatenate(v) for k, v in parts.items()}
     out = {"doc_id": doc_ids.to_numpy()[col["_row"]]}
     if formatted:  # decode.format_output: exclusive ends, NULL raw
+        n = len(col["_row"])
         out.update(
             head_start=col["hs"].astype(np.int32),
             head_end=(col["he"] + 1).astype(np.int32),
@@ -309,7 +314,7 @@ def _frame(
             tail_end=(col["te"] + 1).astype(np.int32),
             head_text=col["head_text"], tail_text=col["tail_text"],
             label=col["label"],
-            raw=pd.array([pd.NA] * len(col["_row"]), dtype="Int32"),
+            raw=pd.arrays.IntegerArray(np.zeros(n, np.int32), np.ones(n, bool)),
             prob=col["prob"].astype(np.float64),
         )
     else:

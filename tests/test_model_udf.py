@@ -320,6 +320,73 @@ def test_scorer_udf_batch_equals_score_doc_alone():
     assert n_expected == len(got) > 0
 
 
+def test_formatted_frame_has_all_null_int32_raw():
+    """``_frame``'s decoded output: exclusive ends and a ``raw`` column
+    that is all NULL with pandas' nullable Int32 dtype, equal to the
+    frame built from a list of ``pd.NA``."""
+    import pandas as pd
+
+    from glirel_spark.model import udf
+
+    def obj(*xs):
+        return np.array(xs, dtype=object)
+
+    parts = {  # two documents' chunks, as _scorer collects them
+        "_row": [np.array([0, 0]), np.array([1])],
+        "hs": [np.array([0, 3]), np.array([2])],
+        "he": [np.array([1, 3]), np.array([4])],
+        "ts": [np.array([3, 0]), np.array([5])],
+        "te": [np.array([3, 1]), np.array([5])],
+        "head_text": [obj("a b", "c"), obj("d")],
+        "tail_text": [obj("c", "a b"), obj("e")],
+        "label": [obj("feeds", "runs on"), obj("used by")],
+        "prob": [np.array([0.5, 0.75]), np.array([0.625])],
+    }
+    got = udf._frame(pd.Series(["d0", "d1"]), parts, formatted=True)
+    expect = pd.DataFrame({
+        "doc_id": obj("d0", "d0", "d1"),
+        "head_start": np.array([0, 3, 2], np.int32),
+        "head_end": np.array([2, 4, 5], np.int32),
+        "tail_start": np.array([3, 0, 5], np.int32),
+        "tail_end": np.array([4, 2, 6], np.int32),
+        "head_text": obj("a b", "c", "d"),
+        "tail_text": obj("c", "a b", "e"),
+        "label": obj("feeds", "runs on", "used by"),
+        "raw": pd.array([pd.NA] * 3, dtype="Int32"),
+        "prob": np.array([0.5, 0.75, 0.625]),
+    })
+    pd.testing.assert_frame_equal(got, expect, check_exact=True)
+    assert got["raw"].dtype == "Int32" and got["raw"].isna().all()
+
+
+def test_workers_run_the_stat_gated_zipimporter(spark):
+    """The package's ``zipimporter.invalidate_caches`` wrapper reaches the
+    Python workers, not just the driver: a task that imports
+    ``glirel_spark`` finds it installed on its own interpreter."""
+    import sys
+
+    if sys.version_info >= (3, 13):
+        pytest.skip("installed on CPython < 3.13 only")
+
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        import glirel_spark  # noqa: F401
+
+        f = zipimport.zipimporter.invalidate_caches
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"impl": [f"{f.__module__}:{f.__qualname__}"]})
+
+    rows = spark.range(8).repartition(2).mapInPandas(probe, "impl string").collect()
+    assert len(rows) == 2
+    assert {r.impl for r in rows} == {
+        "glirel_spark:_keep_unchanged_zip_directories.<locals>.invalidate_caches"
+    }
+
+
 _ENCODE_DIGEST = """
 import hashlib, sys
 import numpy as np  # loads OpenBLAS before the model pins its threads
