@@ -14,6 +14,11 @@ Design (SURVEY.md §4, north_star):
   scores, model.py:188-214), so they come out of the same per-doc
   transformer forward as the word reps — no cross-doc caching is
   possible, and none is attempted.
+- the stage runs ONE task per core, and the corpus is spread round-robin
+  ONCE: an input that already arrives spread through narrow operators
+  (the documents scan's repartition, ``pipeline._interleaved_plan``)
+  is scored where it lies; any other input gets one round-robin
+  repartition in front of the scorer (``_spread``).
 - output has one of two shapes:
   * ``neural_triples_from`` (every top_k) runs the threshold, the
     per-pair top-k and the P9 type constraint inside the UDF
@@ -31,9 +36,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from glirel_spark import config
+from glirel_spark.functions.memo import once
 from glirel_spark.model.scorer import DeterministicGLiREL
 from glirel_spark.operators import decode as decode_ops
 from glirel_spark.operators import scoring as scoring_ops
@@ -142,10 +149,11 @@ def neural_triples_from(
     labels: dict[str, dict[str, list[str]]] | None = None,
 ) -> DataFrame:
     """(doc_id, tokens, _ments) -> formatted triples, one plan for
-    every ``top_k``: one round-robin repartition, one mapInPandas that
-    scores AND decodes (``topk_decode``), then nothing — mention text
-    and type ride through the packed input, so there is no decode
-    shuffle and no enrichment join.
+    every ``top_k``: one round-robin spread (the input's own, or one
+    repartition, ``_spread``), one mapInPandas that scores AND decodes
+    (``topk_decode``), then nothing — mention text and type ride through
+    the packed input, so there is no decode shuffle and no enrichment
+    join.
     """
     label_dict = config.RELATION_LABELS if labels is None else labels
     table = scoring_ops.label_constraints(label_dict)
@@ -178,45 +186,71 @@ def _scorer_stage(
     labels_col: str | None = None,
     decode: tuple[float, int, list] | None = None,
 ) -> DataFrame:
-    """docs with >= 2 mentions -> repartition -> the scorer mapInPandas.
+    """docs with >= 2 mentions -> the scorer mapInPandas, spread over
+    ``defaultParallelism`` tasks (``_spread``).
 
     ``decode`` = (threshold, top_k, per-label constraints) decodes in
     the UDF and emits decode.TRIPLES_SCHEMA; None emits the scored
-    relation.
+    relation. The input columns and the output schema are built once
+    per JVM (functions/memo.py).
     """
 
-    cols = [
-        "doc_id", "tokens",
-        F.col("_ments.start").alias("_ms"), F.col("_ments.end").alias("_me"),
-    ]
-    if decode is not None:
-        cols += [F.col("_ments.type").alias("_mt"), F.col("_ments.text").alias("_mx")]
-    if labels_col:
-        cols.append(F.col(labels_col).alias("_labels"))
-    packed = docs_ments.filter(F.size("_ments") >= 2).select(*cols)
-    # The scorer stage is PYTHON-CPU-bound (milliseconds per doc through
-    # the transformer and BiLSTM) while its input is tiny in BYTES
-    # (tokens + span offsets), so AQE's byte-based partition coalescing
-    # collapses it to ONE task (measured: 10k docs = 126s single-task vs
-    # ~30s on 4 cores) — the advisory-size heuristic is simply the wrong
-    # metric for compute-heavy UDF stages. Pin the partition count to
-    # the cluster's core count with an explicit ROUND-ROBIN repartition:
-    # repartition(N) is REPARTITION_BY_NUM, which AQE never coalesces,
-    # whereas repartition(N, doc_id) collapses into an upstream doc_id
-    # exchange (redundant-exchange elimination) and gets coalesced with
-    # it (measured: stage back to 1 task). ONE task per core, not more:
-    # round-robin already balances the per-doc work, and every task pays
-    # a python-worker start. On CPython < 3.13 that start is the per-task
-    # importlib.invalidate_caches() re-parsing the zips and the jar on
-    # the worker's path (0.14-0.38 s a task on 4 cores);
-    # glirel_spark/__init__.py skips unchanged archives, so a reused
-    # worker's task setup takes < 1 ms.
-    sc = docs_ments.sparkSession.sparkContext
-    packed = packed.repartition(sc.defaultParallelism)
+    def build() -> tuple[Column, ...]:
+        cols = [
+            F.size("_ments") >= 2, F.col("doc_id"), F.col("tokens"),
+            F.col("_ments.start").alias("_ms"), F.col("_ments.end").alias("_me"),
+        ]
+        if decode is not None:
+            cols += [F.col("_ments.type").alias("_mt"), F.col("_ments.text").alias("_mx")]
+        if labels_col:
+            cols.append(F.col(labels_col).alias("_labels"))
+        return tuple(cols)
+
+    multi, *cols = once(("udf.scorer_input", decode is not None, labels_col), build)
+    packed = _spread(docs_ments.filter(multi).select(*cols))
+    ddl = _SCORED_SCHEMA if decode is None else decode_ops.TRIPLES_SCHEMA
     return packed.mapInPandas(
         _scorer(label_tuple, max_distance, decode),
-        _SCORED_SCHEMA if decode is None else decode_ops.TRIPLES_SCHEMA,
+        once(("udf.schema", ddl), lambda: StructType.fromDDL(ddl)),
     )
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` spread round-robin over ``defaultParallelism`` partitions:
+    as it arrives, when it already is, else through one repartition.
+
+    The scorer stage is PYTHON-CPU-bound (milliseconds per doc through
+    the transformer and BiLSTM) while its input is tiny in BYTES
+    (tokens + span offsets), so AQE's byte-based partition coalescing
+    collapses it to ONE task (measured: 10k docs = 126s single-task vs
+    ~30s on 4 cores) — the advisory-size heuristic is simply the wrong
+    metric for compute-heavy UDF stages. Pin the partition count to the
+    cluster's core count with an explicit ROUND-ROBIN repartition:
+    repartition(N) is REPARTITION_BY_NUM, which AQE never coalesces,
+    whereas repartition(N, doc_id) collapses into an upstream doc_id
+    exchange (redundant-exchange elimination) and gets coalesced with it
+    (measured: stage back to 1 task). ONE task per core, not more:
+    round-robin already balances the per-doc work, and every task pays a
+    python-worker start. On CPython < 3.13 that start is the per-task
+    importlib.invalidate_caches() re-parsing the zips and the jar on the
+    worker's path (0.14-0.38 s a task on 4 cores); glirel_spark/__init__.py
+    skips unchanged archives, so a reused worker's task setup takes < 1 ms.
+
+    One spread is enough: when the analyzed plan is Project/Filter nodes
+    down to a round-robin Repartition to >= N partitions (the one
+    ``pipeline._interleaved_plan`` puts over a single-file corpus), the
+    rows reach the scorer through narrow operators on those partitions,
+    and a cache of any subtree keeps them. Every other input (a
+    ``pack_mentions`` join, a bucket's narrow read, a many-file scan)
+    is repartitioned here.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if node.nodeName() == "Repartition" and node.shuffle() and node.numPartitions() >= n:
+        return df
+    return df.repartition(n)
 
 
 def _scorer(

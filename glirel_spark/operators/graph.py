@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from glirel_spark import config
+from glirel_spark.functions.memo import once
 from glirel_spark.operators import fixpoint
 
 N_HUB_CAP = config.NEIGH_HUB_CAP
@@ -52,16 +53,15 @@ def materialize_graph(linked: DataFrame) -> DataFrame:
         map-side partial aggregate (Spark always runs it) sends at most
         one row per key from each stage-A partition.
     """
-    per_doc = linked.groupBy(*_KEYS, "doc_id").agg(
-        F.count("*").alias("_n"),
-        F.max("prob").alias("_maxp"),
-    )
-    return per_doc.groupBy(*_KEYS).agg(
-        F.sum("_n").cast("long").alias("n_mentions"),
-        F.count("*").cast("long").alias("n_docs"),
-        F.max("_maxp").alias("max_prob"),
-        F.min("doc_id").alias("min_doc_id"),
-    ).select(*_KEYS, "n_mentions", "n_docs", "max_prob", "min_doc_id")
+    per_doc_aggs, aggs = once("graph.materialize", lambda: (
+        (F.count("*").alias("_n"), F.max("prob").alias("_maxp")),
+        (F.sum("_n").cast("long").alias("n_mentions"),
+         F.count("*").cast("long").alias("n_docs"),
+         F.max("_maxp").alias("max_prob"),
+         F.min("doc_id").alias("min_doc_id")),
+    ))
+    per_doc = linked.groupBy(*_KEYS, "doc_id").agg(*per_doc_aggs)
+    return per_doc.groupBy(*_KEYS).agg(*aggs)
 
 
 def upsert_graph(existing: DataFrame, new_linked: DataFrame) -> DataFrame:

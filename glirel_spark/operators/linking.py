@@ -30,6 +30,11 @@ def alias_df(spark: SparkSession) -> DataFrame:
 
 def canonicalize(df: DataFrame, aliases: dict[str, str], text_col: str,
                  out_col: str) -> DataFrame:
+    """``df`` + ``out_col``, the ``canonical_id`` of ``text_col``."""
+    return df.withColumn(out_col, canonical_id(aliases, text_col))
+
+
+def canonical_id(aliases: dict[str, str], text_col: str) -> Column:
     """Alias lookup; fallback id for unmatched surface forms.
 
     ``aliases`` (alias -> canonical_id) compiles to a LITERAL map
@@ -43,27 +48,32 @@ def canonicalize(df: DataFrame, aliases: dict[str, str], text_col: str,
     expression is built once per alias contents and ``text_col``
     (functions/memo.py).
     """
-    lookup: dict[str, str] = {}
-    for a, cid in sorted(aliases.items()):
-        lookup.setdefault(a.lower(), cid)
-    pairs = tuple(lookup.items())
+    pairs = _lookup_pairs(aliases)
 
     def build() -> Column:
         alias_map = F.create_map(*[F.lit(x) for kv in pairs for x in kv])
         text = F.lower(F.col(text_col))
         return F.coalesce(alias_map[text], F.concat(F.lit("Q:surface:"), text))
 
-    return df.withColumn(out_col, once(("linking.canonicalize", pairs, text_col), build))
+    return once(("linking.canonicalize", pairs, text_col), build)
+
+
+def _lookup_pairs(aliases: dict[str, str]) -> tuple[tuple[str, str], ...]:
+    """(lowercased alias, canonical id) pairs, first sorted alias wins."""
+    lookup: dict[str, str] = {}
+    for a, cid in sorted(aliases.items()):
+        lookup.setdefault(a.lower(), cid)
+    return tuple(lookup.items())
 
 
 def link_triples(triples: DataFrame, aliases: dict[str, str]) -> DataFrame:
     """Triples -> (subj, pred, obj) with canonical entity ids."""
-    out = canonicalize(triples, aliases, "head_text", "subj")
-    out = canonicalize(out, aliases, "tail_text", "obj")
-    return out.select(
-        "doc_id", "subj", F.col("label").alias("pred"), "obj", "prob",
-        "head_start", "head_end", "tail_start", "tail_end",
-    )
+    return triples.select(*once(("linking.link_triples", _lookup_pairs(aliases)), lambda: (
+        F.col("doc_id"), canonical_id(aliases, "head_text").alias("subj"),
+        F.col("label").alias("pred"), canonical_id(aliases, "tail_text").alias("obj"),
+        F.col("prob"), F.col("head_start"), F.col("head_end"),
+        F.col("tail_start"), F.col("tail_end"),
+    )))
 
 
 # --- fuzzy candidate generation (north_star: blocked MinHash-LSH) -----------

@@ -22,7 +22,9 @@ from glirel_spark.sources import tables
 def _interleaved_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = tables.TableIO(spark, sf_dir).table("documents")
     target = spark.sparkContext.defaultParallelism
-    if flat.rdd.getNumPartitions() < target:
+    # the read already listed the files; asking the scan for its
+    # partition count would plan it on the driver at every build
+    if len(flat.inputFiles()) < target:
         flat = flat.repartition(target)
     return tables.interleaved_documents(flat)
 
@@ -32,8 +34,11 @@ def interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two scale-critical properties (see BENCH/BASELINE.md notes):
     1. the sandbox corpus is one small parquet file -> ONE input split;
-       repartition spreads the per-doc array work across cores (a real
-       10^12-doc table arrives in thousands of splits and skips this);
+       a round-robin repartition to ``defaultParallelism`` spreads the
+       per-doc array work across cores whenever the read has fewer
+       files than that (a real 10^12-doc table arrives in thousands of
+       files and skips it). The neural scorer reads that spread as its
+       own (model/udf.py), so the corpus is shuffled once;
     2. the spans/tokens arrays must be REAL columns, not expression
        aliases: Catalyst inlines alias references, so a downstream
        lambda indexing `tokens[i]` would re-evaluate the whole
@@ -58,20 +63,25 @@ def docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs_tokens_plan(spark, sf_dir).cache()
 
 
-def docs_ments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, tokens, _ments) — the gazetteer/hygiene pass,
-    MATERIALIZED (cached). This is the single most expensive narrow
-    stage; the mention table, the pair table, and the decode enrichment
-    all derive from it, so one cache entry (plan-keyed, shared across
-    every query in the session) replaces three recomputations. On a
-    cluster this is "write the mention-annotated corpus as a table".
-    It caches the uncached token plan (with_mentions fences its own
-    arrays), so a job that reads only this pass builds one cache; the
-    cache manager still substitutes a ``docs_tokens`` or ``interleaved``
-    cache that another query built (tests/test_plan_shape.py)."""
+def _docs_ments_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from glirel_spark.operators import fused
 
-    return fused.with_mentions(_docs_tokens_plan(spark, sf_dir)).cache()
+    return fused.with_mentions(_docs_tokens_plan(spark, sf_dir))
+
+
+def docs_ments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tokens, _ments) — the gazetteer/hygiene pass,
+    MATERIALIZED (cached) for the lexical queries. The mention table,
+    the pair table, and the decode enrichment all derive from it, so one
+    cache entry (plan-keyed, shared across every query in the session)
+    replaces three recomputations. On a cluster this is "write the
+    mention-annotated corpus as a table". It caches the uncached token
+    plan (with_mentions fences its own arrays), so a job that reads only
+    this pass builds one cache; the cache manager still substitutes a
+    ``docs_tokens`` or ``interleaved`` cache that another query built
+    (tests/test_plan_shape.py). ``triples_neural`` reads the same plan
+    uncached: its one scan feeds one scorer."""
+    return _docs_ments_plan(spark, sf_dir).cache()
 
 
 def mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,9 +325,14 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- tensor-plane (neural) path ----------------------------------------------
 
 def triples_neural(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the scorer reads the shared docs_ments cache directly: one
-    # repartition feeds a mapInPandas that scores and decodes
-    return api.triples_from(docs_ments(spark, sf_dir), scorer="neural")
+    """The neural scorer over the uncached gazetteer pass: the scan's
+    one round-robin spread (``_interleaved_plan``) feeds the scorer's
+    mapInPandas through narrow projections, so the scorer adds no
+    shuffle of its own (model/udf.py) and a job builds no cache. The
+    plan is ``docs_ments``' plan, so a ``docs_ments``, ``docs_tokens``
+    or ``interleaved`` cache that another query built is still read in
+    its place (the cache manager matches plans)."""
+    return api.triples_from(_docs_ments_plan(spark, sf_dir), scorer="neural")
 
 
 # --- reference eval-protocol replay (WikiZSL/FewRel-shaped fixture) ----------

@@ -72,6 +72,15 @@ _CHUNK = 12
 # (d*7 + i) % 5 == 0  (~20% media spans, per FIXTURES.md guidance)
 _MEDIA_EVERY = 5
 
+# Declared table schemas. A parquet read without one infers the schema
+# from the file footers, and that inference is a Spark job at every plan
+# build; the documents table is read by every documents->graph plan, so
+# its schema is declared (tests/test_interleave.py checks it against
+# the inferred schema of every scale factor's file).
+SCHEMAS = {
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+}
+
 
 class TableIO:
     """Thin storage abstraction (parquet sandbox / Iceberg cluster)."""
@@ -81,7 +90,10 @@ class TableIO:
         self.sf_dir = sf_dir
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+        reader = self.spark.read
+        if name in SCHEMAS:
+            reader = reader.schema(SCHEMAS[name])
+        return reader.parquet(f"{self.sf_dir}/{name}.parquet")
 
     def write(self, df: DataFrame, path: str, partition_by: list[str] | None = None,
               mode: str = "overwrite") -> None:
@@ -109,10 +121,10 @@ def interleaved_documents(flat_docs: DataFrame) -> DataFrame:
     # materialize the token array: the chunk lambda slices it per chunk,
     # and Catalyst would otherwise inline (re-split) per reference
     toks = once("tables.tokens", lambda: materialized(F.split(F.col("text"), " ")))
-    return flat_docs.withColumn("_toks", toks).select(
+    return flat_docs.withColumn("_toks", toks).select(*once("tables.interleave", lambda: (
         F.col("doc_id").cast("string").alias("doc_id"),
         once("tables.spans", _spans_col).alias("spans"),
-    )
+    )))
 
 
 def _spans_col() -> Column:
@@ -173,7 +185,8 @@ def text_of(interleaved: DataFrame) -> DataFrame:
     Media columns are pruned by Catalyst (nested-field pruning) — only
     spans.kind / spans.text are read from storage for text-only stages.
     """
-    return interleaved.select("doc_id", once("tables.text_of", _text_col).alias("text"))
+    return interleaved.select(
+        "doc_id", once("tables.text_of", lambda: _text_col().alias("text")))
 
 
 def docs_tokens(interleaved: DataFrame) -> DataFrame:
@@ -182,7 +195,8 @@ def docs_tokens(interleaved: DataFrame) -> DataFrame:
     closed-vocabulary words, so split-by-space == the reference regex
     tokenizer (asserted in tests/test_tokenize.py); the general-text
     path is functions/tokenize.tokens_native."""
-    return text_of(interleaved).select("doc_id", F.split("text", " ").alias("tokens"))
+    return text_of(interleaved).select(
+        "doc_id", once("tables.tokens_of", lambda: F.split("text", " ").alias("tokens")))
 
 
 def _text_col() -> Column:

@@ -3,13 +3,21 @@
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from glirel_spark.sources.tables import (
+    TableIO,
     interleaved_documents,
     span_sequence_signature,
     text_of,
 )
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+from gen_golden import SF_DIRS  # noqa: E402
 
 
 def _flat(spark):
@@ -23,6 +31,17 @@ def test_text_roundtrip(spark):
     joined = flat.select(F.col("doc_id").cast("string").alias("doc_id"),
                          F.col("text").alias("orig")).join(back, "doc_id")
     assert joined.filter(F.col("orig") != F.col("text")).count() == 0
+
+
+def test_declared_documents_schema_matches_the_files(spark):
+    """TableIO reads ``documents`` with a declared schema (no inference
+    job at plan build); it must equal what Spark infers from every scale
+    factor's file, so the declaration cannot drift from the data."""
+    files = sorted(Path(SF_DIRS["sf0.001"]).parent.glob("sf*/documents.parquet"))
+    assert files
+    for path in files:
+        declared = TableIO(spark, str(path.parent)).table("documents").schema
+        assert declared == spark.read.parquet(str(path)).schema, path
 
 
 def test_schema_matches_input_hint(spark):

@@ -254,8 +254,9 @@ def test_media_evidence_adds_only_a_dimension_join(spark):
     assert "Window" not in plan
 
 
-def _job_bucket(spark):
-    """jobs/run_pipeline.py's extract_bucket over bucket 0 of 2."""
+def _job_bucket(spark, scorer="lexical"):
+    """jobs/run_pipeline.py's extract_bucket over bucket 0 of 2 of a
+    one-file read."""
     import importlib.util
     from pathlib import Path
 
@@ -269,7 +270,8 @@ def _job_bucket(spark):
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
     inter = tables.interleaved_documents(tables.TableIO(spark, SF).table("documents"))
-    return job.extract_bucket(inter.filter(bucket_of(F.col("doc_id"), 2) == 0))
+    return job.extract_bucket(
+        inter.filter(bucket_of(F.col("doc_id"), 2) == 0), scorer=scorer)
 
 
 def test_job_bucket_plan_is_one_narrow_stage(spark):
@@ -306,22 +308,106 @@ def _nodes_outside_cache(df) -> list[str]:
     return out
 
 
-def test_neural_graph_job_builds_one_cache(spark):
-    """documents -> triples_neural -> link -> graph in a session with no
-    other cache reads one cache, the gazetteer pass: its token and
-    interleave plans are not cached under it, so a job builds one
-    cache in one Spark job."""
+def _neural_graph_job(spark):
+    """The warm-loop job: documents -> triples_neural -> link -> graph."""
     from glirel_spark import config
     from glirel_spark.operators import graph, linking
     from glirel_spark.plans import pipeline
 
-    spark.catalog.clearCache()
-    job = graph.materialize_graph(
+    return graph.materialize_graph(
         linking.link_triples(pipeline.triples_neural(spark, SF), config.ALIAS_DICT)
     )
-    # every InMemoryRelation the job reads, nested cached plans included
-    plan = job._jdf.queryExecution().withCachedData().toString()
-    assert plan.count("InMemoryRelation") == 1, plan
+
+
+def test_neural_graph_job_builds_no_cache_of_its_own(spark):
+    """documents -> triples_neural -> link -> graph in a session with no
+    other cache reads no cache: its one scan feeds the scorer. Its plan
+    is docs_ments' plan, so once another query has cached docs_ments,
+    the job reads that cache instead of running the gazetteer pass."""
+    from glirel_spark.plans import pipeline
+
+    def caches() -> int:
+        # every InMemoryRelation the job reads, nested cached plans included
+        plan = _neural_graph_job(spark)._jdf.queryExecution().withCachedData()
+        return plan.toString().count("InMemoryRelation")
+
+    spark.catalog.clearCache()
+    assert caches() == 0
+    pipeline.docs_ments(spark, SF)
+    try:
+        assert caches() == 1
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_warm_neural_graph_build_runs_no_spark_job(spark, monkeypatch):
+    """After two warm-up jobs, building the documents -> graph plan
+    starts no Spark job (the documents schema is declared; the spread is
+    decided from the file listing, not by planning the scan) and makes
+    at most 300 py4j round trips (205 when this test was written; 584
+    before the plan's constant expressions were built once,
+    functions/memo.py)."""
+    import py4j.clientserver as cs
+
+    sc = spark.sparkContext
+    for _ in range(2):
+        spark.catalog.clearCache()
+        _neural_graph_job(spark).collect()
+    spark.catalog.clearCache()
+    calls = []
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls.append(1)
+        return send(self, command)
+
+    sc.setJobGroup("warm-neural-build", "warm-neural-build")
+    try:
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+        _neural_graph_job(spark)
+        monkeypatch.undo()
+        jobs = sc.statusTracker().getJobIdsForGroup("warm-neural-build")
+    finally:
+        monkeypatch.undo()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], f"the build ran Spark jobs {jobs}"
+    assert len(calls) <= 300, f"{len(calls)} py4j calls"
+
+
+def test_every_scorer_entry_runs_default_parallelism_tasks(spark):
+    """The scorer skips its own repartition only where its input already
+    arrives round-robin spread (model/udf._spread). Every entry still
+    scores on defaultParallelism partitions: the spread corpus, uncached
+    or through a docs_ments cache, a pack_mentions join (neural_triples,
+    score_pairs_neural) and the spark-submit job's bucket, a narrow read
+    of one file."""
+    from pyspark.sql import functions as F
+
+    from glirel_spark.model import udf
+    from glirel_spark.plans import pipeline
+
+    spark.catalog.clearCache()
+    entries = {
+        "triples_neural": lambda: pipeline.triples_neural(spark, SF),
+        "neural_triples": lambda: udf.neural_triples(
+            pipeline.docs_tokens(spark, SF), pipeline.mentions(spark, SF)),
+        "score_pairs_neural": lambda: udf.score_pairs_neural(
+            pipeline.docs_tokens(spark, SF), pipeline.mentions(spark, SF)),
+        "extract_bucket": lambda: _job_bucket(spark, scorer="neural"),
+        # built last: its docs_ments cache is read by triples_neural
+        "triples_neural over docs_ments": lambda: pipeline.triples_neural(spark, SF),
+    }
+    want = spark.sparkContext.defaultParallelism
+    got = {}
+    for name, build in entries.items():
+        if name == "triples_neural over docs_ments":
+            spark.catalog.clearCache()
+            pipeline.docs_ments(spark, SF)
+        df = build()
+        got[name] = df.select(F.spark_partition_id()).distinct().count()
+    spark.catalog.clearCache()
+    assert got == dict.fromkeys(entries, want), got
 
 
 def test_docs_ments_reads_an_existing_tokens_cache(spark):
@@ -357,20 +443,24 @@ def test_graph_final_plan_has_two_exchanges(spark):
 
 @pytest.mark.parametrize("top_k", [1, 2])
 def test_neural_triples_plan_is_one_repartition_into_the_udf(spark, top_k):
-    """At every top_k the neural path decodes inside the scorer: its
-    only shuffle is the round-robin repartition feeding MapInPandas, and
-    no join or aggregation follows the UDF (no decode exchange and no
-    enrichment joins)."""
+    """At every top_k the neural path decodes inside the scorer, and the
+    corpus is spread once: on the whole plan, from the scan to
+    MapInPandas, the one exchange is the round-robin repartition of the
+    one-file read, and there is no cache, no join and no aggregation (no
+    decode exchange and no enrichment joins)."""
     from glirel_spark.plans import api, pipeline
 
+    spark.catalog.clearCache()
     nodes = _nodes_outside_cache(api.triples_from(
-        pipeline.docs_ments(spark, SF), top_k=top_k, scorer="neural"
+        pipeline._docs_ments_plan(spark, SF), top_k=top_k, scorer="neural"
     ))
     plan = "\n".join(nodes)
     exchanges = [n for n in nodes if "Exchange" in n]
     assert len(exchanges) == 1, plan
     assert "RoundRobinPartitioning" in exchanges[0], plan
     assert nodes[0].startswith("MapInPandas"), plan
+    assert nodes[-1].startswith("FileScan parquet"), plan
+    assert not [n for n in nodes if n.startswith("InMemoryTableScan")], plan
     assert "Join" not in plan and "Aggregate" not in plan, plan
 
 
@@ -395,11 +485,13 @@ def test_kmeans_ann_plan_is_one_shuffle_without_aggregate(spark):
 
 def test_generated_methods_fit_the_jit_limit(spark):
     """No whole-stage-codegen method of the gazetteer pass, the lexical
-    family, the language-id family or the embedding-search family
-    exceeds HotSpot's 8,000-byte JIT limit: a stage over it never leaves
-    the bytecode interpreter (functions/barrier.py). Catalyst inlining an
-    expensive alias into a predicate or into several output columns is
-    what pushes a stage over; the barriers in fused.with_mentions,
+    family, the neural plan (its mention pass shares a stage with the
+    scorer's input projection), the language-id family or the
+    embedding-search family exceeds HotSpot's 8,000-byte JIT limit: a
+    stage over it never leaves the bytecode interpreter
+    (functions/barrier.py). Catalyst inlining an expensive alias into a
+    predicate or into several output columns is what pushes a stage
+    over; the barriers in fused.with_mentions,
     scoring.lexical_topk1_triples, textstats.lang_id and
     pq.with_normalized keep it under."""
     from glirel_spark.functions.barrier import JIT_METHOD_LIMIT, max_method_bytes
@@ -412,7 +504,8 @@ def test_generated_methods_fit_the_jit_limit(spark):
     sizes = {"docs_ments": max_method_bytes(
         fused.with_mentions(pipeline._docs_tokens_plan(spark, SF)))}
     plans = {"extract_bucket": _job_bucket(spark)}
-    for fn in (pipeline.triples, pipeline.graph, pipeline.pred_type_signature,
+    for fn in (pipeline.triples, pipeline.graph, pipeline.triples_neural,
+               pipeline.pred_type_signature,
                pipeline.lang_id, pipeline.lang_confusion, pipeline.corpus_routing,
                pipeline.routing_stats, pipeline.ann_topk, pipeline.ann_topk_kmeans,
                pipeline.ann_topk_pq, pipeline.ann_topk_pq_rerank,
