@@ -344,9 +344,9 @@ def test_warm_neural_graph_build_runs_no_spark_job(spark, monkeypatch):
     """After two warm-up jobs, building the documents -> graph plan
     starts no Spark job (the documents schema is declared; the spread is
     decided from the file listing, not by planning the scan) and makes
-    at most 300 py4j round trips (205 when this test was written; 584
-    before the plan's constant expressions were built once,
-    functions/memo.py)."""
+    at most 400 py4j round trips (205 in 6 of 7 builds and 284 in one
+    when this test was written; 584 before the plan's constant
+    expressions were built once, functions/memo.py)."""
     import py4j.clientserver as cs
 
     sc = spark.sparkContext
@@ -372,7 +372,7 @@ def test_warm_neural_graph_build_runs_no_spark_job(spark, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs == [], f"the build ran Spark jobs {jobs}"
-    assert len(calls) <= 300, f"{len(calls)} py4j calls"
+    assert len(calls) <= 400, f"{len(calls)} py4j calls"
 
 
 def test_every_scorer_entry_runs_default_parallelism_tasks(spark):
